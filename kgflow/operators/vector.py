@@ -199,21 +199,6 @@ def filtered_topk(
     return scored
 
 
-def similar_by_id(
-    corpus: DataFrame,
-    seed_id: int,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Similar-by-node (E6): the seed row's own vector is the query;
-    self excluded (pubmed_embeddings.cql:102-115)."""
-    q = corpus.filter(F.col(id_col) == seed_id).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias(vec_col)
-    )
-    return brute_force_topk(corpus, q, k=k, id_col=id_col, vec_col=vec_col)
-
-
 def brute_force_topk_np(
     corpus: DataFrame,
     queries: DataFrame,

@@ -8,12 +8,17 @@ ledger:
 
 * input transcripts carry ``bucket = pmod(xxhash64(conv_id), P)``;
 * each bucket's content fingerprint = xor-agg of per-row hashes (order
-  independent, computed map-side, one tiny shuffle);
-* a completed bucket writes one ledger row with lineage counts
-  (rows_in, mentions_out, triples_out) and the fingerprint;
-* on restart, buckets whose fingerprint matches a ``done`` ledger row
-  are skipped (anti-join); output parquet is partitioned by bucket with
-  dynamic partition overwrite, so re-processing a bucket is idempotent.
+  independent, computed map-side, one tiny shuffle). A run scans its
+  input for fingerprints ONCE and collects the one-row-per-bucket
+  result; the pending set, the prune set and the ledger rows are all
+  derived from that driver-side map;
+* a completed bucket writes one ledger row (a JSON line under
+  ``_ledger/``) with lineage counts (rows_in, triples_out) and the
+  fingerprint;
+* on restart the ledger is read and planned on the driver: a bucket
+  whose latest ledger row is ``done`` with a matching fingerprint is
+  skipped; output parquet is partitioned by bucket with dynamic
+  partition overwrite, so re-processing a bucket is idempotent.
 
 At 100 TB the ledger is thousands of rows — driver-negligible — while
 the skipped work is the entire completed input.
@@ -128,6 +133,52 @@ def read_ledger(spark: SparkSession, out_dir: str) -> DataFrame | None:
     return spark.read.json(p)
 
 
+def ledger_rows(out_dir: str) -> list[dict]:
+    """Every ledger row as a dict, read on the driver: ``run_resumable``
+    writes the ledger with ``open()``, so it lives on the driver's
+    filesystem. A key an older ledger row lacks reads as absent (null)."""
+    p = _ledger_path(out_dir)
+    if not os.path.isdir(p):
+        return []
+    rows = []
+    for f in sorted(os.listdir(p)):
+        if not f.startswith((".", "_")):  # the files spark.read.json skips
+            with open(os.path.join(p, f)) as fh:
+                rows.extend(json.loads(line) for line in fh if line.strip())
+    return rows
+
+
+def _recency(row: dict) -> tuple:
+    return row["ts"], row["run_id"]
+
+
+def pending_buckets(
+    fp_map: dict[int, tuple[str, int]], ledger: list[dict], lex_fp: str
+) -> list[int]:
+    """Sorted buckets of ``fp_map`` (bucket → (input_fingerprint,
+    rows_in)) that must (re)run against the ``ledger`` rows.
+
+    Only a bucket's LATEST ledger row reflects what is on disk — an
+    older fingerprint may match re-reverted input while the partition
+    still holds a different run's output. Latest is taken over ALL
+    statuses by (ts, run_id) descending (a 'pruned' tombstone must
+    shadow the 'done' row underneath it), THEN filtered to done rows of
+    the same lexicon version. A row without ``lex_fingerprint`` (a
+    pre-versioning ledger: no proof the lexicon matched) never skips.
+    """
+    latest: dict[int, dict] = {}
+    for r in ledger:
+        b = r["partition_id"]
+        if b not in latest or _recency(r) > _recency(latest[b]):
+            latest[b] = r
+    done = {
+        b: (r.get("input_fingerprint"), r.get("rows_in"))
+        for b, r in latest.items()
+        if r.get("status") == "done" and r.get("lex_fingerprint") == lex_fp
+    }
+    return sorted(b for b, fp in fp_map.items() if done.get(b) != fp)
+
+
 def run_resumable(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -157,18 +208,11 @@ def run_resumable(
 
     t_start = time.time()
     run_id = f"run-{int(t_start * 1000)}"
-    ledger = read_ledger(spark, out_dir)
+    ledger = ledger_rows(out_dir)
     if buckets is None:
-        recorded = None
-        if ledger is not None and "buckets" in ledger.columns:
-            latest_row = (
-                ledger.filter(F.col("buckets").isNotNull())
-                .orderBy(F.desc("ts"), F.desc("run_id"))
-                .select("buckets")
-                .first()
-            )
-            recorded = int(latest_row["buckets"]) if latest_row else None
-        if recorded is None and ledger is not None:
+        counted = [r for r in ledger if r.get("buckets") is not None]
+        recorded = int(max(counted, key=_recency)["buckets"]) if counted else None
+        if recorded is None and ledger:
             # a ledger exists but records no bucket count (written by a
             # pre-recording version): the auto count chosen now may
             # differ from the one the on-disk layout was built under, in
@@ -193,38 +237,21 @@ def run_resumable(
         else:
             buckets = recorded if recorded is not None else auto_bucket_count(transcripts)
     tr = with_bucket(transcripts, buckets)
-    fps = bucket_fingerprints(tr)
+    # the one scan of the input: every later use (pending, prune set,
+    # ledger lineage) reads this driver-side map
+    fp_map = {
+        r.bucket: (r.input_fingerprint, r.rows_in)
+        for r in bucket_fingerprints(tr).collect()
+    }
+    total = len(fp_map)
     # terms/isa_edges are inputs to every bucket's triples (linking,
     # HAS_NS, canonical mapping) — fold their content hash into the
     # resume match key so a changed lexicon re-runs every bucket instead
     # of silently serving stale fingerprint-matching output.
     lex_fp = table_fingerprint(terms) + "|" + table_fingerprint(isa_edges)
-    if ledger is not None and "lex_fingerprint" in ledger.columns:
-        from ..operators.canon import dedup_keep_first
+    pending_list = pending_buckets(fp_map, ledger, lex_fp)
 
-        # only a bucket's LATEST ledger row reflects what is on disk —
-        # an older fingerprint may match re-reverted input while the
-        # partition still holds a different run's output. Latest is
-        # taken over ALL statuses (a 'pruned' tombstone must shadow the
-        # 'done' row underneath it), THEN filtered to done.
-        latest = dedup_keep_first(
-            ledger,
-            ["partition_id"],
-            [F.desc("ts"), F.desc("run_id")],
-        ).filter(F.col("status") == "done")
-        done = latest.filter(F.col("lex_fingerprint") == lex_fp).select(
-            F.col("partition_id").alias("bucket"), "input_fingerprint", "rows_in"
-        )
-        pending = fps.join(done, ["bucket", "input_fingerprint", "rows_in"], "left_anti")
-    else:
-        # no ledger, or a pre-lex_fingerprint ledger (can't prove the
-        # lexicon matched) — everything is pending
-        pending = fps
-
-    pending_list = sorted(r.bucket for r in pending.select("bucket").collect())
-    total = fps.count()
-
-    # A bucket whose input rows disappeared entirely produces no fps row
+    # A bucket whose input rows disappeared entirely has no fp_map entry
     # and is never pending — its on-disk partition must be cleared here
     # or read_triples keeps serving it (runs before the early return so
     # a shrink-only change is still applied).
@@ -232,7 +259,7 @@ def run_resumable(
 
     triples_dir = os.path.join(out_dir, "triples")
     if os.path.isdir(triples_dir):
-        valid = {int(r.bucket) for r in fps.select("bucket").collect()} | {-1}
+        valid = set(fp_map) | {-1}
         pruned: list[int] = []
         for d in os.listdir(triples_dir):
             if d.startswith("bucket="):
@@ -303,7 +330,10 @@ def run_resumable(
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
         triples_b = triples_b.localCheckpoint(eager=True)
-        written = {r.bucket for r in triples_b.select("bucket").distinct().collect()}
+        # per-bucket row counts of exactly what the write below puts on
+        # disk: they are the ledger's triples_out and say which pending
+        # buckets wrote no partition
+        stats = {r.bucket: r["count"] for r in triples_b.groupBy("bucket").count().collect()}
         (
             triples_b.repartition("bucket")
             .write.mode("overwrite")
@@ -317,20 +347,14 @@ def run_resumable(
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
 
     for b in pending_list:
-        if b not in written:
+        if b not in stats:
             shutil.rmtree(os.path.join(triples_dir, f"bucket={b}"), ignore_errors=True)
-
-    out = spark.read.parquet(os.path.join(out_dir, "triples")).filter(
-        F.col("bucket").isin(pending_list + [-1])
-    )
-    stats = {r["bucket"]: r["n"] for r in out.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")).collect()}
-    fp_map = {r.bucket: (r.input_fingerprint, r.rows_in) for r in fps.collect()}
 
     os.makedirs(_ledger_path(out_dir), exist_ok=True)
     rows = []
     now = time.time()
     for b in pending_list:
-        fp, rows_in = fp_map.get(b, ("", 0))
+        fp, rows_in = fp_map[b]
         avg_tok, ttr_q4, n_empty = quality.get(b, (None, None, None))
         rows.append(
             {

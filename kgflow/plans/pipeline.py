@@ -71,20 +71,19 @@ def prepare_lexicon(
     Tungsten-compact broadcast instead of Python dicts.
     """
     dim = link.surface_dim(terms).cache()
-    n_surfaces = dim.count()
     mapping = canon.connected_components(link.alt_id_edges(terms)).cache()
-    if n_surfaces > max_fused_surfaces:
+    # one bounded collect serves both the size gate and the driver dicts
+    dim_rows = dim.limit(max_fused_surfaces + 1).collect()
+    if len(dim_rows) > max_fused_surfaces:
         import logging
 
         logging.getLogger("kgflow").warning(
-            "lexicon has %d surfaces (> %d): fused driver-dict path disabled, "
-            "using broadcast-join linking",
-            n_surfaces,
+            "lexicon has more than %d surfaces: fused driver-dict path "
+            "disabled, using broadcast-join linking",
             max_fused_surfaces,
         )
         surfaces = [r.surface for r in dim.select("surface").collect()]
         return Lexicon(surfaces=surfaces, dim=dim, mapping=mapping)
-    dim_rows = dim.collect()
     surfaces = [r.surface for r in dim_rows]
     return Lexicon(
         surfaces=surfaces,
@@ -99,23 +98,6 @@ def normalize_predicate(col):
     """upper-case + ``:``/space → ``_`` (import_go_obo.py:256,
     import_squence_ontology_obo.py:98)."""
     return F.upper(F.regexp_replace(F.trim(col), "[: ]", "_"))
-
-
-def lexicon_surfaces(terms: DataFrame) -> list[str]:
-    """Collect the (small, dimension-scale) surface list for broadcast."""
-    rows = (
-        terms.filter(~F.coalesce("is_obsolete", F.lit(False)))
-        .select(
-            F.explode(
-                F.array_union(F.array("name"), F.coalesce("synonyms", F.array()))
-            ).alias("s")
-        )
-        .select(F.lower(F.trim("s")).alias("s"))
-        .filter(F.col("s") != "")
-        .distinct()
-        .collect()
-    )
-    return [r.s for r in rows]
 
 
 def _assemble_triples(

@@ -572,3 +572,158 @@ def test_resume_warns_on_ledger_without_bucket_count(
         warnings.simplefilter("always")
         cp.run_resumable(spark, transcripts, terms, isa, d, buckets=None)
     assert any("records no bucket count" in str(x.message) for x in w)
+
+
+def _write_ledger(out_dir, files):
+    import json
+    import os
+
+    led = os.path.join(out_dir, "_ledger")
+    os.makedirs(led, exist_ok=True)
+    for name, rows in files.items():
+        with open(os.path.join(led, name), "w") as fh:
+            for r in rows:
+                fh.write(json.dumps(r) + "\n")
+
+
+def _spark_pending(spark, out_dir, fp_map, lex_fp):
+    """The Spark formula the driver-side planning replaced: latest row
+    per partition over all statuses, filtered to matching done rows,
+    anti-joined against the fingerprints."""
+    from kgflow.operators.canon import dedup_keep_first
+
+    fps = spark.createDataFrame(
+        [(b, fp, n) for b, (fp, n) in fp_map.items()],
+        "bucket int, input_fingerprint string, rows_in long",
+    )
+    ledger = cp.read_ledger(spark, out_dir)
+    if ledger is None or "lex_fingerprint" not in ledger.columns:
+        pending = fps
+    else:
+        done = (
+            dedup_keep_first(ledger, ["partition_id"], [F.desc("ts"), F.desc("run_id")])
+            .filter(F.col("status") == "done")
+            .filter(F.col("lex_fingerprint") == lex_fp)
+            .select(F.col("partition_id").alias("bucket"), "input_fingerprint", "rows_in")
+        )
+        pending = fps.join(done, ["bucket", "input_fingerprint", "rows_in"], "left_anti")
+    return sorted(r.bucket for r in pending.select("bucket").collect())
+
+
+def test_ledger_planning_matches_spark_formula(spark, tmp_path):
+    """Driver-side pending planning equals the Spark ledger formula on a
+    ledger mixing pre-versioning rows (no lex_fingerprint / buckets
+    keys) with new rows, ts ties broken by run_id, and a pruned
+    tombstone over a done row."""
+    lex = "LEX-1|ISA-1"
+    fp_map = {b: (f"FP{b}", 10 + b) for b in range(11)}
+
+    def row(b, run, ts, status="done", fp=None, rows_in=None, lex_fp=lex):
+        r = {
+            "run_id": run,
+            "partition_id": b,
+            "input_fingerprint": fp if fp is not None else f"FP{b}",
+            "rows_in": rows_in if rows_in is not None else 10 + b,
+            "triples_out": 1,
+            "status": status,
+            "ts": ts,
+        }
+        if lex_fp is not None:
+            r.update(lex_fingerprint=lex_fp, buckets=16)
+        return r
+
+    old = [row(0, "run-a", 1.0, lex_fp=None), row(8, "run-a", 1.0, lex_fp=None)]
+    new = [
+        row(1, "run-b", 2.0),  # matching done row: skipped
+        row(2, "run-b", 2.0, fp="STALE"),  # ts tie: run-c wins, matches
+        row(2, "run-c", 2.0),
+        row(3, "run-b", 2.0),  # ts tie: run-c wins, stale
+        row(3, "run-c", 2.0, fp="STALE"),
+        row(4, "run-b", 2.0),  # shadowed by the tombstone below
+        row(5, "run-b", 2.0, lex_fp="LEX-0|ISA-1"),  # other lexicon
+        row(6, "run-b", 2.0, rows_in=99),  # duplicated rows: same xor
+        row(9, "run-b", 2.0),  # newer stale row wins
+        row(9, "run-d", 3.0, fp="STALE"),
+        row(10, "run-b", 2.0, fp="STALE"),  # newer matching row wins
+        row(10, "run-d", 3.0),
+        row(11, "run-b", 2.0),  # a bucket gone from the input
+    ]
+    prune = [row(4, "run-d", 3.0, status="pruned", fp="", rows_in=0)]
+    d = str(tmp_path / "mixed")
+    _write_ledger(d, {"run-a.json": old, "run-b.json": new, "run-d-prune.json": prune})
+
+    got = cp.pending_buckets(fp_map, cp.ledger_rows(d), lex)
+    assert got == _spark_pending(spark, d, fp_map, lex)
+    assert got == [0, 3, 4, 5, 6, 7, 8, 9]
+
+    # a ledger without any lex_fingerprint: nothing is provably done
+    d_old = str(tmp_path / "old")
+    _write_ledger(d_old, {"run-a.json": old})
+    got_old = cp.pending_buckets(fp_map, cp.ledger_rows(d_old), lex)
+    assert got_old == _spark_pending(spark, d_old, fp_map, lex) == sorted(fp_map)
+
+    # no ledger at all
+    d_none = str(tmp_path / "none")
+    assert cp.ledger_rows(d_none) == []
+    assert cp.pending_buckets(fp_map, [], lex) == _spark_pending(spark, d_none, fp_map, lex)
+
+
+def test_ledger_triples_out_matches_disk(spark, transcripts, lexicon, tmp_path):
+    """Each ledger row's triples_out is the row count under
+    triples/bucket=<b> on disk, also for a re-run bucket whose new input
+    yields zero triples (0, and its directory is gone)."""
+    import os
+
+    terms, isa = lexicon
+    d = str(tmp_path / "out")
+
+    def check(run_id):
+        rows = [r for r in cp.ledger_rows(d) if r["run_id"] == run_id]
+        assert rows
+        for r in rows:
+            part = os.path.join(d, "triples", f"bucket={r['partition_id']}")
+            on_disk = spark.read.parquet(part).count() if os.path.isdir(part) else 0
+            assert r["triples_out"] == on_disk, r["partition_id"]
+        return {r["partition_id"]: r["triples_out"] for r in rows}
+
+    first = check(cp.run_resumable(spark, transcripts, terms, isa, d, buckets=8).run_id)
+    assert all(n > 0 for n in first.values())
+
+    # gut one bucket: a single mention-free turn per conversation
+    bucketed = cp.with_bucket(transcripts, 8)
+    b = bucketed.filter(F.col("conv_id") == "conv-000000").first().bucket
+    convs = [
+        r.conv_id
+        for r in bucketed.filter(F.col("bucket") == b).select("conv_id").distinct().collect()
+    ]
+    gutted = transcripts.filter(~F.col("conv_id").isin(convs)).unionByName(
+        spark.createDataFrame([(c, 0, "user", "zzz", None, None) for c in convs], transcripts.schema)
+    )
+    rep = cp.run_resumable(spark, gutted, terms, isa, d, buckets=8)
+    assert rep.processed_buckets == 1
+    assert check(rep.run_id) == {b: 0}
+    assert not os.path.exists(os.path.join(d, "triples", f"bucket={b}"))
+
+
+def test_unchanged_rerun_job_count(spark, transcripts, lexicon, tmp_path):
+    """An unchanged re-run scans its input once: the Spark jobs it starts
+    are exactly the fingerprints' and the two lexicon hashes'. A change
+    that re-scans the input or reads the ledger through Spark fails
+    here."""
+    terms, isa = lexicon
+    d = str(tmp_path / "jobs")
+    cp.run_resumable(spark, transcripts, terms, isa, d, buckets=8)
+    sc = spark.sparkContext
+    group = "test-unchanged-rerun"
+    sc.setJobGroup(group, "unchanged resumable re-run")
+    try:
+        rep = cp.run_resumable(spark, transcripts, terms, isa, d, buckets=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rep.processed_buckets == 0
+    # each aggregate is one adaptive shuffle-map job plus one result job:
+    #   2  bucket_fingerprints(tr).collect()     the one input scan
+    #   2  table_fingerprint(terms).first()
+    #   2  table_fingerprint(isa_edges).first()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 6

@@ -148,3 +148,24 @@ def test_lexicon_size_guard_routes_to_broadcast_join(spark, transcripts, lexicon
         for r in pipeline.build_triples(transcripts, terms, isa, lex=lex_comp).collect()
     }
     assert fused == comp
+
+
+def test_lexicon_size_guard_boundary(spark, transcripts, lexicon):
+    """The size gate is inclusive: exactly max_fused_surfaces surfaces
+    still take the fused driver-dict path, one more surface than the
+    limit takes the broadcast-join path; the triples are identical."""
+    from kgflow.operators import link
+
+    terms, isa = lexicon
+    n = link.surface_dim(terms).count()
+    at = pipeline.prepare_lexicon(terms, max_fused_surfaces=n)
+    over = pipeline.prepare_lexicon(terms, max_fused_surfaces=n - 1)
+    assert at.surface_map is not None and at.canon_map is not None
+    assert len(at.surface_map) == len(at.surfaces) == n
+    assert over.surface_map is None and over.canon_map is None
+    assert sorted(over.surfaces) == sorted(at.surfaces)
+    fused, joined = (
+        sorted(tuple(r) for r in pipeline.build_triples(transcripts, terms, isa, lex=lex).collect())
+        for lex in (at, over)
+    )
+    assert fused and fused == joined
