@@ -22,26 +22,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
+from bench import EXTRAS, HEADLINE  # noqa: E402
 from kgflow.session import get_spark  # noqa: E402
-
-HEADLINE = [
-    "pricing_summary", "region_revenue", "explode_wordcount",
-    "kg_star_triples", "degree_topk", "topk_per_group", "sessionize",
-    "exact_dedup", "minhash_lsh_pairs", "simhash", "ann_brute_topk",
-    "ann_lsh_topk", "text_stats", "quality_score",
-]
-EXTRAS = [
-    "embedding_neardup", "doc_parse_triples", "multimodal_decode",
-    "path_upto3", "rdf_ntriples_parse", "dedup_cluster_assign",
-    "pack_sequences", "pii_redact", "simhash_near_pairs", "simhash64",
-    "simhash64_near_pairs", "lsh_cap_stats", "cc_retract",
-    "paragraph_dedup", "source_mix", "repetition_stats",
-    "data_prep_pipeline", "lm_quality_score", "bigram_lm_score",
-    "data_prep_pipeline_dedup", "image_phash_pairs", "image_resize",
-    "video_frame_sample", "audio_frame_energy", "trigram_lm_score",
-    "trigram_prune_stats", "tfidf_top_terms", "chunk_documents",
-    "dedup_delta", "quality_curriculum_sample",
-]
 
 
 def main() -> None:

@@ -3,23 +3,23 @@
 Replaces the reference's per-record Python NLP/enrichment hop
 (``neo4j_pubmed_batch_embeddings_processor.py:67-328`` parses records one
 at a time in the driver) with a single Arrow-batched ``mapInPandas``
-stage: a greedy longest-match dictionary automaton built once per
-executor from a broadcast surface list scans each text batch.
+stage: a token-level Aho–Corasick automaton, built once per task from a
+broadcast surface list, scans each text batch (greedy leftmost-longest,
+non-overlapping — the rule ``reference_oracle._scan`` specifies).
 
 Scale notes:
 * No shuffle — extraction is embarrassingly parallel over the
   conv_id-hash bucketed input partitions.
 * The dictionary is broadcast once (ontology lexicons are MB-scale, like
-  the reference's OBO files); the per-executor automaton is cached via
-  the broadcast value identity.
-* Matching is pure Python over tokens but batch-amortized; for very wide
-  dictionaries swap in a real Aho–Corasick automaton — the operator
-  contract (text → array<mention>) stays identical.
+  the reference's OBO files); every task rebuilds the automaton from the
+  broadcast value (~0.3 s at 100k surfaces).
+* Per-token work is O(1) amortized however many patterns share a head
+  token, so 10⁶-surface lexicons with hub head-tokens stay cheap.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -27,76 +27,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-_MENTION_OUT = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("role", T.StringType(), True),
-        T.StructField("surface", T.StringType(), False),
-        T.StructField("start", T.IntegerType(), False),
-        T.StructField("end", T.IntegerType(), False),
-    ]
-)
 
-
-def build_matcher(surfaces: list[str]) -> dict[str, list[tuple[tuple[str, ...], str]]]:
-    """first-token → [(token_tuple, canonical_surface)], longest first.
+class TokenAhoCorasick:
+    """Token-level Aho–Corasick automaton over lower-cased whitespace
+    tokens. ``find`` is the extraction rule; ``match_set`` reports every
+    occurrence instead.
 
     Greedy longest-match-first is the deterministic tie-break (the
     reference's MERGE-based loaders are first-writer-wins; we replace
     order-dependence with an explicit rule — SURVEY.md §7.5.2).
-    """
-    index: dict[str, list[tuple[tuple[str, ...], str]]] = {}
-    for s in surfaces:
-        toks = tuple(s.lower().split())
-        if not toks:
-            continue
-        index.setdefault(toks[0], []).append((toks, " ".join(toks)))
-    for head in index:
-        index[head].sort(key=lambda p: len(p[0]), reverse=True)
-    return index
-
-
-def find_mentions(text: str, index: dict[str, list[tuple[tuple[str, ...], str]]]):
-    """Greedy non-overlapping longest-match scan; yields (surface, start, end).
-
-    start/end are token offsets (stable across whitespace normalization,
-    which keeps the per-turn text-equality invariant decoupled from
-    offsets).
-    """
-    # str.split() ≡ \S+ tokenization (splits on all unicode whitespace)
-    # and is ~3× faster than regex iteration in the hot path
-    toks = text.lower().split()
-    out = []
-    i, n = 0, len(toks)
-    while i < n:
-        cands = index.get(toks[i])
-        matched = False
-        if cands:
-            for pat, canon in cands:
-                L = len(pat)
-                if i + L <= n and tuple(toks[i : i + L]) == pat:
-                    out.append((canon, i, i + L))
-                    i += L
-                    matched = True
-                    break
-        if not matched:
-            i += 1
-    return out
-
-
-class TokenAhoCorasick:
-    """Token-level Aho–Corasick automaton with the SAME observable
-    semantics as the greedy first-token matcher (leftmost position,
-    longest match there, non-overlapping): one pass over the tokens
-    collects, for every start offset, the longest pattern starting
-    there; the greedy sweep then replays ``find_mentions``'s rule.
-
-    Why it exists: the first-token index degrades when one head token
-    fans out to thousands of patterns (10⁶-surface lexicons); the
-    automaton's per-token work is O(1) amortized regardless of fan-out.
-    Build cost is paid once per executor from the broadcast surface
-    list, exactly like ``build_matcher``.
     """
 
     def __init__(self, surfaces: list[str]):
@@ -152,8 +91,19 @@ class TokenAhoCorasick:
                 hits.add(" ".join(toks[j - L + 1 : j + 1]))
         return hits
 
-    def find(self, text: str):
-        """Same output contract as ``find_mentions``."""
+    def find(self, text: str) -> list[tuple[str, int, int]]:
+        """Greedy non-overlapping leftmost-longest scan → [(surface,
+        start, end)]: one automaton pass records the longest pattern
+        starting at every token, then a left-to-right sweep takes the
+        match at each free position.
+
+        ``surface`` is the matched tokens joined by single spaces;
+        start/end are token offsets (stable across whitespace
+        normalization, which keeps the per-turn text-equality invariant
+        decoupled from offsets).
+        """
+        # str.split() ≡ \S+ tokenization (splits on all unicode whitespace)
+        # and is ~3× faster than regex iteration in the hot path
         toks = text.lower().split()
         best: dict[int, int] = {}  # start -> longest length
         node = 0
@@ -177,133 +127,79 @@ class TokenAhoCorasick:
         return out
 
 
-# surfaces above this count switch extract_mentions to the automaton
-_AC_THRESHOLD = 5000
-
-
-def extract_mentions(
-    transcripts: DataFrame, surfaces: list[str], matcher: str = "auto"
+def _extract(
+    transcripts: DataFrame,
+    cols: list[str],
+    payload: tuple,
+    schema: T.StructType,
+    emit: Callable[[tuple, list, tuple], list[tuple]],
 ) -> DataFrame:
+    """The one extraction stage: ``transcripts.select(*cols)`` (text
+    column last) → ``schema`` rows in a single narrow ``mapInPandas``.
+
+    ``payload`` is broadcast once; its first item is the surface
+    collection (a list, or a dict keyed by surface). Each task builds
+    the automaton from it, and for every non-empty text returns
+    ``emit(row, find(text), payload)`` — a list of output tuples.
+
+    Only surfaces equal to ``" ".join(s.split())`` enter the automaton:
+    ``_scan`` never matches one holding a tab, a newline or a double
+    space, and left in it would consume tokens. Every hit is then the
+    lower-cased form of a payload surface (a ``link.surface_dim`` key).
+    """
+    bc = transcripts.sparkSession.sparkContext.broadcast(payload)
+    names = schema.fieldNames()
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        value = bc.value
+        find = TokenAhoCorasick([s for s in value[0] if s == " ".join(s.split())]).find
+        for pdf in batches:
+            out: list[tuple] = []
+            for row in zip(*(pdf[c] for c in cols)):
+                text = row[-1]
+                if isinstance(text, str) and text:
+                    out.extend(emit(row, find(text), value))
+            # object dtype: an EMPTY batch would otherwise default every
+            # column to float64, which Arrow cannot convert to
+            # string/list<string>
+            columns = list(zip(*out)) or [()] * len(names)
+            yield pd.DataFrame(
+                {n: pd.Series(c, dtype="object") for n, c in zip(names, columns)}
+            )
+
+    return transcripts.select(*cols).mapInPandas(run, schema=schema)
+
+
+_MENTION_OUT = T.StructType(
+    [
+        T.StructField("conv_id", T.StringType(), False),
+        T.StructField("turn_idx", T.IntegerType(), False),
+        T.StructField("role", T.StringType(), True),
+        T.StructField("surface", T.StringType(), False),
+        T.StructField("start", T.IntegerType(), False),
+        T.StructField("end", T.IntegerType(), False),
+    ]
+)
+
+
+def _emit_mentions(row, hits, _payload):
+    conv, tidx, role, _text = row
+    return [(conv, tidx, role, surface, s, e) for surface, s, e in hits]
+
+
+def extract_mentions(transcripts: DataFrame, surfaces: list[str]) -> DataFrame:
     """transcripts → one row per detected mention (exploded).
 
     Output: (conv_id, turn_idx, role, surface, start, end). Linking to
     term_ids happens downstream as a broadcast join (operators.link) so
     the Python stage stays a pure text op.
-
-    ``matcher``: "greedy" (first-token index — fastest for small
-    lexicons), "aho" (token Aho–Corasick — wide lexicons), or "auto"
-    (aho above 5k surfaces). Both produce identical mentions.
     """
-    spark = transcripts.sparkSession
-    bc = spark.sparkContext.broadcast(sorted(set(surfaces)))
-    if matcher == "auto":
-        matcher = "aho" if len(set(surfaces)) > _AC_THRESHOLD else "greedy"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if matcher == "aho":
-            ac = TokenAhoCorasick(bc.value)
-            find = ac.find
-        else:
-            index = build_matcher(bc.value)
-
-            def find(text):
-                return find_mentions(text, index)
-
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "conv_id": [],
-                "turn_idx": [],
-                "role": [],
-                "surface": [],
-                "start": [],
-                "end": [],
-            }
-            for conv, tidx, role, text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["role"], pdf["text"]
-            ):
-                if not isinstance(text, str) or not text:
-                    continue
-                for surface, s, e in find(text):
-                    rows["conv_id"].append(conv)
-                    rows["turn_idx"].append(int(tidx))
-                    rows["role"].append(role)
-                    rows["surface"].append(surface)
-                    rows["start"].append(s)
-                    rows["end"].append(e)
-            yield pd.DataFrame(rows)
-
-    cols = ["conv_id", "turn_idx", "role", "text"]
-    return transcripts.select(*cols).mapInPandas(run, schema=_MENTION_OUT)
-
-
-_LINKED_OUT = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("term_id", T.StringType(), False),
-        T.StructField("namespace", T.StringType(), True),
-    ]
-)
-
-
-def extract_linked_mentions(
-    transcripts: DataFrame,
-    surface_map: dict[str, tuple[str, str]],
-    canon_map: dict[str, str] | None = None,
-    matcher: str = "auto",
-) -> DataFrame:
-    """Fused extract + link + canonical rewrite — one Arrow pass.
-
-    Output: (conv_id, turn_idx, term_id, namespace), semantically equal
-    to ``extract_mentions`` → ``link.link_mentions`` →
-    ``canon.apply_canonical([term_id])`` but with the dimension lookup
-    done inside the batch loop that already holds the matched surface
-    string. The separate linking pass was the pipeline's worst scaler:
-    two broadcast hash joins re-materializing every mention row cost
-    ~24 CPU-s at 4 cores and 64+ CPU-s at 16 cores on 29M mentions
-    (per-row memory traffic that inflates with parallelism, measured
-    round 3); two dict lookups per mention here are free by comparison.
-    The maps are dimension-scale — the same size class as the surface
-    list the matcher broadcasts anyway — so the 100 TB posture is
-    unchanged: one narrow map over the transcripts, zero shuffle.
-    """
-    spark = transcripts.sparkSession
-    bc = spark.sparkContext.broadcast((surface_map, canon_map or {}))
-    if matcher == "auto":
-        matcher = "aho" if len(surface_map) > _AC_THRESHOLD else "greedy"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        smap, cmap = bc.value
-        keys = sorted(smap)
-        if matcher == "aho":
-            ac = TokenAhoCorasick(keys)
-            find = ac.find
-        else:
-            index = build_matcher(keys)
-
-            def find(text):
-                return find_mentions(text, index)
-
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "conv_id": [],
-                "turn_idx": [],
-                "term_id": [],
-                "namespace": [],
-            }
-            for conv, tidx, text in zip(pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
-                if not isinstance(text, str) or not text:
-                    continue
-                for surface, _s, _e in find(text):
-                    tid, ns = smap[surface]
-                    rows["conv_id"].append(conv)
-                    rows["turn_idx"].append(int(tidx))
-                    rows["term_id"].append(cmap.get(tid, tid))
-                    rows["namespace"].append(ns)
-            yield pd.DataFrame(rows)
-
-    return transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
-        run, schema=_LINKED_OUT
+    return _extract(
+        transcripts,
+        ["conv_id", "turn_idx", "role", "text"],
+        (sorted(set(surfaces)),),
+        _MENTION_OUT,
+        _emit_mentions,
     )
 
 
@@ -317,17 +213,37 @@ _GROUPED_OUT = T.StructType(
 )
 
 
+def _emit_grouped(row, hits, payload):
+    if not hits:
+        return []
+    smap, cmap = payload
+    linked = [smap[surface] for surface, _s, _e in hits]
+    return [
+        (row[0], row[1], [cmap.get(t, t) for t, _ in linked], [ns for _, ns in linked])
+    ]
+
+
 def extract_linked_terms_grouped(
     transcripts: DataFrame,
     surface_map: dict[str, tuple[str, str]],
     canon_map: dict[str, str] | None = None,
-    matcher: str = "auto",
 ) -> DataFrame:
     """Fused extract + link + canon, GROUPED per turn: one output row per
-    input row with ≥1 mention, mentions as aligned parallel arrays
-    (multiplicity preserved — exploding ``arrays_zip(term_ids,
-    namespaces)`` reproduces ``extract_linked_mentions`` exactly, so
-    observation-count provenance is unchanged).
+    input row with ≥1 mention, (conv_id, turn_idx, term_ids, namespaces)
+    with the mentions as aligned parallel arrays. Exploding
+    ``arrays_zip(term_ids, namespaces)`` equals ``extract_mentions`` →
+    ``link.link_mentions`` → ``canon.apply_canonical([term_id])`` row
+    for row (multiplicity preserved, so observation-count provenance is
+    unchanged).
+
+    Why fused: the dimension lookup is done inside the batch loop that
+    already holds the matched surface string. The separate linking pass
+    was the pipeline's worst scaler: two broadcast hash joins
+    re-materializing every mention row cost ~24 CPU-s at 4 cores and
+    64+ CPU-s at 16 cores on 29M mentions (measured round 3); two dict
+    lookups per mention here are free by comparison. The maps are
+    dimension-scale — the same size class as the surface list — so the
+    100 TB posture is unchanged: one narrow map, zero shuffle.
 
     Why grouped: a transcript row IS one turn, so the per-turn term sets
     the co-occurrence family needs are complete inside the batch loop —
@@ -339,58 +255,12 @@ def extract_linked_terms_grouped(
     input hint's shape; duplicate turn rows would produce per-row
     (not per-turn) co-occurrence sets downstream.
     """
-    spark = transcripts.sparkSession
-    bc = spark.sparkContext.broadcast((surface_map, canon_map or {}))
-    if matcher == "auto":
-        matcher = "aho" if len(surface_map) > _AC_THRESHOLD else "greedy"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        smap, cmap = bc.value
-        keys = sorted(smap)
-        if matcher == "aho":
-            ac = TokenAhoCorasick(keys)
-            find = ac.find
-        else:
-            index = build_matcher(keys)
-
-            def find(text):
-                return find_mentions(text, index)
-
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "conv_id": [],
-                "turn_idx": [],
-                "term_ids": [],
-                "namespaces": [],
-            }
-            for conv, tidx, text in zip(pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
-                if not isinstance(text, str) or not text:
-                    continue
-                tids: list[str] = []
-                nss: list[str] = []
-                for surface, _s, _e in find(text):
-                    tid, ns = smap[surface]
-                    tids.append(cmap.get(tid, tid))
-                    nss.append(ns)
-                if tids:
-                    rows["conv_id"].append(conv)
-                    rows["turn_idx"].append(int(tidx))
-                    rows["term_ids"].append(tids)
-                    rows["namespaces"].append(nss)
-            # object dtype for the array columns: an EMPTY batch would
-            # otherwise default them to float64, which Arrow cannot
-            # convert to list<string>
-            yield pd.DataFrame(
-                {
-                    "conv_id": pd.Series(rows["conv_id"], dtype="object"),
-                    "turn_idx": pd.Series(rows["turn_idx"], dtype="int64"),
-                    "term_ids": pd.Series(rows["term_ids"], dtype="object"),
-                    "namespaces": pd.Series(rows["namespaces"], dtype="object"),
-                }
-            )
-
-    return transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
-        run, schema=_GROUPED_OUT
+    return _extract(
+        transcripts,
+        ["conv_id", "turn_idx", "text"],
+        (surface_map, canon_map or {}),
+        _GROUPED_OUT,
+        _emit_grouped,
     )
 
 

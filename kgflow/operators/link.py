@@ -15,13 +15,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Java's \s plus the rest of what Python's str.isspace() accepts, so an
+# edge strip here equals the oracle's str.strip()
+_EDGE_WS = r"[\s\x1c-\x1f\x85\xa0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]"
+
 
 def surface_dim(terms: DataFrame) -> DataFrame:
     """Lexicon terms → (surface, term_id, namespace) link dimension.
 
     * name + each synonym becomes a surface (pipe-split semantics of
       ``cql/import/import_hgnc.cql:34-38`` already normalized to arrays).
-    * surfaces trimmed + lower-cased (C6 hygiene).
+    * surfaces edge-stripped of all whitespace (not only spaces) +
+      lower-cased (C6 hygiene).
     * obsolete terms are excluded — they must not link
       (``import_go_obo.py:105``).
     * one winner per surface: deterministic min(term_id) tie-break
@@ -36,7 +41,11 @@ def surface_dim(terms: DataFrame) -> DataFrame:
         "namespace",
     )
     cleaned = surfaces.select(
-        F.lower(F.trim(F.col("surface_raw"))).alias("surface"), "term_id", "namespace"
+        F.lower(F.regexp_replace("surface_raw", f"^{_EDGE_WS}+|{_EDGE_WS}+$", "")).alias(
+            "surface"
+        ),
+        "term_id",
+        "namespace",
     ).filter(F.col("surface") != "")
     return cleaned.groupBy("surface").agg(
         F.min("term_id").alias("term_id"),

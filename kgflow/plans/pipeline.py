@@ -64,7 +64,7 @@ def prepare_lexicon(
     (the reference parses whole ontologies driver-side,
     import_go_obo.py:64-145) but would build multi-GB Python dicts for a
     10M-surface lexicon. Above the threshold only the surface LIST (the
-    matcher's irreducible broadcast artifact) is collected and
+    automaton's irreducible broadcast artifact) is collected and
     ``surface_map``/``canon_map`` stay None, which routes
     ``_assemble_triples`` to the broadcast-JOIN composition form
     (link.link_mentions + canon.apply_canonical) — same triples, JVM-side
@@ -125,9 +125,9 @@ def _assemble_triples(
         grouped = extract.extract_linked_terms_grouped(
             transcripts, lex.surface_map, lex.canon_map
         ).localCheckpoint(eager=True)
-        # exploding the zipped arrays reproduces extract_linked_mentions
-        # exactly (multiplicity preserved → n_obs provenance unchanged);
-        # the explode is narrow JVM work, no exchange
+        # exploding the zipped arrays reproduces the composition form's
+        # linked rows exactly (multiplicity preserved → n_obs provenance
+        # unchanged); the explode is narrow JVM work, no exchange
         linked = grouped.select(
             "conv_id",
             "turn_idx",

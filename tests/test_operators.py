@@ -5,18 +5,19 @@ import math
 from pyspark.sql import functions as F
 
 from kgflow.operators import dedup, extract, sessionize, vector
-from kgflow.operators.extract import build_matcher, find_mentions
+from kgflow.operators.extract import TokenAhoCorasick
+from kgflow.reference_oracle import _scan
 
 
 def test_matcher_longest_match_and_negatives():
-    idx = build_matcher(["alpha kinase", "alpha kinase beta", "beta"])
+    find = TokenAhoCorasick(["alpha kinase", "alpha kinase beta", "beta"]).find
     # longest-match wins, greedy, non-overlapping
-    hits = find_mentions("see alpha kinase beta then alpha kinase and beta", idx)
-    assert [h[0] for h in hits] == ["alpha kinase beta", "alpha kinase", "beta"]
+    hits = find("see alpha kinase beta then alpha kinase and beta")
+    assert hits == [("alpha kinase beta", 1, 4), ("alpha kinase", 5, 7), ("beta", 8, 9)]
     # near-miss: head word alone must not match
-    assert find_mentions("alpha alone here", idx) == []
+    assert find("alpha alone here") == []
     # case-insensitive
-    assert [h[0] for h in find_mentions("ALPHA KINASE", idx)] == ["alpha kinase"]
+    assert [h[0] for h in find("ALPHA KINASE")] == ["alpha kinase"]
 
 
 def test_extract_mentions_offsets(spark):
@@ -270,12 +271,10 @@ def test_numpy_topk_string_ids(spark):
 
 
 def test_aho_corasick_equivalence_randomized():
-    """TokenAhoCorasick must reproduce the greedy first-token matcher
-    exactly (leftmost-longest, non-overlapping) across adversarial
-    prefix/suffix/overlap pattern sets."""
+    """TokenAhoCorasick.find must reproduce the oracle's greedy scan
+    (reference_oracle._scan: leftmost-longest, non-overlapping) exactly
+    across adversarial prefix/suffix/overlap pattern sets."""
     import random
-
-    from kgflow.operators.extract import TokenAhoCorasick
 
     rng = random.Random(99)
     alphabet = ["a", "b", "c", "ab", "bc"]
@@ -285,24 +284,16 @@ def test_aho_corasick_equivalence_randomized():
             " ".join(rng.choices(alphabet, k=rng.randint(1, 4))) for _ in range(n_pat)
         }
         surfaces = sorted(pats)
-        idx = build_matcher(surfaces)
+        surf_map = {s: (s, "ns") for s in surfaces}
+        max_len = max(len(s.split()) for s in surfaces)
         ac = TokenAhoCorasick(surfaces)
         for _ in range(20):
             text = " ".join(rng.choices(alphabet, k=rng.randint(0, 25)))
-            assert ac.find(text) == find_mentions(text, idx), (surfaces, text)
-
-
-def test_aho_corasick_extract_mentions_parity(spark):
-    from kgflow.operators import extract as ex
-
-    tr = spark.createDataFrame(
-        [("c1", 0, "user", "x alpha kinase beta then alpha kinase", None, None)],
-        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
-    )
-    surf = ["alpha kinase", "alpha kinase beta", "beta"]
-    greedy = sorted(map(tuple, ex.extract_mentions(tr, surf, matcher="greedy").collect()))
-    aho = sorted(map(tuple, ex.extract_mentions(tr, surf, matcher="aho").collect()))
-    assert greedy == aho and len(greedy) == 2
+            hits = ac.find(text)
+            want = [s for s, _ in _scan(text, surf_map, max_len)]
+            assert [h[0] for h in hits] == want, (surfaces, text)
+            toks = text.split()
+            assert all(" ".join(toks[s:e]) == h for h, s, e in hits)
 
 
 def test_simhash_near_pairs_equals_bruteforce(spark):
@@ -388,9 +379,9 @@ def test_redact_pii_patterns_and_order(spark):
 
 def test_grouped_explode_equals_linked_mentions(spark):
     """The grouped fused extractor's correctness claim: exploding
-    arrays_zip(term_ids, namespaces) reproduces extract_linked_mentions
-    exactly (multiplicity preserved) — pinned here so the exploded-form
-    baseline cannot silently rot."""
+    arrays_zip(term_ids, namespaces) reproduces extract_mentions plus a
+    surface → term → canonical lookup exactly (multiplicity preserved)
+    — pinned here so the exploded-form baseline cannot silently rot."""
     tr = spark.createDataFrame(
         [
             ("c1", 0, "user", "alpha kinase then beta then alpha kinase", None, None),
@@ -406,8 +397,14 @@ def test_grouped_explode_equals_linked_mentions(spark):
         "gamma": ("T3_ALT", "ns1"),
     }
     cmap = {"T3_ALT": "T3"}
+
+    def link(surface):
+        tid, ns = smap[surface]
+        return cmap.get(tid, tid), ns
+
     flat = sorted(
-        map(tuple, extract.extract_linked_mentions(tr, smap, cmap).collect())
+        (r.conv_id, r.turn_idx, *link(r.surface))
+        for r in extract.extract_mentions(tr, list(smap)).collect()
     )
     grouped = extract.extract_linked_terms_grouped(tr, smap, cmap)
     exploded = sorted(
@@ -430,6 +427,21 @@ def test_grouped_explode_equals_linked_mentions(spark):
     assert flat == exploded
     # multiplicity really is preserved (beta twice in c1 turn 1)
     assert flat.count(("c1", 1, "T2", "ns2")) == 2
+
+
+def test_extractors_on_empty_and_null_text(spark):
+    """Every batch of an all-empty/null-text frame emits zero rows: both
+    public extractors must still convert those empty batches to Arrow
+    and return 0 rows under their declared schemas."""
+    tr = spark.createDataFrame(
+        [("c1", i, "user", t, None, None) for i, t in enumerate(["", None, "", None])],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    ).repartition(2)
+    mentions = extract.extract_mentions(tr, ["alpha kinase"])
+    grouped = extract.extract_linked_terms_grouped(tr, {"alpha kinase": ("T1", "ns1")})
+    assert mentions.collect() == [] and grouped.collect() == []
+    assert mentions.schema == extract._MENTION_OUT
+    assert grouped.schema == extract._GROUPED_OUT
 
 
 def test_hash_sample_deterministic_rate_and_salt(spark):

@@ -169,3 +169,43 @@ def test_lexicon_size_guard_boundary(spark, transcripts, lexicon):
         for lex in (at, over)
     )
     assert fused and fused == joined
+
+
+def test_surfaces_with_non_space_whitespace(spark):
+    """Lexicon surfaces holding a double space, an inner tab or an edge
+    tab: the fused path must not miss a driver-dict lookup, and neither
+    path may let a surface that the oracle can never match consume
+    tokens another surface needs — both paths equal the oracle."""
+    import pandas as pd
+
+    from kgflow import schemas
+
+    term_rows = [
+        ("T1", "alpha  kinase", "ns1", None, [], [], [], False),
+        ("T2", "beta\treceptor", "ns2", None, [], [], [], False),
+        ("T3", "gamma factor\t", "ns1", None, [], [], ["T3_ALT"], False),
+        ("T4", "kinase beta", "ns2", None, ["\tdelta kinase "], [], [], False),
+    ]
+    isa_rows = [("T4", "is_a", "T3")]
+    turn_rows = [
+        ("c1", 0, "user", "the alpha kinase beta receptor then gamma factor", None, None),
+        ("c1", 1, "asst", "alpha  kinase beta\treceptor", None, None),
+        ("c2", 0, "user", "Delta Kinase and gamma factor\tkinase beta", None, None),
+    ]
+    terms = spark.createDataFrame(term_rows, schemas.LEXICON_TERM)
+    isa = spark.createDataFrame(isa_rows, schemas.LEXICON_ISA_EDGE)
+    tr = spark.createDataFrame(turn_rows, schemas.TRANSCRIPT)
+    exp = ro.expected_triples(
+        pd.DataFrame(turn_rows, columns=schemas.TRANSCRIPT.fieldNames()),
+        pd.DataFrame(term_rows, columns=schemas.LEXICON_TERM.fieldNames()),
+        pd.DataFrame(isa_rows, columns=schemas.LEXICON_ISA_EDGE.fieldNames()),
+    )
+    assert {("turn:c1:0", "MENTIONS", "T4"), ("turn:c2:0", "MENTIONS", "T3")} <= exp
+    for max_fused in (2_000_000, 0):
+        lex = pipeline.prepare_lexicon(terms, max_fused_surfaces=max_fused)
+        assert (lex.surface_map is None) == (max_fused == 0)
+        got = {
+            (r.subj, r.pred, r.obj)
+            for r in pipeline.build_triples(tr, terms, isa, lex=lex).collect()
+        }
+        assert ro.precision_recall(got, exp) == (1.0, 1.0), (max_fused, got ^ exp)

@@ -2,11 +2,14 @@
 same greedy longest-match semantics on adversarial random texts
 (overlapping surfaces, near-miss prefixes, odd whitespace, case)."""
 
+import functools
+import random
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from kgflow.operators.extract import build_matcher, find_mentions
+from kgflow import synth
+from kgflow.operators.extract import TokenAhoCorasick
 from kgflow.reference_oracle import _scan
 
 SURFACES = [
@@ -27,8 +30,7 @@ VOCAB = ["alpha", "kinase", "beta", "receptor", "gamma", "the", "x", "Y"]
 )
 def test_matcher_equals_oracle_scan(words, sep):
     text = sep.join(words)
-    idx = build_matcher(SURFACES)
-    spark_side = [s for s, _, _ in find_mentions(text, idx)]
+    spark_side = [s for s, _, _ in TokenAhoCorasick(SURFACES).find(text)]
 
     surf_map = {s.lower(): (s.lower(), "ns") for s in SURFACES}
     max_len = max(len(s.split()) for s in SURFACES)
@@ -40,8 +42,7 @@ def test_matcher_equals_oracle_scan(words, sep):
 @settings(max_examples=100, deadline=None)
 @given(st.text(alphabet="abk αβ\t", min_size=0, max_size=40))
 def test_matcher_never_crashes_on_garbage(text):
-    idx = build_matcher(SURFACES)
-    out = find_mentions(text, idx)
+    out = TokenAhoCorasick(SURFACES).find(text)
     # offsets are sane and non-overlapping
     toks = text.lower().split()
     prev_end = 0
@@ -50,6 +51,27 @@ def test_matcher_never_crashes_on_garbage(text):
         assert s >= prev_end
         prev_end = e
         assert " ".join(toks[s:e]) == surface
+
+
+@functools.cache
+def _bench_lexicon():
+    """The kg_pipeline bench lexicon (300 terms): three-token surfaces
+    whose few head tokens each fan out to many patterns."""
+    terms, _ = synth.make_lexicon(300)
+    surfaces = sorted({s.lower() for r in terms.itertuples() for s in [r.name, *r.synonyms]})
+    surf_map = {s: (s, "ns") for s in surfaces}
+    max_len = max(len(s.split()) for s in surfaces)
+    return surfaces, TokenAhoCorasick(surfaces), surf_map, max_len
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.integers(0, 2**32 - 1), st.sampled_from([1.0, 3.0]))
+def test_matcher_equals_oracle_scan_bench_lexicon(seed, zipf_s):
+    surfaces, ac, surf_map, max_len = _bench_lexicon()
+    rng = random.Random(seed)
+    text = " ".join(synth._turn_text(rng, surfaces, zipf_s) for _ in range(3))
+    got = [s for s, _, _ in ac.find(text)]
+    assert got == [t for t, _ in _scan(text, surf_map, max_len)]
 
 
 def test_bounded_paths_matches_bfs_oracle(spark):
