@@ -69,7 +69,7 @@ def dedup_keep_first(df: DataFrame, keys: list[str], order_by: list) -> DataFram
 
 
 def _union_find_map(rows) -> dict:
-    """Driver-side union-find over (a, b) edge rows; returns the full
+    """Driver-side union-find over (a, b) edge pairs; returns the full
     (member -> min-of-component) map. Union-by-value (larger root links
     under smaller root) guarantees every root is the component minimum."""
     parent: dict = {}
@@ -82,8 +82,8 @@ def _union_find_map(rows) -> dict:
             parent[x], x = root, parent[x]
         return root
 
-    for row in rows:
-        ra, rb = find(row.a), find(row.b)
+    for a, b in rows:
+        ra, rb = find(a), find(b)
         if ra != rb:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo

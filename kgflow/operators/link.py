@@ -15,9 +15,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import canon
+
 # Java's \s plus the rest of what Python's str.isspace() accepts, so an
 # edge strip here equals the oracle's str.strip()
 _EDGE_WS = r"[\s\x1c-\x1f\x85\xa0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]"
+
+
+def edge_strip(col):
+    """``col`` with leading and trailing whitespace removed, as
+    ``str.strip()`` removes it (``F.trim`` strips spaces only)."""
+    return F.regexp_replace(col, f"^{_EDGE_WS}+|{_EDGE_WS}+$", "")
 
 
 def surface_dim(terms: DataFrame) -> DataFrame:
@@ -41,9 +49,7 @@ def surface_dim(terms: DataFrame) -> DataFrame:
         "namespace",
     )
     cleaned = surfaces.select(
-        F.lower(F.regexp_replace("surface_raw", f"^{_EDGE_WS}+|{_EDGE_WS}+$", "")).alias(
-            "surface"
-        ),
+        F.lower(edge_strip("surface_raw")).alias("surface"),
         "term_id",
         "namespace",
     ).filter(F.col("surface") != "")
@@ -51,6 +57,22 @@ def surface_dim(terms: DataFrame) -> DataFrame:
         F.min("term_id").alias("term_id"),
         F.min_by("namespace", "term_id").alias("namespace"),
     )
+
+
+def surface_map(rows) -> dict[str, tuple[str, str]]:
+    """``surface_dim`` on the driver: surface → (term_id, namespace) over
+    collected term rows, by the same rules (live terms only, name plus
+    synonyms, ``strip().lower()``, non-empty, min term_id wins with its
+    namespace)."""
+    out: dict[str, tuple[str, str]] = {}
+    for r in rows:
+        if r.is_obsolete:
+            continue
+        for s in {r.name, *(r.synonyms or ())}:
+            key = s.strip().lower() if s is not None else ""
+            if key and (key not in out or r.term_id < out[key][0]):
+                out[key] = (r.term_id, r.namespace)
+    return out
 
 
 def link_mentions(mentions: DataFrame, dim: DataFrame) -> DataFrame:
@@ -117,7 +139,19 @@ def alt_id_edges(terms: DataFrame) -> DataFrame:
         terms.select("term_id", F.explode("alt_ids").alias("alt_id"))
         .select(
             F.col("term_id").alias("id_a"),
-            F.col("alt_id").alias("id_b"),
+            edge_strip("alt_id").alias("id_b"),
         )
-        .filter(F.col("id_b").isNotNull() & (F.trim("id_b") != ""))
+        .filter(F.col("id_b") != "")
+    )
+
+
+def canonical_map(rows) -> dict[str, str]:
+    """``connected_components(alt_id_edges(terms))`` on the driver: id →
+    min id of its same-as component, over collected term rows with the
+    same edge rules (alt ids edge-stripped, empty ones dropped)."""
+    return canon._union_find_map(
+        (r.term_id, alt.strip())
+        for r in rows
+        for alt in r.alt_ids or ()
+        if alt is not None and alt.strip()
     )

@@ -11,7 +11,9 @@ ledger:
   independent, computed map-side, one tiny shuffle). A run scans its
   input for fingerprints ONCE and collects the one-row-per-bucket
   result; the pending set, the prune set and the ledger rows are all
-  derived from that driver-side map;
+  derived from that driver-side map. The lexicon's term and is-a
+  tables are hashed in the same aggregate (one group each), so an
+  unchanged re-run is a single shuffle and one collect;
 * a completed bucket writes one ledger row (a JSON line under
   ``_ledger/``) with lineage counts (rows_in, triples_out) and the
   fingerprint;
@@ -57,22 +59,46 @@ def with_bucket(transcripts: DataFrame, buckets: int) -> DataFrame:
     )
 
 
-def bucket_fingerprints(transcripts: DataFrame) -> DataFrame:
-    """(bucket, input_fingerprint, rows_in) — order-insensitive content hash.
+def bucket_fingerprints(
+    transcripts: DataFrame, *tables: DataFrame
+) -> tuple[dict[int, tuple[str, int]], list[str]]:
+    """(bucket → (input_fingerprint, rows_in), [table fingerprint per
+    ``tables``]) from ONE aggregate: the input's row hashes and each
+    table's ``table_fingerprint`` rows, tagged and unioned, grouped by
+    (tag, bucket) — one map-side-combined shuffle, one collect.
 
-    ``rows_in`` is part of the resume match key, not just lineage: the
-    xor-agg cancels on even multiplicities (adding two copies of an
-    existing row leaves the xor unchanged), and the row count catches
-    every pure-duplication collision for free.
+    The bucket fingerprint is ``hex(bit_xor)`` of the row hashes — an
+    order-insensitive content hash. ``rows_in`` is part of the resume
+    match key, not just lineage: the xor-agg cancels on even
+    multiplicities (adding two copies of an existing row leaves the xor
+    unchanged), and the row count catches every pure-duplication
+    collision for free. A table fingerprint is ``%016X-<rows>`` of its
+    xor-agg; an empty table has no group and reads
+    ``0000000000000000-0``.
     """
     row_hash = F.xxhash64("conv_id", "turn_idx", F.coalesce("text", F.lit("")))
-    return transcripts.groupBy("bucket").agg(
+    tagged = transcripts.select(F.lit(-1).alias("_t"), "bucket", row_hash.alias("_h"))
+    for i, t in enumerate(tables):
+        tagged = tagged.unionByName(
+            table_fingerprint(t).select(
+                F.lit(i).alias("_t"), F.lit(None).cast("int").alias("bucket"), "_h"
+            )
+        )
+    rows = (
+        tagged.groupBy("_t", "bucket")
         # xor-agg: order-insensitive, overflow-free under ANSI mode
-        F.bit_xor(row_hash).alias("_h"),
-        F.count(F.lit(1)).alias("rows_in"),
-    ).select(
-        "bucket", F.hex(F.col("_h")).alias("input_fingerprint"), "rows_in"
+        .agg(F.bit_xor("_h").alias("_x"), F.count(F.lit(1)).alias("_n"))
+        .select("_t", "bucket", "_x", F.hex("_x").alias("_hex"), "_n")
+        .collect()
     )
+    fp_map = {}
+    table_fps = ["0000000000000000-0"] * len(tables)
+    for tag, bucket, x, hex_x, n in rows:
+        if tag < 0:
+            fp_map[bucket] = (hex_x, n)
+        else:
+            table_fps[tag] = f"{x & 0xFFFFFFFFFFFFFFFF:016X}-{n}"
+    return fp_map, table_fps
 
 
 def bucket_quality(transcripts: DataFrame) -> DataFrame:
@@ -100,17 +126,14 @@ def bucket_quality(transcripts: DataFrame) -> DataFrame:
     )
 
 
-def table_fingerprint(df: DataFrame) -> str:
-    """Order-insensitive whole-table content hash (hex string) — used to
-    version the lexicon/ontology inputs inside the ledger match key, so
-    a changed term table invalidates every bucket's resume row."""
+def table_fingerprint(df: DataFrame) -> DataFrame:
+    """One ``_h`` hash per row of ``df`` — the rows of the order-insensitive
+    whole-table content hash ``bucket_fingerprints`` aggregates. It
+    versions the lexicon/ontology inputs inside the ledger match key, so
+    a changed term table invalidates every bucket's resume row. Columns
+    are hashed in name order, cast to string, null as NUL."""
     cols = [F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in sorted(df.columns)]
-    row = (
-        df.select(F.xxhash64(*cols).alias("_h"))
-        .agg(F.bit_xor("_h").alias("_x"), F.count(F.lit(1)).alias("_n"))
-        .first()
-    )
-    return f"{(row['_x'] or 0) & 0xFFFFFFFFFFFFFFFF:016X}-{row['_n']}"
+    return df.select(F.xxhash64(*cols).alias("_h"))
 
 
 @dataclass
@@ -238,17 +261,14 @@ def run_resumable(
             buckets = recorded if recorded is not None else auto_bucket_count(transcripts)
     tr = with_bucket(transcripts, buckets)
     # the one scan of the input: every later use (pending, prune set,
-    # ledger lineage) reads this driver-side map
-    fp_map = {
-        r.bucket: (r.input_fingerprint, r.rows_in)
-        for r in bucket_fingerprints(tr).collect()
-    }
-    total = len(fp_map)
-    # terms/isa_edges are inputs to every bucket's triples (linking,
-    # HAS_NS, canonical mapping) — fold their content hash into the
+    # ledger lineage) reads this driver-side map. terms/isa_edges are
+    # inputs to every bucket's triples (linking, HAS_NS, canonical
+    # mapping) — their content hashes, from the same aggregate, join the
     # resume match key so a changed lexicon re-runs every bucket instead
     # of silently serving stale fingerprint-matching output.
-    lex_fp = table_fingerprint(terms) + "|" + table_fingerprint(isa_edges)
+    fp_map, lex_fps = bucket_fingerprints(tr, terms, isa_edges)
+    total = len(fp_map)
+    lex_fp = "|".join(lex_fps)
     pending_list = pending_buckets(fp_map, ledger, lex_fp)
 
     # A bucket whose input rows disappeared entirely has no fp_map entry

@@ -43,12 +43,13 @@ class Lexicon:
     across every batch/stream run (dimension prep is not per-batch work —
     the reference likewise parses ontologies once up front,
     import_go_obo.py:64-145). ``surface_map``/``canon_map`` are the
-    driver-side dict forms of ``dim``/``mapping`` (dimension-scale),
-    broadcast into the fused extraction stage."""
+    driver-side dicts (surface → (term_id, namespace), id → canonical
+    id) broadcast into the fused extraction stage; ``dim`` is the
+    broadcast-join link dimension of the path without them."""
 
     surfaces: list[str]
-    dim: DataFrame  # (surface, term_id, namespace), cached
-    mapping: DataFrame  # (id, canonical_id), cached
+    mapping: DataFrame  # (id, canonical_id)
+    dim: DataFrame | None = None  # (surface, term_id, namespace), cached
     surface_map: dict[str, tuple[str, str]] | None = None
     canon_map: dict[str, str] | None = None
 
@@ -63,13 +64,40 @@ def prepare_lexicon(
     driver and pickle-broadcasts them, which is right at ontology scale
     (the reference parses whole ontologies driver-side,
     import_go_obo.py:64-145) but would build multi-GB Python dicts for a
-    10M-surface lexicon. Above the threshold only the surface LIST (the
-    automaton's irreducible broadcast artifact) is collected and
+    10M-surface lexicon.
+
+    At ontology scale the dicts come from one bounded collect of the
+    term rows: ``link.surface_map`` and ``link.canonical_map`` apply the
+    ``surface_dim`` / ``alt_id_edges`` rules on the driver, and
+    ``mapping`` is a local frame of ``canon_map`` — one Spark job, no
+    cache. When the term rows or their surfaces exceed the guard, the
+    Spark path builds the cached ``dim`` and the connected-components
+    ``mapping``; above the guard only the surface LIST (the automaton's
+    irreducible broadcast artifact) is collected and
     ``surface_map``/``canon_map`` stay None, which routes
     ``_assemble_triples`` to the broadcast-JOIN composition form
     (link.link_mentions + canon.apply_canonical) — same triples, JVM-side
     Tungsten-compact broadcast instead of Python dicts.
     """
+    rows = (
+        terms.select("term_id", "name", "namespace", "synonyms", "alt_ids", "is_obsolete")
+        .limit(max_fused_surfaces + 1)
+        .collect()
+    )
+    if len(rows) <= max_fused_surfaces:
+        surface_map = link.surface_map(rows)
+        if len(surface_map) <= max_fused_surfaces:
+            canon_map = link.canonical_map(rows)
+            mapping = terms.sparkSession.createDataFrame(
+                list(canon_map.items()), "id string, canonical_id string"
+            )
+            return Lexicon(
+                surfaces=list(surface_map),
+                mapping=mapping,
+                surface_map=surface_map,
+                canon_map=canon_map,
+            )
+
     dim = link.surface_dim(terms).cache()
     mapping = canon.connected_components(link.alt_id_edges(terms)).cache()
     # one bounded collect serves both the size gate and the driver dicts
@@ -95,9 +123,9 @@ def prepare_lexicon(
 
 
 def normalize_predicate(col):
-    """upper-case + ``:``/space → ``_`` (import_go_obo.py:256,
+    """edge-strip + upper-case + ``:``/space → ``_`` (import_go_obo.py:256,
     import_squence_ontology_obo.py:98)."""
-    return F.upper(F.regexp_replace(F.trim(col), "[: ]", "_"))
+    return F.upper(F.regexp_replace(link.edge_strip(col), "[: ]", "_"))
 
 
 def _assemble_triples(
@@ -219,9 +247,9 @@ def _assemble_triples(
     )
 
     onto = isa_edges.select(
-        F.trim("subject_id").alias("subj"),
+        link.edge_strip("subject_id").alias("subj"),
         normalize_predicate(F.col("predicate")).alias("pred"),
-        F.trim("object_id").alias("obj"),
+        link.edge_strip("object_id").alias("obj"),
         F.lit(None).cast("string").alias("src_conv"),
         F.lit("ontology").alias("family"),
     )

@@ -34,6 +34,8 @@ def _surface_map(terms: pd.DataFrame) -> dict[str, tuple[str, str]]:
         if bool(row.is_obsolete):
             continue
         for s in [row.name] + list(row.synonyms or []):
+            if s is None:
+                continue
             key = s.strip().lower()
             if not key:
                 continue

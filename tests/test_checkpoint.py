@@ -706,10 +706,11 @@ def test_ledger_triples_out_matches_disk(spark, transcripts, lexicon, tmp_path):
 
 
 def test_unchanged_rerun_job_count(spark, transcripts, lexicon, tmp_path):
-    """An unchanged re-run scans its input once: the Spark jobs it starts
-    are exactly the fingerprints' and the two lexicon hashes'. A change
-    that re-scans the input or reads the ledger through Spark fails
-    here."""
+    """An unchanged re-run scans its input once: the only Spark jobs it
+    starts are the one fingerprint aggregate's, which hashes the input
+    and both lexicon tables together. A change that re-scans the input,
+    hashes a lexicon table in its own job or reads the ledger through
+    Spark fails here."""
     terms, isa = lexicon
     d = str(tmp_path / "jobs")
     cp.run_resumable(spark, transcripts, terms, isa, d, buckets=8)
@@ -722,8 +723,45 @@ def test_unchanged_rerun_job_count(spark, transcripts, lexicon, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert rep.processed_buckets == 0
-    # each aggregate is one adaptive shuffle-map job plus one result job:
-    #   2  bucket_fingerprints(tr).collect()     the one input scan
-    #   2  table_fingerprint(terms).first()
-    #   2  table_fingerprint(isa_edges).first()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 6
+    # bucket_fingerprints(tr, terms, isa_edges): one adaptive
+    # shuffle-map job plus one result job
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+
+
+def _parent_table_fingerprint(df):
+    """The whole-table hash as its own aggregate — the formula ledgers
+    already on disk were written with."""
+    cols = [F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in sorted(df.columns)]
+    row = (
+        df.select(F.xxhash64(*cols).alias("_h"))
+        .agg(F.bit_xor("_h").alias("_x"), F.count(F.lit(1)).alias("_n"))
+        .first()
+    )
+    return f"{(row['_x'] or 0) & 0xFFFFFFFFFFFFFFFF:016X}-{row['_n']}"
+
+
+def test_ledger_fingerprints_match_per_table_formula(spark, transcripts, lexicon, tmp_path):
+    """The one fingerprint aggregate writes the same ledger strings as
+    one aggregate per table did — bucket hex(bit_xor) and rows_in, and
+    ``%016X-<n>`` per lexicon table, ``0000000000000000-0`` for an empty
+    one — so ledgers written before it keep skipping."""
+    terms, isa = lexicon
+    tr = cp.with_bucket(transcripts, 8)
+    per_bucket = {
+        r.bucket: (r.fp, r.n)
+        for r in tr.groupBy("bucket")
+        .agg(
+            F.hex(F.bit_xor(F.xxhash64("conv_id", "turn_idx", F.coalesce("text", F.lit(""))))).alias("fp"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        .collect()
+    }
+    empty_isa = spark.createDataFrame([], isa.schema)
+    assert _parent_table_fingerprint(empty_isa) == "0000000000000000-0"
+    for i, edges in enumerate((isa, empty_isa)):
+        d = str(tmp_path / f"out{i}")
+        cp.run_resumable(spark, transcripts, terms, edges, d, buckets=8)
+        rows = cp.ledger_rows(d)
+        assert {r["partition_id"]: (r["input_fingerprint"], r["rows_in"]) for r in rows} == per_bucket
+        lex_fp = _parent_table_fingerprint(terms) + "|" + _parent_table_fingerprint(edges)
+        assert {r["lex_fingerprint"] for r in rows} == {lex_fp}

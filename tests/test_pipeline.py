@@ -171,15 +171,28 @@ def test_lexicon_size_guard_boundary(spark, transcripts, lexicon):
     assert fused and fused == joined
 
 
+def _frames(spark, term_rows, isa_rows, turn_rows=()):
+    """Spark frames and pandas frames (the oracle's input) of the rows."""
+    import pandas as pd
+
+    from kgflow import schemas
+
+    shapes = (
+        (term_rows, schemas.LEXICON_TERM),
+        (isa_rows, schemas.LEXICON_ISA_EDGE),
+        (list(turn_rows), schemas.TRANSCRIPT),
+    )
+    return (
+        [spark.createDataFrame(rows, schema) for rows, schema in shapes],
+        [pd.DataFrame(rows, columns=schema.fieldNames()) for rows, schema in shapes],
+    )
+
+
 def test_surfaces_with_non_space_whitespace(spark):
     """Lexicon surfaces holding a double space, an inner tab or an edge
     tab: the fused path must not miss a driver-dict lookup, and neither
     path may let a surface that the oracle can never match consume
     tokens another surface needs — both paths equal the oracle."""
-    import pandas as pd
-
-    from kgflow import schemas
-
     term_rows = [
         ("T1", "alpha  kinase", "ns1", None, [], [], [], False),
         ("T2", "beta\treceptor", "ns2", None, [], [], [], False),
@@ -192,14 +205,8 @@ def test_surfaces_with_non_space_whitespace(spark):
         ("c1", 1, "asst", "alpha  kinase beta\treceptor", None, None),
         ("c2", 0, "user", "Delta Kinase and gamma factor\tkinase beta", None, None),
     ]
-    terms = spark.createDataFrame(term_rows, schemas.LEXICON_TERM)
-    isa = spark.createDataFrame(isa_rows, schemas.LEXICON_ISA_EDGE)
-    tr = spark.createDataFrame(turn_rows, schemas.TRANSCRIPT)
-    exp = ro.expected_triples(
-        pd.DataFrame(turn_rows, columns=schemas.TRANSCRIPT.fieldNames()),
-        pd.DataFrame(term_rows, columns=schemas.LEXICON_TERM.fieldNames()),
-        pd.DataFrame(isa_rows, columns=schemas.LEXICON_ISA_EDGE.fieldNames()),
-    )
+    (terms, isa, tr), (terms_pdf, isa_pdf, tr_pdf) = _frames(spark, term_rows, isa_rows, turn_rows)
+    exp = ro.expected_triples(tr_pdf, terms_pdf, isa_pdf)
     assert {("turn:c1:0", "MENTIONS", "T4"), ("turn:c2:0", "MENTIONS", "T3")} <= exp
     for max_fused in (2_000_000, 0):
         lex = pipeline.prepare_lexicon(terms, max_fused_surfaces=max_fused)
@@ -209,3 +216,84 @@ def test_surfaces_with_non_space_whitespace(spark):
             for r in pipeline.build_triples(tr, terms, isa, lex=lex).collect()
         }
         assert ro.precision_recall(got, exp) == (1.0, 1.0), (max_fused, got ^ exp)
+
+
+def test_ids_and_predicates_with_non_space_edge_whitespace(spark):
+    """An alt id with a leading space, an is-a subject with a trailing
+    tab and a predicate wrapped in a space and a tab: ids and predicates
+    are edge-stripped as the oracle's ``str.strip()`` strips them — the
+    canonical id is ``A0``, not ``" A0"`` — on both lexicon paths."""
+    term_rows = [
+        ("T1", "alpha kinase", "ns1", None, [], [], [" A0"], False),
+        ("T2", "beta receptor", "ns2", None, [], [], [], False),
+    ]
+    isa_rows = [("T2\t", "is_a", "T1"), ("T1", " part of\t", "T2")]
+    turn_rows = [("c1", 0, "user", "alpha kinase binds beta receptor", None, None)]
+    (terms, isa, tr), (terms_pdf, isa_pdf, tr_pdf) = _frames(spark, term_rows, isa_rows, turn_rows)
+    exp = ro.expected_triples(tr_pdf, terms_pdf, isa_pdf)
+    assert {("T2", "IS_A", "A0"), ("A0", "PART_OF", "T2")} <= exp
+    for max_fused in (2_000_000, 0):
+        lex = pipeline.prepare_lexicon(terms, max_fused_surfaces=max_fused)
+        got = {
+            (r.subj, r.pred, r.obj)
+            for r in pipeline.build_triples(tr, terms, isa, lex=lex).collect()
+        }
+        assert got == exp, (max_fused, got ^ exp)
+
+
+def test_lexicon_paths_match_oracle_maps(spark):
+    """Both ways of building the lexicon — term rows collected and mapped
+    on the driver, and the Spark ``surface_dim`` / connected-components
+    path the size guard falls back to — give the oracle's surface map
+    and canonical map on a lexicon with null names and synonyms, a
+    synonym equal to its name, a case collision across namespaces, an
+    obsolete term with alt ids, a self alt id, an alt chain across terms
+    and alt ids that are padded or only whitespace."""
+    term_rows = [
+        ("T1", None, "ns1", None, None, [], ["A1 "], False),
+        ("T2", "Alpha Kinase", "ns1", None, ["Alpha Kinase", " AK\t"], [], ["T2"], False),
+        ("T0", "ALPHA kinase", "ns2", None, [], [], [], False),
+        ("T3", "old thing", "ns1", None, ["legacy"], [], ["A3", "T4"], True),
+        ("T4", "beta", "ns2", None, [], [], ["A4"], False),
+        ("T5", "gamma", "ns1", None, None, [], ["A4", "\t"], False),
+        ("T6", "  ", "ns1", None, ["\u3000"], [], [], False),
+    ]
+    (terms, _, _), (terms_pdf, _, _) = _frames(spark, term_rows, [])
+    exp_surfaces = ro._surface_map(terms_pdf)
+    exp_canon = ro._canonical_map(terms_pdf)
+    assert exp_surfaces["alpha kinase"] == ("T0", "ns2") and len(exp_surfaces) == 4
+    assert exp_canon == {"T1": "A1", "T3": "A3", "T4": "A3", "A4": "A3", "T5": "A3"}
+    # the default guard takes the driver path; a guard of exactly the
+    # surface count, below the term row count, takes the Spark path
+    driver = pipeline.prepare_lexicon(terms)
+    spark_path = pipeline.prepare_lexicon(terms, max_fused_surfaces=len(exp_surfaces))
+    assert driver.dim is None and spark_path.dim is not None
+    for lex in (driver, spark_path):
+        assert lex.surface_map == exp_surfaces
+        # the oracle's union-find lists only ids that are not their own
+        # canonical id
+        assert {k: v for k, v in lex.canon_map.items() if k != v} == exp_canon
+        assert {tuple(r) for r in lex.mapping.collect()} == set(lex.canon_map.items())
+
+
+def test_prepare_lexicon_is_one_job(spark, lexicon, tmp_path):
+    """A dimension-scale lexicon is prepared from one bounded collect of
+    the term rows: exactly one Spark job, and no cached frame left
+    behind (the connected-components and link-dimension jobs and their
+    caches belong to the over-the-guard path only)."""
+    terms, _ = lexicon
+    path = str(tmp_path / "terms")
+    terms.coalesce(1).write.parquet(path)
+    terms = spark.read.parquet(path)
+    sc = spark.sparkContext
+    persisted = sc._jsc.getPersistentRDDs().size()
+    group = "test-prepare-lexicon"
+    sc.setJobGroup(group, "prepare_lexicon")
+    try:
+        lex = pipeline.prepare_lexicon(terms)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert lex.surface_map is not None and lex.dim is None
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert sc._jsc.getPersistentRDDs().size() == persisted
