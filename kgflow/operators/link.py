@@ -155,3 +155,29 @@ def canonical_map(rows) -> dict[str, str]:
         for alt in r.alt_ids or ()
         if alt is not None and alt.strip()
     )
+
+
+def canonicalize(df: DataFrame, canon_map: dict[str, str], cols: list[str]) -> DataFrame:
+    """``canon.apply_canonical(df, mapping, cols)`` through the driver
+    dict ``canon_map`` (id → canonical id, as ``canonical_map`` builds
+    it): ids absent from the dict stay as they are. The dict is
+    broadcast once and each Arrow batch is rewritten by an Arrow
+    ``index_in``/``take`` lookup in one narrow ``mapInArrow`` stage — no
+    join, no size-gate count, no broadcast exchange."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    bc = df.sparkSession.sparkContext.broadcast((list(canon_map), list(canon_map.values())))
+
+    def run(batches):
+        keys, vals = (pa.array(v, pa.string()) for v in bc.value)
+        for rb in batches:
+            arrays = rb.columns
+            for c in cols:
+                i = rb.schema.get_field_index(c)
+                col = arrays[i]
+                idx = pc.index_in(col, value_set=keys.cast(col.type))
+                arrays[i] = pc.if_else(pc.is_null(idx), col, pc.take(vals.cast(col.type), idx))
+            yield pa.RecordBatch.from_arrays(arrays, schema=rb.schema)
+
+    return df.mapInArrow(run, schema=df.schema)

@@ -14,13 +14,24 @@ ledger:
   derived from that driver-side map. The lexicon's term and is-a
   tables are hashed in the same aggregate (one group each), so an
   unchanged re-run is a single shuffle and one collect;
+* the pending buckets' triples are written in ONE job, partitioned by
+  bucket with dynamic partition overwrite: re-processing a bucket is
+  idempotent, and a failed write leaves every previous partition in
+  place. No count job follows it: the driver lists each pending
+  bucket's directory (and the ontology bucket ``-1``'s) before and
+  after the write, removes the ones the write did not replace (their
+  new input yields no triples) and reads ``triples_out`` from the
+  parquet footers of the rest;
 * a completed bucket writes one ledger row (a JSON line under
   ``_ledger/``) with lineage counts (rows_in, triples_out) and the
   fingerprint;
 * on restart the ledger is read and planned on the driver: a bucket
   whose latest ledger row is ``done`` with a matching fingerprint is
-  skipped; output parquet is partitioned by bucket with dynamic
-  partition overwrite, so re-processing a bucket is idempotent.
+  skipped.
+
+The ledger, the listing and the footer reads use the driver's
+filesystem, so ``out_dir`` must be driver-local (or a mount every
+executor shares).
 
 At 100 TB the ledger is thousands of rows — driver-negligible — while
 the skipped work is the entire completed input.
@@ -30,9 +41,11 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -143,6 +156,23 @@ class ResumeReport:
     skipped_buckets: int
     processed_buckets: int
     triples_out: int
+
+
+def _bucket_files(triples_dir: str, bucket: int) -> frozenset[str]:
+    """File names under ``triples/bucket=<bucket>`` (empty if absent).
+    Spark names every written file after its write job, so a rewritten
+    partition never lists the same set as before."""
+    part = os.path.join(triples_dir, f"bucket={bucket}")
+    return frozenset(os.listdir(part)) if os.path.isdir(part) else frozenset()
+
+
+def _write_buckets(triples_b: DataFrame, triples_dir: str) -> None:
+    (
+        triples_b.repartition("bucket")
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(triples_dir)
+    )
 
 
 def _ledger_path(out_dir: str) -> str:
@@ -275,8 +305,6 @@ def run_resumable(
     # and is never pending — its on-disk partition must be cleared here
     # or read_triples keeps serving it (runs before the early return so
     # a shrink-only change is still applied).
-    import shutil
-
     triples_dir = os.path.join(out_dir, "triples")
     if os.path.isdir(triples_dir):
         valid = set(fp_map) | {-1}
@@ -340,35 +368,43 @@ def run_resumable(
             F.pmod(F.xxhash64("src_conv"), F.lit(buckets)).cast("int"),
         ).otherwise(F.lit(-1)),
     ).drop("src_conv")
-    # dynamic partition overwrite: only touched buckets are rewritten,
-    # so a re-run of the same bucket is idempotent. A pending bucket
-    # whose new input yields ZERO triples writes no partition, which
-    # would leave its previous output stale — clear those explicitly
-    # (the parquet analogue of Iceberg's replaceWhere). The session conf
-    # is restored afterwards so unrelated writes keep their semantics.
+    # dynamic partition overwrite: only the buckets the write holds rows
+    # for are replaced, each at job commit, so a re-run of the same
+    # bucket is idempotent and a failed write leaves every previous
+    # partition in place. The session conf is restored afterwards so
+    # unrelated writes keep their semantics.
+    #
+    # One write, no count job: the driver lists each pending bucket's
+    # directory (and bucket -1's) before and after it. A directory whose
+    # file set did not change was not rewritten — its new input yields
+    # zero triples (or the is-a table emptied) — so its previous output
+    # is stale and is removed (the parquet analogue of Iceberg's
+    # replaceWhere). A rewritten directory's triples_out is the sum of
+    # its parquet footers' row counts.
+    listed = [*pending_list, -1]
+    before = {b: _bucket_files(triples_dir, b) for b in listed}
     prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        triples_b = triples_b.localCheckpoint(eager=True)
-        # per-bucket row counts of exactly what the write below puts on
-        # disk: they are the ledger's triples_out and say which pending
-        # buckets wrote no partition
-        stats = {r.bucket: r["count"] for r in triples_b.groupBy("bucket").count().collect()}
-        (
-            triples_b.repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(triples_dir)
-        )
+        _write_buckets(triples_b, triples_dir)
     finally:
         if prev_mode is None:
             spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
         else:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
 
-    for b in pending_list:
-        if b not in stats:
-            shutil.rmtree(os.path.join(triples_dir, f"bucket={b}"), ignore_errors=True)
+    stats: dict[int, int] = {}
+    for b in listed:
+        files = _bucket_files(triples_dir, b)
+        part = os.path.join(triples_dir, f"bucket={b}")
+        if files == before[b]:
+            shutil.rmtree(part, ignore_errors=True)
+        else:
+            stats[b] = sum(
+                pq.read_metadata(os.path.join(part, f)).num_rows
+                for f in files
+                if not f.startswith((".", "_"))
+            )
 
     os.makedirs(_ledger_path(out_dir), exist_ok=True)
     rows = []
@@ -422,9 +458,11 @@ def run_resumable(
 
 def read_triples(spark: SparkSession, out_dir: str) -> DataFrame:
     """Global triple-set view: bucket-local rows deduped on read (the
-    same triple may be derived from several conversations)."""
+    same triple may be derived from several conversations). Read with
+    the schema ``run_resumable`` writes, so no job infers it."""
     return (
-        spark.read.parquet(os.path.join(out_dir, "triples"))
+        spark.read.schema("subj string, pred string, obj string, bucket int")
+        .parquet(os.path.join(out_dir, "triples"))
         .select("subj", "pred", "obj")
         .dropDuplicates(["subj", "pred", "obj"])
     )

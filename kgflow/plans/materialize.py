@@ -25,25 +25,31 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 _POINTER = "_LATEST"
 
 
-def _latest_dir(path: str) -> str | None:
+def _read_pointer(path: str) -> dict | None:
     p = os.path.join(path, _POINTER)
-    if os.path.exists(p):
-        with open(p) as fh:
-            snap = json.load(fh)["snapshot"]
-        return os.path.join(path, snap)
-    return None
+    if not os.path.exists(p):
+        return None
+    with open(p) as fh:
+        return json.load(fh)
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame | None:
-    d = _latest_dir(path)
-    if d is None:
+    """The latest snapshot, read with the schema ``write_snapshot``
+    recorded in the pointer — no job infers it from the parquet footers.
+    A pointer written without one falls back to inference."""
+    ptr = _read_pointer(path)
+    if ptr is None:
         return None
-    return spark.read.parquet(d)
+    reader = spark.read
+    if "schema" in ptr:
+        reader = reader.schema(T.StructType.fromJson(json.loads(ptr["schema"])))
+    return reader.parquet(os.path.join(path, ptr["snapshot"]))
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -492,25 +498,26 @@ def read_pointer_meta(path: str) -> dict | None:
     the table does not exist yet). The pointer flip is atomic, so meta is
     exactly as current as the data it was committed with — this is what
     makes ``merged_batch_id`` a reliable replay guard."""
-    p = os.path.join(path, _POINTER)
-    if not os.path.exists(p):
-        return None
-    with open(p) as fh:
-        return json.load(fh).get("meta", {})
+    ptr = _read_pointer(path)
+    return None if ptr is None else ptr.get("meta", {})
 
 
 def write_snapshot(df: DataFrame, path: str, meta: dict | None = None) -> str:
     """Write a new immutable snapshot dir and flip the pointer (the
     parquet stand-in for an Iceberg snapshot commit). ``meta`` rides the
     pointer flip atomically — snapshot-level commit properties, same role
-    as Iceberg's snapshot summary map."""
+    as Iceberg's snapshot summary map. The pointer also records
+    ``df.schema`` for ``read_table``."""
     os.makedirs(path, exist_ok=True)
     snap = f"snap-{int(time.time() * 1000)}-{os.getpid()}"
     out = os.path.join(path, snap)
     df.write.mode("overwrite").parquet(out)
     tmp = os.path.join(path, _POINTER + ".tmp")
     with open(tmp, "w") as fh:
-        json.dump({"snapshot": snap, "ts": time.time(), "meta": meta or {}}, fh)
+        json.dump(
+            {"snapshot": snap, "ts": time.time(), "meta": meta or {}, "schema": df.schema.json()},
+            fh,
+        )
     os.replace(tmp, os.path.join(path, _POINTER))
     # retain only the two most recent snapshots (cheap time travel)
     snaps = sorted(d for d in os.listdir(path) if d.startswith("snap-"))

@@ -44,8 +44,9 @@ class Lexicon:
     the reference likewise parses ontologies once up front,
     import_go_obo.py:64-145). ``surface_map``/``canon_map`` are the
     driver-side dicts (surface → (term_id, namespace), id → canonical
-    id) broadcast into the fused extraction stage; ``dim`` is the
-    broadcast-join link dimension of the path without them."""
+    id) broadcast into the fused extraction stage and, for the ontology
+    rows, into ``link.canonicalize``; ``dim`` is the broadcast-join link
+    dimension of the path without them."""
 
     surfaces: list[str]
     mapping: DataFrame  # (id, canonical_id)
@@ -253,7 +254,10 @@ def _assemble_triples(
         F.lit(None).cast("string").alias("src_conv"),
         F.lit("ontology").alias("family"),
     )
-    onto = canon.apply_canonical(onto, mapping, ["subj", "obj"])
+    if lex.canon_map is not None:
+        onto = link.canonicalize(onto, lex.canon_map, ["subj", "obj"])
+    else:
+        onto = canon.apply_canonical(onto, mapping, ["subj", "obj"])
 
     return (
         mentions_triples.unionByName(has_ns_triples)

@@ -765,3 +765,109 @@ def test_ledger_fingerprints_match_per_table_formula(spark, transcripts, lexicon
         assert {r["partition_id"]: (r["input_fingerprint"], r["rows_in"]) for r in rows} == per_bucket
         lex_fp = _parent_table_fingerprint(terms) + "|" + _parent_table_fingerprint(edges)
         assert {r["lex_fingerprint"] for r in rows} == {lex_fp}
+
+
+def test_emptied_isa_clears_ontology_bucket(spark, transcripts, lexicon, lexicon_pdf, tmp_path):
+    """A re-run whose is-a table is empty writes no ontology rows, so the
+    write leaves bucket -1 untouched: its previous IS_A/PART_OF/...
+    triples must be removed, not served, and the triple set equals the
+    oracle's for the empty table."""
+    import os
+
+    from kgflow import reference_oracle as ro
+
+    terms, isa = lexicon
+    terms_pdf, isa_pdf = lexicon_pdf
+    d = str(tmp_path / "out")
+    cp.run_resumable(spark, transcripts, terms, isa, d, buckets=8)
+    assert os.path.isdir(os.path.join(d, "triples", "bucket=-1"))
+
+    empty_isa = spark.createDataFrame([], isa.schema)
+    rep = cp.run_resumable(spark, transcripts, terms, empty_isa, d, buckets=8)
+    assert rep.processed_buckets == rep.total_buckets
+    assert not os.path.exists(os.path.join(d, "triples", "bucket=-1"))
+    exp = ro.expected_triples(transcripts.toPandas(), terms_pdf, isa_pdf.iloc[:0])
+    assert ro.precision_recall(_triple_set(spark, d), exp) == (1.0, 1.0)
+
+
+def test_failed_write_keeps_previous_output(spark, transcripts, lexicon, tmp_path, monkeypatch):
+    """A bucket write that fails inside its Spark job commits nothing:
+    the pending buckets keep their previous files (dynamic partition
+    overwrite replaces a partition only at job commit — what the
+    before/after listing relies on), no ledger row is written, and the
+    re-run equals a fresh run."""
+    import os
+
+    import pytest
+
+    terms, isa = lexicon
+    d = str(tmp_path / "out")
+    cp.run_resumable(spark, transcripts, terms, isa, d, buckets=8)
+    mutated = transcripts.withColumn(
+        "text",
+        F.when(F.col("conv_id") == "conv-000000", F.concat(F.col("text"), F.lit(" zzz")))
+        .otherwise(F.col("text")),
+    )
+    b = cp.with_bucket(transcripts, 8).filter(F.col("conv_id") == "conv-000000").first().bucket
+    triples_dir = os.path.join(d, "triples")
+    listing = {p: cp._bucket_files(triples_dir, p) for p in (b, -1)}
+    ledger = cp.ledger_rows(d)
+
+    @F.udf("boolean")
+    def boom(bucket):
+        if bucket == b:
+            raise RuntimeError("simulated executor failure")
+        return True
+
+    write = cp._write_buckets
+    calls = []
+
+    def failing_write(df, path):
+        calls.append(path)
+        write(df.filter(boom("bucket")) if len(calls) == 1 else df, path)
+
+    monkeypatch.setattr(cp, "_write_buckets", failing_write)
+    with pytest.raises(Exception, match="simulated executor failure"):
+        cp.run_resumable(spark, mutated, terms, isa, d, buckets=8)
+    assert {p: cp._bucket_files(triples_dir, p) for p in listing} == listing
+    assert cp.ledger_rows(d) == ledger
+
+    rep = cp.run_resumable(spark, mutated, terms, isa, d, buckets=8)
+    assert rep.processed_buckets == 1 and len(calls) == 2
+    fresh_dir = str(tmp_path / "fresh")
+    cp.run_resumable(spark, mutated, terms, isa, fresh_dir, buckets=8)
+    assert _triple_set(spark, d) == _triple_set(spark, fresh_dir)
+    latest = {r["partition_id"]: r for r in cp.ledger_rows(d) if r["run_id"] == rep.run_id}
+    fresh = {r["partition_id"]: r for r in cp.ledger_rows(fresh_dir)}
+    assert latest[b]["triples_out"] == fresh[b]["triples_out"]
+
+
+def test_partial_rerun_job_count(spark, transcripts, lexicon, tmp_path):
+    """A re-run of one changed bucket starts only the jobs that do work:
+    the ontology rewrite runs no size-gate count or broadcast exchange,
+    and the bucket write needs no checkpoint or count aggregate."""
+    terms, isa = lexicon
+    d = str(tmp_path / "jobs")
+    cp.run_resumable(spark, transcripts, terms, isa, d, buckets=8)
+    mutated = transcripts.withColumn(
+        "text",
+        F.when(F.col("conv_id") == "conv-000000", F.concat(F.col("text"), F.lit(" zzz")))
+        .otherwise(F.col("text")),
+    )
+    sc = spark.sparkContext
+    group = "test-partial-rerun"
+    sc.setJobGroup(group, "resumable re-run of one bucket")
+    try:
+        rep = cp.run_resumable(spark, mutated, terms, isa, d, buckets=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rep.processed_buckets == 1
+    # bucket_fingerprints: 2 (shuffle-map job + result job)
+    # bucket_quality collect: 2 (shuffle-map job + result job)
+    # the grouped extraction's localCheckpoint: 1
+    # the bucket write: 4 (three adaptive shuffle-map jobs + the write)
+    # A size-gate count or broadcast exchange for the ontology rewrite,
+    # or a checkpoint or count aggregate of the written triples, adds
+    # jobs here.
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 9

@@ -297,3 +297,40 @@ def test_prepare_lexicon_is_one_job(spark, lexicon, tmp_path):
     assert lex.surface_map is not None and lex.dim is None
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
     assert sc._jsc.getPersistentRDDs().size() == persisted
+
+
+def test_driver_lexicon_ontology_rewrite_has_no_join(spark, transcripts, lexicon):
+    """With a driver Lexicon the ontology rows are canonicalized through
+    the broadcast ``canon_map`` in a narrow Arrow stage: the executed
+    plan has no BroadcastHashJoin. The broadcast-join composition path
+    (``max_fused_surfaces=0``) still rewrites them with a join."""
+    terms, isa = lexicon
+
+    def executed_plan(lex):
+        df = pipeline.build_triples(transcripts, terms, isa, lex=lex)
+        df.collect()
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert "BroadcastHashJoin" not in executed_plan(pipeline.prepare_lexicon(terms))
+    assert "BroadcastHashJoin" in executed_plan(pipeline.prepare_lexicon(terms, max_fused_surfaces=0))
+
+
+def test_canonicalize_matches_apply_canonical(spark):
+    """``link.canonicalize`` through a driver dict equals
+    ``canon.apply_canonical`` through the same mapping frame: mapped ids
+    rewritten, unmapped ids and nulls kept, other columns untouched."""
+    from kgflow.operators import canon, link
+
+    df = spark.createDataFrame(
+        [("a", "b", 1), ("b", None, 2), (None, "x", 3), ("x", "a", 4)],
+        "s string, o string, n int",
+    )
+    cmap = {"a": "A", "b": "A", "c": "C"}
+    mapping = spark.createDataFrame(list(cmap.items()), "id string, canonical_id string")
+    got = link.canonicalize(df, cmap, ["s", "o"])
+    assert got.schema == df.schema
+    want = canon.apply_canonical(df, mapping, ["s", "o"])
+    assert sorted(map(tuple, got.collect()), key=str) == sorted(map(tuple, want.collect()), key=str)
+    assert sorted(map(tuple, link.canonicalize(df, {}, ["s"]).collect()), key=str) == sorted(
+        map(tuple, df.collect()), key=str
+    )

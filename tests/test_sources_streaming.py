@@ -506,3 +506,48 @@ def test_streaming_exact_dedup_across_drops(spark, tmp_path):
         10: ("unique", None),
         11: ("exact", 2),
     }
+
+
+def test_read_table_uses_recorded_schema(spark, transcripts, lexicon, tmp_path):
+    """``read_table`` reads a snapshot with the schema ``write_snapshot``
+    recorded in its pointer: the schema ``spark.read.parquet`` infers,
+    for the provenance snapshot and for ``doc_stats``, with no Spark
+    job. A legacy pointer without ``schema`` still reads (by inference)."""
+    import json
+
+    from kgflow.plans import materialize as mat
+
+    terms, isa = lexicon
+    in_dir, doc_dir, out_dir = (str(tmp_path / n) for n in ("in", "docs", "out"))
+    transcripts.filter(F.col("conv_id") < "conv-000005").write.parquet(in_dir)
+    incremental.incremental_extract_prov(spark, in_dir, out_dir, terms, isa)
+    spark.createDataFrame(
+        [(0, "the quick brown fox", "en", "web", 19), (1, None, "en", "book", 0)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).write.parquet(doc_dir)
+    incremental.incremental_doc_stats(spark, doc_dir, out_dir)
+
+    sc = spark.sparkContext
+    for table in ("triples_prov", "doc_stats"):
+        path = os.path.join(out_dir, table)
+        ptr_file = os.path.join(path, "_LATEST")
+        with open(ptr_file) as fh:
+            ptr = json.load(fh)
+        inferred = spark.read.parquet(os.path.join(path, ptr["snapshot"])).schema
+        group = f"test-read-table-{table}"
+        sc.setJobGroup(group, "read_table")
+        try:
+            got = mat.read_table(spark, path)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert got.schema == inferred
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+        rows = sorted(map(tuple, got.collect()), key=str)
+        del ptr["schema"]
+        with open(ptr_file, "w") as fh:
+            json.dump(ptr, fh)
+        legacy = mat.read_table(spark, path)
+        assert legacy.schema == inferred
+        assert sorted(map(tuple, legacy.collect()), key=str) == rows
