@@ -2,14 +2,18 @@
 
 Replaces the reference's per-record Python NLP/enrichment hop
 (``neo4j_pubmed_batch_embeddings_processor.py:67-328`` parses records one
-at a time in the driver) with a single Arrow-batched ``mapInPandas``
+at a time in the driver) with a single Arrow-batched ``mapInArrow``
 stage: a token-level Aho–Corasick automaton, built once per task from a
 broadcast surface list, scans each text batch (greedy leftmost-longest,
 non-overlapping — the rule ``reference_oracle._scan`` specifies).
 
 Scale notes:
-* No shuffle — extraction is embarrassingly parallel over the
-  conv_id-hash bucketed input partitions.
+* The stage itself is narrow. The per-turn extractors run on any
+  partitioning; ``extract_conversation_triples`` needs its input
+  clustered by conversation, and the KG pipeline pays ONE exchange of
+  the turn rows for that (``pipeline._conversation_triples``). Its
+  output is then distinct per conversation, so no triple exchange keyed
+  by the source conversation follows it.
 * The dictionary is broadcast once (ontology lexicons are MB-scale, like
   the reference's OBO files); every task rebuilds the automaton from the
   broadcast value (~0.3 s at 100k surfaces).
@@ -19,7 +23,9 @@ Scale notes:
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections import Counter
+from collections.abc import Callable, Iterator, Sequence
+from itertools import combinations
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -132,42 +138,73 @@ def _extract(
     cols: list[str],
     payload: tuple,
     schema: T.StructType,
-    emit: Callable[[tuple, list, tuple], list[tuple]],
+    emit: Callable[[list[tuple], tuple], Sequence[list]],
 ) -> DataFrame:
-    """The one extraction stage: ``transcripts.select(*cols)`` (text
-    column last) → ``schema`` rows in a single narrow ``mapInPandas``.
+    """The one extraction stage: ``transcripts.select(*cols)`` (``conv_id``
+    first, text column last) → ``schema`` rows in a single narrow
+    ``mapInArrow``.
 
     ``payload`` is broadcast once; its first item is the surface
     collection (a list, or a dict keyed by surface). Each task builds
-    the automaton from it, and for every non-empty text returns
-    ``emit(row, find(text), payload)`` — a list of output tuples.
+    the automaton from it and hands every *conversation group* — a run
+    of consecutive rows with one ``conv_id`` — to ``emit(group,
+    payload)``: a list of ``(row, find(text))`` pairs (no hits for null
+    or empty text) in input order. ``emit`` returns the group's output
+    as one list per ``schema`` column (or nothing): Arrow converts a
+    column list several times faster than it converts rows. A group is
+    carried across Arrow batches until the next conversation
+    starts, so one conversation is held in memory at a time. Each
+    conversation is ONE group only when its rows are adjacent: callers
+    that need whole conversations cluster and sort the input first
+    (``extract_conversation_triples``).
 
     Only surfaces equal to ``" ".join(s.split())`` enter the automaton:
     ``_scan`` never matches one holding a tab, a newline or a double
     space, and left in it would consume tokens. Every hit is then the
     lower-cased form of a payload surface (a ``link.surface_dim`` key).
     """
-    bc = transcripts.sparkSession.sparkContext.broadcast(payload)
-    names = schema.fieldNames()
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    bc = transcripts.sparkSession.sparkContext.broadcast(payload)
+    arrow_schema = to_arrow_schema(schema)
+
+    def batch(columns: list[list]) -> pa.RecordBatch:
+        return pa.RecordBatch.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(columns, arrow_schema)],
+            schema=arrow_schema,
+        )
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         value = bc.value
         find = TokenAhoCorasick([s for s in value[0] if s == " ".join(s.split())]).find
-        for pdf in batches:
-            out: list[tuple] = []
-            for row in zip(*(pdf[c] for c in cols)):
+        group: list[tuple] = []
+        out: list[list] = [[] for _ in arrow_schema]
+        for rb in batches:
+            for row in zip(*(c.to_pylist() for c in rb.columns)):
+                if group and row[0] != group[0][0][0]:
+                    for c, vals in zip(out, emit(group, value)):
+                        c.extend(vals)
+                    group = []
                 text = row[-1]
-                if isinstance(text, str) and text:
-                    out.extend(emit(row, find(text), value))
-            # object dtype: an EMPTY batch would otherwise default every
-            # column to float64, which Arrow cannot convert to
-            # string/list<string>
-            columns = list(zip(*out)) or [()] * len(names)
-            yield pd.DataFrame(
-                {n: pd.Series(c, dtype="object") for n, c in zip(names, columns)}
-            )
+                group.append((row, find(text) if isinstance(text, str) and text else []))
+            yield batch(out)
+            out = [[] for _ in arrow_schema]
+        if group:
+            yield batch(emit(group, value) or out)
 
-    return transcripts.select(*cols).mapInPandas(run, schema=schema)
+    return transcripts.select(*cols).mapInArrow(run, schema=schema)
+
+
+def _per_row(emit_row: Callable[[tuple, list, tuple], list[tuple]]):
+    """A group emitter that emits every row of the group on its own —
+    rows without hits emit nothing."""
+
+    def emit(group, payload):
+        rows = [t for row, hits in group if hits for t in emit_row(row, hits, payload)]
+        return [list(c) for c in zip(*rows)]
+
+    return emit
 
 
 _MENTION_OUT = T.StructType(
@@ -199,7 +236,7 @@ def extract_mentions(transcripts: DataFrame, surfaces: list[str]) -> DataFrame:
         ["conv_id", "turn_idx", "role", "text"],
         (sorted(set(surfaces)),),
         _MENTION_OUT,
-        _emit_mentions,
+        _per_row(_emit_mentions),
     )
 
 
@@ -214,8 +251,6 @@ _GROUPED_OUT = T.StructType(
 
 
 def _emit_grouped(row, hits, payload):
-    if not hits:
-        return []
     smap, cmap = payload
     linked = [smap[surface] for surface, _s, _e in hits]
     return [
@@ -233,8 +268,7 @@ def extract_linked_terms_grouped(
     with the mentions as aligned parallel arrays. Exploding
     ``arrays_zip(term_ids, namespaces)`` equals ``extract_mentions`` →
     ``link.link_mentions`` → ``canon.apply_canonical([term_id])`` row
-    for row (multiplicity preserved, so observation-count provenance is
-    unchanged).
+    for row (multiplicity preserved).
 
     Why fused: the dimension lookup is done inside the batch loop that
     already holds the matched surface string. The separate linking pass
@@ -245,22 +279,112 @@ def extract_linked_terms_grouped(
     dimension-scale — the same size class as the surface list — so the
     100 TB posture is unchanged: one narrow map, zero shuffle.
 
-    Why grouped: a transcript row IS one turn, so the per-turn term sets
-    the co-occurrence family needs are complete inside the batch loop —
-    keeping them grouped removes the ``groupBy(conv_id, turn_idx).
-    collect_set`` exchange (a full shuffle of the mention table, the
-    dominant post-fusion scaling loss measured round 3) from the
-    pipeline; pair expansion happens in-row on ``array_distinct``.
-    Contract: one input row per (conv_id, turn_idx) — the transcript
-    input hint's shape; duplicate turn rows would produce per-row
-    (not per-turn) co-occurrence sets downstream.
+    The KG pipeline emits its triples with ``extract_conversation_
+    triples`` on the same kernel; this per-turn form serves callers that
+    want the linked mentions themselves.
     """
     return _extract(
         transcripts,
         ["conv_id", "turn_idx", "text"],
         (surface_map, canon_map or {}),
         _GROUPED_OUT,
-        _emit_grouped,
+        _per_row(_emit_grouped),
+    )
+
+
+_TRIPLE_OUT = T.StructType(
+    [
+        T.StructField("subj", T.StringType(), True),
+        T.StructField("pred", T.StringType(), True),
+        T.StructField("obj", T.StringType(), True),
+        T.StructField("src_conv", T.StringType(), True),
+        T.StructField("family", T.StringType(), True),
+        T.StructField("n_obs", T.LongType(), True),
+    ]
+)
+
+
+def _emit_conversation(group, payload):
+    """One conversation's MENTIONS, HAS_<NS>, CO_OCCURS_WITH and
+    NEXT_TURN triples, each distinct with its observation count, as
+    ``_TRIPLE_OUT`` columns. The strings are the ones ``pipeline``
+    documents; a null ``conv_id`` or ``turn_idx`` gives the null URI
+    that ``F.concat`` gives."""
+    (links,) = payload
+    conv = group[0][0][0]
+    # each family's (x, y) keys, one per observation, counted once at
+    # the end (one C-level count per family, not one per turn)
+    m_keys: list[tuple] = []  # (turn, term)
+    h_keys: list[tuple] = []  # (HAS_<NS>, term)
+    c_keys: list[tuple] = []  # (term, term)
+    n_keys: list[tuple] = []  # (turn, next turn)
+    prev = None
+    for i, ((_conv, tidx, _text), hits) in enumerate(group):
+        turn = None if conv is None or tidx is None else f"turn:{conv}:{tidx}"
+        # the lead() of the previous turn in (conv_id, turn_idx) order
+        if i and tidx is not None:
+            n_keys.append((prev, turn))
+        prev = turn
+        if not hits:
+            continue
+        linked = [links[surface] for surface, _s, _e in hits]
+        h_keys += linked
+        m_keys += [(turn, t) for _, t in linked]
+        if len(linked) > 1:
+            # sorted distinct ids: the pair order is least/greatest
+            c_keys += combinations(sorted({t for _, t in linked}), 2)
+    conv_uri = None if conv is None else f"conv:{conv}"
+    out: list[list] = [[] for _ in range(6)]
+    subj, pred, obj, src, family, n_obs = out
+    for fam, p, keys in (
+        ("mention", "MENTIONS", m_keys),
+        ("conv_ns", None, h_keys),  # x is the predicate, the subject is the conversation
+        ("cooccur", "CO_OCCURS_WITH", c_keys),
+        ("next_turn", "NEXT_TURN", n_keys),
+    ):
+        counts = Counter(keys)
+        xs = [x for x, _ in counts]
+        subj += xs if p else [conv_uri] * len(xs)
+        pred += [p] * len(xs) if p else xs
+        obj += [y for _, y in counts]
+        family += [fam] * len(xs)
+        n_obs += counts.values()
+    src += [conv] * len(n_obs)
+    return out
+
+
+def extract_conversation_triples(
+    transcripts: DataFrame,
+    surface_map: dict[str, tuple[str, str]],
+    canon_map: dict[str, str],
+    has_preds: dict[str | None, str | None],
+) -> DataFrame:
+    """Fused extract + link + canon + triple emission, per conversation:
+    ``_TRIPLE_OUT`` rows (subj, pred, obj, src_conv, family, n_obs), where
+    each row is ``n_obs`` observations of one MENTIONS, HAS_<NS>,
+    CO_OCCURS_WITH or NEXT_TURN triple in its source conversation
+    ``src_conv``.
+
+    ``has_preds`` maps each namespace to its ``HAS_<NS>`` predicate, upper-
+    cased in the JVM (``pipeline.prepare_lexicon``) so it equals
+    ``F.upper``; null maps to null. The three maps are joined on the
+    driver into one broadcast dict, surface → (``HAS_<NS>`` predicate,
+    canonical term id).
+
+    INPUT CONTRACT: ``transcripts`` clustered by conversation and sorted
+    by (conv_id, turn_idx) within each partition. Every conversation is
+    then one group, so the rows are distinct per (subj, pred, obj,
+    src_conv) — no global dedup is needed on that key — and NEXT_TURN
+    links each turn to the next one in turn order, null or empty text
+    included.
+    """
+    links = {s: (has_preds[ns], canon_map.get(t, t)) for s, (t, ns) in surface_map.items()}
+    return _extract(
+        transcripts,
+        ["conv_id", "turn_idx", "text"],
+        (links,),
+        _TRIPLE_OUT,
+        _emit_conversation,
     )
 
 

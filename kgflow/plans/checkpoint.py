@@ -14,9 +14,11 @@ ledger:
   derived from that driver-side map. The lexicon's term and is-a
   tables are hashed in the same aggregate (one group each), so an
   unchanged re-run is a single shuffle and one collect;
-* the pending buckets' triples are written in ONE job, partitioned by
-  bucket with dynamic partition overwrite: re-processing a bucket is
-  idempotent, and a failed write leaves every previous partition in
+* the pending buckets' turns are clustered by bucket in one exchange,
+  and their triples — distinct per conversation as the extraction
+  emits them, so no dedup exchange follows — are written in ONE job,
+  partitioned by bucket with dynamic partition overwrite:
+  re-processing a bucket is idempotent, and a failed write leaves every previous partition in
   place. No count job follows it: the driver lists each pending
   bucket's directory (and the ontology bucket ``-1``'s) before and
   after the write, removes the ones the write did not replace (their
@@ -39,6 +41,7 @@ the skipped work is the entire completed input.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -167,12 +170,23 @@ def _bucket_files(triples_dir: str, bucket: int) -> frozenset[str]:
 
 
 def _write_buckets(triples_b: DataFrame, triples_dir: str) -> None:
-    (
-        triples_b.repartition("bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(triples_dir)
-    )
+    triples_b.write.mode("overwrite").partitionBy("bucket").parquet(triples_dir)
+
+
+@contextlib.contextmanager
+def _scoped_conf(spark: SparkSession, key: str, value: str):
+    """Set the session conf ``key`` to ``value`` for the block, then put
+    back the previous value (or unset it) so unrelated work keeps its
+    semantics."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def _ledger_path(out_dir: str) -> str:
@@ -355,7 +369,10 @@ def run_resumable(
         r["bucket"]: (r["avg_tokens"], r["avg_ttr_q4"], r["empty_turns"])
         for r in bucket_quality(todo).collect()
     }
-    triples = P.build_triples(todo.drop("bucket"), terms, isa_edges, with_src=True)
+    # the input's bucket column rides along: build_triples clusters the
+    # turns by it, so the rows below reach the write already partitioned
+    # by bucket (ontology rows in one partition of their own)
+    triples = P.build_triples(todo, terms, isa_edges, with_src=True)
 
     # bucket = the source conversation's bucket (same function as the
     # input bucketing), so a bucket's triples are a pure function of that
@@ -374,8 +391,11 @@ def run_resumable(
     # partition in place. The session conf is restored afterwards so
     # unrelated writes keep their semantics.
     #
-    # One write, no count job: the driver lists each pending bucket's
-    # directory (and bucket -1's) before and after it. A directory whose
+    # One write job after the turn exchange, no checkpoint, no
+    # repartition and no count job: the triples are distinct per source
+    # conversation as the extraction emits them, and each task holds
+    # whole buckets. The driver lists each pending bucket's directory
+    # (and bucket -1's) before and after the write. A directory whose
     # file set did not change was not rewritten — its new input yields
     # zero triples (or the is-a table emptied) — so its previous output
     # is stale and is removed (the parquet analogue of Iceberg's
@@ -383,15 +403,8 @@ def run_resumable(
     # its parquet footers' row counts.
     listed = [*pending_list, -1]
     before = {b: _bucket_files(triples_dir, b) for b in listed}
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with _scoped_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
         _write_buckets(triples_b, triples_dir)
-    finally:
-        if prev_mode is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
 
     stats: dict[int, int] = {}
     for b in listed:
@@ -459,10 +472,18 @@ def run_resumable(
 def read_triples(spark: SparkSession, out_dir: str) -> DataFrame:
     """Global triple-set view: bucket-local rows deduped on read (the
     same triple may be derived from several conversations). Read with
-    the schema ``run_resumable`` writes, so no job infers it."""
-    return (
-        spark.read.schema("subj string, pred string, obj string, bucket int")
-        .parquet(os.path.join(out_dir, "triples"))
-        .select("subj", "pred", "obj")
-        .dropDuplicates(["subj", "pred", "obj"])
-    )
+    the schema ``run_resumable`` writes, so no job infers it.
+
+    The ``bucket=`` directories are listed on the driver, as
+    ``run_resumable`` lists them: ``out_dir`` is driver-local by this
+    module's contract. Spark would start a listing job once there are
+    more of them than ``parallelPartitionDiscovery.threshold`` (32 by
+    default; 32 buckets plus bucket -1 is already one more), so the
+    threshold is raised for this read only."""
+    with _scoped_conf(
+        spark, "spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1)
+    ):
+        triples = spark.read.schema("subj string, pred string, obj string, bucket int").parquet(
+            os.path.join(out_dir, "triples")
+        )
+    return triples.select("subj", "pred", "obj").dropDuplicates(["subj", "pred", "obj"])

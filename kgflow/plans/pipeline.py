@@ -24,6 +24,16 @@ predicate          subj → obj                                  reference analo
 All term endpoints are rewritten through the connected-components
 canonical mapping derived from alt_id same-as links before the final
 global dedup (MERGE-idempotence, C2).
+
+Plan shape (driver-dict ``Lexicon``): ONE exchange clusters the turns
+by conversation, sorted by (conv_id, turn_idx), and one extraction
+kernel (``extract.extract_conversation_triples``) emits the MENTIONS,
+HAS_<NS>, CO_OCCURS_WITH and NEXT_TURN rows distinct per conversation,
+each with its observation count. The subjects of three of those
+families carry the conversation id, so only CO_OCCURS_WITH and the
+ontology rows can repeat across conversations. The resumable form
+(``with_src``) needs no further exchange, the plain form one
+(subj, pred, obj) dedup, and ``build_triples_prov`` one aggregate.
 """
 
 from __future__ import annotations
@@ -42,17 +52,24 @@ class Lexicon:
     """Prepared lexicon artifacts: built once per lexicon version, reused
     across every batch/stream run (dimension prep is not per-batch work —
     the reference likewise parses ontologies once up front,
-    import_go_obo.py:64-145). ``surface_map``/``canon_map`` are the
-    driver-side dicts (surface → (term_id, namespace), id → canonical
-    id) broadcast into the fused extraction stage and, for the ontology
-    rows, into ``link.canonicalize``; ``dim`` is the broadcast-join link
-    dimension of the path without them."""
+    import_go_obo.py:64-145). ``surface_map``/``canon_map``/``has_preds``
+    are the driver-side dicts (surface → (term_id, namespace), id →
+    canonical id, namespace → ``HAS_<NS>`` predicate) broadcast into the
+    fused extraction stage and, for the ontology rows, into
+    ``link.canonicalize``; ``dim`` is the broadcast-join link dimension
+    of the path without them."""
 
     surfaces: list[str]
     mapping: DataFrame  # (id, canonical_id)
     dim: DataFrame | None = None  # (surface, term_id, namespace), cached
     surface_map: dict[str, tuple[str, str]] | None = None
     canon_map: dict[str, str] | None = None
+    has_preds: dict[str | None, str | None] | None = None
+
+
+def _has_pred():
+    """The ``HAS_<NS>`` predicate of a row's namespace (null for null)."""
+    return F.concat(F.lit("HAS_"), F.upper("namespace")).alias("has_pred")
 
 
 def prepare_lexicon(
@@ -71,17 +88,21 @@ def prepare_lexicon(
     term rows: ``link.surface_map`` and ``link.canonical_map`` apply the
     ``surface_dim`` / ``alt_id_edges`` rules on the driver, and
     ``mapping`` is a local frame of ``canon_map`` — one Spark job, no
-    cache. When the term rows or their surfaces exceed the guard, the
-    Spark path builds the cached ``dim`` and the connected-components
-    ``mapping``; above the guard only the surface LIST (the automaton's
-    irreducible broadcast artifact) is collected and
+    cache. The same collect upper-cases every namespace in the JVM for
+    the ``HAS_<NS>`` predicates (``has_preds``), so they equal what
+    ``F.upper`` gives. When the term rows or their surfaces exceed the
+    guard, the Spark path builds the cached ``dim`` and the
+    connected-components ``mapping``; above the guard only the surface
+    LIST (the automaton's irreducible broadcast artifact) is collected and
     ``surface_map``/``canon_map`` stay None, which routes
     ``_assemble_triples`` to the broadcast-JOIN composition form
     (link.link_mentions + canon.apply_canonical) — same triples, JVM-side
     Tungsten-compact broadcast instead of Python dicts.
     """
     rows = (
-        terms.select("term_id", "name", "namespace", "synonyms", "alt_ids", "is_obsolete")
+        terms.select(
+            "term_id", "name", "namespace", "synonyms", "alt_ids", "is_obsolete", _has_pred()
+        )
         .limit(max_fused_surfaces + 1)
         .collect()
     )
@@ -97,12 +118,13 @@ def prepare_lexicon(
                 mapping=mapping,
                 surface_map=surface_map,
                 canon_map=canon_map,
+                has_preds={r.namespace: r.has_pred for r in rows},
             )
 
     dim = link.surface_dim(terms).cache()
     mapping = canon.connected_components(link.alt_id_edges(terms)).cache()
     # one bounded collect serves both the size gate and the driver dicts
-    dim_rows = dim.limit(max_fused_surfaces + 1).collect()
+    dim_rows = dim.select("*", _has_pred()).limit(max_fused_surfaces + 1).collect()
     if len(dim_rows) > max_fused_surfaces:
         import logging
 
@@ -120,6 +142,7 @@ def prepare_lexicon(
         mapping=mapping,
         surface_map={r.surface: (r.term_id, r.namespace) for r in dim_rows},
         canon_map={r.id: r.canonical_id for r in mapping.collect()},
+        has_preds={r.namespace: r.has_pred for r in dim_rows},
     )
 
 
@@ -129,62 +152,38 @@ def normalize_predicate(col):
     return F.upper(F.regexp_replace(link.edge_strip(col), "[: ]", "_"))
 
 
-def _assemble_triples(
-    transcripts: DataFrame,
-    isa_edges: DataFrame,
-    lex: Lexicon,
+def _conversation_triples(
+    transcripts: DataFrame, lex: Lexicon, cluster_by: str = "conv_id"
 ) -> DataFrame:
-    """Pre-dedup triple union: (subj, pred, obj, src_conv, family).
+    """The fused path's transcript triples, distinct per conversation.
 
-    ``family`` tags which extraction rule produced the row (mention /
-    conv_ns / cooccur / next_turn / ontology) — the provenance unit the
-    reference tracks per import script (each CQL import file is one
-    family; cql/import/*). ``src_conv`` is the source conversation
-    (null for ontology rows).
+    The turns are clustered once by ``cluster_by`` — ``conv_id`` hash,
+    or a column that is a function of it, such as the resumable
+    writer's ``bucket`` — and sorted by (conv_id, turn_idx), which is
+    the input contract of ``extract.extract_conversation_triples``. That
+    exchange carries the turn rows (with their text); no exchange keyed
+    by the source conversation follows it.
     """
-    mapping = lex.mapping
+    clustered = transcripts.repartition(cluster_by).sortWithinPartitions("conv_id", "turn_idx")
+    return extract.extract_conversation_triples(
+        clustered, lex.surface_map, lex.canon_map, lex.has_preds
+    )
 
-    if lex.surface_map is not None:
-        # fused path: linking + canonical rewrite ride the extraction
-        # batch loop, GROUPED per turn (extract.extract_linked_terms_
-        # grouped) — no second pass over the mention table, the
-        # checkpoint holds one compact array row per turn, and the
-        # per-turn term sets for co-occurrence come straight off the
-        # arrays (no groupBy shuffle — see per_turn_sets below).
-        grouped = extract.extract_linked_terms_grouped(
-            transcripts, lex.surface_map, lex.canon_map
-        ).localCheckpoint(eager=True)
-        # exploding the zipped arrays reproduces the composition form's
-        # linked rows exactly (multiplicity preserved → n_obs provenance
-        # unchanged); the explode is narrow JVM work, no exchange
-        linked = grouped.select(
-            "conv_id",
-            "turn_idx",
-            F.explode(F.arrays_zip("term_ids", "namespaces")).alias("_m"),
-        ).select(
-            "conv_id",
-            "turn_idx",
-            F.col("_m.term_ids").alias("term_id"),
-            F.col("_m.namespaces").alias("namespace"),
-        )
-        per_turn_sets = grouped.select(
-            "conv_id",
-            "turn_idx",
-            F.array_sort(F.array_distinct("term_ids")).alias("ts"),
-        )
-    else:
-        # operator-composition form (kept for Lexicons built without
-        # driver-side maps): broadcast-join linking + canonical rewrite
-        mentions = extract.extract_mentions(transcripts, lex.surfaces)
-        linked = link.link_mentions(mentions, lex.dim)
-        linked = canon.apply_canonical(linked, mapping, ["term_id"]).localCheckpoint(
-            eager=True
-        )
-        # one shuffle to assemble per-turn term sets (the fused path
-        # gets these for free from the grouped extraction)
-        per_turn_sets = linked.groupBy("conv_id", "turn_idx").agg(
-            F.sort_array(F.collect_set("term_id")).alias("ts")
-        )
+
+def _composed_triples(transcripts: DataFrame, lex: Lexicon) -> DataFrame:
+    """The composition form's transcript triples (for Lexicons built
+    without driver-side maps): broadcast-join linking + canonical
+    rewrite, one row per observation, then counted per (subj, pred,
+    obj, src_conv) so the rows match the fused path's."""
+    mentions = extract.extract_mentions(transcripts, lex.surfaces)
+    linked = link.link_mentions(mentions, lex.dim)
+    linked = canon.apply_canonical(linked, lex.mapping, ["term_id"]).localCheckpoint(
+        eager=True
+    )
+    # one shuffle to assemble per-turn term sets
+    per_turn_sets = linked.groupBy("conv_id", "turn_idx").agg(
+        F.sort_array(F.collect_set("term_id")).alias("ts")
+    )
 
     turn_uri = F.concat(F.lit("turn:"), "conv_id", F.lit(":"), F.col("turn_idx"))
     conv_uri = F.concat(F.lit("conv:"), "conv_id")
@@ -207,11 +206,9 @@ def _assemble_triples(
     )
 
     # within-turn co-occurrence. NOT a self-join: per-turn distinct term
-    # sets (zero-shuffle on the fused path, one groupBy on the
-    # composition path — built above) expand to ordered pairs in-row —
-    # per-turn term counts are small, so the pair expansion is cheap.
-    # Pair order from the sorted array gives least/greatest canonical
-    # form for free (J6/C5).
+    # sets expand to ordered pairs in-row — per-turn term counts are
+    # small, so the pair expansion is cheap. Pair order from the sorted
+    # array gives least/greatest canonical form for free (J6/C5).
     pairs = F.flatten(
         F.transform(
             F.col("ts"),
@@ -232,7 +229,7 @@ def _assemble_triples(
         )
     )
 
-    # stable-ordering NEXT_TURN edges (reuses the conv partitioning)
+    # stable-ordering NEXT_TURN edges
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     nxt = (
         transcripts.select("conv_id", "turn_idx")
@@ -247,6 +244,38 @@ def _assemble_triples(
         )
     )
 
+    return (
+        mentions_triples.unionByName(has_ns_triples)
+        .unionByName(co)
+        .unionByName(nxt)
+        .groupBy("subj", "pred", "obj", "src_conv", "family")
+        .agg(F.count(F.lit(1)).alias("n_obs"))
+    )
+
+
+def _assemble_triples(
+    transcripts: DataFrame,
+    isa_edges: DataFrame,
+    lex: Lexicon,
+    cluster_by: str = "conv_id",
+) -> DataFrame:
+    """Pre-dedup triple frame: (subj, pred, obj, src_conv, family, n_obs).
+
+    Each row is ``n_obs`` observations of one triple in one source
+    conversation ``src_conv`` (null for ontology rows), and the rows are
+    distinct per (subj, pred, obj, src_conv). ``family`` tags which
+    extraction rule produced the row (mention / conv_ns / cooccur /
+    next_turn / ontology) — the provenance unit the reference tracks
+    per import script (each CQL import file is one family;
+    cql/import/*).
+
+    The transcript rows come distinct per conversation out of the
+    extraction kernel (``_conversation_triples``, which clusters the
+    turns by ``cluster_by``) on the fused path, and from one count
+    aggregate on the composition path. The ontology rows are
+    dimension-scale: they are counted in one partition, which needs no
+    exchange.
+    """
     onto = isa_edges.select(
         link.edge_strip("subject_id").alias("subj"),
         normalize_predicate(F.col("predicate")).alias("pred"),
@@ -256,15 +285,16 @@ def _assemble_triples(
     )
     if lex.canon_map is not None:
         onto = link.canonicalize(onto, lex.canon_map, ["subj", "obj"])
+        rows = _conversation_triples(transcripts, lex, cluster_by)
     else:
-        onto = canon.apply_canonical(onto, mapping, ["subj", "obj"])
-
-    return (
-        mentions_triples.unionByName(has_ns_triples)
-        .unionByName(co)
-        .unionByName(nxt)
-        .unionByName(onto)
+        onto = canon.apply_canonical(onto, lex.mapping, ["subj", "obj"])
+        rows = _composed_triples(transcripts, lex)
+    onto = (
+        onto.coalesce(1)
+        .groupBy("subj", "pred", "obj", "src_conv", "family")
+        .agg(F.count(F.lit(1)).alias("n_obs"))
     )
+    return rows.unionByName(onto)
 
 
 def build_triples(
@@ -277,10 +307,19 @@ def build_triples(
     """The full extraction DAG; returns the deduped triple table.
 
     ``with_src=True`` keeps a ``src_conv`` provenance column (null for
-    ontology triples) and dedups per (subj, pred, obj, src_conv) —
-    used by the bucket-resumable writer so every transcript-derived
-    triple lands in its source conversation's bucket; the global
-    triple-set view dedups on read.
+    ontology triples), one row per (subj, pred, obj, src_conv) — used by
+    the bucket-resumable writer so every transcript-derived triple lands
+    in its source conversation's bucket; the global triple-set view
+    dedups on read. The rows come distinct on that key out of
+    ``_assemble_triples``, so this form has no dedup of its own: its
+    only exchange clusters the turns. When the input carries the
+    writer's ``bucket`` column (``checkpoint.with_bucket``: a function of
+    conv_id) the turns are clustered by it, which is the writer's
+    partitioning; a resumable run's parallelism is then its pending
+    bucket count, as its write's already was.
+
+    The plain form dedups (subj, pred, obj) once, after the turn
+    exchange.
 
     ``lex``: pass a prepared ``Lexicon`` to skip per-run dimension prep
     (the recommended shape for repeated/incremental runs).
@@ -296,10 +335,11 @@ def build_triples(
     """
     if lex is None:
         lex = prepare_lexicon(terms)
-    triples = _assemble_triples(transcripts, isa_edges, lex).drop("family")
+    cluster_by = "bucket" if with_src and "bucket" in transcripts.columns else "conv_id"
+    triples = _assemble_triples(transcripts, isa_edges, lex, cluster_by)
     if with_src:
-        return triples.dropDuplicates(["subj", "pred", "obj", "src_conv"])
-    return triples.drop("src_conv").dropDuplicates(["subj", "pred", "obj"])
+        return triples.select("subj", "pred", "obj", "src_conv")
+    return triples.select("subj", "pred", "obj").dropDuplicates()
 
 
 def build_triples_prov(
@@ -321,7 +361,7 @@ def build_triples_prov(
     * ``n_obs``   — raw pre-dedup observation count (how often the
       fact was asserted across the corpus)
     * ``n_convs`` — distinct source conversations supporting it
-      (0 for ontology rows — count_distinct ignores the null src)
+      (0 for ontology rows, whose src is null)
     * ``first_seen_run`` — the producing run id; under MERGE upserts
       pass ``materialize.upsert(...,
       exclude_update_cols=["first_seen_run"])`` (or ``merge_into_sql``'s
@@ -330,8 +370,10 @@ def build_triples_prov(
       lineage. The streaming snapshot merge keeps it first-seen via
       ``min`` over zero-padded run ids (incremental_extract_prov).
 
-    One groupBy on the same key the plain path dedups on — identical
-    shuffle cost, so provenance is free at scale.
+    The rows of ``_assemble_triples`` are distinct per source
+    conversation, so ``n_obs`` is a sum of their counts and ``n_convs``
+    a plain ``count`` — one aggregate on the key the plain path dedups
+    on, after the turn exchange: provenance is free at scale.
     """
     if lex is None:
         lex = prepare_lexicon(terms)
@@ -340,8 +382,8 @@ def build_triples_prov(
         .groupBy("subj", "pred", "obj")
         .agg(
             F.min("family").alias("family"),
-            F.count(F.lit(1)).alias("n_obs"),
-            F.count_distinct("src_conv").alias("n_convs"),
+            F.sum("n_obs").alias("n_obs"),
+            F.count("src_conv").alias("n_convs"),
         )
         .withColumn("first_seen_run", F.lit(run_id).cast("string"))
     )

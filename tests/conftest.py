@@ -41,3 +41,33 @@ def transcripts(spark, lexicon_pdf):
     df = df.cache()
     df.count()
     return df
+
+
+def _exchange_count(plan) -> int:
+    """Exchange nodes of a physical plan: a DataFrame (run first, then
+    its final adaptive plan is read) or a plan string as the SQL status
+    store records it. Only the final (current) adaptive plan counts,
+    and the plans of cached frames it scans are left out (an
+    InMemoryRelation renders the plan that built the cache inline)."""
+    if not isinstance(plan, str):
+        plan.collect()
+        plan = plan._jdf.queryExecution().executedPlan().executedPlan().toString()
+    n, skip_depth = 0, None
+    for line in plan.splitlines():
+        node = line.lstrip(" :+-")
+        depth = len(line) - len(node)
+        if skip_depth is not None:
+            if depth > skip_depth:
+                continue
+            skip_depth = None
+        if node.startswith("== Initial Plan =="):
+            break
+        if "InMemoryRelation" in node:
+            skip_depth = depth
+        n += node.startswith("Exchange")
+    return n
+
+
+@pytest.fixture(scope="session")
+def exchanges():
+    return _exchange_count

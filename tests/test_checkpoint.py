@@ -1,5 +1,7 @@
 """Resumable checkpointing: resume-equals-fresh, skip-completed, upsert."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from kgflow.plans import checkpoint as cp
@@ -845,7 +847,8 @@ def test_failed_write_keeps_previous_output(spark, transcripts, lexicon, tmp_pat
 def test_partial_rerun_job_count(spark, transcripts, lexicon, tmp_path):
     """A re-run of one changed bucket starts only the jobs that do work:
     the ontology rewrite runs no size-gate count or broadcast exchange,
-    and the bucket write needs no checkpoint or count aggregate."""
+    and the bucket write needs no checkpoint, count aggregate, window or
+    triple exchange."""
     terms, isa = lexicon
     d = str(tmp_path / "jobs")
     cp.run_resumable(spark, transcripts, terms, isa, d, buckets=8)
@@ -865,9 +868,72 @@ def test_partial_rerun_job_count(spark, transcripts, lexicon, tmp_path):
     assert rep.processed_buckets == 1
     # bucket_fingerprints: 2 (shuffle-map job + result job)
     # bucket_quality collect: 2 (shuffle-map job + result job)
-    # the grouped extraction's localCheckpoint: 1
-    # the bucket write: 4 (three adaptive shuffle-map jobs + the write)
+    # the bucket write: 2 (the turn exchange's shuffle-map job + the
+    #   write; the ontology rows are deduped in one partition)
     # A size-gate count or broadcast exchange for the ontology rewrite,
-    # or a checkpoint or count aggregate of the written triples, adds
-    # jobs here.
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 9
+    # a checkpoint of the extraction, a NEXT_TURN window, a triple dedup
+    # or a repartition before the write, or a count aggregate of the
+    # written triples, adds jobs here.
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 6
+
+
+def test_resumable_write_plan_has_one_exchange(
+    spark, transcripts, lexicon, tmp_path, monkeypatch, exchanges
+):
+    """The executed resumable write shuffles once — the turn rows,
+    clustered by bucket — with no dedup exchange, window or repartition
+    between the extraction and the write. The plan is read from the SQL
+    status store, which records each query's executed plan."""
+    terms, isa = lexicon
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        execs = store.executionsList()
+        return [execs.apply(i) for i in range(execs.size())]
+
+    before = []
+    orig = cp._write_buckets
+
+    def capture(df, triples_dir):
+        before.append(max((e.executionId() for e in executions()), default=-1))
+        orig(df, triples_dir)
+
+    monkeypatch.setattr(cp, "_write_buckets", capture)
+    cp.run_resumable(spark, transcripts, terms, isa, str(tmp_path / "plan"), buckets=8)
+    (write,) = [
+        e.physicalPlanDescription()
+        for e in executions()
+        if e.executionId() > before[0]
+        and "InsertIntoHadoopFsRelationCommand" in e.physicalPlanDescription()
+    ]
+    assert exchanges(write) == 1
+
+
+def test_read_triples_lists_on_the_driver(spark, tmp_path):
+    """More bucket directories than parallelPartitionDiscovery.threshold
+    start no listing job, and the conf is put back after the read."""
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    d = str(tmp_path / "many")
+    spark.range(-1, 40).select(
+        F.lit("s").alias("subj"),
+        F.lit("p").alias("pred"),
+        F.lit("o").alias("obj"),
+        F.col("id").cast("int").alias("bucket"),
+    ).write.partitionBy("bucket").parquet(os.path.join(d, "triples"))
+    sc = spark.sparkContext
+    for prev in (None, "16"):
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+        group = f"test-read-triples-{prev}"
+        sc.setJobGroup(group, "read_triples")
+        try:
+            triples = cp.read_triples(spark, d)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        assert spark.conf.get(key, None) == prev
+    spark.conf.unset(key)
+    assert [tuple(r) for r in triples.collect()] == [("s", "p", "o")]

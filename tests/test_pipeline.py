@@ -122,10 +122,13 @@ def test_triples_prov_matches_plain(spark, transcripts, lexicon):
             assert r.n_convs == 0
         else:
             assert 1 <= r.n_convs <= r.n_obs
-    # n_obs totals the pre-dedup union
-    raw = pipeline._assemble_triples(
-        transcripts, isa, pipeline.prepare_lexicon(terms)
-    ).count()
+    # n_obs totals the pre-dedup observations (each pre-dedup row
+    # carries its count)
+    raw = (
+        pipeline._assemble_triples(transcripts, isa, pipeline.prepare_lexicon(terms))
+        .agg(F.sum("n_obs"))
+        .first()[0]
+    )
     assert sum(r.n_obs for r in rows) == raw
 
 
@@ -334,3 +337,179 @@ def test_canonicalize_matches_apply_canonical(spark):
     assert sorted(map(tuple, link.canonicalize(df, {}, ["s"]).collect()), key=str) == sorted(
         map(tuple, df.collect()), key=str
     )
+
+
+def _union_formulation(transcripts, isa, lex):
+    """The exploded pre-dedup union the conversation kernel replaces, one
+    row per observation: per-turn grouped extraction exploded back to
+    mentions, per-turn distinct term sets expanded to pairs, a lead()
+    window for NEXT_TURN and the canonicalized ontology rows."""
+    from pyspark.sql.window import Window
+
+    from kgflow.operators import extract, link
+
+    def triple(subj, pred, obj, family):
+        return [
+            subj.alias("subj"),
+            pred.alias("pred"),
+            obj.alias("obj"),
+            F.col("conv_id").alias("src_conv"),
+            F.lit(family).alias("family"),
+        ]
+
+    grouped = extract.extract_linked_terms_grouped(transcripts, lex.surface_map, lex.canon_map)
+    linked = grouped.select(
+        "conv_id", "turn_idx", F.explode(F.arrays_zip("term_ids", "namespaces")).alias("m")
+    )
+    turn = F.concat(F.lit("turn:"), "conv_id", F.lit(":"), F.col("turn_idx"))
+    term = F.col("m.term_ids")
+    mentions = linked.select(*triple(turn, F.lit("MENTIONS"), term, "mention"))
+    has_ns = linked.select(
+        *triple(
+            F.concat(F.lit("conv:"), "conv_id"),
+            F.concat(F.lit("HAS_"), F.upper("m.namespaces")),
+            term,
+            "conv_ns",
+        )
+    )
+    ts = grouped.select("conv_id", F.array_sort(F.array_distinct("term_ids")).alias("ts"))
+    pairs = F.flatten(
+        F.transform(
+            "ts",
+            lambda x, i: F.transform(
+                F.slice("ts", i + 2, F.size("ts")), lambda y: F.struct(x.alias("a"), y.alias("b"))
+            ),
+        )
+    )
+    co = ts.select("conv_id", F.explode(pairs).alias("p")).select(
+        *triple(F.col("p.a"), F.lit("CO_OCCURS_WITH"), F.col("p.b"), "cooccur")
+    )
+    nxt_idx = F.lead("turn_idx").over(Window.partitionBy("conv_id").orderBy("turn_idx"))
+    nxt = (
+        transcripts.select("conv_id", "turn_idx", nxt_idx.alias("n"))
+        .filter(F.col("n").isNotNull())
+        .select(
+            *triple(
+                turn,
+                F.lit("NEXT_TURN"),
+                F.concat(F.lit("turn:"), "conv_id", F.lit(":"), F.col("n")),
+                "next_turn",
+            )
+        )
+    )
+    onto = link.canonicalize(
+        isa.select(
+            link.edge_strip("subject_id").alias("subj"),
+            pipeline.normalize_predicate(F.col("predicate")).alias("pred"),
+            link.edge_strip("object_id").alias("obj"),
+            F.lit(None).cast("string").alias("src_conv"),
+            F.lit("ontology").alias("family"),
+        ),
+        lex.canon_map,
+        ["subj", "obj"],
+    )
+    return mentions.unionByName(has_ns).unionByName(co).unionByName(nxt).unionByName(onto)
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def test_conversation_kernel_matches_union_formulation(spark):
+    """build_triples, its with_src form and build_triples_prov equal the
+    exploded-union formulation (dedup, dedup with src_conv, count +
+    count_distinct) on a hostile fixture: conversations spanning Arrow
+    batches of 3 rows, null and empty text inside a conversation, a term
+    repeated in a turn, single-turn conversations, non-ASCII and null
+    namespaces (two that upper-case alike, and "ɤ", which Spark's upper
+    maps to U+A7CB and Python's str.upper leaves as it is), non-ASCII
+    term ids whose
+    UTF-16 order differs from their code point order, alt-id
+    canonicalization, duplicated is-a rows and one long conversation."""
+    terms = spark.createDataFrame(
+        [
+            ("A:1", "alpha", "go", None, ["alef"], None, [], False),
+            ("A:2", "beta", "GO", None, [], None, ["A:1x"], False),
+            ("Ａ:3", "gamma ray", "straße", None, [], None, [], False),
+            ("\U0001F600:4", "delta", "ɤ", None, [], None, [], False),
+            ("é:5", "epsilon", None, None, [], None, [], False),
+            ("z:6", "zeta", "σς", None, [], None, ["A:2"], False),
+            ("o:7", "omega", "go", None, [], None, [], True),
+        ],
+        "term_id string, name string, namespace string, definition string, "
+        "synonyms array<string>, xrefs array<string>, alt_ids array<string>, is_obsolete boolean",
+    )
+    isa = spark.createDataFrame(
+        [("z:6", "is_a", "A:1x"), ("z:6", "is_a", "A:1x"), (" é:5 ", "part of", "Ａ:3")],
+        "subject_id string, predicate string, object_id string",
+    )
+    texts = [
+        "alpha beta gamma ray delta epsilon zeta",
+        None,
+        "alpha alpha alef beta",
+        "",
+        "zeta omega delta",
+        "nothing here",
+        "gamma ray epsilon",
+    ]
+    rows = [("c-long", i, "user", texts[i % len(texts)]) for i in range(40)]
+    rows += [(f"c-{k}", 0, "user", texts[k % len(texts)]) for k in range(7)]
+    rows += [
+        ("c-über", 2, "asst", "delta alpha"),
+        ("c-über", 0, "user", None),
+        ("c-über", 1, "user", "beta zeta zeta"),
+    ]
+    tr = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string"
+    ).repartition(3)
+    lex = pipeline.prepare_lexicon(terms)
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        union = _union_formulation(tr, isa, lex)
+        plain = pipeline.build_triples(tr, terms, isa, lex=lex)
+        with_src = pipeline.build_triples(tr, terms, isa, lex=lex, with_src=True)
+        bucketed = pipeline.build_triples(
+            tr.withColumn("bucket", F.pmod(F.xxhash64("conv_id"), F.lit(4)).cast("int")),
+            terms,
+            isa,
+            lex=lex,
+            with_src=True,
+        )
+        prov = pipeline.build_triples_prov(tr, terms, isa, lex=lex, run_id="r")
+        assert _rows(plain) == _rows(union.select("subj", "pred", "obj").dropDuplicates())
+        want_src = _rows(union.select("subj", "pred", "obj", "src_conv").dropDuplicates())
+        assert _rows(with_src) == want_src
+        assert _rows(bucketed) == want_src
+        want_prov = union.groupBy("subj", "pred", "obj").agg(
+            F.min("family").alias("family"),
+            F.count(F.lit(1)).alias("n_obs"),
+            F.count_distinct("src_conv").alias("n_convs"),
+        )
+        assert _rows(prov.drop("first_seen_run")) == _rows(want_prov)
+    finally:
+        spark.conf.set(key, prev)
+    preds = {r[1] for r in _rows(plain)}
+    # the fixture reaches what it is meant to reach
+    want = {"HAS_GO", "HAS_STRASSE", "HAS_\ua7cb", None, "NEXT_TURN", "CO_OCCURS_WITH", "IS_A"}
+    assert want <= preds
+    assert ("\U0001F600:4", "CO_OCCURS_WITH", "Ａ:3") not in _rows(plain)
+    assert ("Ａ:3", "CO_OCCURS_WITH", "\U0001F600:4") in _rows(plain)
+
+
+def test_triple_plans_shuffle_turns_once(spark, transcripts, lexicon, exchanges):
+    """build_triples_prov shuffles twice (the turn rows by conversation,
+    then the (subj, pred, obj) aggregate), build_triples' with_src form
+    once, and neither persists an RDD: the extraction is not
+    checkpointed."""
+    terms, isa = lexicon
+    lex = pipeline.prepare_lexicon(terms)
+    sc = spark.sparkContext
+    persisted = sc._jsc.getPersistentRDDs().size()
+
+    assert exchanges(pipeline.build_triples_prov(transcripts, terms, isa, lex=lex)) == 2
+    assert exchanges(pipeline.build_triples(transcripts, terms, isa, lex=lex, with_src=True)) == 1
+    pipeline.build_triples(transcripts, terms, isa, lex=lex).collect()
+    assert sc._jsc.getPersistentRDDs().size() == persisted

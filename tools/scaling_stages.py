@@ -23,11 +23,10 @@ _CHILD = r"""
 import json, sys, time
 sys.path.insert(0, %(repo)r)
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 from kgflow.session import get_spark
 from kgflow import synth
 from kgflow.plans import pipeline as P
-from kgflow.operators import extract, link, canon
+from kgflow.operators import extract
 
 cores = int(sys.argv[1]); path = sys.argv[2]
 spark = get_spark("stages-%%d" %% cores, master="local[%%d]" %% cores,
@@ -44,32 +43,18 @@ def timed(fn):
 out = {"cores": cores}
 
 # stage 1: fused mention extraction + linking + canonical rewrite,
-# grouped per turn (round 3 fused the dimension lookups into the batch
-# loop; round 4 keeps mentions grouped per input row so the per-turn
-# term sets need no groupBy downstream)
+# grouped per turn: the extraction kernel alone, narrow, on the input
+# partitioning
 grouped = extract.extract_linked_terms_grouped(tr, lex.surface_map, lex.canon_map)
 out["extract_link_canon"] = timed(lambda: grouped.count())
-g_ck = grouped.localCheckpoint(eager=True)
 
-# stage 3: co-occurrence — in-row distinct + pair expansion straight
-# off the grouped arrays (round 3's collect_set SHUFFLE is gone; this
-# stage is now narrow JVM work end to end)
-per_turn = g_ck.select(
-    "conv_id", "turn_idx",
-    F.array_sort(F.array_distinct("term_ids")).alias("ts"))
-pairs = F.flatten(F.transform(F.col("ts"), lambda x, i: F.transform(
-    F.slice(F.col("ts"), i + 2, F.size(F.col("ts"))),
-    lambda y: F.struct(x.alias("a"), y.alias("b")))))
-co = per_turn.select("conv_id", F.explode(pairs).alias("p"))
-out["cooccur"] = timed(lambda: co.count())
+# stage 2: the pipeline's transcript triples: one exchange clusters the
+# turns by conversation, then the same kernel emits every family
+# distinct per conversation
+conv_triples = P._conversation_triples(tr, lex)
+out["conversation_triples"] = timed(lambda: conv_triples.count())
 
-# stage 4: NEXT_TURN window over the transcript layout
-w = Window.partitionBy("conv_id").orderBy("turn_idx")
-nxt = tr.select("conv_id", "turn_idx").withColumn(
-    "next_idx", F.lead("turn_idx").over(w)).filter(F.col("next_idx").isNotNull())
-out["next_turn_window"] = timed(lambda: nxt.count())
-
-# stage 5: sequence packing under the documented 100 TB shard story
+# stage 3: sequence packing under the documented 100 TB shard story
 # (sample.py stream_cols): a fixed 64-way conv-hash shard column is the
 # parallelism unit, so no single stream serializes the prefix-sum
 # window — packing must scale with cores like any other stage. Work is
@@ -87,7 +72,7 @@ out["pack_shards"] = timed(lambda: packed.agg(
     F.max("bin_id"), F.bit_xor(F.xxhash64("doc_id", "bin_id", "bin_offset"))
 ).collect())
 
-# stage 5b: dedup tier — MinHash signatures -> banded LSH pairing ->
+# stage 4: dedup tier — MinHash signatures -> banded LSH pairing ->
 # integer-Jaccard verify, the full near-dup chain. The corpus is a
 # DIVERSE synthetic one (40 md5-derived tokens per doc, one doc per
 # 20 input turns, ~3%% planted near-dups at Jaccard ~0.95): docs
@@ -134,7 +119,7 @@ out["dedup_pairs"] = timed(lambda: ver8.agg(
     F.bit_xor(F.xxhash64("id_a", "id_b", "inter_size", "union_size")),
 ).collect())
 
-# stage 6: full DAG incl. final global dedup shuffle (end-to-end)
+# stage 5: full DAG incl. final global dedup shuffle (end-to-end)
 out["full_dag"] = timed(lambda: P.build_triples(tr, terms, isa, lex=lex).count())
 
 print(json.dumps(out))
