@@ -28,6 +28,7 @@ from collections.abc import Callable, Iterator, Sequence
 from itertools import combinations
 
 import pandas as pd
+from pyspark import Accumulator, AccumulatorParam
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -138,7 +139,8 @@ def _extract(
     cols: list[str],
     payload: tuple,
     schema: T.StructType,
-    emit: Callable[[list[tuple], tuple], Sequence[list]],
+    emit: Callable[[list[tuple], tuple, dict], Sequence[list]],
+    tally: Accumulator | None = None,
 ) -> DataFrame:
     """The one extraction stage: ``transcripts.select(*cols)`` (``conv_id``
     first, text column last) → ``schema`` rows in a single narrow
@@ -157,6 +159,10 @@ def _extract(
     conversation is ONE group only when its rows are adjacent: callers
     that need whole conversations cluster and sort the input first
     (``extract_conversation_triples``).
+
+    ``emit`` also gets a dict that lives as long as the task, for
+    per-task sums; with ``tally`` (a ``bucket_tally`` accumulator) the
+    task hands that dict to the driver once, after its last group.
 
     Only surfaces equal to ``" ".join(s.split())`` enter the automaton:
     ``_scan`` never matches one holding a tab, a newline or a double
@@ -179,11 +185,12 @@ def _extract(
         value = bc.value
         find = TokenAhoCorasick([s for s in value[0] if s == " ".join(s.split())]).find
         group: list[tuple] = []
+        sums: dict = {}
         out: list[list] = [[] for _ in arrow_schema]
         for rb in batches:
             for row in zip(*(c.to_pylist() for c in rb.columns)):
                 if group and row[0] != group[0][0][0]:
-                    for c, vals in zip(out, emit(group, value)):
+                    for c, vals in zip(out, emit(group, value, sums)):
                         c.extend(vals)
                     group = []
                 text = row[-1]
@@ -191,7 +198,9 @@ def _extract(
             yield batch(out)
             out = [[] for _ in arrow_schema]
         if group:
-            yield batch(emit(group, value) or out)
+            yield batch(emit(group, value, sums) or out)
+        if tally is not None:
+            tally.add(sums)
 
     return transcripts.select(*cols).mapInArrow(run, schema=schema)
 
@@ -200,7 +209,7 @@ def _per_row(emit_row: Callable[[tuple, list, tuple], list[tuple]]):
     """A group emitter that emits every row of the group on its own —
     rows without hits emit nothing."""
 
-    def emit(group, payload):
+    def emit(group, payload, _sums):
         rows = [t for row, hits in group if hits for t in emit_row(row, hits, payload)]
         return [list(c) for c in zip(*rows)]
 
@@ -304,7 +313,51 @@ _TRIPLE_OUT = T.StructType(
 )
 
 
-def _emit_conversation(group, payload):
+class _ReplaceByKey(AccumulatorParam):
+    """A dict accumulator whose merge REPLACES each key's entry instead
+    of adding to it: an update re-sent by a re-executed task leaves the
+    value as it was. Exact only when every key's whole value comes from
+    one task, which the bucket exchange guarantees for bucket keys."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, value, update):
+        value.update(update)
+        return value
+
+
+def bucket_tally(spark) -> Accumulator:
+    """An accumulator for ``extract_conversation_triples(tally=...)``:
+    bucket → ``[turns, tokens, ttr_q4 sum, turns with a ttr_q4, blank
+    turns, mentions]``."""
+    return spark.sparkContext.accumulator({}, _ReplaceByKey())
+
+
+# the per-turn quality values a tallied input carries beside its bucket
+# (checkpoint.run_resumable projects them)
+QUALITY_COLS = ["_n_tok", "_ttr_q4", "_empty"]
+
+
+def _emit_tallied(group, payload, sums):
+    """``_emit_conversation`` that also adds each turn of ``group`` to
+    its bucket's sums (see ``bucket_tally``); a null ``_ttr_q4`` (a turn
+    without tokens) is left out of the ttr sum and its count."""
+    for (_conv, _tidx, bucket, n_tok, ttr_q4, empty, _text), hits in group:
+        s = sums.get(bucket)
+        if s is None:
+            s = sums[bucket] = [0] * 6
+        s[0] += 1
+        s[1] += n_tok
+        if ttr_q4 is not None:
+            s[2] += ttr_q4
+            s[3] += 1
+        s[4] += empty
+        s[5] += len(hits)
+    return _emit_conversation(group, payload, sums)
+
+
+def _emit_conversation(group, payload, _sums):
     """One conversation's MENTIONS, HAS_<NS>, CO_OCCURS_WITH and
     NEXT_TURN triples, each distinct with its observation count, as
     ``_TRIPLE_OUT`` columns. The strings are the ones ``pipeline``
@@ -319,7 +372,7 @@ def _emit_conversation(group, payload):
     c_keys: list[tuple] = []  # (term, term)
     n_keys: list[tuple] = []  # (turn, next turn)
     prev = None
-    for i, ((_conv, tidx, _text), hits) in enumerate(group):
+    for i, ((_conv, tidx, *_), hits) in enumerate(group):
         turn = None if conv is None or tidx is None else f"turn:{conv}:{tidx}"
         # the lead() of the previous turn in (conv_id, turn_idx) order
         if i and tidx is not None:
@@ -358,6 +411,7 @@ def extract_conversation_triples(
     surface_map: dict[str, tuple[str, str]],
     canon_map: dict[str, str],
     has_preds: dict[str | None, str | None],
+    tally: Accumulator | None = None,
 ) -> DataFrame:
     """Fused extract + link + canon + triple emission, per conversation:
     ``_TRIPLE_OUT`` rows (subj, pred, obj, src_conv, family, n_obs), where
@@ -377,15 +431,19 @@ def extract_conversation_triples(
     src_conv) — no global dedup is needed on that key — and NEXT_TURN
     links each turn to the next one in turn order, null or empty text
     included.
+
+    ``tally`` (a ``bucket_tally`` accumulator): the input also carries
+    ``bucket`` and ``QUALITY_COLS``, and each task sums those values per
+    bucket, with the bucket's mention count, into the accumulator. The
+    clustering puts every bucket wholly in one task, so the
+    accumulator's replace-merge is exact even when a task re-runs.
     """
     links = {s: (has_preds[ns], canon_map.get(t, t)) for s, (t, ns) in surface_map.items()}
-    return _extract(
-        transcripts,
-        ["conv_id", "turn_idx", "text"],
-        (links,),
-        _TRIPLE_OUT,
-        _emit_conversation,
-    )
+    if tally is None:
+        cols, emit = ["conv_id", "turn_idx", "text"], _emit_conversation
+    else:
+        cols, emit = ["conv_id", "turn_idx", "bucket", *QUALITY_COLS, "text"], _emit_tallied
+    return _extract(transcripts, cols, (links,), _TRIPLE_OUT, emit, tally)
 
 
 def hash_embedding(

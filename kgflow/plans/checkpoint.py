@@ -25,8 +25,12 @@ ledger:
   new input yields no triples) and reads ``triples_out`` from the
   parquet footers of the rest;
 * a completed bucket writes one ledger row (a JSON line under
-  ``_ledger/``) with lineage counts (rows_in, triples_out) and the
-  fingerprint;
+  ``_ledger/``) with lineage counts (rows_in, triples_out), the
+  fingerprint and the bucket's text quality (``bucket_quality``'s
+  values). The quality comes out of the write job itself: each pending
+  turn's quality values ride beside its text into the extraction
+  kernel, which sums them per bucket in its task and hands the sums to
+  the driver in one accumulator — no second scan, no aggregate job;
 * on restart the ledger is read and planned on the driver: a bucket
   whose latest ledger row is ``done`` with a matching fingerprint is
   skipped.
@@ -51,6 +55,8 @@ from dataclasses import dataclass
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..operators import extract
 
 
 def auto_bucket_count(
@@ -117,16 +123,10 @@ def bucket_fingerprints(
     return fp_map, table_fps
 
 
-def bucket_quality(transcripts: DataFrame) -> DataFrame:
-    """(bucket, avg_tokens, avg_ttr_q4, empty_turns) — per-bucket
-    data-quality aggregates recorded in the ledger beside the lineage
-    counts, so a resumable run emits quality lineage per partition (the
-    batch form of the lexical-diversity / quality-score queries).
-
-    Scaled-integer TTR (×10⁴) keeps the aggregate exact across partition
-    orders; one map-side-combining aggregate over only the pending
-    buckets — negligible next to extraction.
-    """
+def _turn_quality():
+    """The per-turn values ``bucket_quality`` averages: the token count,
+    the scaled-integer TTR (null for a turn without tokens) and whether
+    the text is blank (null text counts as empty)."""
     from ..functions import text as tx
 
     t = F.coalesce(F.col("text"), F.lit(""))
@@ -135,11 +135,39 @@ def bucket_quality(transcripts: DataFrame) -> DataFrame:
     ttr_q4 = F.when(
         n_tok > 0, F.round(F.size(F.array_distinct(toks)) * 10000 / n_tok, 0)
     )
+    return n_tok, ttr_q4, F.trim(t) == ""
+
+
+def bucket_quality(transcripts: DataFrame) -> DataFrame:
+    """(bucket, avg_tokens, avg_ttr_q4, empty_turns) — per-bucket
+    data-quality aggregates recorded in the ledger beside the lineage
+    counts, so a resumable run emits quality lineage per partition (the
+    batch form of the lexical-diversity / quality-score queries).
+
+    Scaled-integer TTR (×10⁴) keeps the aggregate exact across partition
+    orders. ``run_resumable`` takes the same values from the extraction
+    kernel's per-bucket sums (``_ledger_quality``) and runs this
+    aggregate only for a Lexicon without driver maps.
+    """
+    n_tok, ttr_q4, empty = _turn_quality()
     return transcripts.groupBy("bucket").agg(
         F.round(F.avg(n_tok), 2).alias("avg_tokens"),
         F.round(F.avg(ttr_q4), 0).cast("long").alias("avg_ttr_q4"),
-        F.sum(F.when(F.trim(t) == "", 1).otherwise(0)).cast("long").alias("empty_turns"),
+        F.sum(F.when(empty, 1).otherwise(0)).cast("long").alias("empty_turns"),
     )
+
+
+def _ledger_quality(turns, tokens, ttr_sum, ttr_turns, empty):
+    """``bucket_quality``'s (avg_tokens, avg_ttr_q4, empty_turns) from
+    one bucket's ``extract.bucket_tally`` sums, rounded HALF_UP in
+    integer arithmetic. That equals Spark's ``round(avg, d)``, which
+    rounds the shortest decimal form of the double average: a tie
+    (``.xx5``, ``.5``) has that short form exactly, and a non-tie lies
+    at least 1/(200·turns) from the rounding boundary — far more than
+    the double's error."""
+    avg_tokens = (200 * tokens + turns) // (2 * turns) / 100
+    avg_ttr_q4 = (2 * ttr_sum + ttr_turns) // (2 * ttr_turns) if ttr_turns else None
+    return avg_tokens, avg_ttr_q4, empty
 
 
 def table_fingerprint(df: DataFrame) -> DataFrame:
@@ -270,6 +298,14 @@ def run_resumable(
     ``fail_after_buckets`` simulates a mid-run crash for the
     resume-equals-fresh test: only the first k pending buckets are
     processed and the ledger records exactly those.
+
+    Jobs: one fingerprint aggregate, the lexicon's one bounded collect,
+    and the bucket write (the turn exchange plus the write). The
+    ledger's quality values and the run record's mention counts are
+    the extraction kernel's per-bucket sums (``extract.bucket_tally``),
+    rounded on the driver (``_ledger_quality``). A Lexicon without
+    driver maps has no fused kernel: it runs the ``bucket_quality``
+    aggregate instead, and its run record has null mention counts.
     """
     from . import pipeline as P
 
@@ -365,14 +401,26 @@ def run_resumable(
         return ResumeReport(run_id, total, total, 0, 0)
 
     todo = tr.filter(F.col("bucket").isin(pending_list))
-    quality = {
-        r["bucket"]: (r["avg_tokens"], r["avg_ttr_q4"], r["empty_turns"])
-        for r in bucket_quality(todo).collect()
-    }
+    lex = P.prepare_lexicon(terms)
+    if lex.canon_map is None:
+        # a Lexicon without driver maps has no fused kernel to sum in
+        tally = None
+        quality = {
+            r["bucket"]: (r["avg_tokens"], r["avg_ttr_q4"], r["empty_turns"])
+            for r in bucket_quality(todo).collect()
+        }
+    else:
+        # the extraction kernel sums each pending turn's quality values
+        # per bucket in its task (extract.bucket_tally); the ledger reads
+        # them after the write, with no scan or aggregate of its own
+        tally = extract.bucket_tally(spark)
+        n_tok, ttr_q4, empty = _turn_quality()
+        values = (n_tok, ttr_q4.cast("long"), empty)
+        todo = todo.select("*", *(v.alias(c) for v, c in zip(values, extract.QUALITY_COLS)))
     # the input's bucket column rides along: build_triples clusters the
     # turns by it, so the rows below reach the write already partitioned
     # by bucket (ontology rows in one partition of their own)
-    triples = P.build_triples(todo, terms, isa_edges, with_src=True)
+    triples = P.build_triples(todo, terms, isa_edges, with_src=True, lex=lex, tally=tally)
 
     # bucket = the source conversation's bucket (same function as the
     # input bucketing), so a bucket's triples are a pure function of that
@@ -419,6 +467,9 @@ def run_resumable(
                 if not f.startswith((".", "_"))
             )
 
+    if tally is not None:
+        sums = tally.value
+        quality = {b: _ledger_quality(*v[:5]) for b, v in sums.items()}
     os.makedirs(_ledger_path(out_dir), exist_ok=True)
     rows = []
     now = time.time()
@@ -465,6 +516,9 @@ def run_resumable(
     m.started_at = t_start
     m.rows_in = sum(r["rows_in"] for r in rows)
     m.triples = report.triples_out
+    if tally is not None:
+        # every mention the fused kernel finds links to a term
+        m.mentions = m.linked = sum(v[5] for v in sums.values())
     m.finish().write(out_dir)
     return report
 

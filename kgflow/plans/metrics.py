@@ -17,8 +17,9 @@ class RunMetrics:
     run_id: str
     started_at: float = field(default_factory=time.time)
     rows_in: int = 0
-    mentions: int = 0
-    linked: int = 0
+    # None (null in the JSON) when the run does not measure them
+    mentions: int | None = None
+    linked: int | None = None
     triples: int = 0
     wall_sec: float = 0.0
 

@@ -40,6 +40,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark import Accumulator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -153,7 +154,10 @@ def normalize_predicate(col):
 
 
 def _conversation_triples(
-    transcripts: DataFrame, lex: Lexicon, cluster_by: str = "conv_id"
+    transcripts: DataFrame,
+    lex: Lexicon,
+    cluster_by: str = "conv_id",
+    tally: Accumulator | None = None,
 ) -> DataFrame:
     """The fused path's transcript triples, distinct per conversation.
 
@@ -162,11 +166,12 @@ def _conversation_triples(
     writer's ``bucket`` — and sorted by (conv_id, turn_idx), which is
     the input contract of ``extract.extract_conversation_triples``. That
     exchange carries the turn rows (with their text); no exchange keyed
-    by the source conversation follows it.
+    by the source conversation follows it. ``tally``: see
+    ``extract.extract_conversation_triples``.
     """
     clustered = transcripts.repartition(cluster_by).sortWithinPartitions("conv_id", "turn_idx")
     return extract.extract_conversation_triples(
-        clustered, lex.surface_map, lex.canon_map, lex.has_preds
+        clustered, lex.surface_map, lex.canon_map, lex.has_preds, tally
     )
 
 
@@ -258,6 +263,7 @@ def _assemble_triples(
     isa_edges: DataFrame,
     lex: Lexicon,
     cluster_by: str = "conv_id",
+    tally: Accumulator | None = None,
 ) -> DataFrame:
     """Pre-dedup triple frame: (subj, pred, obj, src_conv, family, n_obs).
 
@@ -285,7 +291,7 @@ def _assemble_triples(
     )
     if lex.canon_map is not None:
         onto = link.canonicalize(onto, lex.canon_map, ["subj", "obj"])
-        rows = _conversation_triples(transcripts, lex, cluster_by)
+        rows = _conversation_triples(transcripts, lex, cluster_by, tally)
     else:
         onto = canon.apply_canonical(onto, lex.mapping, ["subj", "obj"])
         rows = _composed_triples(transcripts, lex)
@@ -303,6 +309,7 @@ def build_triples(
     isa_edges: DataFrame,
     with_src: bool = False,
     lex: Lexicon | None = None,
+    tally: Accumulator | None = None,
 ) -> DataFrame:
     """The full extraction DAG; returns the deduped triple table.
 
@@ -324,6 +331,13 @@ def build_triples(
     ``lex``: pass a prepared ``Lexicon`` to skip per-run dimension prep
     (the recommended shape for repeated/incremental runs).
 
+    ``tally``: an ``extract.bucket_tally`` accumulator that the
+    extraction kernel fills with per-bucket turn-quality and mention
+    sums (the resumable writer's ledger quality). It needs ``with_src``,
+    a driver-map ``lex`` and an input carrying ``bucket`` and
+    ``extract.QUALITY_COLS``;
+    the triples do not change.
+
     INPUT CONTRACT: one row per (conv_id, turn_idx) — the transcript
     input hint's shape, and what "per-turn text equality under stable
     (conv_id, turn_idx) ordering" presumes. Duplicate turn rows would
@@ -336,10 +350,39 @@ def build_triples(
     if lex is None:
         lex = prepare_lexicon(terms)
     cluster_by = "bucket" if with_src and "bucket" in transcripts.columns else "conv_id"
-    triples = _assemble_triples(transcripts, isa_edges, lex, cluster_by)
+    triples = _assemble_triples(transcripts, isa_edges, lex, cluster_by, tally)
     if with_src:
         return triples.select("subj", "pred", "obj", "src_conv")
     return triples.select("subj", "pred", "obj").dropDuplicates()
+
+
+def _prov_rows(
+    transcripts: DataFrame, isa_edges: DataFrame, lex: Lexicon, run_id: str | None = None
+) -> DataFrame:
+    """``_assemble_triples``' per-conversation rows in the provenance
+    shape: (subj, pred, obj, family, n_obs, n_convs, first_seen_run),
+    ``n_convs`` 1 for a transcript row and 0 for an ontology row."""
+    return _assemble_triples(transcripts, isa_edges, lex).select(
+        "subj",
+        "pred",
+        "obj",
+        "family",
+        "n_obs",
+        F.col("src_conv").isNotNull().cast("long").alias("n_convs"),
+        F.lit(run_id).cast("string").alias("first_seen_run"),
+    )
+
+
+def _sum_prov(rows: DataFrame) -> DataFrame:
+    """One (subj, pred, obj) row per triple of provenance-shaped
+    ``rows``: ``min(family)``, summed counts, earliest
+    ``first_seen_run``."""
+    return rows.groupBy("subj", "pred", "obj").agg(
+        F.min("family").alias("family"),
+        F.sum("n_obs").alias("n_obs"),
+        F.sum("n_convs").alias("n_convs"),
+        F.min("first_seen_run").alias("first_seen_run"),
+    )
 
 
 def build_triples_prov(
@@ -371,22 +414,16 @@ def build_triples_prov(
       ``min`` over zero-padded run ids (incremental_extract_prov).
 
     The rows of ``_assemble_triples`` are distinct per source
-    conversation, so ``n_obs`` is a sum of their counts and ``n_convs``
-    a plain ``count`` — one aggregate on the key the plain path dedups
-    on, after the turn exchange: provenance is free at scale.
+    conversation, so ``n_obs`` and ``n_convs`` are sums of per-row
+    counts (``_prov_rows``) — one aggregate (``_sum_prov``) on the key
+    the plain path dedups on, after the turn exchange: provenance is
+    free at scale. The stream drain feeds the existing snapshot's rows
+    into the same aggregate, so a drop is merged in that one aggregate
+    too.
     """
     if lex is None:
         lex = prepare_lexicon(terms)
-    return (
-        _assemble_triples(transcripts, isa_edges, lex)
-        .groupBy("subj", "pred", "obj")
-        .agg(
-            F.min("family").alias("family"),
-            F.sum("n_obs").alias("n_obs"),
-            F.count("src_conv").alias("n_convs"),
-        )
-        .withColumn("first_seen_run", F.lit(run_id).cast("string"))
-    )
+    return _sum_prov(_prov_rows(transcripts, isa_edges, lex, run_id))
 
 
 def build_nodes(triples: DataFrame, terms: DataFrame) -> DataFrame:
@@ -395,32 +432,46 @@ def build_nodes(triples: DataFrame, terms: DataFrame) -> DataFrame:
     Endpoints with a lexicon row are ``resolved=true`` with props; the
     rest get stub rows (placeholder-node protocol,
     ``neo4j_cancerkg_builder.py:124-139``).
+
+    The rows are the distinct endpoints left-joined to the term rows
+    (one row per matching term row, duplicate ``term_id``s included),
+    built as ONE aggregate: the endpoint rows and the term rows are
+    unioned and grouped by id, a group is kept when it holds an
+    endpoint, and its term props are exploded back out. The term rows
+    go through that id exchange, so nothing is broadcast whatever the
+    term table's size.
     """
     endpoints = (
         triples.select(F.col("subj").alias("id"))
         .union(triples.select("obj"))
-        .distinct()
+        .select("id", F.lit(None).cast("map<string,string>").alias("props"), F.lit(1).alias("e"))
     )
-    labeled = endpoints.withColumn(
-        "label",
-        F.when(F.col("id").startswith("turn:"), F.lit("Turn"))
-        .when(F.col("id").startswith("conv:"), F.lit("Conversation"))
-        .otherwise(F.lit("Term")),
-    )
-    term_props = terms.select(
+    # a null term_id matches no endpoint in a join, the null one included
+    term_rows = terms.filter(F.col("term_id").isNotNull()).select(
         F.col("term_id").alias("id"),
         F.create_map(
             F.lit("name"), F.col("name"), F.lit("namespace"), F.col("namespace")
         ).alias("props"),
+        F.lit(0).alias("e"),
     )
-    return (
-        labeled.join(F.broadcast(term_props), "id", "left")
-        .select(
-            "id",
+    labeled = (
+        endpoints.unionByName(term_rows)
+        .groupBy("id")
+        .agg(F.max("e").alias("e"), F.collect_list("props").alias("props"))
+        .filter(F.col("e") == 1)
+        .select("id", F.explode_outer("props").alias("props"))
+        .withColumn(
             "label",
-            "props",
-            (F.col("props").isNotNull() | (F.col("label") != "Term")).alias("resolved"),
+            F.when(F.col("id").startswith("turn:"), F.lit("Turn"))
+            .when(F.col("id").startswith("conv:"), F.lit("Conversation"))
+            .otherwise(F.lit("Term")),
         )
+    )
+    return labeled.select(
+        "id",
+        "label",
+        "props",
+        (F.col("props").isNotNull() | (F.col("label") != "Term")).alias("resolved"),
     )
 
 

@@ -95,14 +95,22 @@ def incremental_extract_prov(
     allow_unguarded: bool = False,
 ) -> int:
     """Incremental extraction that maintains a PROVENANCE-keyed triple
-    snapshot instead of an append log: per micro-batch,
-    ``build_triples_prov`` aggregates the batch and the result is merged
-    into the keyed snapshot with ADDITIVE support counts — ``n_obs`` and
-    ``n_convs`` sum across batches (exact under the conversation-
-    complete drop contract: each conv_id lands wholly in one drop, so
-    no supporting conversation is double-counted), ``family`` is stable
-    (min), and ``first_seen_run`` keeps the earliest batch's run id
-    (zero-padded batch ids make lexicographic min = earliest).
+    snapshot instead of an append log: per micro-batch, the batch's
+    per-conversation provenance rows (``pipeline._prov_rows``) are
+    merged into the keyed snapshot with ADDITIVE support counts —
+    ``n_obs`` and ``n_convs`` sum across batches (exact under the
+    conversation-complete drop contract: each conv_id lands wholly in
+    one drop, so no supporting conversation is double-counted),
+    ``family`` is stable (min), and ``first_seen_run`` keeps the
+    earliest batch's run id (zero-padded batch ids make lexicographic
+    min = earliest). The result equals ``build_triples_prov`` over every
+    drop merged so far.
+
+    Ontology rows are static dimension facts that every batch re-emits:
+    only the first batch counts them. They are dropped from a later
+    batch's rows BEFORE the (subj, pred, obj) aggregate — after it, an
+    is-a edge that is also a transcript triple would take the
+    transcript's family and be added again on every drain.
 
     Two correctness guards an additive merge needs and the plain append
     path (which dedups on read) does not:
@@ -144,7 +152,10 @@ def incremental_extract_prov(
       separate follow-up commit) are still read via the legacy
       fallback.
     * **fallback** — the keyed parquet snapshot with the guard riding
-      the atomic pointer flip (exactly as before).
+      the atomic pointer flip. The existing snapshot's rows and the
+      batch's provenance rows go through ONE (subj, pred, obj)
+      aggregate (``pipeline._sum_prov``), so the write shuffles twice:
+      the batch's turns, and that aggregate.
 
     A snapshot that EXISTS but carries no stream_id meta (written by a
     pre-guard version, or checkpoint metadata unreadable) is refused:
@@ -227,16 +238,11 @@ def incremental_extract_prov(
             if _check_guard(meta, stream_id, batch_id, iceberg_table):
                 return
             batches["n"] += 1
-            run_id = f"{run_prefix}-{batch_id:09d}"
-            new = P.build_triples_prov(
-                batch_df, terms, isa_edges, lex=lex, run_id=run_id
-            )
+            rows = P._prov_rows(batch_df, isa_edges, lex, f"{run_prefix}-{batch_id:09d}")
             if spark.catalog.tableExists(iceberg_table):
-                # ontology rows are static dimension facts re-emitted by
-                # every batch; counted once (first batch) keeps n_obs exact
-                new = new.filter(F.col("family") != "ontology")
+                rows = rows.filter(F.col("family") != "ontology")
             mat.upsert(
-                new,
+                P._sum_prov(rows),
                 path=snap_path,  # unused on the Iceberg route
                 keys=["subj", "pred", "obj"],
                 mode="additive",
@@ -254,21 +260,12 @@ def incremental_extract_prov(
         if _check_guard(meta, stream_id, batch_id, snap_path):
             return  # at-least-once replay of an already-merged batch
         batches["n"] += 1
-        run_id = f"{run_prefix}-{batch_id:09d}"
-        new = P.build_triples_prov(batch_df, terms, isa_edges, lex=lex, run_id=run_id)
+        rows = P._prov_rows(batch_df, isa_edges, lex, f"{run_prefix}-{batch_id:09d}")
         existing = mat.read_table(spark, snap_path)
         if existing is not None:
-            # ontology rows are static dimension facts re-emitted by every
-            # batch; counting them once (first batch) keeps n_obs exact
-            new = existing.unionByName(new.filter(F.col("family") != "ontology"))
-        merged = new.groupBy("subj", "pred", "obj").agg(
-            F.min("family").alias("family"),
-            F.sum("n_obs").alias("n_obs"),
-            F.sum("n_convs").alias("n_convs"),
-            F.min("first_seen_run").alias("first_seen_run"),
-        )
+            rows = existing.unionByName(rows.filter(F.col("family") != "ontology"))
         mat.write_snapshot(
-            merged,
+            P._sum_prov(rows),
             snap_path,
             meta={"merged_batch_id": batch_id, "stream_id": stream_id},
         )

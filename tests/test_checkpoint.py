@@ -1,5 +1,6 @@
 """Resumable checkpointing: resume-equals-fresh, skip-completed, upsert."""
 
+import json
 import os
 
 from pyspark.sql import functions as F
@@ -867,14 +868,16 @@ def test_partial_rerun_job_count(spark, transcripts, lexicon, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     assert rep.processed_buckets == 1
     # bucket_fingerprints: 2 (shuffle-map job + result job)
-    # bucket_quality collect: 2 (shuffle-map job + result job)
+    # prepare_lexicon: 0 (the fixture's term table is a local relation,
+    #   which collects without a job)
     # the bucket write: 2 (the turn exchange's shuffle-map job + the
-    #   write; the ontology rows are deduped in one partition)
-    # A size-gate count or broadcast exchange for the ontology rewrite,
-    # a checkpoint of the extraction, a NEXT_TURN window, a triple dedup
-    # or a repartition before the write, or a count aggregate of the
-    # written triples, adds jobs here.
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 6
+    #   write; the ontology rows are deduped in one partition, and the
+    #   ledger's quality values are summed by the extraction kernel)
+    # A bucket_quality aggregate, a size-gate count or broadcast exchange
+    # for the ontology rewrite, a checkpoint of the extraction, a
+    # NEXT_TURN window, a triple dedup or a repartition before the
+    # write, or a count aggregate of the written triples, adds jobs here.
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
 
 
 def test_resumable_write_plan_has_one_exchange(
@@ -937,3 +940,120 @@ def test_read_triples_lists_on_the_driver(spark, tmp_path):
         assert spark.conf.get(key, None) == prev
     spark.conf.unset(key)
     assert [tuple(r) for r in triples.collect()] == [("s", "p", "o")]
+
+
+def _quality_json(row):
+    return json.dumps([row["avg_tokens"], row["avg_ttr_q4"], row["empty_turns"]])
+
+
+# Turn texts for the ledger-quality tests: null, empty, space-only,
+# tab-only and newline text, upper-case and non-ASCII tokens, one-token
+# turns, then fillers that put the whole input on two rounding ties:
+# 101 tokens over 40 turns is avg_tokens 2.525 (its double lies BELOW
+# the tie, so rounding the double would give 2.52), and the ttr_q4 sum
+# 272,500 over 40 turns is 6812.5.
+_HOSTILE_TEXTS = [
+    None, "", "   ", "\t", " \t ", "\n", "ÜBER straße Über", "Word", "word WORD",
+    "Ĳssel ĳssel ÆON æon", "one", "Alpha beta alpha", "日本 語 日本",
+    "  lead and trail  ", "tab\tsep\ttab", "x",
+]
+_HOSTILE_TEXTS += (
+    ["w"] * 4 + ["w w"] * 2 + ["w v"] * 4 + ["w w w"] * 4
+    + ["w w w w"] * 4 + ["w v w w"] * 3 + ["u v w w"] * 3
+)
+
+
+def test_ledger_quality_equals_bucket_quality(spark, lexicon, tmp_path):
+    """Every done ledger row's quality values, summed by the extraction
+    kernel and rounded on the driver, equal bucket_quality's as JSON
+    text — on hostile text, across Arrow batches of 3 rows, in one
+    bucket that sits on an exact .xx5 avg_tokens tie and a .5 TTR tie,
+    and in three buckets."""
+    terms, isa = lexicon
+    rows = [(f"c{i % 9}", i, "user", t) for i, t in enumerate(_HOSTILE_TEXTS)]
+    tr = spark.createDataFrame(rows, "conv_id string, turn_idx int, role string, text string")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        for buckets in (1, 3):
+            d = str(tmp_path / f"q{buckets}")
+            cp.run_resumable(spark, tr, terms, isa, d, buckets=buckets)
+            led = [r for r in cp.ledger_rows(d) if r["status"] == "done"]
+            assert len(led) == buckets
+            want = {
+                r["bucket"]: _quality_json(r.asDict())
+                for r in cp.bucket_quality(cp.with_bucket(tr, buckets)).collect()
+            }
+            assert {r["partition_id"]: _quality_json(r) for r in led} == want
+    finally:
+        spark.conf.set(key, prev)
+    # the one-bucket run is on both ties, rounded half up
+    n_tok, ttr_q4, _ = cp._turn_quality()
+    sums = tr.agg(F.count(F.lit(1)), F.sum(n_tok), F.sum(ttr_q4)).first()
+    assert (sums[0], sums[1], int(sums[2])) == (40, 101, 272_500)
+    (one,) = [r for r in cp.ledger_rows(str(tmp_path / "q1")) if r["status"] == "done"]
+    assert (one["avg_tokens"], one["avg_ttr_q4"], one["empty_turns"]) == (2.53, 6813, 3)
+
+
+def test_bucket_tally_merge_replaces(spark):
+    """The tally accumulator merges by replacing each bucket's entry:
+    the same task update applied twice (a re-executed task) leaves the
+    value unchanged, and other buckets' entries are kept."""
+    from kgflow.operators import extract
+
+    tally = extract.bucket_tally(spark)
+    update = {3: [2, 5, 15000, 2, 0, 4]}
+    tally.add(dict(update))
+    tally.add(dict(update))
+    assert tally.value == update
+    tally.add({7: [1, 1, 10000, 1, 0, 0]})
+    assert tally.value == {**update, 7: [1, 1, 10000, 1, 0, 0]}
+
+
+def test_run_metrics_count_mentions(spark, transcripts, lexicon, tmp_path):
+    """RunMetrics' mentions and linked come from the extraction kernel:
+    both equal extract_mentions' row count (every fused-path mention
+    links)."""
+    from kgflow.operators import extract
+    from kgflow.plans import pipeline as P
+
+    terms, isa = lexicon
+    d = str(tmp_path / "mentions")
+    cp.run_resumable(spark, transcripts, terms, isa, d, buckets=4)
+    (f,) = os.listdir(os.path.join(d, "_metrics"))
+    with open(os.path.join(d, "_metrics", f)) as fh:
+        m = json.loads(fh.read())
+    n = extract.extract_mentions(transcripts, P.prepare_lexicon(terms).surfaces).count()
+    assert n > 0
+    assert m["mentions"] == m["linked"] == n
+
+
+def test_composition_path_ledger_keeps_quality(spark, transcripts, lexicon, tmp_path, monkeypatch):
+    """A Lexicon without driver maps (the composition path) still
+    records bucket_quality's values in the ledger, the same as the
+    fused path's, and writes null — not 0 — for the mention counts it
+    does not measure."""
+    import functools
+
+    from kgflow.plans import pipeline as P
+
+    terms, isa = lexicon
+    fused = str(tmp_path / "fused")
+    cp.run_resumable(spark, transcripts, terms, isa, fused, buckets=4)
+    monkeypatch.setattr(
+        P, "prepare_lexicon", functools.partial(P.prepare_lexicon, max_fused_surfaces=0)
+    )
+    composed = str(tmp_path / "composed")
+    cp.run_resumable(spark, transcripts, terms, isa, composed, buckets=4)
+
+    def quality(d):
+        return {r["partition_id"]: _quality_json(r) for r in cp.ledger_rows(d)}
+
+    assert quality(composed) == quality(fused)
+    assert all(json.loads(q) != [None, None, None] for q in quality(composed).values())
+    (f,) = os.listdir(os.path.join(composed, "_metrics"))
+    with open(os.path.join(composed, "_metrics", f)) as fh:
+        m = json.loads(fh.read())
+    assert m["mentions"] is None and m["linked"] is None
+    assert _triple_set(spark, composed) == _triple_set(spark, fused)

@@ -8,6 +8,13 @@ from kgflow import reference_oracle as ro
 from kgflow.plans import pipeline
 
 
+def _persisted(sc) -> set[int]:
+    """Ids of the RDDs persisted now. A test checks that it added none by
+    comparing id sets, not counts: the context cleaner may unpersist an
+    earlier test's RDD while it runs."""
+    return set(sc._jsc.getPersistentRDDs().keySet())
+
+
 def _got_triples(spark, transcripts, lexicon):
     terms, isa = lexicon
     triples, nodes = pipeline.run_pipeline(spark, transcripts, terms, isa)
@@ -289,7 +296,7 @@ def test_prepare_lexicon_is_one_job(spark, lexicon, tmp_path):
     terms.coalesce(1).write.parquet(path)
     terms = spark.read.parquet(path)
     sc = spark.sparkContext
-    persisted = sc._jsc.getPersistentRDDs().size()
+    persisted = _persisted(sc)
     group = "test-prepare-lexicon"
     sc.setJobGroup(group, "prepare_lexicon")
     try:
@@ -299,7 +306,7 @@ def test_prepare_lexicon_is_one_job(spark, lexicon, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     assert lex.surface_map is not None and lex.dim is None
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
-    assert sc._jsc.getPersistentRDDs().size() == persisted
+    assert _persisted(sc) <= persisted
 
 
 def test_driver_lexicon_ontology_rewrite_has_no_join(spark, transcripts, lexicon):
@@ -507,9 +514,93 @@ def test_triple_plans_shuffle_turns_once(spark, transcripts, lexicon, exchanges)
     terms, isa = lexicon
     lex = pipeline.prepare_lexicon(terms)
     sc = spark.sparkContext
-    persisted = sc._jsc.getPersistentRDDs().size()
+    persisted = _persisted(sc)
 
     assert exchanges(pipeline.build_triples_prov(transcripts, terms, isa, lex=lex)) == 2
     assert exchanges(pipeline.build_triples(transcripts, terms, isa, lex=lex, with_src=True)) == 1
     pipeline.build_triples(transcripts, terms, isa, lex=lex).collect()
-    assert sc._jsc.getPersistentRDDs().size() == persisted
+    assert _persisted(sc) <= persisted
+
+
+_TERMS_SCHEMA = (
+    "term_id string, name string, namespace string, definition string, "
+    "synonyms array<string>, xrefs array<string>, alt_ids array<string>, is_obsolete boolean"
+)
+
+
+def _node_rows(df):
+    return sorted(
+        ((r.id, r.label, None if r.props is None else sorted(r.props.items()), r.resolved) for r in df.collect()),
+        key=repr,
+    )
+
+
+def test_build_nodes_matches_broadcast_join(spark, transcripts, lexicon, tmp_path):
+    """build_nodes' one-aggregate form gives the rows of the distinct
+    endpoints left-joined to a broadcast of the term rows — duplicate
+    term_ids, a null term_id, null endpoints, term ids no triple
+    references and a turn:-prefixed term id included — and its plan over
+    read_triples broadcasts nothing."""
+    from kgflow.plans import checkpoint as cp
+
+    terms = spark.createDataFrame(
+        [
+            ("A:1", "alpha", "go", None, [], None, [], False),
+            ("A:1", "alpha bis", None, None, [], None, [], False),
+            ("A:2", None, None, None, [], None, [], False),
+            (None, "nameless", "go", None, [], None, [], False),
+            ("unused:9", "unused", "go", None, [], None, [], False),
+            ("turn:c:0", "turn term", "odd", None, [], None, [], False),
+        ],
+        _TERMS_SCHEMA,
+    )
+    triples = spark.createDataFrame(
+        [
+            ("turn:c:0", "MENTIONS", "A:1"),
+            ("turn:c:0", "NEXT_TURN", "turn:c:1"),
+            ("conv:c", "HAS_GO", "A:1"),
+            ("A:1", "CO_OCCURS_WITH", "A:2"),
+            ("A:2", "IS_A", "B:3"),
+            (None, "IS_A", "A:2"),
+            ("B:3", "IS_A", None),
+        ],
+        "subj string, pred string, obj string",
+    )
+
+    def broadcast_join(triples, terms):
+        endpoints = (
+            triples.select(F.col("subj").alias("id")).union(triples.select("obj")).distinct()
+        )
+        labeled = endpoints.withColumn(
+            "label",
+            F.when(F.col("id").startswith("turn:"), F.lit("Turn"))
+            .when(F.col("id").startswith("conv:"), F.lit("Conversation"))
+            .otherwise(F.lit("Term")),
+        )
+        term_props = terms.select(
+            F.col("term_id").alias("id"),
+            F.create_map(
+                F.lit("name"), F.col("name"), F.lit("namespace"), F.col("namespace")
+            ).alias("props"),
+        )
+        return labeled.join(F.broadcast(term_props), "id", "left").select(
+            "id",
+            "label",
+            "props",
+            (F.col("props").isNotNull() | (F.col("label") != "Term")).alias("resolved"),
+        )
+
+    got = pipeline.build_nodes(triples, terms)
+    assert got.schema == broadcast_join(triples, terms).schema
+    assert _node_rows(got) == _node_rows(broadcast_join(triples, terms))
+    # the fixture reaches what it is meant to reach
+    ids = [r[0] for r in _node_rows(got)]
+    assert ids.count("A:1") == 2 and None in ids and "unused:9" not in ids
+
+    t, isa = lexicon
+    d = str(tmp_path / "nodes")
+    cp.run_resumable(spark, transcripts, t, isa, d, buckets=4)
+    nodes = pipeline.build_nodes(cp.read_triples(spark, d), t)
+    assert _node_rows(nodes) == _node_rows(broadcast_join(cp.read_triples(spark, d), t))
+    plan = nodes._jdf.queryExecution().executedPlan().toString()
+    assert "Broadcast" not in plan, plan

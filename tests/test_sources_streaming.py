@@ -551,3 +551,80 @@ def test_read_table_uses_recorded_schema(spark, transcripts, lexicon, tmp_path):
         legacy = mat.read_table(spark, path)
         assert legacy.schema == inferred
         assert sorted(map(tuple, legacy.collect()), key=str) == rows
+
+
+def test_incremental_prov_ontology_edge_that_is_also_a_transcript_triple(spark, tmp_path):
+    """An is-a edge that equals a transcript triple (KG:A co_occurs_with
+    KG:B, and both terms co-occur in every drop) is counted once as an
+    ontology fact: after three drops the snapshot equals
+    build_triples_prov over the landed input (n_obs 1 + 3 = 4), not 6."""
+    from kgflow import schemas
+    from kgflow.plans import pipeline as P
+
+    terms = spark.createDataFrame(
+        [
+            ("KG:A", "alpha", "kg", None, [], None, [], False),
+            ("KG:B", "beta", "kg", None, [], None, [], False),
+        ],
+        "term_id string, name string, namespace string, definition string, "
+        "synonyms array<string>, xrefs array<string>, alt_ids array<string>, is_obsolete boolean",
+    )
+    isa = spark.createDataFrame(
+        [("KG:A", "co_occurs_with", "KG:B")], "subject_id string, predicate string, object_id string"
+    )
+    in_dir = str(tmp_path / "in")
+    out_dir = str(tmp_path / "out")
+    for drop in range(3):
+        spark.createDataFrame(
+            [(f"c{drop}", 0, "user", "alpha and beta", None, None)], schemas.TRANSCRIPT
+        ).write.mode("append").parquet(in_dir)
+        incremental.incremental_extract_prov(spark, in_dir, out_dir, terms, isa)
+    key = ("KG:A", "CO_OCCURS_WITH", "KG:B")
+    got = {
+        (r.subj, r.pred, r.obj): (r.family, r.n_obs, r.n_convs)
+        for r in incremental.read_prov_triples(spark, out_dir).collect()
+    }
+    landed = spark.read.schema(schemas.TRANSCRIPT).parquet(in_dir)
+    want = {
+        (r.subj, r.pred, r.obj): (r.family, r.n_obs, r.n_convs)
+        for r in P.build_triples_prov(landed, terms, isa).collect()
+    }
+    assert want[key] == ("cooccur", 4, 3)
+    assert got == want
+
+
+def test_drain_write_plan_has_two_exchanges(spark, transcripts, lexicon, tmp_path, monkeypatch, exchanges):
+    """A drain into an existing snapshot shuffles twice in its executed
+    write plan: the batch's turns, and ONE (subj, pred, obj) aggregate
+    that merges the snapshot's rows with the batch's."""
+    from kgflow.plans import materialize as mat
+
+    terms, isa = lexicon
+    in_dir = str(tmp_path / "in")
+    out_dir = str(tmp_path / "out")
+    transcripts.filter(F.col("conv_id") < "conv-000010").write.parquet(in_dir)
+    incremental.incremental_extract_prov(spark, in_dir, out_dir, terms, isa)
+    transcripts.filter(F.col("conv_id") >= "conv-000010").write.mode("append").parquet(in_dir)
+
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        execs = store.executionsList()
+        return [execs.apply(i) for i in range(execs.size())]
+
+    before = []
+    orig = mat.write_snapshot
+
+    def capture(df, *args, **kwargs):
+        before.append(max((e.executionId() for e in executions()), default=-1))
+        return orig(df, *args, **kwargs)
+
+    monkeypatch.setattr(mat, "write_snapshot", capture)
+    incremental.incremental_extract_prov(spark, in_dir, out_dir, terms, isa)
+    (write,) = [
+        e.physicalPlanDescription()
+        for e in executions()
+        if e.executionId() > before[0]
+        and "InsertIntoHadoopFsRelationCommand" in e.physicalPlanDescription()
+    ]
+    assert exchanges(write) == 2
