@@ -166,8 +166,9 @@ Workload: full KG-construction DAG (mention extraction → entity linking
 → canonical rewrite → triple dedup) over {n_turns:,} synthetic
 transcript turns (conv_id-hash bucketed parquet, Zipf-skewed
 conversation lengths and term frequencies). Lexicon preparation
-(surface dim + same-as connected components) runs once per lexicon
-version, outside the per-batch timing, as it would in deployment.
+(the surface and same-as canonical maps, built on the driver) runs once
+per lexicon version, outside the per-batch timing, as it would in
+deployment.
 
 | cores | wall sec | triples/sec | turns/sec |
 |---|---|---|---|

@@ -6,9 +6,9 @@ as idiomatic Spark DataFrame programs:
 
 * transcripts ``(conv_id, turn_idx, role, text, tool, ts)`` →
   vectorized mention detection → ``(subj, pred, obj)`` triple extraction →
-  broadcast-join entity linking → connected-components canonicalization →
-  idempotent node/edge materialization with per-partition lineage
-  checkpoints.
+  entity linking through driver-side lexicon maps → connected-components
+  canonicalization → idempotent node/edge materialization with
+  per-partition lineage checkpoints.
 
 Package layout
 --------------

@@ -689,43 +689,6 @@ def retract_components(
     return untouched.unionByName(recomputed).unionByName(singletons)
 
 
-def apply_canonical(
-    df: DataFrame,
-    mapping: DataFrame,
-    cols: list[str],
-    broadcast_threshold: int | None = 4_000_000,
-) -> DataFrame:
-    """Rewrite id columns through the (id → canonical_id) mapping.
-
-    Ids absent from the mapping stay as-is (they are their own
-    canonical form).
-
-    The broadcast hint is size-GATED (one bounded count of the mapping,
-    shared across all ``cols``; ``None`` = never hint): ontology-scale
-    mappings (the KG pipeline's feed) broadcast as before, but a
-    corpus-scale mapping — e.g. a web-dedup cluster map with one row
-    per near-duplicated document — falls back to AQE-chosen shuffle
-    joins instead of a guaranteed driver OOM. On real deployments the
-    mapping table is bucketed by id, making these co-located joins.
-    """
-    hint = broadcast_threshold is not None and (
-        mapping.limit(broadcast_threshold + 1).count() <= broadcast_threshold
-    )
-    out = df
-    for c in cols:
-        m = mapping.select(
-            F.col("id").alias(f"_m_{c}"), F.col("canonical_id").alias(f"_c_{c}")
-        )
-        if hint:
-            m = F.broadcast(m)
-        out = (
-            out.join(m, out[c] == m[f"_m_{c}"], "left")
-            .withColumn(c, F.coalesce(F.col(f"_c_{c}"), F.col(c)))
-            .drop(f"_m_{c}", f"_c_{c}")
-        )
-    return out
-
-
 def bounded_paths(
     edges: DataFrame,
     max_hops: int = 3,

@@ -8,12 +8,13 @@ broadcast surface list, scans each text batch (greedy leftmost-longest,
 non-overlapping — the rule ``reference_oracle._scan`` specifies).
 
 Scale notes:
-* The stage itself is narrow. The per-turn extractors run on any
-  partitioning; ``extract_conversation_triples`` needs its input
-  clustered by conversation, and the KG pipeline pays ONE exchange of
-  the turn rows for that (``pipeline._conversation_triples``). Its
-  output is then distinct per conversation, so no triple exchange keyed
-  by the source conversation follows it.
+* The stage itself is narrow. The per-turn extractor
+  (``extract_linked_terms_grouped``) runs on any partitioning;
+  ``extract_conversation_triples`` needs its input clustered by
+  conversation, and the KG pipeline pays ONE exchange of the turn rows
+  for that (``pipeline._conversation_triples``). Its output is then
+  distinct per conversation, so no triple exchange keyed by the source
+  conversation follows it.
 * The dictionary is broadcast once (ontology lexicons are MB-scale, like
   the reference's OBO files); every task rebuilds the automaton from the
   broadcast value (~0.3 s at 100k surfaces).
@@ -167,7 +168,7 @@ def _extract(
     Only surfaces equal to ``" ".join(s.split())`` enter the automaton:
     ``_scan`` never matches one holding a tab, a newline or a double
     space, and left in it would consume tokens. Every hit is then the
-    lower-cased form of a payload surface (a ``link.surface_dim`` key).
+    lower-cased form of a payload surface (a ``link.surface_map`` key).
     """
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -205,50 +206,6 @@ def _extract(
     return transcripts.select(*cols).mapInArrow(run, schema=schema)
 
 
-def _per_row(emit_row: Callable[[tuple, list, tuple], list[tuple]]):
-    """A group emitter that emits every row of the group on its own —
-    rows without hits emit nothing."""
-
-    def emit(group, payload, _sums):
-        rows = [t for row, hits in group if hits for t in emit_row(row, hits, payload)]
-        return [list(c) for c in zip(*rows)]
-
-    return emit
-
-
-_MENTION_OUT = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("role", T.StringType(), True),
-        T.StructField("surface", T.StringType(), False),
-        T.StructField("start", T.IntegerType(), False),
-        T.StructField("end", T.IntegerType(), False),
-    ]
-)
-
-
-def _emit_mentions(row, hits, _payload):
-    conv, tidx, role, _text = row
-    return [(conv, tidx, role, surface, s, e) for surface, s, e in hits]
-
-
-def extract_mentions(transcripts: DataFrame, surfaces: list[str]) -> DataFrame:
-    """transcripts → one row per detected mention (exploded).
-
-    Output: (conv_id, turn_idx, role, surface, start, end). Linking to
-    term_ids happens downstream as a broadcast join (operators.link) so
-    the Python stage stays a pure text op.
-    """
-    return _extract(
-        transcripts,
-        ["conv_id", "turn_idx", "role", "text"],
-        (sorted(set(surfaces)),),
-        _MENTION_OUT,
-        _per_row(_emit_mentions),
-    )
-
-
 _GROUPED_OUT = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),
@@ -259,12 +216,18 @@ _GROUPED_OUT = T.StructType(
 )
 
 
-def _emit_grouped(row, hits, payload):
+def _emit_grouped(group, payload, _sums):
+    """One ``_GROUPED_OUT`` row per turn of ``group`` with hits, as
+    columns; turns without hits emit nothing."""
     smap, cmap = payload
-    linked = [smap[surface] for surface, _s, _e in hits]
-    return [
-        (row[0], row[1], [cmap.get(t, t) for t, _ in linked], [ns for _, ns in linked])
-    ]
+    rows = []
+    for (conv, tidx, _text), hits in group:
+        if hits:
+            linked = [smap[surface] for surface, _s, _e in hits]
+            rows.append(
+                (conv, tidx, [cmap.get(t, t) for t, _ in linked], [ns for _, ns in linked])
+            )
+    return [list(c) for c in zip(*rows)]
 
 
 def extract_linked_terms_grouped(
@@ -274,10 +237,12 @@ def extract_linked_terms_grouped(
 ) -> DataFrame:
     """Fused extract + link + canon, GROUPED per turn: one output row per
     input row with ≥1 mention, (conv_id, turn_idx, term_ids, namespaces)
-    with the mentions as aligned parallel arrays. Exploding
-    ``arrays_zip(term_ids, namespaces)`` equals ``extract_mentions`` →
-    ``link.link_mentions`` → ``canon.apply_canonical([term_id])`` row
-    for row (multiplicity preserved).
+    with the mentions as aligned parallel arrays: each mention's
+    ``surface_map`` term id, rewritten through ``canon_map``, and its
+    namespace, in text order. Exploding ``arrays_zip(term_ids,
+    namespaces)`` gives one row per ``TokenAhoCorasick.find`` hit
+    (multiplicity preserved) — ``reference_oracle._scan`` over the
+    oracle maps.
 
     Why fused: the dimension lookup is done inside the batch loop that
     already holds the matched surface string. The separate linking pass
@@ -297,7 +262,7 @@ def extract_linked_terms_grouped(
         ["conv_id", "turn_idx", "text"],
         (surface_map, canon_map or {}),
         _GROUPED_OUT,
-        _per_row(_emit_grouped),
+        _emit_grouped,
     )
 
 

@@ -1,11 +1,16 @@
-"""Entity linking: surface strings → lexicon term ids via broadcast joins.
+"""Entity linking: surface strings → lexicon term ids, and term ids →
+canonical ids, as driver-side maps over the collected term rows.
 
 Re-expresses the reference's MERGE-by-business-key entity resolution
 (``cql/import/cosmic/import_cosmic_mutant_census.cql:36-38`` MATCH dim by
-key then MERGE edge) as explicit broadcast hash joins (SURVEY.md §2.3 J1).
+key then MERGE edge): ``surface_map`` and ``canonical_map`` are the only
+statement of the surface and same-as rules. The extraction kernel looks
+each matched surface up in them inside its batch loop, and
+``canonicalize`` rewrites id columns through the canonical map in an
+Arrow stage — no join either way.
 
-Key hygiene is applied on BOTH sides before the join — the reference had
-to ship a remediation script for whitespace-polluted keys
+Key hygiene is applied when the maps are built — the reference had to
+ship a remediation script for whitespace-polluted keys
 (``cql/remediation/remediate_uniprot_pubmed_ids.cql:8-26``); we normalize
 at build time (SURVEY.md §2.8 C6).
 """
@@ -28,42 +33,24 @@ def edge_strip(col):
     return F.regexp_replace(col, f"^{_EDGE_WS}+|{_EDGE_WS}+$", "")
 
 
-def surface_dim(terms: DataFrame) -> DataFrame:
-    """Lexicon terms → (surface, term_id, namespace) link dimension.
-
-    * name + each synonym becomes a surface (pipe-split semantics of
-      ``cql/import/import_hgnc.cql:34-38`` already normalized to arrays).
-    * surfaces edge-stripped of all whitespace (not only spaces) +
-      lower-cased (C6 hygiene).
-    * obsolete terms are excluded — they must not link
-      (``import_go_obo.py:105``).
-    * one winner per surface: deterministic min(term_id) tie-break
-      replaces MERGE first-writer-wins (SURVEY.md §7.5.2).
-    """
-    live = terms.filter(~F.coalesce(F.col("is_obsolete"), F.lit(False)))
-    surfaces = live.select(
-        F.explode(
-            F.array_union(F.array(F.col("name")), F.coalesce(F.col("synonyms"), F.array()))
-        ).alias("surface_raw"),
-        "term_id",
-        "namespace",
-    )
-    cleaned = surfaces.select(
-        F.lower(edge_strip("surface_raw")).alias("surface"),
-        "term_id",
-        "namespace",
-    ).filter(F.col("surface") != "")
-    return cleaned.groupBy("surface").agg(
-        F.min("term_id").alias("term_id"),
-        F.min_by("namespace", "term_id").alias("namespace"),
-    )
-
-
 def surface_map(rows) -> dict[str, tuple[str, str]]:
-    """``surface_dim`` on the driver: surface → (term_id, namespace) over
-    collected term rows, by the same rules (live terms only, name plus
-    synonyms, ``strip().lower()``, non-empty, min term_id wins with its
-    namespace)."""
+    """surface → (term_id, namespace) over collected term rows (the
+    link dimension; ``reference_oracle._surface_map`` is its oracle):
+
+    * obsolete terms are left out — they must not link
+      (``import_go_obo.py:105``);
+    * a live term's name and each of its synonyms is a surface (the
+      pipe-split of ``cql/import/import_hgnc.cql:34-38``, already
+      normalized to arrays); a null one is skipped;
+    * a surface is edge-stripped of all whitespace (``str.strip()``, not
+      only spaces) and lower-cased (C6 hygiene); an empty result is
+      skipped. Inner whitespace is kept, so a surface holding a tab, a
+      newline or a double space never matches (``extract._extract``
+      keeps it out of the automaton, as ``reference_oracle._scan``
+      never matches it);
+    * one winner per surface: the minimum term_id, with its namespace —
+      a deterministic tie-break in place of MERGE first-writer-wins
+      (SURVEY.md §7.5.2)."""
     out: dict[str, tuple[str, str]] = {}
     for r in rows:
         if r.is_obsolete:
@@ -73,15 +60,6 @@ def surface_map(rows) -> dict[str, tuple[str, str]]:
             if key and (key not in out or r.term_id < out[key][0]):
                 out[key] = (r.term_id, r.namespace)
     return out
-
-
-def link_mentions(mentions: DataFrame, dim: DataFrame) -> DataFrame:
-    """mentions (surface) ⨝ broadcast(dim) → linked mentions with term_id.
-
-    Inner join: unlinkable surfaces are dropped, matching the reference's
-    MATCH-then-MERGE (edge only emitted when the dim row exists, J1/J2).
-    """
-    return mentions.join(F.broadcast(dim), "surface", "inner")
 
 
 def prefix_match_join(
@@ -129,26 +107,19 @@ def prefix_match_join(
     )
 
 
-def alt_id_edges(terms: DataFrame) -> DataFrame:
-    """Same-as links (term_id ↔ alt_id) for canonicalization input.
-
-    Generalization of the Gene↔biolink:Gene consolidation
-    (``cql/remediation/remediate_gene_node.cql:5-52``).
-    """
-    return (
-        terms.select("term_id", F.explode("alt_ids").alias("alt_id"))
-        .select(
-            F.col("term_id").alias("id_a"),
-            edge_strip("alt_id").alias("id_b"),
-        )
-        .filter(F.col("id_b") != "")
-    )
-
-
 def canonical_map(rows) -> dict[str, str]:
-    """``connected_components(alt_id_edges(terms))`` on the driver: id →
-    min id of its same-as component, over collected term rows with the
-    same edge rules (alt ids edge-stripped, empty ones dropped)."""
+    """id → canonical id over collected term rows
+    (``reference_oracle._canonical_map`` is its oracle):
+
+    * every (term_id, alt_id) pair is a same-as link — the
+      generalization of the Gene↔biolink:Gene consolidation
+      (``cql/remediation/remediate_gene_node.cql:5-52``); obsolete terms'
+      alt ids link too;
+    * an alt id is edge-stripped of all whitespace; a null or empty one
+      is dropped;
+    * every id on a link to another id maps to the minimum id of its
+      connected component (``canon._union_find_map``); an id on no such
+      link is absent and stays as it is."""
     return canon._union_find_map(
         (r.term_id, alt.strip())
         for r in rows
@@ -158,9 +129,9 @@ def canonical_map(rows) -> dict[str, str]:
 
 
 def canonicalize(df: DataFrame, canon_map: dict[str, str], cols: list[str]) -> DataFrame:
-    """``canon.apply_canonical(df, mapping, cols)`` through the driver
-    dict ``canon_map`` (id → canonical id, as ``canonical_map`` builds
-    it): ids absent from the dict stay as they are. The dict is
+    """``cols`` of ``df`` rewritten through the driver dict ``canon_map``
+    (id → canonical id, as ``canonical_map`` builds it): ids absent from
+    the dict and nulls stay as they are. The dict is
     broadcast once and each Arrow batch is rewritten by an Arrow
     ``index_in``/``take`` lookup in one narrow ``mapInArrow`` stage — no
     join, no size-gate count, no broadcast exchange."""

@@ -145,9 +145,9 @@ def bucket_quality(transcripts: DataFrame) -> DataFrame:
     batch form of the lexical-diversity / quality-score queries).
 
     Scaled-integer TTR (×10⁴) keeps the aggregate exact across partition
-    orders. ``run_resumable`` takes the same values from the extraction
-    kernel's per-bucket sums (``_ledger_quality``) and runs this
-    aggregate only for a Lexicon without driver maps.
+    orders. ``run_resumable`` does not run this aggregate: it takes the
+    same values from the extraction kernel's per-bucket sums
+    (``_ledger_quality``). The ``bucket_quality_rollup`` query runs it.
     """
     n_tok, ttr_q4, empty = _turn_quality()
     return transcripts.groupBy("bucket").agg(
@@ -303,9 +303,7 @@ def run_resumable(
     and the bucket write (the turn exchange plus the write). The
     ledger's quality values and the run record's mention counts are
     the extraction kernel's per-bucket sums (``extract.bucket_tally``),
-    rounded on the driver (``_ledger_quality``). A Lexicon without
-    driver maps has no fused kernel: it runs the ``bucket_quality``
-    aggregate instead, and its run record has null mention counts.
+    rounded on the driver (``_ledger_quality``).
     """
     from . import pipeline as P
 
@@ -402,21 +400,13 @@ def run_resumable(
 
     todo = tr.filter(F.col("bucket").isin(pending_list))
     lex = P.prepare_lexicon(terms)
-    if lex.canon_map is None:
-        # a Lexicon without driver maps has no fused kernel to sum in
-        tally = None
-        quality = {
-            r["bucket"]: (r["avg_tokens"], r["avg_ttr_q4"], r["empty_turns"])
-            for r in bucket_quality(todo).collect()
-        }
-    else:
-        # the extraction kernel sums each pending turn's quality values
-        # per bucket in its task (extract.bucket_tally); the ledger reads
-        # them after the write, with no scan or aggregate of its own
-        tally = extract.bucket_tally(spark)
-        n_tok, ttr_q4, empty = _turn_quality()
-        values = (n_tok, ttr_q4.cast("long"), empty)
-        todo = todo.select("*", *(v.alias(c) for v, c in zip(values, extract.QUALITY_COLS)))
+    # the extraction kernel sums each pending turn's quality values per
+    # bucket in its task (extract.bucket_tally); the ledger reads them
+    # after the write, with no scan or aggregate of its own
+    tally = extract.bucket_tally(spark)
+    n_tok, ttr_q4, empty = _turn_quality()
+    values = (n_tok, ttr_q4.cast("long"), empty)
+    todo = todo.select("*", *(v.alias(c) for v, c in zip(values, extract.QUALITY_COLS)))
     # the input's bucket column rides along: build_triples clusters the
     # turns by it, so the rows below reach the write already partitioned
     # by bucket (ontology rows in one partition of their own)
@@ -467,9 +457,8 @@ def run_resumable(
                 if not f.startswith((".", "_"))
             )
 
-    if tally is not None:
-        sums = tally.value
-        quality = {b: _ledger_quality(*v[:5]) for b, v in sums.items()}
+    sums = tally.value
+    quality = {b: _ledger_quality(*v[:5]) for b, v in sums.items()}
     os.makedirs(_ledger_path(out_dir), exist_ok=True)
     rows = []
     now = time.time()
@@ -516,9 +505,8 @@ def run_resumable(
     m.started_at = t_start
     m.rows_in = sum(r["rows_in"] for r in rows)
     m.triples = report.triples_out
-    if tally is not None:
-        # every mention the fused kernel finds links to a term
-        m.mentions = m.linked = sum(v[5] for v in sums.values())
+    # every mention the extraction kernel finds links to a term
+    m.mentions = m.linked = sum(v[5] for v in sums.values())
     m.finish().write(out_dir)
     return report
 

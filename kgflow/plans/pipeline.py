@@ -25,15 +25,17 @@ All term endpoints are rewritten through the connected-components
 canonical mapping derived from alt_id same-as links before the final
 global dedup (MERGE-idempotence, C2).
 
-Plan shape (driver-dict ``Lexicon``): ONE exchange clusters the turns
-by conversation, sorted by (conv_id, turn_idx), and one extraction
-kernel (``extract.extract_conversation_triples``) emits the MENTIONS,
-HAS_<NS>, CO_OCCURS_WITH and NEXT_TURN rows distinct per conversation,
-each with its observation count. The subjects of three of those
-families carry the conversation id, so only CO_OCCURS_WITH and the
-ontology rows can repeat across conversations. The resumable form
-(``with_src``) needs no further exchange, the plain form one
-(subj, pred, obj) dedup, and ``build_triples_prov`` one aggregate.
+Plan shape: the lexicon is prepared on the driver (``prepare_lexicon``)
+and ONE exchange clusters the turns by conversation, sorted by
+(conv_id, turn_idx). One extraction kernel
+(``extract.extract_conversation_triples``) links each mention through
+the driver maps and emits the MENTIONS, HAS_<NS>, CO_OCCURS_WITH and
+NEXT_TURN rows distinct per conversation, each with its observation
+count. The subjects of three of those families carry the conversation
+id, so only CO_OCCURS_WITH and the ontology rows can repeat across
+conversations. The resumable form (``with_src``) needs no further
+exchange, the plain form one (subj, pred, obj) dedup, and
+``build_triples_prov`` one aggregate.
 """
 
 from __future__ import annotations
@@ -43,9 +45,17 @@ from dataclasses import dataclass
 from pyspark import Accumulator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from ..operators import canon, extract, link
+from ..operators import extract, link
+
+
+# The largest lexicon ``prepare_lexicon`` accepts, in term rows and in
+# surfaces. Measured on synthetic 1-3-token surfaces (850k surfaces:
+# 296 MB of driver dicts, 363 MB of automaton), a surface costs about
+# 350 B of driver dicts and about 430 B of automaton in every
+# extraction task, so the ceiling is about 0.7 GB on the driver and
+# 0.9 GB per task.
+MAX_SURFACES = 2_000_000
 
 
 @dataclass
@@ -53,19 +63,18 @@ class Lexicon:
     """Prepared lexicon artifacts: built once per lexicon version, reused
     across every batch/stream run (dimension prep is not per-batch work —
     the reference likewise parses ontologies once up front,
-    import_go_obo.py:64-145). ``surface_map``/``canon_map``/``has_preds``
-    are the driver-side dicts (surface → (term_id, namespace), id →
-    canonical id, namespace → ``HAS_<NS>`` predicate) broadcast into the
-    fused extraction stage and, for the ontology rows, into
-    ``link.canonicalize``; ``dim`` is the broadcast-join link dimension
-    of the path without them."""
+    import_go_obo.py:64-145).
+
+    ``surface_map`` (surface → (term_id, namespace)), ``canon_map`` (id
+    → canonical id) and ``has_preds`` (namespace → ``HAS_<NS>``
+    predicate) are driver dicts, broadcast into the extraction kernel
+    and, for the ontology rows, into ``link.canonicalize``.
+    ``surfaces`` is ``surface_map``'s key list: the automaton's input."""
 
     surfaces: list[str]
-    mapping: DataFrame  # (id, canonical_id)
-    dim: DataFrame | None = None  # (surface, term_id, namespace), cached
-    surface_map: dict[str, tuple[str, str]] | None = None
-    canon_map: dict[str, str] | None = None
-    has_preds: dict[str | None, str | None] | None = None
+    surface_map: dict[str, tuple[str, str]]
+    canon_map: dict[str, str]
+    has_preds: dict[str | None, str | None]
 
 
 def _has_pred():
@@ -73,77 +82,44 @@ def _has_pred():
     return F.concat(F.lit("HAS_"), F.upper("namespace")).alias("has_pred")
 
 
-def prepare_lexicon(
-    terms: DataFrame, max_fused_surfaces: int = 2_000_000
-) -> Lexicon:
-    """Build the per-lexicon artifacts once.
+def _too_large(count: str) -> ValueError:
+    return ValueError(
+        f"lexicon has {count}, above MAX_SURFACES={MAX_SURFACES}: a surface "
+        "costs about 350 B of driver dicts and about 430 B of automaton in "
+        "every extraction task"
+    )
 
-    ``max_fused_surfaces`` guards the driver: the fused extraction path
-    materializes the full (surface → term, id → canonical) dicts on the
-    driver and pickle-broadcasts them, which is right at ontology scale
-    (the reference parses whole ontologies driver-side,
-    import_go_obo.py:64-145) but would build multi-GB Python dicts for a
-    10M-surface lexicon.
 
-    At ontology scale the dicts come from one bounded collect of the
-    term rows: ``link.surface_map`` and ``link.canonical_map`` apply the
-    ``surface_dim`` / ``alt_id_edges`` rules on the driver, and
-    ``mapping`` is a local frame of ``canon_map`` — one Spark job, no
-    cache. The same collect upper-cases every namespace in the JVM for
-    the ``HAS_<NS>`` predicates (``has_preds``), so they equal what
-    ``F.upper`` gives. When the term rows or their surfaces exceed the
-    guard, the Spark path builds the cached ``dim`` and the
-    connected-components ``mapping``; above the guard only the surface
-    LIST (the automaton's irreducible broadcast artifact) is collected and
-    ``surface_map``/``canon_map`` stay None, which routes
-    ``_assemble_triples`` to the broadcast-JOIN composition form
-    (link.link_mentions + canon.apply_canonical) — same triples, JVM-side
-    Tungsten-compact broadcast instead of Python dicts.
+def prepare_lexicon(terms: DataFrame) -> Lexicon:
+    """Build the per-lexicon artifacts once, from ONE bounded collect of
+    the term rows (one Spark job, no cache): ``link.surface_map`` and
+    ``link.canonical_map`` apply the surface and same-as rules on the
+    driver, and the same collect upper-cases every namespace in the JVM
+    for the ``HAS_<NS>`` predicates, so they equal what ``F.upper``
+    gives. The reference likewise parses whole ontologies driver-side
+    (import_go_obo.py:64-145).
+
+    Raises ``ValueError`` when the term rows or their surfaces exceed
+    ``MAX_SURFACES``: the driver dicts and every task's automaton grow
+    with the surface count, and no other lexicon path exists.
     """
     rows = (
         terms.select(
             "term_id", "name", "namespace", "synonyms", "alt_ids", "is_obsolete", _has_pred()
         )
-        .limit(max_fused_surfaces + 1)
+        .limit(MAX_SURFACES + 1)
         .collect()
     )
-    if len(rows) <= max_fused_surfaces:
-        surface_map = link.surface_map(rows)
-        if len(surface_map) <= max_fused_surfaces:
-            canon_map = link.canonical_map(rows)
-            mapping = terms.sparkSession.createDataFrame(
-                list(canon_map.items()), "id string, canonical_id string"
-            )
-            return Lexicon(
-                surfaces=list(surface_map),
-                mapping=mapping,
-                surface_map=surface_map,
-                canon_map=canon_map,
-                has_preds={r.namespace: r.has_pred for r in rows},
-            )
-
-    dim = link.surface_dim(terms).cache()
-    mapping = canon.connected_components(link.alt_id_edges(terms)).cache()
-    # one bounded collect serves both the size gate and the driver dicts
-    dim_rows = dim.select("*", _has_pred()).limit(max_fused_surfaces + 1).collect()
-    if len(dim_rows) > max_fused_surfaces:
-        import logging
-
-        logging.getLogger("kgflow").warning(
-            "lexicon has more than %d surfaces: fused driver-dict path "
-            "disabled, using broadcast-join linking",
-            max_fused_surfaces,
-        )
-        surfaces = [r.surface for r in dim.select("surface").collect()]
-        return Lexicon(surfaces=surfaces, dim=dim, mapping=mapping)
-    surfaces = [r.surface for r in dim_rows]
+    if len(rows) > MAX_SURFACES:
+        raise _too_large(f"more than {MAX_SURFACES} term rows")
+    surface_map = link.surface_map(rows)
+    if len(surface_map) > MAX_SURFACES:
+        raise _too_large(f"{len(surface_map)} surfaces")
     return Lexicon(
-        surfaces=surfaces,
-        dim=dim,
-        mapping=mapping,
-        surface_map={r.surface: (r.term_id, r.namespace) for r in dim_rows},
-        canon_map={r.id: r.canonical_id for r in mapping.collect()},
-        has_preds={r.namespace: r.has_pred for r in dim_rows},
+        surfaces=list(surface_map),
+        surface_map=surface_map,
+        canon_map=link.canonical_map(rows),
+        has_preds={r.namespace: r.has_pred for r in rows},
     )
 
 
@@ -159,7 +135,7 @@ def _conversation_triples(
     cluster_by: str = "conv_id",
     tally: Accumulator | None = None,
 ) -> DataFrame:
-    """The fused path's transcript triples, distinct per conversation.
+    """The transcript triples, distinct per conversation.
 
     The turns are clustered once by ``cluster_by`` — ``conv_id`` hash,
     or a column that is a function of it, such as the resumable
@@ -172,89 +148,6 @@ def _conversation_triples(
     clustered = transcripts.repartition(cluster_by).sortWithinPartitions("conv_id", "turn_idx")
     return extract.extract_conversation_triples(
         clustered, lex.surface_map, lex.canon_map, lex.has_preds, tally
-    )
-
-
-def _composed_triples(transcripts: DataFrame, lex: Lexicon) -> DataFrame:
-    """The composition form's transcript triples (for Lexicons built
-    without driver-side maps): broadcast-join linking + canonical
-    rewrite, one row per observation, then counted per (subj, pred,
-    obj, src_conv) so the rows match the fused path's."""
-    mentions = extract.extract_mentions(transcripts, lex.surfaces)
-    linked = link.link_mentions(mentions, lex.dim)
-    linked = canon.apply_canonical(linked, lex.mapping, ["term_id"]).localCheckpoint(
-        eager=True
-    )
-    # one shuffle to assemble per-turn term sets
-    per_turn_sets = linked.groupBy("conv_id", "turn_idx").agg(
-        F.sort_array(F.collect_set("term_id")).alias("ts")
-    )
-
-    turn_uri = F.concat(F.lit("turn:"), "conv_id", F.lit(":"), F.col("turn_idx"))
-    conv_uri = F.concat(F.lit("conv:"), "conv_id")
-    src = F.col("conv_id").alias("src_conv")
-
-    mentions_triples = linked.select(
-        turn_uri.alias("subj"),
-        F.lit("MENTIONS").alias("pred"),
-        F.col("term_id").alias("obj"),
-        src,
-        F.lit("mention").alias("family"),
-    )
-
-    has_ns_triples = linked.select(
-        conv_uri.alias("subj"),
-        F.concat(F.lit("HAS_"), F.upper("namespace")).alias("pred"),
-        F.col("term_id").alias("obj"),
-        src,
-        F.lit("conv_ns").alias("family"),
-    )
-
-    # within-turn co-occurrence. NOT a self-join: per-turn distinct term
-    # sets expand to ordered pairs in-row — per-turn term counts are
-    # small, so the pair expansion is cheap. Pair order from the sorted
-    # array gives least/greatest canonical form for free (J6/C5).
-    pairs = F.flatten(
-        F.transform(
-            F.col("ts"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ts"), i + 2, F.size(F.col("ts"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    co = (
-        per_turn_sets.select("conv_id", F.explode(pairs).alias("p"))
-        .select(
-            F.col("p.a").alias("subj"),
-            F.lit("CO_OCCURS_WITH").alias("pred"),
-            F.col("p.b").alias("obj"),
-            F.col("conv_id").alias("src_conv"),
-            F.lit("cooccur").alias("family"),
-        )
-    )
-
-    # stable-ordering NEXT_TURN edges
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    nxt = (
-        transcripts.select("conv_id", "turn_idx")
-        .withColumn("next_idx", F.lead("turn_idx").over(w))
-        .filter(F.col("next_idx").isNotNull())
-        .select(
-            F.concat(F.lit("turn:"), "conv_id", F.lit(":"), F.col("turn_idx")).alias("subj"),
-            F.lit("NEXT_TURN").alias("pred"),
-            F.concat(F.lit("turn:"), "conv_id", F.lit(":"), F.col("next_idx")).alias("obj"),
-            F.col("conv_id").alias("src_conv"),
-            F.lit("next_turn").alias("family"),
-        )
-    )
-
-    return (
-        mentions_triples.unionByName(has_ns_triples)
-        .unionByName(co)
-        .unionByName(nxt)
-        .groupBy("subj", "pred", "obj", "src_conv", "family")
-        .agg(F.count(F.lit(1)).alias("n_obs"))
     )
 
 
@@ -277,10 +170,9 @@ def _assemble_triples(
 
     The transcript rows come distinct per conversation out of the
     extraction kernel (``_conversation_triples``, which clusters the
-    turns by ``cluster_by``) on the fused path, and from one count
-    aggregate on the composition path. The ontology rows are
-    dimension-scale: they are counted in one partition, which needs no
-    exchange.
+    turns by ``cluster_by``). The ontology rows are dimension-scale:
+    they are rewritten through ``lex.canon_map`` and counted in one
+    partition, which needs no exchange.
     """
     onto = isa_edges.select(
         link.edge_strip("subject_id").alias("subj"),
@@ -289,14 +181,10 @@ def _assemble_triples(
         F.lit(None).cast("string").alias("src_conv"),
         F.lit("ontology").alias("family"),
     )
-    if lex.canon_map is not None:
-        onto = link.canonicalize(onto, lex.canon_map, ["subj", "obj"])
-        rows = _conversation_triples(transcripts, lex, cluster_by, tally)
-    else:
-        onto = canon.apply_canonical(onto, lex.mapping, ["subj", "obj"])
-        rows = _composed_triples(transcripts, lex)
+    rows = _conversation_triples(transcripts, lex, cluster_by, tally)
     onto = (
-        onto.coalesce(1)
+        link.canonicalize(onto, lex.canon_map, ["subj", "obj"])
+        .coalesce(1)
         .groupBy("subj", "pred", "obj", "src_conv", "family")
         .agg(F.count(F.lit(1)).alias("n_obs"))
     )
@@ -333,19 +221,17 @@ def build_triples(
 
     ``tally``: an ``extract.bucket_tally`` accumulator that the
     extraction kernel fills with per-bucket turn-quality and mention
-    sums (the resumable writer's ledger quality). It needs ``with_src``,
-    a driver-map ``lex`` and an input carrying ``bucket`` and
-    ``extract.QUALITY_COLS``;
-    the triples do not change.
+    sums (the resumable writer's ledger quality). It needs ``with_src``
+    and an input carrying ``bucket`` and ``extract.QUALITY_COLS``; the
+    triples do not change.
 
     INPUT CONTRACT: one row per (conv_id, turn_idx) — the transcript
     input hint's shape, and what "per-turn text equality under stable
     (conv_id, turn_idx) ordering" presumes. Duplicate turn rows would
-    make the fused path compute co-occurrence per ROW while the
-    composition fallback merges per TURN (and would also duplicate
-    NEXT_TURN edges in both paths); de-duplicate upstream
-    (``canon.dedup_keep_first``) before calling if the source can emit
-    duplicates.
+    make the kernel pair co-occurring terms per ROW rather than per
+    TURN, and give the duplicated turn a NEXT_TURN edge to itself;
+    de-duplicate upstream (``canon.dedup_keep_first``) before calling
+    if the source can emit duplicates.
     """
     if lex is None:
         lex = prepare_lexicon(terms)
@@ -439,12 +325,14 @@ def build_nodes(triples: DataFrame, terms: DataFrame) -> DataFrame:
     unioned and grouped by id, a group is kept when it holds an
     endpoint, and its term props are exploded back out. The term rows
     go through that id exchange, so nothing is broadcast whatever the
-    term table's size.
+    term table's size. Both endpoints of a triple come out of one
+    projection of its row, so the triples are read (and, over
+    ``checkpoint.read_triples``, deduped) once.
     """
-    endpoints = (
-        triples.select(F.col("subj").alias("id"))
-        .union(triples.select("obj"))
-        .select("id", F.lit(None).cast("map<string,string>").alias("props"), F.lit(1).alias("e"))
+    endpoints = triples.select(
+        F.explode(F.array("subj", "obj")).alias("id"),
+        F.lit(None).cast("map<string,string>").alias("props"),
+        F.lit(1).alias("e"),
     )
     # a null term_id matches no endpoint in a join, the null one included
     term_rows = terms.filter(F.col("term_id").isNotNull()).select(

@@ -173,7 +173,7 @@ def test_update_components_bulk_additions_gated(spark):
     must hold, and the delta-mapping join must NOT be a forced
     broadcast once the delta exceeds the gate — above the threshold
     the plan (with auto-broadcast off) falls back to a shuffle join,
-    exactly like apply_canonical's gate."""
+    as at every ``gated_broadcast`` site."""
     from pyspark.sql import functions as F
 
     base = spark.createDataFrame(

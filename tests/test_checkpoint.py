@@ -1011,12 +1011,11 @@ def test_bucket_tally_merge_replaces(spark):
     assert tally.value == {**update, 7: [1, 1, 10000, 1, 0, 0]}
 
 
-def test_run_metrics_count_mentions(spark, transcripts, lexicon, tmp_path):
+def test_run_metrics_count_mentions(spark, transcripts, lexicon, lexicon_pdf, tmp_path):
     """RunMetrics' mentions and linked come from the extraction kernel:
-    both equal extract_mentions' row count (every fused-path mention
-    links)."""
-    from kgflow.operators import extract
-    from kgflow.plans import pipeline as P
+    both equal the oracle's mention count (``reference_oracle._scan``
+    over the oracle's surface map; every mention links)."""
+    from kgflow import reference_oracle as ro
 
     terms, isa = lexicon
     d = str(tmp_path / "mentions")
@@ -1024,36 +1023,8 @@ def test_run_metrics_count_mentions(spark, transcripts, lexicon, tmp_path):
     (f,) = os.listdir(os.path.join(d, "_metrics"))
     with open(os.path.join(d, "_metrics", f)) as fh:
         m = json.loads(fh.read())
-    n = extract.extract_mentions(transcripts, P.prepare_lexicon(terms).surfaces).count()
+    surfaces = ro._surface_map(lexicon_pdf[0])
+    max_len = max(len(k.split()) for k in surfaces)
+    n = sum(len(ro._scan(t, surfaces, max_len)) for t in transcripts.toPandas().text)
     assert n > 0
     assert m["mentions"] == m["linked"] == n
-
-
-def test_composition_path_ledger_keeps_quality(spark, transcripts, lexicon, tmp_path, monkeypatch):
-    """A Lexicon without driver maps (the composition path) still
-    records bucket_quality's values in the ledger, the same as the
-    fused path's, and writes null — not 0 — for the mention counts it
-    does not measure."""
-    import functools
-
-    from kgflow.plans import pipeline as P
-
-    terms, isa = lexicon
-    fused = str(tmp_path / "fused")
-    cp.run_resumable(spark, transcripts, terms, isa, fused, buckets=4)
-    monkeypatch.setattr(
-        P, "prepare_lexicon", functools.partial(P.prepare_lexicon, max_fused_surfaces=0)
-    )
-    composed = str(tmp_path / "composed")
-    cp.run_resumable(spark, transcripts, terms, isa, composed, buckets=4)
-
-    def quality(d):
-        return {r["partition_id"]: _quality_json(r) for r in cp.ledger_rows(d)}
-
-    assert quality(composed) == quality(fused)
-    assert all(json.loads(q) != [None, None, None] for q in quality(composed).values())
-    (f,) = os.listdir(os.path.join(composed, "_metrics"))
-    with open(os.path.join(composed, "_metrics", f)) as fh:
-        m = json.loads(fh.read())
-    assert m["mentions"] is None and m["linked"] is None
-    assert _triple_set(spark, composed) == _triple_set(spark, fused)

@@ -21,14 +21,19 @@ def test_matcher_longest_match_and_negatives():
 
 
 def test_extract_mentions_offsets(spark):
+    """A mention's offsets are token positions, end exclusive, and the
+    turn-level extractor built on the same matcher finds exactly it."""
     tr = spark.createDataFrame(
         [("c1", 0, "user", "x alpha kinase y", None, None)],
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
-    rows = extract.extract_mentions(tr, ["alpha kinase"]).collect()
+    assert TokenAhoCorasick(["alpha kinase"]).find("x alpha kinase y") == [
+        ("alpha kinase", 1, 3)
+    ]
+    rows = extract.extract_linked_terms_grouped(tr, {"alpha kinase": ("T1", "ns1")}).collect()
     assert len(rows) == 1
     r = rows[0]
-    assert (r.surface, r.start, r.end) == ("alpha kinase", 1, 3)
+    assert (r.conv_id, r.turn_idx, r.term_ids, r.namespaces) == ("c1", 0, ["T1"], ["ns1"])
 
 
 def test_hash_embedding_deterministic_and_normalized(spark):
@@ -379,9 +384,9 @@ def test_redact_pii_patterns_and_order(spark):
 
 def test_grouped_explode_equals_linked_mentions(spark):
     """The grouped fused extractor's correctness claim: exploding
-    arrays_zip(term_ids, namespaces) reproduces extract_mentions plus a
-    surface → term → canonical lookup exactly (multiplicity preserved)
-    — pinned here so the exploded-form baseline cannot silently rot."""
+    arrays_zip(term_ids, namespaces) reproduces the oracle's scan
+    (``reference_oracle._scan``) plus a term → canonical lookup exactly
+    (multiplicity preserved)."""
     tr = spark.createDataFrame(
         [
             ("c1", 0, "user", "alpha kinase then beta then alpha kinase", None, None),
@@ -398,13 +403,10 @@ def test_grouped_explode_equals_linked_mentions(spark):
     }
     cmap = {"T3_ALT": "T3"}
 
-    def link(surface):
-        tid, ns = smap[surface]
-        return cmap.get(tid, tid), ns
-
     flat = sorted(
-        (r.conv_id, r.turn_idx, *link(r.surface))
-        for r in extract.extract_mentions(tr, list(smap)).collect()
+        (r.conv_id, r.turn_idx, cmap.get(tid, tid), ns)
+        for r in tr.collect()
+        for tid, ns in _scan(r.text, smap, 2)
     )
     grouped = extract.extract_linked_terms_grouped(tr, smap, cmap)
     exploded = sorted(
@@ -430,17 +432,15 @@ def test_grouped_explode_equals_linked_mentions(spark):
 
 
 def test_extractors_on_empty_and_null_text(spark):
-    """Every batch of an all-empty/null-text frame emits zero rows: both
-    public extractors must still convert those empty batches to Arrow
-    and return 0 rows under their declared schemas."""
+    """Every batch of an all-empty/null-text frame emits zero rows: the
+    per-turn extractor must still convert those empty batches to Arrow
+    and return 0 rows under its declared schema."""
     tr = spark.createDataFrame(
         [("c1", i, "user", t, None, None) for i, t in enumerate(["", None, "", None])],
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     ).repartition(2)
-    mentions = extract.extract_mentions(tr, ["alpha kinase"])
     grouped = extract.extract_linked_terms_grouped(tr, {"alpha kinase": ("T1", "ns1")})
-    assert mentions.collect() == [] and grouped.collect() == []
-    assert mentions.schema == extract._MENTION_OUT
+    assert grouped.collect() == []
     assert grouped.schema == extract._GROUPED_OUT
 
 
@@ -684,38 +684,6 @@ def test_cap_stats_match_manual(spark):
         mr.n_buckets, mr.n_capped_buckets, mr.n_rows_dropped,
         mr.n_docs_fully_excluded,
     ) == mwant
-
-
-def test_gated_broadcast_plan(spark):
-    """The mapping broadcast is size-gated: under the gate the join is
-    a BroadcastHashJoin; over it no hint is applied, and with auto
-    broadcast disabled the pre-execution plan falls back to a shuffle
-    join (at runtime AQE would still pick broadcast when sizes allow —
-    the point is that nothing FORCES a corpus-scale build side)."""
-    from kgflow.operators import canon
-
-    df = spark.range(200).select(F.col("id").cast("string").alias("x"))
-    mapping = spark.range(50).select(
-        F.col("id").cast("string").alias("id"),
-        F.lit("c").alias("canonical_id"),
-    ).localCheckpoint(eager=True)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        small = canon.apply_canonical(df, mapping, ["x"], broadcast_threshold=1000)
-        big = canon.apply_canonical(df, mapping, ["x"], broadcast_threshold=10)
-        never = canon.apply_canonical(df, mapping, ["x"], broadcast_threshold=None)
-        plan_small = small._jdf.queryExecution().executedPlan().toString()
-        plan_big = big._jdf.queryExecution().executedPlan().toString()
-        plan_never = never._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert "BroadcastHashJoin" in plan_small
-    assert "BroadcastHashJoin" not in plan_big
-    assert "BroadcastHashJoin" not in plan_never
-    # and the rewrite itself is unaffected by the strategy
-    assert small.filter(F.col("x") == "c").count() == 50
-    assert {r.x for r in big.collect()} == {r.x for r in small.collect()}
 
 
 def test_paragraph_dedup_boilerplate(spark):

@@ -2,6 +2,7 @@
 plus the invariants the reference's CQL verification blocks check
 (SURVEY.md §5.2)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from kgflow import reference_oracle as ro
@@ -139,46 +140,32 @@ def test_triples_prov_matches_plain(spark, transcripts, lexicon):
     assert sum(r.n_obs for r in rows) == raw
 
 
-def test_lexicon_size_guard_routes_to_broadcast_join(spark, transcripts, lexicon):
-    """A lexicon whose surface count exceeds max_fused_surfaces must not
-    build driver-side dicts: prepare_lexicon leaves surface_map/canon_map
-    None, which routes _assemble_triples to the link.link_mentions
-    broadcast-join composition — and the triples are identical."""
+def test_lexicon_surface_ceiling(spark, transcripts, lexicon, lexicon_pdf, monkeypatch):
+    """``MAX_SURFACES`` is the lexicon's one ceiling, and it is inclusive:
+    a lexicon of exactly that many surfaces builds the driver maps and
+    gives the oracle's triples; one surface more, or more term rows than
+    the ceiling, raises ``ValueError`` naming the count — no other
+    lexicon path takes over."""
     terms, isa = lexicon
-    lex_fused = pipeline.prepare_lexicon(terms)
-    assert lex_fused.surface_map is not None  # small lexicon: fused path
-    lex_comp = pipeline.prepare_lexicon(terms, max_fused_surfaces=0)
-    assert lex_comp.surface_map is None and lex_comp.canon_map is None
-    fused = {
-        tuple(r)
-        for r in pipeline.build_triples(transcripts, terms, isa, lex=lex_fused).collect()
+    terms_pdf, isa_pdf = lexicon_pdf
+    n = len(ro._surface_map(terms_pdf))
+    assert len(terms_pdf) < n  # the surface count, not the row count, trips
+    monkeypatch.setattr(pipeline, "MAX_SURFACES", n)
+    lex = pipeline.prepare_lexicon(terms)
+    assert len(lex.surface_map) == len(lex.surfaces) == n
+    got = {
+        (r.subj, r.pred, r.obj)
+        for r in pipeline.build_triples(transcripts, terms, isa, lex=lex).collect()
     }
-    comp = {
-        tuple(r)
-        for r in pipeline.build_triples(transcripts, terms, isa, lex=lex_comp).collect()
-    }
-    assert fused == comp
-
-
-def test_lexicon_size_guard_boundary(spark, transcripts, lexicon):
-    """The size gate is inclusive: exactly max_fused_surfaces surfaces
-    still take the fused driver-dict path, one more surface than the
-    limit takes the broadcast-join path; the triples are identical."""
-    from kgflow.operators import link
-
-    terms, isa = lexicon
-    n = link.surface_dim(terms).count()
-    at = pipeline.prepare_lexicon(terms, max_fused_surfaces=n)
-    over = pipeline.prepare_lexicon(terms, max_fused_surfaces=n - 1)
-    assert at.surface_map is not None and at.canon_map is not None
-    assert len(at.surface_map) == len(at.surfaces) == n
-    assert over.surface_map is None and over.canon_map is None
-    assert sorted(over.surfaces) == sorted(at.surfaces)
-    fused, joined = (
-        sorted(tuple(r) for r in pipeline.build_triples(transcripts, terms, isa, lex=lex).collect())
-        for lex in (at, over)
-    )
-    assert fused and fused == joined
+    assert got == ro.expected_triples(transcripts.toPandas(), terms_pdf, isa_pdf)
+    monkeypatch.setattr(pipeline, "MAX_SURFACES", n - 1)
+    with pytest.raises(ValueError, match=f"lexicon has {n} surfaces"):
+        pipeline.prepare_lexicon(terms)
+    # below the term row count the bounded collect itself trips
+    rows = len(terms_pdf)
+    monkeypatch.setattr(pipeline, "MAX_SURFACES", rows - 1)
+    with pytest.raises(ValueError, match=f"lexicon has more than {rows - 1} term rows"):
+        pipeline.prepare_lexicon(terms)
 
 
 def _frames(spark, term_rows, isa_rows, turn_rows=()):
@@ -200,9 +187,9 @@ def _frames(spark, term_rows, isa_rows, turn_rows=()):
 
 def test_surfaces_with_non_space_whitespace(spark):
     """Lexicon surfaces holding a double space, an inner tab or an edge
-    tab: the fused path must not miss a driver-dict lookup, and neither
-    path may let a surface that the oracle can never match consume
-    tokens another surface needs — both paths equal the oracle."""
+    tab: the pipeline must not miss a driver-dict lookup, nor let a
+    surface that the oracle can never match consume tokens another
+    surface needs — the triples equal the oracle's."""
     term_rows = [
         ("T1", "alpha  kinase", "ns1", None, [], [], [], False),
         ("T2", "beta\treceptor", "ns2", None, [], [], [], False),
@@ -218,21 +205,15 @@ def test_surfaces_with_non_space_whitespace(spark):
     (terms, isa, tr), (terms_pdf, isa_pdf, tr_pdf) = _frames(spark, term_rows, isa_rows, turn_rows)
     exp = ro.expected_triples(tr_pdf, terms_pdf, isa_pdf)
     assert {("turn:c1:0", "MENTIONS", "T4"), ("turn:c2:0", "MENTIONS", "T3")} <= exp
-    for max_fused in (2_000_000, 0):
-        lex = pipeline.prepare_lexicon(terms, max_fused_surfaces=max_fused)
-        assert (lex.surface_map is None) == (max_fused == 0)
-        got = {
-            (r.subj, r.pred, r.obj)
-            for r in pipeline.build_triples(tr, terms, isa, lex=lex).collect()
-        }
-        assert ro.precision_recall(got, exp) == (1.0, 1.0), (max_fused, got ^ exp)
+    got = {(r.subj, r.pred, r.obj) for r in pipeline.build_triples(tr, terms, isa).collect()}
+    assert ro.precision_recall(got, exp) == (1.0, 1.0), got ^ exp
 
 
 def test_ids_and_predicates_with_non_space_edge_whitespace(spark):
     """An alt id with a leading space, an is-a subject with a trailing
     tab and a predicate wrapped in a space and a tab: ids and predicates
     are edge-stripped as the oracle's ``str.strip()`` strips them — the
-    canonical id is ``A0``, not ``" A0"`` — on both lexicon paths."""
+    canonical id is ``A0``, not ``" A0"``."""
     term_rows = [
         ("T1", "alpha kinase", "ns1", None, [], [], [" A0"], False),
         ("T2", "beta receptor", "ns2", None, [], [], [], False),
@@ -242,20 +223,13 @@ def test_ids_and_predicates_with_non_space_edge_whitespace(spark):
     (terms, isa, tr), (terms_pdf, isa_pdf, tr_pdf) = _frames(spark, term_rows, isa_rows, turn_rows)
     exp = ro.expected_triples(tr_pdf, terms_pdf, isa_pdf)
     assert {("T2", "IS_A", "A0"), ("A0", "PART_OF", "T2")} <= exp
-    for max_fused in (2_000_000, 0):
-        lex = pipeline.prepare_lexicon(terms, max_fused_surfaces=max_fused)
-        got = {
-            (r.subj, r.pred, r.obj)
-            for r in pipeline.build_triples(tr, terms, isa, lex=lex).collect()
-        }
-        assert got == exp, (max_fused, got ^ exp)
+    got = {(r.subj, r.pred, r.obj) for r in pipeline.build_triples(tr, terms, isa).collect()}
+    assert got == exp, got ^ exp
 
 
 def test_lexicon_paths_match_oracle_maps(spark):
-    """Both ways of building the lexicon — term rows collected and mapped
-    on the driver, and the Spark ``surface_dim`` / connected-components
-    path the size guard falls back to — give the oracle's surface map
-    and canonical map on a lexicon with null names and synonyms, a
+    """The lexicon's driver maps equal the oracle's surface map and
+    canonical map on a lexicon with null names and synonyms, a
     synonym equal to its name, a case collision across namespaces, an
     obsolete term with alt ids, a self alt id, an alt chain across terms
     and alt ids that are padded or only whitespace."""
@@ -273,24 +247,17 @@ def test_lexicon_paths_match_oracle_maps(spark):
     exp_canon = ro._canonical_map(terms_pdf)
     assert exp_surfaces["alpha kinase"] == ("T0", "ns2") and len(exp_surfaces) == 4
     assert exp_canon == {"T1": "A1", "T3": "A3", "T4": "A3", "A4": "A3", "T5": "A3"}
-    # the default guard takes the driver path; a guard of exactly the
-    # surface count, below the term row count, takes the Spark path
-    driver = pipeline.prepare_lexicon(terms)
-    spark_path = pipeline.prepare_lexicon(terms, max_fused_surfaces=len(exp_surfaces))
-    assert driver.dim is None and spark_path.dim is not None
-    for lex in (driver, spark_path):
-        assert lex.surface_map == exp_surfaces
-        # the oracle's union-find lists only ids that are not their own
-        # canonical id
-        assert {k: v for k, v in lex.canon_map.items() if k != v} == exp_canon
-        assert {tuple(r) for r in lex.mapping.collect()} == set(lex.canon_map.items())
+    lex = pipeline.prepare_lexicon(terms)
+    assert lex.surface_map == exp_surfaces
+    # the oracle's union-find lists only ids that are not their own
+    # canonical id
+    assert {k: v for k, v in lex.canon_map.items() if k != v} == exp_canon
 
 
 def test_prepare_lexicon_is_one_job(spark, lexicon, tmp_path):
     """A dimension-scale lexicon is prepared from one bounded collect of
     the term rows: exactly one Spark job, and no cached frame left
-    behind (the connected-components and link-dimension jobs and their
-    caches belong to the over-the-guard path only)."""
+    behind."""
     terms, _ = lexicon
     path = str(tmp_path / "terms")
     terms.coalesce(1).write.parquet(path)
@@ -304,43 +271,36 @@ def test_prepare_lexicon_is_one_job(spark, lexicon, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert lex.surface_map is not None and lex.dim is None
+    assert lex.surface_map
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
     assert _persisted(sc) <= persisted
 
 
 def test_driver_lexicon_ontology_rewrite_has_no_join(spark, transcripts, lexicon):
-    """With a driver Lexicon the ontology rows are canonicalized through
-    the broadcast ``canon_map`` in a narrow Arrow stage: the executed
-    plan has no BroadcastHashJoin. The broadcast-join composition path
-    (``max_fused_surfaces=0``) still rewrites them with a join."""
+    """The ontology rows are canonicalized through the broadcast
+    ``canon_map`` in a narrow Arrow stage: the executed plan has no
+    BroadcastHashJoin."""
     terms, isa = lexicon
-
-    def executed_plan(lex):
-        df = pipeline.build_triples(transcripts, terms, isa, lex=lex)
-        df.collect()
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    assert "BroadcastHashJoin" not in executed_plan(pipeline.prepare_lexicon(terms))
-    assert "BroadcastHashJoin" in executed_plan(pipeline.prepare_lexicon(terms, max_fused_surfaces=0))
+    df = pipeline.build_triples(transcripts, terms, isa)
+    df.collect()
+    assert "BroadcastHashJoin" not in df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_canonicalize_matches_apply_canonical(spark):
     """``link.canonicalize`` through a driver dict equals
-    ``canon.apply_canonical`` through the same mapping frame: mapped ids
-    rewritten, unmapped ids and nulls kept, other columns untouched."""
-    from kgflow.operators import canon, link
+    ``canon_map.get(x, x)`` on the collected rows: mapped ids rewritten,
+    unmapped ids and nulls kept, other columns untouched."""
+    from kgflow.operators import link
 
     df = spark.createDataFrame(
         [("a", "b", 1), ("b", None, 2), (None, "x", 3), ("x", "a", 4)],
         "s string, o string, n int",
     )
     cmap = {"a": "A", "b": "A", "c": "C"}
-    mapping = spark.createDataFrame(list(cmap.items()), "id string, canonical_id string")
     got = link.canonicalize(df, cmap, ["s", "o"])
     assert got.schema == df.schema
-    want = canon.apply_canonical(df, mapping, ["s", "o"])
-    assert sorted(map(tuple, got.collect()), key=str) == sorted(map(tuple, want.collect()), key=str)
+    want = [(cmap.get(s, s), cmap.get(o, o), n) for s, o, n in df.collect()]
+    assert sorted(map(tuple, got.collect()), key=str) == sorted(want, key=str)
     assert sorted(map(tuple, link.canonicalize(df, {}, ["s"]).collect()), key=str) == sorted(
         map(tuple, df.collect()), key=str
     )
@@ -535,6 +495,26 @@ def _node_rows(df):
     )
 
 
+def _final_aggregates(plan, keys) -> int:
+    """Final-mode HashAggregates grouped on exactly ``keys`` in an
+    executed plan, each counted once per execution: adaptive plans and
+    query stages are entered, a reused exchange is not."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _final_aggregates(plan.executedPlan(), keys)
+    if name.endswith("QueryStage"):
+        return _final_aggregates(plan.plan(), keys)
+    own = False
+    # a final-mode aggregate requires its input clustered by its keys
+    if name == "HashAggregate" and plan.requiredChildDistributionExpressions().isDefined():
+        grouping = plan.groupingExpressions()
+        own = [grouping.apply(i).name() for i in range(grouping.size())] == keys
+    children = plan.children()
+    return int(own) + sum(
+        _final_aggregates(children.apply(i), keys) for i in range(children.size())
+    )
+
+
 def test_build_nodes_matches_broadcast_join(spark, transcripts, lexicon, tmp_path):
     """build_nodes' one-aggregate form gives the rows of the distinct
     endpoints left-joined to a broadcast of the term rows — duplicate
@@ -602,5 +582,8 @@ def test_build_nodes_matches_broadcast_join(spark, transcripts, lexicon, tmp_pat
     cp.run_resumable(spark, transcripts, t, isa, d, buckets=4)
     nodes = pipeline.build_nodes(cp.read_triples(spark, d), t)
     assert _node_rows(nodes) == _node_rows(broadcast_join(cp.read_triples(spark, d), t))
-    plan = nodes._jdf.queryExecution().executedPlan().toString()
-    assert "Broadcast" not in plan, plan
+    executed = nodes._jdf.queryExecution().executedPlan()
+    assert "Broadcast" not in executed.toString(), executed.toString()
+    # read_triples' dedup runs once: both endpoints of a triple come out
+    # of one projection of its deduped row
+    assert _final_aggregates(executed, ["subj", "pred", "obj"]) == 1, executed.toString()
