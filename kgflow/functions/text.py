@@ -29,7 +29,17 @@ STOPWORDS = sorted({w for ws in LANG_MARKERS.values() for w in ws})
 
 
 def tokens(col: Column | str) -> Column:
-    """Whitespace tokenization (lower-cased)."""
+    """Whitespace tokenization (lower-cased): ``split(lower(trim(c)),
+    '\\s+')``.
+
+    ``trim`` strips spaces only and the split keeps leading and trailing
+    empty tokens, so blank text is not tokenless: ``""`` and ``" "``
+    give ``[""]`` (1 token) and ``"\\t"`` gives ``["", ""]`` (2 tokens);
+    null gives null. The frozen ``bucket_quality_rollup`` oracle SQL
+    counts tokens by the same rule (DuckDB
+    ``regexp_split_to_array(lower(trim(t)), '\\s+')`` gives the same
+    arrays), so the ledger's and that query's token counts over blank
+    turns must keep it."""
     c = F.col(col) if isinstance(col, str) else col
     return F.split(F.lower(F.trim(c)), r"\s+")
 

@@ -150,6 +150,35 @@ def connected_components(
     edges AND rewrites the edge set onto the label space (pointer
     doubling), giving O(log d) rounds instead of O(d).
     """
+    comp = _components(
+        edges, src, dst, max_iter, driver_threshold, checkpoint_dir, verbose, encode_ids
+    )
+    if isinstance(comp, DataFrame):
+        return comp
+    # preserve the caller's id type — hardcoding string would make
+    # the operator crash below the threshold but work above it
+    id_type = edges.select(src).dtypes[0][1]
+    return edges.sparkSession.createDataFrame(
+        list(comp.items()), f"id {id_type}, canonical_id {id_type}"
+    )
+
+
+def _components(
+    edges: DataFrame,
+    src: str = "id_a",
+    dst: str = "id_b",
+    max_iter: int = 25,
+    driver_threshold: int = 200_000,
+    checkpoint_dir: str | None = None,
+    verbose: bool = False,
+    encode_ids: bool | None = None,
+) -> dict | DataFrame:
+    """:func:`connected_components`' mapping as it comes out of its
+    size gate: a driver dict (id → canonical id, ids on an edge only)
+    when the edge set fits ``driver_threshold``, else the distributed
+    (id, canonical_id) frame. Callers that rewrite a column through the
+    mapping take the dict as it is (``link.canonicalize``) instead of
+    joining a frame built from it."""
     spark = edges.sparkSession
     # No up-front dropDuplicates: duplicate edges change nothing in the
     # min-merge (groupBy-min is duplicate-insensitive) and the first
@@ -158,53 +187,50 @@ def connected_components(
     # operator touches) purely to re-derive what round 1 gets for free.
     # Heavily-duplicated inputs carry their duplicates through exactly
     # one rewrite before collapsing.
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull() & (F.col("a") != F.col("b")))
-        # lazy-materialize ONCE: the size gate's count, the driver-path
-        # collect, and (on the distributed path) the initial labels AND
-        # the edge rewrite all consume `e`. Without a barrier each
-        # consumer re-runs the caller's arbitrary upstream plan — for
-        # dedup_clusters that is the whole LSH + Jaccard-verify
-        # pipeline, measured as a full second execution at sf1.0. The
-        # cache is disk-backed executor storage of the edge set, the
-        # same order as the parquet spills the loop already writes.
-        .localCheckpoint(eager=False)
+    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
+        F.col("a").isNotNull() & F.col("b").isNotNull() & (F.col("a") != F.col("b"))
     )
     # Fast path: same-as graphs derived from ontology lexicons are
     # dimension-scale (the reference parses whole ontologies in the
     # driver, import_go_obo.py:64-145). Below the threshold a driver
     # union-find beats ~10 distributed join rounds of fixed latency;
-    # the iterative path below is the 100 TB route.
-    # preserve the caller's id type — hardcoding string would make
-    # the operator crash below the threshold but work above it
+    # the iterative path below is the 100 TB route. One bounded collect
+    # is both the gate and the driver path's input: raw rows that fit
+    # are used as they are — the union-find is duplicate-insensitive.
+    # Arrow collects a limit in ONE job (each partition's first rows
+    # shuffle to one task), where ``collect`` would scan partitions in
+    # growing rounds of jobs. The edge set is read once here, so it is
+    # not cached: a frame under the threshold persists nothing.
+    rows = e.limit(driver_threshold + 1).toArrow()
+    if rows.num_rows <= driver_threshold:
+        return _union_find_map(zip(rows["a"].to_pylist(), rows["b"].to_pylist()))
+    # lazy-materialize ONCE above the threshold: the gate's count, the
+    # dedup collect, and (on the distributed path) the initial labels
+    # AND the edge rewrite all consume `e`. Without a barrier each
+    # consumer re-runs the caller's arbitrary upstream plan — for
+    # dedup_clusters that is the whole LSH + Jaccard-verify pipeline,
+    # measured as a full second execution at sf1.0. (The bounded
+    # collect above ran it once already; only over-threshold graphs pay
+    # that pass twice.) The cache is disk-backed executor storage of
+    # the edge set, the same order as the parquet spills the loop
+    # already writes.
+    e = e.localCheckpoint(eager=False)
     id_type = dict(e.dtypes)["a"]
-    # Two-stage gate: the raw-row count is free but over-counts under
-    # heavy edge duplication (re-asserted same-as links across ontology
-    # drops), which would push a driver-sized graph onto ~10 distributed
+    # Two-stage gate: the raw-row count over-counts under heavy edge
+    # duplication (re-asserted same-as links across ontology drops),
+    # which would push a driver-sized graph onto ~10 distributed
     # rounds. When the raw count lands in a bounded band above the
     # threshold (≤16×), pay one dedup-count on that bounded set to see
     # whether the DISTINCT edge set fits the driver after all; far above
     # the band the dedup count would be a corpus-scale shuffle spent on
     # a gate that is almost surely over anyway, so it is skipped.
     n_edges = e.limit(16 * driver_threshold + 1).count()
-    if n_edges <= driver_threshold:
-        # raw rows already fit: collect as-is — the union-find is
-        # duplicate-insensitive, so paying a dropDuplicates shuffle
-        # here would be a whole extra job for nothing
-        cmap = _union_find_map(e.collect())
-        return spark.createDataFrame(
-            list(cmap.items()), f"id {id_type}, canonical_id {id_type}"
-        )
     if n_edges <= 16 * driver_threshold:
         # materialized once: the gating count and the collect below
         # would otherwise run the dedup shuffle twice (ADVICE r6)
         e_dist = e.dropDuplicates().localCheckpoint(eager=False)
         if e_dist.limit(driver_threshold + 1).count() <= driver_threshold:
-            cmap = _union_find_map(e_dist.collect())
-            return spark.createDataFrame(
-                list(cmap.items()), f"id {id_type}, canonical_id {id_type}"
-            )
+            return _union_find_map(e_dist.collect())
 
     # ------------------------------------------------------------------
     # Distributed path: min-merge GRAPH CONTRACTION with parquet-spill

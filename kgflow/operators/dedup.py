@@ -12,14 +12,21 @@ Four tiers, cheapest first (run in this order at scale):
 4. **n-gram Jaccard verify** — exact set overlap, run only on the
    candidate pairs the cheap tiers emit.
 
+Every banded tier (MinHash, SimHash, image pHash) pairs candidates in
+one bucket-local kernel, :func:`_bucket_pairs`: the band rows are
+clustered by bucket once and each bucket is paired inside its
+partition — no band self-join, no hot-key aggregate, no broadcast. Its
+hot-bucket cap counts a bucket's rows as it streams them, so a hot
+bucket is dropped after at most ``max_bucket + 1`` buffered rows.
+
 Hot-bucket caps are observable, not silent: ``minhash_cap_stats`` /
 ``simhash_cap_stats`` report, for the exact banding a pairing call
 would use, how many buckets the cap drops, how many band rows those
 buckets held, and how many documents lose EVERY band (and with it all
 candidate generation) — the number that measures recall loss.
 
-Everything is built-in-function only (JVM, codegen); md5 is used as the
-hash family so a DuckDB oracle reproduces every value bit-for-bit.
+md5 is used as the hash family so a DuckDB oracle reproduces every
+value bit-for-bit.
 The same duplicate-group resolution rule as the KG side applies:
 min(doc_id) is the canonical representative (C3, SURVEY.md §2.8).
 """
@@ -159,15 +166,18 @@ def _bands_from_sigs(
 def _drop_hot_buckets(
     bands: DataFrame, bucket_cols: list[str], max_bucket: int
 ) -> DataFrame:
-    """Anti-join away over-limit buckets. Over-limit bucket keys are few
+    """Anti-join away over-limit buckets — the store side of
+    :func:`dedup_delta`, whose band rows are joined against another
+    frame instead of paired among themselves (:func:`_bucket_pairs`
+    caps those inside the bucket). Over-limit bucket keys are few
     (they're the skew!) — aggregate to per-bucket counts, keep the heavy
     ones, and broadcast-anti-join them away. Unlike count-over-window
     this adds no sort, and the map-side partial count collapses hot
     buckets before the shuffle. The bands frame feeds the hot-key
-    aggregate AND the join probe AND the l/r self-pairing — lazy
-    localCheckpoint materializes the signatures once instead of
-    recomputing them per consumer (exchange reuse only saves the
-    shuffle, not the post-shuffle hash projection)."""
+    aggregate AND the join probe — lazy localCheckpoint materializes the
+    signatures once instead of recomputing them per consumer (exchange
+    reuse only saves the shuffle, not the post-shuffle hash
+    projection)."""
     bands = bands.localCheckpoint(eager=False)
     hot = (
         bands.groupBy(*bucket_cols)
@@ -176,6 +186,188 @@ def _drop_hot_buckets(
         .select(*bucket_cols)
     )
     return bands.join(F.broadcast(hot), bucket_cols, "left_anti")
+
+
+def _pair_blocks(n: int, max_pairs: int):
+    """The (i, j) index arrays of every pair i < j < n, in
+    ``np.triu_indices(n, 1)`` order, one block of whole rows at a time:
+    a block holds at most ``max_pairs`` pairs, or one row when that row
+    alone holds more. Memory is O(n + max_pairs) where ``triu_indices``
+    is O(n²)."""
+    import numpy as np
+
+    per_row = np.arange(n - 1, 0, -1)  # row i pairs with i+1 .. n-1
+    ends = np.cumsum(per_row)
+    r, done = 0, 0
+    while r < n - 1:
+        r1 = max(int(np.searchsorted(ends, done + max_pairs, side="right")), r + 1)
+        cnt = per_row[r:r1]
+        i = np.repeat(np.arange(r, r1), cnt)
+        j = np.arange(i.size) - np.repeat(np.cumsum(cnt) - cnt, cnt) + i + 1
+        yield i, j
+        done, r = int(ends[r1 - 1]), r1
+
+
+def _popcount64(x):
+    """Set bits of each value of an int64 array."""
+    import numpy as np
+
+    return np.unpackbits(x.view(np.uint8)).reshape(-1, 64).sum(axis=1)
+
+
+def _bucket_pairs(
+    bands: DataFrame,
+    id_col: str,
+    bucket_cols: list[str],
+    max_bucket: int | None,
+    sig_col: str | None = None,
+    max_hamming: int = 0,
+) -> DataFrame:
+    """(id_a, id_b) — every pair of distinct non-null ids, id_a < id_b,
+    that shares a bucket (``bucket_cols``) of ``bands``, once.
+
+    One exchange clusters the band rows by bucket and sorts them within
+    partitions; one ``mapInArrow`` then streams each bucket across
+    Arrow batches, the way ``extract._extract`` carries a conversation,
+    and emits its pairs with numpy, a block of rows at a time
+    (:func:`_pair_blocks`). A final ``dropDuplicates`` keeps one row
+    per pair that several buckets share.
+
+    * A bucket of more than ``max_bucket`` rows — counted as
+      ``groupBy().count()`` counts them, null ids included — emits
+      nothing (None: no cap). At most ``max_bucket + 1`` of its rows
+      are buffered, so a hot bucket costs bounded worker memory.
+    * A bucket whose key holds a null never pairs, as an equi-join on
+      it never matches.
+    * With ``sig_col`` (an int64 signature) each pair also carries
+      ``hamming`` = bit_count(sig_a xor sig_b), and only pairs with
+      ``hamming <= max_hamming`` are kept — filtered inside the bucket,
+      before the dedup exchange (every copy of a pair carries the same
+      signatures, so the filter commutes with the dedup).
+    """
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    id_type = bands.schema[id_col].dataType
+    fields = [T.StructField("id_a", id_type), T.StructField("id_b", id_type)]
+    value_cols = [id_col]
+    if sig_col is not None:
+        fields.append(T.StructField("hamming", T.IntegerType()))
+        value_cols.append(sig_col)
+    schema = T.StructType(fields)
+    arrow_schema = to_arrow_schema(schema)
+    n_keys = len(bucket_cols)
+    cap = None if max_bucket is None else int(max_bucket)
+    max_h = int(max_hamming)
+    flush_at = 1 << 16  # output pairs per yielded batch, about
+
+    class _Bucket:
+        """The bucket being streamed: its key, its row count and the
+        non-null (id, sig) values of its rows, dropped once the row
+        count passes the cap."""
+
+        def __init__(self, key, null_key):
+            self.key, self.rows, self.chunks = key, 0, None if null_key else []
+
+        def add(self, rows, vals):
+            self.rows += rows
+            if self.chunks is not None:
+                if cap is not None and self.rows > cap:
+                    self.chunks = None
+                else:
+                    self.chunks.append([v.copy() for v in vals])
+
+    def run(batches):
+        out: list[list] = [[] for _ in fields]
+        n_out = 0
+
+        def pairs(vals):
+            nonlocal n_out
+            ids = vals[0]
+            for i, j in _pair_blocks(len(ids), flush_at):
+                a, b = ids[i], ids[j]
+                keep = a != b
+                if sig_col is not None:
+                    h = _popcount64(vals[1][i] ^ vals[1][j])
+                    keep &= h <= max_h
+                a, b = a[keep], b[keep]
+                lt = a < b
+                out[0].append(np.where(lt, a, b))
+                out[1].append(np.where(lt, b, a))
+                if sig_col is not None:
+                    out[2].append(h[keep].astype(np.int32))
+                n_out += len(a)
+
+        def flush():
+            nonlocal out, n_out
+            cols = [
+                pa.array(np.concatenate(c) if c else [], f.type)
+                for c, f in zip(out, arrow_schema)
+            ]
+            out, n_out = [[] for _ in fields], 0
+            return pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
+
+        def close(bucket):
+            if bucket is not None and bucket.chunks:
+                pairs([np.concatenate(c) for c in zip(*bucket.chunks)])
+
+        cur = None
+        for rb in batches:
+            n = rb.num_rows
+            if n == 0:
+                continue
+            keys = rb.columns[:n_keys]
+            vals = rb.columns[n_keys:]
+            valid = pc.is_valid(vals[0])
+            for v in vals[1:]:
+                valid = pc.and_(valid, pc.is_valid(v))
+            cv = np.concatenate([[0], np.cumsum(valid.to_numpy(zero_copy_only=False))])
+            vals = [v.filter(valid).to_numpy(zero_copy_only=False) for v in vals]
+            change = np.zeros(n, dtype=bool)
+            null_row = np.zeros(n, dtype=bool)
+            for k in keys:
+                idx = pc.dictionary_encode(k, null_encoding="encode").indices.to_numpy()
+                change[1:] |= idx[1:] != idx[:-1]
+                null_row |= k.is_null().to_numpy(zero_copy_only=False)
+            starts = np.concatenate([[0], np.flatnonzero(change)])
+            ends = np.append(starts[1:], n)
+
+            def run_vals(r):
+                return [v[cv[starts[r]] : cv[ends[r]]] for v in vals]
+
+            first = 0
+            if cur is not None and cur.key == tuple(k[0].as_py() for k in keys):
+                cur.add(int(ends[0]), run_vals(0))
+                first = 1
+            last = len(starts) - 1
+            if first <= last:
+                close(cur)
+                # buckets that start and end inside this batch
+                inner = np.arange(first, last)
+                lens = ends[inner] - starts[inner]
+                ok = (cv[ends[inner]] - cv[starts[inner]] >= 2) & ~null_row[starts[inner]]
+                if cap is not None:
+                    ok &= lens <= cap
+                for r in inner[ok]:
+                    pairs(run_vals(r))
+                s = int(starts[last])
+                cur = _Bucket(tuple(k[s].as_py() for k in keys), bool(null_row[s]))
+                cur.add(n - s, run_vals(last))
+            if n_out >= flush_at:
+                yield flush()
+        close(cur)
+        yield flush()
+
+    return (
+        bands.select(*bucket_cols, *value_cols)
+        .repartition(*bucket_cols)
+        .sortWithinPartitions(*bucket_cols)
+        .mapInArrow(run, schema=schema)
+        .dropDuplicates(["id_a", "id_b"])
+    )
 
 
 def _cap_stats(
@@ -188,9 +380,13 @@ def _cap_stats(
     whose only agreeing band is hot is silently lost by the cap — this
     makes that loss observable (the repo's no-silent-caps rule).
 
-    Scale shape: the same per-bucket aggregate the cap itself runs, one
-    per-doc aggregate, and two single-row reductions joined on a
-    literal key — no corpus-sized collect."""
+    A bucket is capped by the same rule the pairing kernel applies
+    while it streams the bucket (:func:`_bucket_pairs`): more than
+    ``max_bucket`` rows, counted as ``groupBy().count()`` counts them.
+
+    Scale shape: one per-bucket aggregate, one per-doc aggregate, and
+    two single-row reductions joined on a literal key — no corpus-sized
+    collect."""
     bands = bands.localCheckpoint(eager=False)
     counts = bands.groupBy(*bucket_cols).agg(F.count(F.lit(1)).alias("_bn"))
     bucket_stats = counts.agg(
@@ -246,32 +442,21 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Candidate near-duplicate pairs (id_a < id_b) sharing ≥1 LSH band.
 
-    Scale shape: explode to (band_id, band_key, id), shuffle on the
-    band key (short md5-concat string), self-pair within buckets. Hot
-    buckets (boilerplate text) are the skew risk: ``max_bucket``
-    (default 500 — ON by default; pass None to disable) drops buckets
-    holding more than that many docs *before* pairing, bounding any
-    bucket's pair output at max_bucket²/2 and killing the straggler
-    task a boilerplate group would otherwise create. (Such groups are
+    Scale shape: explode to (band_id, band_key, id), cluster on the
+    band key (short md5-concat string), pair inside each bucket
+    (:func:`_bucket_pairs`). Hot buckets (boilerplate text) are the
+    skew risk: ``max_bucket`` (default 500 — ON by default; pass None
+    to disable) drops buckets holding more than that many docs
+    *before* pairing, bounding any bucket's pair output at
+    max_bucket²/2, its buffered rows at max_bucket + 1, and killing the
+    straggler task a boilerplate group would otherwise create. (Such groups are
     exact or near-exact duplicates — the cheap exact-dedup tier, run
     first, is the right tool for them, not pairwise LSH.) What the cap
     drops is observable via ``minhash_cap_stats`` at the same
     parameters — no silent caps.
     """
     bands = _minhash_bands(docs, id_col, text_col, num_hashes, band_size, shingle_n)
-    if max_bucket is not None:
-        bands = _drop_hot_buckets(bands, ["band_id", "band_key"], max_bucket)
-    l = bands.alias("l")
-    r = bands.alias("r")
-    return (
-        l.join(r, ["band_id", "band_key"])
-        .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    return _bucket_pairs(bands, id_col, ["band_id", "band_key"], max_bucket)
 
 
 def jaccard_verify(
@@ -472,31 +657,13 @@ def signature_near_pairs(
 ) -> DataFrame:
     """(id_a, id_b, hamming ≤ max_hamming) over any integer signature
     frame via pigeonhole banding: candidates form only inside
-    (band_id, band_val) buckets (one equi-join shuffle), hot buckets
-    capped like every LSH tier here, ``bit_count(xor)`` exact verify."""
+    (band_id, band_val) buckets (one clustering shuffle), hot buckets
+    capped like every LSH tier here, ``bit_count(xor)`` exact verify
+    inside the bucket — the same kernel as the MinHash tier
+    (:func:`_bucket_pairs`)."""
     bands = signature_bands(sigs, id_col, sig_col, max_hamming, bits)
-    if max_bucket is not None:
-        bands = _drop_hot_buckets(bands, ["band_id", "band_val"], max_bucket)
-    l = bands.alias("l")
-    r = bands.alias("r")
-    ham = F.bit_count(
-        F.col(f"l.{sig_col}").bitwiseXOR(F.col(f"r.{sig_col}"))
-    )
-    # hamming filter BEFORE the pair dedup: every duplicate row of a
-    # pair carries the same signatures (hence the same hamming), so
-    # filtering first changes nothing in the output while the dedup
-    # exchange ships only surviving (id_a, id_b, hamming) rows — no
-    # signature payload, fewer rows (guide §2.3)
-    return (
-        l.join(r, ["band_id", "band_val"])
-        .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            ham.cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
+    return _bucket_pairs(
+        bands, id_col, ["band_id", "band_val"], max_bucket, sig_col, max_hamming
     )
 
 
@@ -548,7 +715,7 @@ def simhash_near_pairs(
     ``max_hamming + 1`` disjoint bands; two signatures within the
     distance bound must agree exactly on at least one band, so
     candidates form only inside (band_id, band_value) buckets (one
-    equi-join shuffle), then ``bit_count(xor)`` verifies exactly.
+    clustering shuffle), then ``bit_count(xor)`` verifies exactly.
     Returns (id_a, id_b, hamming) with id_a < id_b.
 
     bits=16, max_hamming=2 → 3 bands of 6/5/5 bits (sandbox default);
@@ -558,8 +725,7 @@ def simhash_near_pairs(
     the MinHash tier: bucketed candidates, exact verify, no cartesian —
     including the same hot-bucket cap (``max_bucket``, ON by default):
     template-heavy corpora concentrate thousands of near-identical docs
-    into one band value, and the bucket self-join would go quadratic
-    there; such groups are (near-)exact duplicates — the cheap
+    into one band value, and pairing would go quadratic there; such groups are (near-)exact duplicates — the cheap
     exact-dedup tier's job, not pairwise search. What the cap drops is
     observable via ``simhash_cap_stats`` at the same parameters.
     """
@@ -596,16 +762,21 @@ def dedup_clusters(
 
     Scale shape: the pair tiers are bucketed/candidate-only (see module
     docstring); the component step runs on the PAIR graph (smaller than
-    the corpus — only docs with a verified near-dup appear). The final
-    assignment joins that mapping against the corpus ids — but on
-    template-heavy web corpora the mapping is a large FRACTION of the
-    corpus (every doc with a verified near-dup), so the broadcast hint
-    is size-GATED (``broadcast_threshold`` rows, measured on the
-    already-materialized mapping; None = never hint): under the gate
-    it's a map-side join, above it AQE picks the strategy from runtime
-    sizes — never a forced corpus-fraction broadcast.
+    the corpus — only docs with a verified near-dup appear). When the
+    pair graph fits ``connected_components``' driver threshold, its
+    mapping is a driver dict and ``link.canonicalize`` rewrites the
+    corpus ids through it in one narrow stage — no join, no gate. Above
+    the threshold the mapping is a distributed frame, and the final
+    assignment joins it against the corpus ids — but on template-heavy
+    web corpora the mapping is a large FRACTION of the corpus (every
+    doc with a verified near-dup), so the broadcast hint is size-GATED
+    (``broadcast_threshold`` rows, measured on the already-materialized
+    mapping; None = never hint): under the gate it's a map-side join,
+    above it AQE picks the strategy from runtime sizes — never a forced
+    corpus-fraction broadcast.
     """
-    from .canon import connected_components
+    from .canon import _components
+    from .link import canonicalize
     from .util import gated_broadcast
 
     pairs = minhash_lsh_pairs(
@@ -616,22 +787,29 @@ def dedup_clusters(
         .filter(F.col("inter_size") * 100 >= F.col("union_size") * min_jaccard_pct)
         .select("id_a", "id_b")
     )
-    mapping = connected_components(verified, src="id_a", dst="id_b")
-    m = mapping.select(
-        F.col("id").alias("_mid"), F.col("canonical_id").alias("_rep")
-    )
-    out = (
-        docs.select(id_col)
-        .join(
-            gated_broadcast(m, broadcast_threshold),
-            F.col(id_col) == F.col("_mid"),
-            "left",
+    mapping = _components(verified)
+    if isinstance(mapping, dict):
+        out = canonicalize(
+            docs.select(id_col, F.col(id_col).alias("cluster_rep")),
+            mapping,
+            ["cluster_rep"],
         )
-        .select(
-            F.col(id_col),
-            F.coalesce("_rep", F.col(id_col)).alias("cluster_rep"),
+    else:
+        m = mapping.select(
+            F.col("id").alias("_mid"), F.col("canonical_id").alias("_rep")
         )
-    )
+        out = (
+            docs.select(id_col)
+            .join(
+                gated_broadcast(m, broadcast_threshold),
+                F.col(id_col) == F.col("_mid"),
+                "left",
+            )
+            .select(
+                F.col(id_col),
+                F.coalesce("_rep", F.col(id_col)).alias("cluster_rep"),
+            )
+        )
     return out.withColumn("is_rep", F.col("cluster_rep") == F.col(id_col))
 
 
@@ -686,8 +864,10 @@ def embedding_near_duplicates(
     JVM array folds: the earlier formulation shuffled every vector
     twice and evaluated three O(dim) ``F.aggregate`` lambdas per
     candidate pair (measured 277 s at sf1.0); here the pair loop is
-    numpy over the bucket's vector block, chunked so the pair-product
-    matrix stays bounded. Bit-for-bit equivalence with the JVM
+    numpy over the bucket's vector block, a block of rows' pairs at a
+    time (:func:`_pair_blocks`), so the pair indices and the
+    pair-product matrix stay bounded — O(n) for an n-vector bucket, not
+    O(n²). Bit-for-bit equivalence with the JVM
     formulation is preserved deliberately: dot products and norms fold
     left-to-right in float64 (``np.cumsum`` — sequential by
     definition, unlike pairwise ``np.sum``/``np.dot``) and the 4-dp
@@ -729,7 +909,9 @@ def embedding_near_duplicates(
 
     id_t = embeddings.schema[id_col].dataType.simpleString()
     thr = float(threshold)
-    pair_chunk = 1 << 16  # bounds the (chunk, dim) product matrix
+    # pairs per block: bounds the (block, dim) product matrix and, with
+    # the blocks generated row by row, the candidate indices too
+    pair_chunk = 1 << 16
 
     # prefilter margin: BLAS pairwise-summed dot vs the exact
     # left-to-right fold differ by ~dim·eps (≪1e-10); the rounding
@@ -748,10 +930,8 @@ def embedding_near_duplicates(
         v = np.asarray(list(pdf["_v"]), dtype=np.float64)
         # left-to-right float64 norm fold, exactly the JVM aggregate
         nrm = np.sqrt(np.cumsum(v * v, axis=1)[:, -1])
-        iu, ju = np.triu_indices(n, k=1)
         out_a, out_b, out_c = [], [], []
-        for s in range(0, len(iu), pair_chunk):
-            ii, jj = iu[s : s + pair_chunk], ju[s : s + pair_chunk]
+        for ii, jj in _pair_blocks(n, pair_chunk):
             with np.errstate(divide="ignore", invalid="ignore"):
                 # GEMM prefilter: one BLAS row-wise dot per chunk culls
                 # pairs far below threshold before the exact (and ~10×

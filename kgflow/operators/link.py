@@ -128,10 +128,12 @@ def canonical_map(rows) -> dict[str, str]:
     )
 
 
-def canonicalize(df: DataFrame, canon_map: dict[str, str], cols: list[str]) -> DataFrame:
+def canonicalize(df: DataFrame, canon_map: dict, cols: list[str]) -> DataFrame:
     """``cols`` of ``df`` rewritten through the driver dict ``canon_map``
-    (id → canonical id, as ``canonical_map`` builds it): ids absent from
-    the dict and nulls stay as they are. The dict is
+    (id → canonical id, as ``canonical_map`` or a driver-side
+    ``canon.connected_components`` builds it): ids absent from the dict
+    and nulls stay as they are. Keys and values take each column's
+    Arrow type (string term ids, integer document ids). The dict is
     broadcast once and each Arrow batch is rewritten by an Arrow
     ``index_in``/``take`` lookup in one narrow ``mapInArrow`` stage — no
     join, no size-gate count, no broadcast exchange."""
@@ -141,7 +143,7 @@ def canonicalize(df: DataFrame, canon_map: dict[str, str], cols: list[str]) -> D
     bc = df.sparkSession.sparkContext.broadcast((list(canon_map), list(canon_map.values())))
 
     def run(batches):
-        keys, vals = (pa.array(v, pa.string()) for v in bc.value)
+        keys, vals = (pa.array(v) for v in bc.value)
         for rb in batches:
             arrays = rb.columns
             for c in cols:

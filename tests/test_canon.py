@@ -167,6 +167,32 @@ def test_cc_duplicated_edges_take_driver_path(spark):
     assert got == {("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")}
 
 
+def test_cc_driver_path_is_one_job(spark):
+    """Under the driver threshold one bounded Arrow collect is both the
+    size gate and the union-find's input: exactly one Spark job on a
+    pre-materialized 8-partition edge frame, and no RDD is persisted."""
+    edges = (
+        spark.createDataFrame(
+            [(i, i + 1) for i in range(0, 40, 2)] + [(3, 4)], "id_a long, id_b long"
+        )
+        .repartition(8)
+        .localCheckpoint(eager=True)
+    )
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+    group = "test-cc-driver-path"
+    sc.setJobGroup(group, "connected_components")
+    try:
+        mapping = canon.connected_components(edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert set(sc._jsc.getPersistentRDDs().keySet()) <= before
+    got = dict(tuple(r) for r in mapping.collect())
+    assert got[1] == 0 and got[3] == got[4] == got[5] == 2 and got[7] == 6 and len(got) == 40
+
+
 def test_update_components_bulk_additions_gated(spark):
     """BULK additions: a new-edge batch far larger than the old mapping
     (a backfill replay / full ontology refresh). Scratch-equivalence

@@ -235,6 +235,249 @@ def test_minhash_hot_bucket_cap_bounds_boilerplate(spark):
     assert not any(a < 1000 and b < 1000 for a, b in default_pairs)
 
 
+def _self_join_pairs(bands, bucket_cols, max_bucket, sig_col=None, max_hamming=0):
+    """The band self-join formulation the bucket kernel replaced, as a
+    reference: buckets of more than ``max_bucket`` rows anti-joined
+    away, then every bucket joined with itself on its key."""
+    if max_bucket is not None:
+        hot = (
+            bands.groupBy(*bucket_cols)
+            .agg(F.count(F.lit(1)).alias("_bn"))
+            .filter(F.col("_bn") > max_bucket)
+            .drop("_bn")
+        )
+        bands = bands.join(F.broadcast(hot), bucket_cols, "left_anti")
+    l, r = bands.alias("l"), bands.alias("r")
+    cols = [F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b")]
+    if sig_col is not None:
+        xor = F.col(f"l.{sig_col}").bitwiseXOR(F.col(f"r.{sig_col}"))
+        cols.append(F.bit_count(xor).cast("int").alias("hamming"))
+    out = l.join(r, bucket_cols).filter(F.col("l.doc_id") < F.col("r.doc_id")).select(*cols)
+    if sig_col is not None:
+        out = out.filter(F.col("hamming") <= max_hamming)
+    return {tuple(x) for x in out.collect()}
+
+
+def _with_arrow_batches(spark, sizes, check):
+    """Run ``check()`` once per Arrow batch size, restoring the
+    session's setting afterwards."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    try:
+        for size in sizes:
+            spark.conf.set(key, str(size))
+            check()
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_minhash_bucket_kernel_equals_self_join(spark):
+    """``minhash_lsh_pairs`` pairs inside each bucket exactly as the
+    band self-join did: a bucket of exactly ``max_bucket`` rows pairs,
+    one of ``max_bucket + 1`` does not — null-id rows count toward the
+    size and never pair — duplicate ids never pair with themselves, and
+    buckets straddling Arrow batches of 3 rows are carried whole."""
+    cap = 4
+    same = [
+        "alpha beta gamma delta epsilon zeta",  # 4 docs: exactly the cap
+        "one two three four five six seven",  # 5 docs: cap + 1
+        "red green blue cyan magenta yellow",  # 3 docs + a null id: the cap
+        "north south east west up down left",  # 4 docs + a null id: cap + 1
+    ]
+    rows = (
+        [(1 + i, same[0]) for i in range(4)]
+        + [(11 + i, same[1]) for i in range(5)]
+        + [(21 + i, same[2]) for i in range(3)] + [(None, same[2])]
+        + [(31 + i, same[3]) for i in range(4)] + [(None, same[3])]
+        # duplicate id 41 (two texts) near id 42; too short to shingle
+        + [(41, "the quick brown fox jumps over the lazy dog")]
+        + [(41, "the quick brown fox jumps over the lazy cat")]
+        + [(42, "the quick brown fox jumps over the lazy dog")]
+        + [(43, "too short")]
+        + [(50 + i, " ".join(f"w{(i * 5 + j) % 13}" for j in range(9))) for i in range(20)]
+    )
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    bands = dedup._minhash_bands(docs, "doc_id", "text", 8, 2, 3)
+
+    def check():
+        for mb in (cap, None):
+            got = {tuple(r) for r in dedup.minhash_lsh_pairs(docs, max_bucket=mb).collect()}
+            assert got == _self_join_pairs(bands, ["band_id", "band_key"], mb)
+            assert {(1, 2), (21, 22), (41, 42)} <= got
+            assert ((11, 12) in got) == ((31, 32) in got) == (mb is None)
+            assert not any(a == b for a, b in got)
+
+    _with_arrow_batches(spark, [spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"), 3], check)
+
+
+def test_signature_bucket_kernel_equals_self_join(spark):
+    """``signature_near_pairs`` — the kernel with the hamming verify
+    inside the bucket — equals the band self-join: cap boundary at
+    ``max_bucket`` and ``max_bucket + 1`` rows (null ids counted),
+    duplicate and null ids, null signatures, no cap, and buckets
+    straddling Arrow batches of 3 rows."""
+    import random
+
+    rng = random.Random(11)
+
+    def signed(v):
+        return v - (1 << 64) if v >= 1 << 63 else v
+
+    cap = 3
+    x, y, z = 0x0F0F0F0F0F0F0F0F, 0x00FF00FF00FF00FF, 0x1234567812345678
+    rows = (
+        [(1, 0), (2, 0), (3, 0)]  # every band: exactly the cap
+        + [(11 + i, -1) for i in range(4)]  # every band: cap + 1
+        + [(None, x), (21, x), (22, x ^ 1)]  # null id counted: the cap
+        + [(None, y), (31, y), (32, y), (33, y)]  # null id counted: cap + 1
+        + [(41, z), (41, z), (42, z ^ 2), (43, None)]
+    )
+    for i in range(30):  # random signatures, each with a 1..5-bit variant
+        v = rng.getrandbits(64)
+        rows.append((100 + 2 * i, signed(v)))
+        for b in rng.sample(range(64), 1 + i % 5):
+            v ^= 1 << b
+        rows.append((101 + 2 * i, signed(v)))
+    sigs = spark.createDataFrame(rows, "doc_id long, sig long")
+    bands = dedup.signature_bands(sigs, "doc_id", "sig", 3, 64)
+
+    def check():
+        for mb in (cap, None):
+            got = {
+                tuple(r)
+                for r in dedup.signature_near_pairs(sigs, "doc_id", "sig", 3, 64, mb).collect()
+            }
+            assert got == _self_join_pairs(bands, ["band_id", "band_val"], mb, "sig", 3)
+            assert {(1, 2, 0), (21, 22, 1), (41, 42, 1), (100, 101, 1)} <= got
+            assert ((11, 12, 0) in got) == ((31, 32, 0) in got) == (mb is None)
+
+    _with_arrow_batches(spark, [spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"), 3], check)
+
+
+def test_minhash_pairs_plan_is_bucket_local(spark, tmp_path):
+    """The MinHash tier pairs inside buckets: its plan has no broadcast
+    exchange (no hot-key anti-join, no self-join) and scans no
+    checkpointed frame."""
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(i, f"w{i % 3} common words for every doc here {i % 2}") for i in range(30)],
+        "doc_id long, text string",
+    ).write.parquet(path)
+    pairs = dedup.minhash_lsh_pairs(spark.read.parquet(path), max_bucket=10)
+    pairs.collect()
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" not in plan
+    assert "ExistingRDD" not in plan
+
+
+def test_dedup_clusters_small_graph_caches_nothing(spark):
+    """A pair graph under the CC driver threshold comes back as a driver
+    dict and rewrites the corpus ids in one narrow stage: no RDD is
+    persisted and no plan holds an ``InMemoryRelation``."""
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    docs = spark.createDataFrame(
+        [(10, base), (11, base + " extra1"), (50, "something else entirely said here now")],
+        "doc_id long, text string",
+    )
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+    out = dedup.dedup_clusters(docs)
+    got = {tuple(r) for r in out.collect()}
+    assert got == {(10, 10, True), (11, 10, False), (50, 50, True)}
+    assert set(sc._jsc.getPersistentRDDs().keySet()) <= before
+    assert "InMemoryRelation" not in out._jdf.queryExecution().executedPlan().toString()
+
+
+def test_dedup_clusters_distributed_mapping_joins(spark, monkeypatch):
+    """Above the CC driver threshold the mapping is a distributed frame
+    and the assignment is the size-gated broadcast join: it assigns the
+    same clusters as the driver-map path."""
+    from kgflow.operators import canon
+
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    docs = spark.createDataFrame(
+        [
+            (10, base),
+            (11, base + " extra1"),
+            (12, base + " extra1 extra2 x y"),
+            (50, "completely different text about something else entirely here"),
+        ],
+        "doc_id long, text string",
+    )
+    want = {tuple(r) for r in dedup.dedup_clusters(docs).collect()}
+    components = canon._components
+    monkeypatch.setattr(
+        canon, "_components", lambda edges: components(edges, driver_threshold=0)
+    )
+    out = dedup.dedup_clusters(docs)
+    assert {tuple(r) for r in out.collect()} == want
+    assert want == {(10, 10, True), (11, 10, False), (12, 10, False), (50, 50, True)}
+    assert "BroadcastHashJoin" in out._jdf.queryExecution().executedPlan().toString()
+
+
+def test_tokens_blank_text_matches_oracle_sql(spark):
+    """``tokens`` splits blank text exactly as the frozen oracle SQL
+    does (DuckDB ``regexp_split_to_array(lower(trim(t)), '\\s+')``):
+    null → null, "" and " " → one empty token, a tab → two."""
+    import duckdb
+
+    from kgflow.functions import text as tx
+
+    texts = [None, "", " ", "\t"]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, t string")
+    got = [
+        (r.toks, r.n)
+        for r in df.orderBy("i")
+        .select(tx.tokens("t").alias("toks"), F.size(tx.tokens("t")).alias("n"))
+        .collect()
+    ]
+    with duckdb.connect() as con:
+        sql = (
+            "SELECT regexp_split_to_array(lower(trim(t)), '\\s+') AS toks, "
+            "len(regexp_split_to_array(lower(trim(t)), '\\s+')) AS n "
+            "FROM (SELECT CAST(? AS VARCHAR) AS t)"
+        )
+        want = [con.execute(sql, [t]).fetchone() for t in texts]
+    assert got == want
+    assert [n for _, n in got] == [None, 1, 1, 2]
+
+
+def test_pair_blocks_equal_triu_indices():
+    """Row blocks of pairs concatenate to ``np.triu_indices(n, 1)`` and
+    each block holds at most ``max_pairs`` pairs or one row."""
+    import numpy as np
+
+    for n in [0, 1, 2, 3, 7, 40]:
+        for max_pairs in [1, 5, 16, 10_000]:
+            blocks = list(dedup._pair_blocks(n, max_pairs))
+            assert all(len(i) <= max(max_pairs, n - 1) for i, _ in blocks)
+            i = np.concatenate([b[0] for b in blocks] or [np.zeros(0, int)])
+            j = np.concatenate([b[1] for b in blocks] or [np.zeros(0, int)])
+            ti, tj = np.triu_indices(n, 1)
+            assert np.array_equal(i, ti) and np.array_equal(j, tj)
+
+
+def test_embedding_neardup_bucket_over_one_block(spark):
+    """A bucket whose pairs span several row blocks (~400 vectors, about
+    80k pairs against 65,536 per block) scores exactly the pairs, at
+    exactly the cosines, of the all-pairs JVM verifier."""
+    import random
+
+    rng = random.Random(2)
+    base = [rng.uniform(0.5, 1.0) for _ in range(8)]
+    rows = [(i, [b + rng.uniform(-0.3, 0.3) for b in base]) for i in range(420)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = dedup.embedding_near_duplicates(emb, threshold=0.99, dim=8, n_planes=1)
+    # one bucket (every vector on one side of the plane): its pairs
+    # span two blocks, and bucketing loses no pair of the exact verifier
+    buckets = emb.select(
+        vector.sign_bucket("embedding", vector.hyperplanes(8, 1, 13)).alias("b")
+    ).distinct().count()
+    assert buckets == 1 and 420 * 419 // 2 > 1 << 16
+    want = {tuple(r) for r in dedup.embedding_near_duplicates_exact(emb, threshold=0.99).collect()}
+    assert {tuple(r) for r in got.collect()} == want and want
+
+
 def test_embedding_neardup_dim_mismatch_fails_loudly(spark):
     """ADVICE round-2: a vector whose size differs from the derived dim
     must raise, not silently collapse every row into one LSH bucket."""

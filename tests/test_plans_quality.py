@@ -110,13 +110,15 @@ def test_pack_sequences_single_window_exchange(spark, entrymod):
     assert "RunningWindowFunction" in plan or "Window" in plan
 
 
-def test_dedup_cluster_assign_broadcasts_mapping(spark, entrymod):
-    """The cluster-assignment join against the (dimension-scale) CC
-    mapping must broadcast, never cartesian."""
+def test_dedup_cluster_assign_rewrites_ids_without_join(spark, entrymod):
+    """Under the CC driver threshold the cluster assignment rewrites the
+    corpus ids through the driver mapping in one narrow Arrow stage: no
+    join of any kind (so never a cartesian) and no cached frame."""
     plan = _plan(entrymod.queries()["dedup_cluster_assign"](spark, SF))
-    assert "BroadcastHashJoin" in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    assert "MapInArrow" in plan
+    assert "Join" not in plan
     assert "CartesianProduct" not in plan
+    assert "InMemoryRelation" not in plan
 
 
 def test_doc_parse_prunes_json_fields(spark, entrymod):
