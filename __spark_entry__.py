@@ -25,6 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from kgflow.functions import text as tx  # noqa: E402
 from kgflow.operators import dedup, sessionize, vector  # noqa: E402
+from kgflow.operators.util import spread  # noqa: E402
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -407,11 +408,9 @@ def q_case_decode(spark, sf):
 
 
 def q_json_extract(spark, sf):
-    """§2.7 json: parse the props JSON column (events arrives as one
-    split — spread before the 1M get_json_object parses)."""
-    e = _t(spark, sf, "events").select("event_type", "props").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    """§2.7 json: parse the props JSON column (spread before the 1M
+    get_json_object parses)."""
+    e = spread(_t(spark, sf, "events").select("event_type", "props"))
     return (
         e.select(
             "event_type",
@@ -688,10 +687,8 @@ def q_text_stats(spark, sf):
 
 def q_lang_guess(spark, sf):
     """Heuristic language ID (marker-word argmax) vs the labeled lang;
-    marker scans spread across cores (single-split input)."""
-    d = _t(spark, sf, "documents").select("lang", "text").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    marker scans run on the spread scan (``util.spread``)."""
+    d = spread(_t(spark, sf, "documents").select("lang", "text"))
     return (
         d.select("lang", tx.lang_guess("text").alias("guess"))
         .groupBy("lang", "guess")
@@ -1548,12 +1545,9 @@ def q_ann_brute_topk_np(spark, sf):
 def q_boilerplate_shingles(spark, sf):
     """Boilerplate detection for training-data hygiene: 3-gram shingles
     shared across the most documents (candidates for removal)."""
-    # spread BEFORE shingling: the earlier order computed the shingle
-    # arrays in the single-split scan task and shuffled the exploded
-    # rows; this exchange carries the raw text once (guide §2.3)
-    d = _t(spark, sf, "documents").select("doc_id", "text").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    # spread BEFORE shingling, so raw text crosses an exchange once and
+    # the exploded shingle rows never do (guide §2.3)
+    d = spread(_t(spark, sf, "documents").select("doc_id", "text"))
     sh = d.select(
         "doc_id", F.explode(tx.word_shingles("text", 3)).alias("shingle")
     )
@@ -1602,9 +1596,7 @@ def q_doc_parse_fields(spark, sf):
     104-133), over records synthesized deterministically from documents."""
     from kgflow.operators import docparse
 
-    recs = docparse.synth_json_records(
-        _t(spark, sf, "documents").repartition(spark.sparkContext.defaultParallelism)
-    )
+    recs = docparse.synth_json_records(spread(_t(spark, sf, "documents")))
     return docparse.parse_records(recs).select("pmid", "title", "abstract")
 
 
@@ -1614,12 +1606,10 @@ def q_doc_parse_triples(spark, sf):
     (PubMedAbstractEmbedding.py:205-215)."""
     from kgflow.operators import docparse
 
-    # spread the single-split scan BEFORE the record synthesis: the
-    # to_json struct construction (interpreted HOF transforms) and the
-    # pruned per-field parses then both run at full parallelism
-    recs = docparse.synth_json_records(
-        _t(spark, sf, "documents").repartition(spark.sparkContext.defaultParallelism)
-    )
+    # spread BEFORE the record synthesis: the to_json struct
+    # construction (interpreted HOF transforms) and the pruned
+    # per-field parses then both run at full parallelism
+    recs = docparse.synth_json_records(spread(_t(spark, sf, "documents")))
     return docparse.doc_edge_triples(docparse.parse_records(recs))
 
 
@@ -1631,9 +1621,7 @@ def q_doc_parse_xml(spark, sf):
     cross-checked against one construction inverse."""
     from kgflow.operators import docparse
 
-    recs = docparse.synth_xml_records(
-        _t(spark, sf, "documents").repartition(spark.sparkContext.defaultParallelism)
-    )
+    recs = docparse.synth_xml_records(spread(_t(spark, sf, "documents")))
     return docparse.parse_xml_records(recs).select("pmid", "title", "abstract")
 
 
@@ -1760,9 +1748,7 @@ def q_contamination_probe_ac(spark, sf):
     dimension."""
     import pandas as pd
 
-    d = _t(spark, sf, "documents").select("text").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = spread(_t(spark, sf, "documents").select("text"))
     probes = list(_PROBES)
     bc = spark.sparkContext.broadcast(probes)
 
@@ -1866,12 +1852,10 @@ def q_pii_redact(spark, sf):
     (tx.redact_pii — lookaround-free patterns so Java regex and RE2
     agree bit-for-bit). PII-bearing text is constructed
     deterministically from the customer table so the patterns are
-    actually exercised; pure codegen, spread across cores by one
-    round-robin exchange (the single-split customer scan would
-    otherwise run the 4 chained regexes on one task)."""
-    c = _t(spark, sf, "customer").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    actually exercised; pure codegen over the spread customer scan
+    (``util.spread``: a single-split scan would otherwise run the 4
+    chained regexes on one task)."""
+    c = spread(_t(spark, sf, "customer"))
     ck = F.col("c_custkey").cast("string")
     synth_text = F.concat(
         F.lit("contact "), F.col("c_name"),
@@ -2487,16 +2471,11 @@ def q_quality_gate(spark, sf):
     per-doc sorted array of FAILED rule names plus the derived keep
     flag — filtering and the drop-audit report are the same narrow
     scan (no silent drops). The operator itself stays shuffle-free;
-    the query spreads the single-split input once so the rule
+    the query spreads its input (``util.spread``) so the rule
     expressions run on all cores."""
     from kgflow.operators import quality
 
-    return quality.quality_gate(
-        _t(spark, sf, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        ),
-        _QG_RULES,
-    )
+    return quality.quality_gate(spread(_t(spark, sf, "documents")), _QG_RULES)
 
 
 def q_lm_quality_score(spark, sf):
@@ -2537,9 +2516,7 @@ def q_data_prep_pipeline(spark, sf):
     from kgflow.functions import text as tx
     from kgflow.operators import quality, sample
 
-    docs = _t(spark, sf, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = spread(_t(spark, sf, "documents"))
     kept = docs.filter(quality.quality_keep(_QG_RULES)).select(
         "doc_id", "source", tx.token_count("text").cast("long").alias("n_tokens")
     )
@@ -2970,10 +2947,8 @@ def q_data_prep_pipeline_dedup(spark, sf):
     dup = docs.filter(F.col("doc_id") % 5 == 0).withColumn(
         "doc_id", F.col("doc_id") + 100000
     )
-    # spread the single-split scan before the gate/fingerprint passes
-    corpus = docs.unionByName(dup).repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    # spread before the gate/fingerprint passes
+    corpus = spread(docs.unionByName(dup))
     # the gate is a pure row predicate (quality.quality_keep): one
     # narrow filter replaces the gate-frame → id join, projecting
     # straight to the narrow decision columns the dedup/mix/pack need
@@ -3058,14 +3033,12 @@ def q_audio_frame_energy(spark, sf):
     full frames, exact-integer sum-of-squares + peak — the
     VAD/clipping signals an audio curation gate filters on. Payload
     synthesis uses the byte-identical vectorized builder
-    (synth_pcm_payload_py) behind a round-robin repartition — the JVM
-    per-sample hex expression in the single-split scan task was the
+    (synth_pcm_payload_py) behind ``util.spread`` — the JVM
+    per-sample hex expression in a single-split scan task was the
     query's dominant cost."""
     from kgflow.operators import multimodal
 
-    d = _t(spark, sf, "documents").select("doc_id").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = spread(_t(spark, sf, "documents").select("doc_id"))
     return multimodal.audio_frame_energy(multimodal.synth_pcm_payload_py(d))
 
 

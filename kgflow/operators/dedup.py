@@ -37,6 +37,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text as tx
+from .util import gated_broadcast, spread
+
+# Per-task MinHash md5 memo bound (entries): one entry holds the K hex
+# digests of one shingle, ~850 bytes at K=8, so the memo stays under
+# ~56 MB per task; past the bound it is cleared and refills.
+_MD5_MEMO_ENTRIES = 65_536
+
+# Hot-bucket key sets (``_drop_hot_buckets``, ``_cap_stats``) are
+# broadcast only up to this many keys; above it AQE picks the join from
+# runtime sizes. Their size grows with the data (band rows / max_bucket).
+_HOT_BROADCAST_ROWS = 100_000
 
 
 def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -63,54 +74,25 @@ def minhash_signatures(
     md5-hex strings compare lexicographically, which is a valid uniform
     min-hash family and is portable across engines.
 
-    Shape: repartition the RAW docs (small rows — the exchange carries
-    text once, not the ~3× larger shingle arrays the earlier
-    formulation shuffled; small parquet inputs arrive as one split and
-    this op is CPU-bound, so spread it — guide §2.3), then ONE
-    Arrow-batched pass tokenizes, shingles, and min-hashes each doc.
-    The per-shingle K md5 digests are cached per worker process, so a
-    boilerplate shingle repeated across thousands of docs is hashed
-    once (the JVM expression form re-hashed it every time — K
-    interpreted md5+concat lambdas per shingle occurrence). hex-string
-    min in Python is byte-lexicographic, identical to the JVM/DuckDB
-    string compare on lowercase hex.
+    Shape: spread the RAW docs (small rows — the exchange carries text
+    once, not the ~3× larger shingle arrays the earlier formulation
+    shuffled), then ONE Arrow-batched pass min-hashes each doc with
+    :func:`_minhash_signer`. Docs too short to shingle emit no row
+    (parity: ``word_shingles`` → [] → filtered).
     """
     import pandas as pd
 
-    spark = docs.sparkSession
     id_t = docs.schema[id_col].dataType.simpleString()
     k = int(num_hashes)
-    n = int(shingle_n)
+    sign = _minhash_signer(k, int(shingle_n))
 
     def run(batches):
-        import hashlib
-
-        cache: dict[str, tuple] = {}
-        prefixes = [f"{i}|".encode("utf-8") for i in range(k)]
-
-        def digests(sh: str) -> tuple:
-            d = cache.get(sh)
-            if d is None:
-                raw = sh.encode("utf-8")
-                d = tuple(
-                    hashlib.md5(p + raw).hexdigest() for p in prefixes
-                )
-                cache[sh] = d
-            return d
-
         for pdf in batches:
             rows: list[tuple] = []
             for did, text in zip(pdf[id_col], pdf[text_col]):
-                toks = tx.py_tokens(text)
-                if toks is None or len(toks) < n:
-                    continue  # parity: word_shingles → [] → filtered
-                shingles = {
-                    " ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)
-                }
-                sigs = [digests(s) for s in shingles]
-                rows.append(
-                    (did, *[min(d[i] for d in sigs) for i in range(k)])
-                )
+                sig = sign(text)
+                if sig is not None:
+                    rows.append((did, *sig))
             yield pd.DataFrame(
                 rows, columns=[id_col, *[f"sig_{i}" for i in range(k)]]
             )
@@ -118,11 +100,52 @@ def minhash_signatures(
     schema = ", ".join(
         [f"{id_col} {id_t}", *[f"sig_{i} string" for i in range(k)]]
     )
-    return (
-        docs.select(id_col, text_col)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .mapInPandas(run, schema=schema)
-    )
+    return spread(docs.select(id_col, text_col)).mapInPandas(run, schema=schema)
+
+
+def _minhash_signer(k: int, n: int):
+    """``sign(text)`` → the K MinHash components of ``text``'s word
+    n-gram set (sig_i = min over shingles of md5(i‖shingle) as lowercase
+    hex), or None when the text is null or has fewer than ``n`` tokens.
+
+    Built on the driver and shipped with the Arrow pass: each task
+    unpickles its own empty memo of per-shingle K-digest tuples, so a
+    boilerplate shingle repeated across thousands of docs is hashed
+    once (the JVM expression form re-hashed it per occurrence — K
+    interpreted md5+concat lambdas each). The memo is a pure cache,
+    bounded at ``_MD5_MEMO_ENTRIES`` (read here, on the driver): once
+    full it is cleared, so unique-shingle-heavy input cannot grow a
+    worker without limit and the signatures never change. hex-string
+    min in Python is byte-lexicographic, identical to the JVM/DuckDB
+    string compare on lowercase hex.
+    """
+    import hashlib
+
+    cap = _MD5_MEMO_ENTRIES
+    memo: dict[str, tuple] = {}
+    prefixes = [f"{i}|".encode("utf-8") for i in range(k)]
+
+    def digests(sh: str) -> tuple:
+        d = memo.get(sh)
+        if d is None:
+            if len(memo) >= cap:
+                memo.clear()
+            raw = sh.encode("utf-8")
+            d = tuple(hashlib.md5(p + raw).hexdigest() for p in prefixes)
+            memo[sh] = d
+        return d
+
+    def sign(text) -> list[str] | None:
+        toks = tx.py_tokens(text)
+        if toks is None or len(toks) < n:
+            return None
+        sigs = [
+            digests(s)
+            for s in {" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)}
+        ]
+        return [min(d[i] for d in sigs) for i in range(k)]
+
+    return sign
 
 
 def _minhash_bands(
@@ -169,9 +192,11 @@ def _drop_hot_buckets(
     """Anti-join away over-limit buckets — the store side of
     :func:`dedup_delta`, whose band rows are joined against another
     frame instead of paired among themselves (:func:`_bucket_pairs`
-    caps those inside the bucket). Over-limit bucket keys are few
-    (they're the skew!) — aggregate to per-bucket counts, keep the heavy
-    ones, and broadcast-anti-join them away. Unlike count-over-window
+    caps those inside the bucket). Over-limit bucket keys are usually
+    few (they're the skew!) — aggregate to per-bucket counts, keep the
+    heavy ones, and anti-join them away, broadcast while the key set is
+    under ``_HOT_BROADCAST_ROWS`` (``gated_broadcast``: it can hold up
+    to band rows / ``max_bucket`` keys). Unlike count-over-window
     this adds no sort, and the map-side partial count collapses hot
     buckets before the shuffle. The bands frame feeds the hot-key
     aggregate AND the join probe — lazy localCheckpoint materializes the
@@ -185,7 +210,9 @@ def _drop_hot_buckets(
         .filter(F.col("_bn") > max_bucket)
         .select(*bucket_cols)
     )
-    return bands.join(F.broadcast(hot), bucket_cols, "left_anti")
+    return bands.join(
+        gated_broadcast(hot, _HOT_BROADCAST_ROWS), bucket_cols, "left_anti"
+    )
 
 
 def _pair_blocks(n: int, max_pairs: int):
@@ -386,7 +413,8 @@ def _cap_stats(
 
     Scale shape: one per-bucket aggregate, one per-doc aggregate, and
     two single-row reductions joined on a literal key — no corpus-sized
-    collect."""
+    collect. The hot-key side is broadcast only under
+    ``_HOT_BROADCAST_ROWS`` keys (``gated_broadcast``)."""
     bands = bands.localCheckpoint(eager=False)
     counts = bands.groupBy(*bucket_cols).agg(F.count(F.lit(1)).alias("_bn"))
     bucket_stats = counts.agg(
@@ -400,7 +428,7 @@ def _cap_stats(
         "_hot", F.lit(1)
     )
     per_doc = (
-        bands.join(F.broadcast(hot), bucket_cols, "left")
+        bands.join(gated_broadcast(hot, _HOT_BROADCAST_ROWS), bucket_cols, "left")
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("_nb"),
@@ -472,17 +500,12 @@ def jaccard_verify(
     cross-engine value comparison fragile; callers derive jaccard =
     inter/union.
     """
-    spark = docs.sparkSession
-    # repartition BEFORE the shingle projection: the exchange then
-    # carries raw text (not the ~3× larger shingle arrays) and the
-    # CPU-heavy shingling runs at full parallelism rather than inside
-    # the single-split parquet scan task (guide §2.3 — shuffle fewer
-    # bytes; the earlier order shuffled post-shingle rows)
-    sh = (
+    # spread BEFORE the shingle projection: an exchange then carries
+    # raw text (not the ~3× larger shingle arrays) and the CPU-heavy
+    # shingling runs after it (guide §2.3 — shuffle fewer bytes)
+    sh = spread(
         docs.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_tx"))
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("_id", tx.word_shingles("_tx", shingle_n).alias("_sh"))
-    )
+    ).select("_id", tx.word_shingles("_tx", shingle_n).alias("_sh"))
     a = sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a"))
     b = sh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b"))
     return (
@@ -512,15 +535,12 @@ def _simhash_map(docs: DataFrame, id_col: str, text_col: str, bits: int) -> Data
     hit (md5 masks are cached per worker — Zipf vocabularies hit the
     cache almost always) and each document one small vectorized
     reduction (guide §4.2: batch native code beats row-at-a-time JVM
-    expressions). One round-robin repartition spreads the single-split
-    parquet scan across cores (a testdata artifact — at scale the
-    input arrives in many splits and the exchange coalesces away);
-    everything after it is a narrow map with zero row amplification.
+    expressions). The input is spread (``util.spread``) before the
+    map; everything after it is narrow with zero row amplification.
     """
     import numpy as np
     import pandas as pd
 
-    spark = docs.sparkSession
     id_t = docs.schema[id_col].dataType.simpleString()
     nbits = int(bits)
 
@@ -575,10 +595,8 @@ def _simhash_map(docs: DataFrame, id_col: str, text_col: str, bits: int) -> Data
                 }
             )
 
-    return (
-        docs.select(id_col, text_col)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .mapInPandas(run, schema=f"{id_col} {id_t}, simhash long")
+    return spread(docs.select(id_col, text_col)).mapInPandas(
+        run, schema=f"{id_col} {id_t}, simhash long"
     )
 
 
@@ -777,7 +795,6 @@ def dedup_clusters(
     """
     from .canon import _components
     from .link import canonicalize
-    from .util import gated_broadcast
 
     pairs = minhash_lsh_pairs(
         docs, id_col, text_col, num_hashes, band_size, shingle_n, max_bucket
@@ -1068,47 +1085,25 @@ def build_dedup_store(
     exact tier only. Append :func:`dedup_delta`'s unique survivors'
     rows after each batch to keep the store current.
 
-    One Arrow-batched pass computes fingerprint AND signatures per doc
-    (each reads the same text), replacing the earlier fingerprint-scan
-    ⋈ signature-scan join — one id shuffle and one corpus scan fewer.
-    ``py_fingerprint`` is the verified byte twin of ``tx.fingerprint``.
+    One Arrow-batched pass computes fingerprint AND signatures
+    (:func:`_minhash_signer`) per doc — each reads the same text —
+    replacing the earlier fingerprint-scan ⋈ signature-scan join: one
+    id shuffle and one corpus scan fewer. ``py_fingerprint`` is the
+    verified byte twin of ``tx.fingerprint``.
     """
     import pandas as pd
 
-    spark = docs.sparkSession
     id_t = docs.schema[id_col].dataType.simpleString()
     k = int(num_hashes)
-    n = int(shingle_n)
+    sign = _minhash_signer(k, int(shingle_n))
+    nulls = [None] * k
 
     def run(batches):
-        import hashlib
-
-        cache: dict[str, tuple] = {}
-        prefixes = [f"{i}|".encode("utf-8") for i in range(k)]
-
-        def digests(sh: str) -> tuple:
-            d = cache.get(sh)
-            if d is None:
-                raw = sh.encode("utf-8")
-                d = tuple(hashlib.md5(p + raw).hexdigest() for p in prefixes)
-                cache[sh] = d
-            return d
-
         for pdf in batches:
-            rows: list[tuple] = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                fp = tx.py_fingerprint(text)
-                toks = tx.py_tokens(text)
-                if toks is None or len(toks) < n:
-                    rows.append((did, fp, *([None] * k)))
-                    continue
-                shingles = {
-                    " ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)
-                }
-                sigs = [digests(s) for s in shingles]
-                rows.append(
-                    (did, fp, *[min(d[i] for d in sigs) for i in range(k)])
-                )
+            rows = [
+                (did, tx.py_fingerprint(text), *(sign(text) or nulls))
+                for did, text in zip(pdf[id_col], pdf[text_col])
+            ]
             yield pd.DataFrame(
                 rows,
                 columns=[id_col, "fingerprint", *[f"sig_{i}" for i in range(k)]],
@@ -1118,11 +1113,7 @@ def build_dedup_store(
         [f"{id_col} {id_t}", "fingerprint string",
          *[f"sig_{i} string" for i in range(k)]]
     )
-    return (
-        docs.select(id_col, text_col)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .mapInPandas(run, schema=schema)
-    )
+    return spread(docs.select(id_col, text_col)).mapInPandas(run, schema=schema)
 
 
 def dedup_delta(

@@ -487,14 +487,12 @@ def tfidf_top_terms(
     of the df table back onto the (doc, term) counts, then the top-k
     window — rank ≤ k is a WindowGroupLimit, so each partition keeps
     at most k rows per document before the window shuffle."""
-    from .util import gated_broadcast
+    from .util import gated_broadcast, spread
     from ..functions import text as tx
 
-    # spread the single-split scan before the tokenize/explode
-    toks = (
-        docs.select(F.col(id_col), F.col(text_col))
-        .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-        .select(F.col(id_col), F.explode(tx.tokens(text_col)).alias("tok"))
+    # spread before the tokenize/explode
+    toks = spread(docs.select(F.col(id_col), F.col(text_col))).select(
+        F.col(id_col), F.explode(tx.tokens(text_col)).alias("tok")
     )
     tf = toks.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("tf"))
     dft = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import text as tx
+from .util import spread
 
 
 def repetition_stats(
@@ -50,11 +51,9 @@ def repetition_stats(
     ng))`` tie-break (largest gram among equal counts) exactly. The
     earlier explode → groupBy(doc, gram) → groupBy(doc) formulation
     shuffled one row per (doc, gram) occurrence class twice (~42 s at
-    sf1.0); this is a narrow map behind one round-robin exchange that
-    spreads the single-split parquet scan across cores (guide §2.4:
-    remove shuffles outright; §2.2 input-split starvation).
+    sf1.0); this is a narrow map over the spread scan (``util.spread``;
+    guide §2.4: remove shuffles outright; §2.2 input-split starvation).
     """
-    spark = docs.sparkSession
     zero = F.lit(0).cast("long")
     one = F.lit(1).cast("long")
     init = F.struct(
@@ -77,8 +76,7 @@ def repetition_stats(
         )
 
     return (
-        docs.select(F.col(id_col), F.col(text_col).alias("_tx"))
-        .repartition(spark.sparkContext.defaultParallelism)
+        spread(docs.select(F.col(id_col), F.col(text_col).alias("_tx")))
         # explode(array(fold)) puts the fold inside a Generate node —
         # a CollapseProject barrier. A plain aliased column would be
         # inlined by the optimizer into every downstream reference
@@ -235,18 +233,15 @@ def unigram_logprob_score(
     """
     from .util import gated_broadcast
 
-    sc = docs.sparkSession.sparkContext
-    toks = (
-        docs.select(F.col(id_col), F.col(text_col))
-        .repartition(sc.defaultParallelism)
-        .select(F.col(id_col), F.explode(tx.tokens(text_col)).alias("tok"))
+    toks = spread(docs.select(F.col(id_col), F.col(text_col))).select(
+        F.col(id_col), F.explode(tx.tokens(text_col)).alias("tok")
     )
     fit_toks = (
         toks
         if fit_docs is None
-        else fit_docs.select(F.col(text_col))
-        .repartition(sc.defaultParallelism)
-        .select(F.explode(tx.tokens(text_col)).alias("tok"))
+        else spread(fit_docs.select(F.col(text_col))).select(
+            F.explode(tx.tokens(text_col)).alias("tok")
+        )
     )
     freq = fit_toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
     # 1-row total; broadcast so the log-prob table is one narrow pass
@@ -281,12 +276,9 @@ def _context_stream(
     re-tokenize), and one explode yields the stream. Zero shuffle;
     the array never outlives the projection."""
     cols = [F.col(id_col)] if id_col else []
-    # spread the single-split scan BEFORE the CPU-heavy tokenize +
-    # indexed-transform projection (raw text crosses the exchange once)
-    d = d.select(*cols, F.col(text_col)).repartition(
-        d.sparkSession.sparkContext.defaultParallelism
-    )
-    base = d.select(*cols, tx.tokens(text_col).alias("_t"))
+    # spread BEFORE the CPU-heavy tokenize + indexed-transform
+    # projection (raw text crosses an exchange once)
+    base = spread(d.select(*cols, F.col(text_col))).select(*cols, tx.tokens(text_col).alias("_t"))
     trips = F.transform(
         F.col("_t"),
         lambda x, i: F.struct(
@@ -485,10 +477,8 @@ def bigram_logprob_score(
             F.slice(t, 1, F.size(t) - 1),
         )
         cols = [F.col(id_col)] if with_id else []
-        # spread the single-split scan before the tokenize/zip/explode
-        d = d.select(*cols, F.col(text_col)).repartition(
-            d.sparkSession.sparkContext.defaultParallelism
-        )
+        # spread before the tokenize/zip/explode
+        d = spread(d.select(*cols, F.col(text_col)))
         return d.select(*cols, F.explode(F.arrays_zip(prevs, t)).alias("p")).select(
             *([id_col] if with_id else []),
             F.col("p")["0"].alias("prev"),

@@ -2,8 +2,41 @@
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# plan nodes whose execution starts jobs, or whose partition count is
+# only known after running stages: shuffles and broadcasts, the adaptive
+# wrapper that holds them, and subqueries (cached sub-plans render inline)
+_WIDE = re.compile(r"Exchange|AdaptiveSparkPlan|Subquery")
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """``df`` spread across the cluster's cores before CPU-heavy narrow
+    work: ``df`` itself when its plan is narrow and already has at least
+    ``defaultParallelism`` partitions, else one round-robin
+    ``repartition(defaultParallelism)``.
+
+    Why the rule: small parquet inputs (every testdata table, the
+    benchmark inputs) arrive as ONE split, so without an exchange the
+    tokenize/shingle/hash work after the scan runs on one task. But an
+    explicit ``repartition(n)`` is an exchange AQE never removes, so on
+    input that is already split it would shuffle the raw rows for
+    nothing. The threshold is the repartition's own target, so an input
+    with fewer partitions than ``defaultParallelism`` keeps the exchange.
+
+    The decision starts no Spark job. A shuffled, broadcast, subquery or
+    streaming input is always spread: its partition count is only known
+    by running its stages (AQE coalesces them), so it is never read.
+    """
+    n = df.sparkSession.sparkContext.defaultParallelism
+    if not df.isStreaming:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        if not _WIDE.search(plan) and df.rdd.getNumPartitions() >= n:
+            return df
+    return df.repartition(n)
 
 
 def gated_broadcast(

@@ -23,6 +23,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .util import spread
+
 
 def dot(a: Column | str, b: Column | str) -> Column:
     a = F.col(a) if isinstance(a, str) else a
@@ -61,23 +63,20 @@ def brute_force_topk(
     rounded to 4 dp, ties broken by neighbor id (deterministic, unlike
     the reference's index order).
     """
-    spark = corpus.sparkSession
     # per-row norms are hoisted OUT of the per-pair expression: with
     # |Q| queries each corpus row previously re-folded its own norm |Q|
     # times (and the query's once per pair); precomputing both leaves
     # one dot-fold per pair. norm(a)*norm(b) is a commutative IEEE
-    # multiply, so score doubles are bit-identical. The round-robin
-    # repartition spreads the single-split scan (testdata artifact).
+    # multiply, so score doubles are bit-identical. The corpus is
+    # spread before the norms.
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         F.col(vec_col).alias("_qv"),
         norm(F.col(vec_col)).alias("_qn"),
     )
-    c = (
+    c = spread(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
-        .repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("_cn", norm(F.col("_cv")))
-    )
+    ).withColumn("_cn", norm(F.col("_cv")))
     # corpus stays partition-local; the (small) query set is broadcast
     scored = (
         c.crossJoin(F.broadcast(q))
@@ -143,20 +142,17 @@ def lsh_bucket_topk(
     """Approximate top-k: score only corpus rows in the query's sign-LSH
     bucket. At scale: corpus bucketing is a narrow map; the join shuffles
     on the short bucket key instead of broadcasting the whole corpus."""
-    spark = corpus.sparkSession
     planes = hyperplanes(dim, n_planes, seed)
-    # spread the single-split scan before the CPU-heavy plane dots,
-    # and hoist per-row norms out of the per-pair score (see
-    # brute_force_topk — bit-identical, commutative multiply)
-    c = (
+    # spread before the CPU-heavy plane dots, and hoist per-row norms
+    # out of the per-pair score (see brute_force_topk — bit-identical,
+    # commutative multiply)
+    c = spread(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select(
-            "neighbor_id",
-            "_cv",
-            sign_bucket(F.col("_cv"), planes).alias("_bucket"),
-            norm(F.col("_cv")).alias("_cn"),
-        )
+    ).select(
+        "neighbor_id",
+        "_cv",
+        sign_bucket(F.col("_cv"), planes).alias("_bucket"),
+        norm(F.col("_cv")).alias("_cn"),
     )
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
@@ -343,11 +339,9 @@ def ivf_topk(
     probes its ``nprobe`` nearest clusters and scores only inside them.
     At 100 TB the assignment is precomputed/partitioned-by-cluster, so a
     probe touches nprobe/k of the data."""
-    # spread the single-split scan before the per-centroid distance
-    # folds (k interpreted O(dim) aggregates per row)
-    corpus = corpus.repartition(
-        corpus.sparkSession.sparkContext.defaultParallelism
-    )
+    # spread before the per-centroid distance folds (k interpreted
+    # O(dim) aggregates per row)
+    corpus = spread(corpus)
     c_assigned = assign_clusters(corpus, centroids, vec_col).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"), "cluster"
     )

@@ -1411,3 +1411,183 @@ def test_dedup_delta_store_maintenance(spark):
     )
     (r2,) = dedup.dedup_delta(batch2, store2).collect()
     assert (r2.status, r2.dup_of) == ("exact", 20)
+
+
+def _spread_plan(df) -> str:
+    """Physical plan of ``df`` as planned, before any execution."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_spread_single_split_scan_gets_one_round_robin(spark, tmp_path):
+    """A one-split scan is spread by exactly today's exchange:
+    one ``RoundRobinPartitioning(defaultParallelism)``."""
+    from kgflow.operators.util import spread
+
+    path = str(tmp_path / "one")
+    spark.range(0, 40).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert df.rdd.getNumPartitions() == 1
+    n = spark.sparkContext.defaultParallelism
+    plan = _spread_plan(spread(df))
+    assert plan.count("RoundRobinPartitioning") == 1
+    assert f"RoundRobinPartitioning({n})" in plan
+
+
+def test_spread_leaves_split_narrow_input_alone(spark, tmp_path):
+    """A narrow frame that already has defaultParallelism partitions —
+    a multi-file scan, a union, a range — comes back unchanged, with
+    no exchange."""
+    from kgflow.operators.util import spread
+
+    n = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "many")
+    spark.range(0, 400).repartition(n).write.parquet(path)
+    scan = spark.read.parquet(path)
+    assert scan.rdd.getNumPartitions() >= n
+    for df in (
+        scan,
+        scan.filter("id % 2 = 0").select("id"),
+        spark.read.parquet(path).unionByName(spark.range(0, 5)),
+        spark.range(0, 100, 1, n),
+    ):
+        out = spread(df)
+        assert out is df
+        assert "Exchange" not in _spread_plan(out)
+
+
+def test_spread_decision_starts_no_job(spark, tmp_path):
+    """The decision reads the input's plan, never its data: a shuffled
+    (groupBy) frame is spread as before without running its stages,
+    and no input starts a Spark job inside ``spread``."""
+    from kgflow.operators.util import spread
+
+    sc = spark.sparkContext
+    path = str(tmp_path / "one")
+    spark.range(0, 40).coalesce(1).write.parquet(path)
+    scan = spark.read.parquet(path)
+    grouped = scan.groupBy((F.col("id") % 3).alias("k")).count()
+    group = "spread-decision"
+    sc.setJobGroup(group, "spread decision probe")
+    try:
+        outs = [
+            spread(grouped),
+            spread(scan),
+            spread(scan.unionByName(scan)),
+            spread(spark.createDataFrame([(i,) for i in range(20)], "x int")),
+        ]
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert jobs == []
+    assert _spread_plan(outs[0]).count("RoundRobinPartitioning") == 1
+
+
+def test_no_inline_default_parallelism_repartition():
+    """The scan-spread rule lives in ``util.spread`` alone: no other
+    ``repartition(...)`` call in ``kgflow/`` or ``__spark_entry__.py``
+    takes a ``defaultParallelism`` argument."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    files = [root / "__spark_entry__.py", *sorted((root / "kgflow").rglob("*.py"))]
+    hits = []
+    for f in files:
+        if f.name == "util.py" and f.parent.name == "operators":
+            continue
+        for node in ast.walk(ast.parse(f.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "repartition"
+                and any("defaultParallelism" in ast.unparse(a) for a in node.args)
+            ):
+                hits.append(f"{f.relative_to(root)}:{node.lineno}")
+    assert hits == []
+
+
+def _py_minhash(text, k=8, n=3):
+    """Reference MinHash components of one text: md5(i‖shingle) min
+    over its distinct word n-grams, None when it cannot shingle."""
+    import hashlib
+
+    from kgflow.functions import text as tx
+
+    toks = tx.py_tokens(text)
+    if toks is None or len(toks) < n:
+        return None
+    sh = {" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)}
+    return [
+        min(hashlib.md5(f"{i}|{s}".encode()).hexdigest() for s in sh)
+        for i in range(k)
+    ]
+
+
+def test_minhash_memo_bound_keeps_signatures(spark, monkeypatch):
+    """With the per-task md5 memo capped at 2 entries (cleared over and
+    over inside every task), ``minhash_signatures`` and
+    ``build_dedup_store`` still equal the reference signatures: the
+    memo is a pure cache."""
+    from kgflow.functions import text as tx
+
+    monkeypatch.setattr(dedup, "_MD5_MEMO_ENTRIES", 2)
+    words = ["aa", "bb", "cc", "dd", "ee", "ff", "gg"]
+    rows = [
+        (i, " ".join(words[(i + j * (1 + i % 3)) % 7] for j in range(4 + i % 6)))
+        for i in range(60)
+    ] + [(100, "too short"), (101, None), (102, "aa bb cc aa bb cc")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string").repartition(2)
+    want = {d: _py_minhash(t) for d, t in rows}
+
+    got = {
+        r.doc_id: [r[f"sig_{i}"] for i in range(8)]
+        for r in dedup.minhash_signatures(docs).collect()
+    }
+    assert got == {d: s for d, s in want.items() if s is not None}
+
+    store = {
+        r.doc_id: (r.fingerprint, [r[f"sig_{i}"] for i in range(8)])
+        for r in dedup.build_dedup_store(docs).collect()
+    }
+    assert store == {
+        d: (tx.py_fingerprint(t), want[d] or [None] * 8) for d, t in rows
+    }
+
+
+def test_hot_bucket_sides_are_size_gated(spark, monkeypatch):
+    """``_cap_stats`` and ``dedup_delta``'s store side broadcast their
+    hot-bucket keys only under ``_HOT_BROADCAST_ROWS``: above it the
+    executed plans hold no BroadcastExchange, and the results do not
+    change."""
+    boiler = "subscribe to our newsletter for updates and offers every day"
+    rows = [(i, boiler) for i in range(6)] + [
+        (10 + i, f"doc {i} with its own words number {i} here") for i in range(6)
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    new = spark.createDataFrame(
+        [(50, "doc 1 with its own words number 1 here"), (51, boiler)],
+        "doc_id long, text string",
+    )
+
+    def run():
+        stats = dedup.minhash_cap_stats(docs, max_bucket=3)
+        delta = dedup.dedup_delta(new, dedup.build_dedup_store(docs), max_bucket=3)
+        return stats, delta
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        results = []
+        for gate in (100_000, 0):
+            monkeypatch.setattr(dedup, "_HOT_BROADCAST_ROWS", gate)
+            stats, delta = run()
+            out = (tuple(stats.first()), sorted(tuple(r) for r in delta.collect()))
+            plans = [_spread_plan(stats), _spread_plan(delta)]
+            results.append((out, ["BroadcastExchange" in p for p in plans]))
+    finally:
+        spark.conf.set(key, prev)
+    (under, under_bc), (above, above_bc) = results
+    assert under_bc == [True, True]  # the hint applies under the gate
+    assert above_bc == [False, False]
+    assert under == above and under[0][1] > 0  # a bucket is hot
