@@ -196,13 +196,14 @@ def _drop_hot_buckets(
     few (they're the skew!) — aggregate to per-bucket counts, keep the
     heavy ones, and anti-join them away, broadcast while the key set is
     under ``_HOT_BROADCAST_ROWS`` (``gated_broadcast``: it can hold up
-    to band rows / ``max_bucket`` keys). Unlike count-over-window
-    this adds no sort, and the map-side partial count collapses hot
-    buckets before the shuffle. The bands frame feeds the hot-key
-    aggregate AND the join probe — lazy localCheckpoint materializes the
-    signatures once instead of recomputing them per consumer (exchange
-    reuse only saves the shuffle, not the post-shuffle hash
-    projection)."""
+    to band rows / ``max_bucket`` keys; the gate caches ``hot``, so its
+    bounded count and the join share one run of the aggregate). Unlike
+    count-over-window this adds no sort, and the map-side partial count
+    collapses hot buckets before the shuffle. The bands frame feeds the
+    hot-key aggregate AND the join probe — lazy localCheckpoint
+    materializes the signatures once instead of recomputing them per
+    consumer (exchange reuse only saves the shuffle, not the
+    post-shuffle hash projection)."""
     bands = bands.localCheckpoint(eager=False)
     hot = (
         bands.groupBy(*bucket_cols)

@@ -2,41 +2,29 @@
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# plan nodes whose execution starts jobs, or whose partition count is
-# only known after running stages: shuffles and broadcasts, the adaptive
-# wrapper that holds them, and subqueries (cached sub-plans render inline)
-_WIDE = re.compile(r"Exchange|AdaptiveSparkPlan|Subquery")
-
 
 def spread(df: DataFrame) -> DataFrame:
-    """``df`` spread across the cluster's cores before CPU-heavy narrow
-    work: ``df`` itself when its plan is narrow and already has at least
-    ``defaultParallelism`` partitions, else one round-robin
-    ``repartition(defaultParallelism)``.
+    """``df`` spread across the cluster's cores by one round-robin
+    ``repartition(defaultParallelism)``, before CPU-heavy narrow work.
 
-    Why the rule: small parquet inputs (every testdata table, the
-    benchmark inputs) arrive as ONE split, so without an exchange the
-    tokenize/shingle/hash work after the scan runs on one task. But an
-    explicit ``repartition(n)`` is an exchange AQE never removes, so on
-    input that is already split it would shuffle the raw rows for
-    nothing. The threshold is the repartition's own target, so an input
-    with fewer partitions than ``defaultParallelism`` keeps the exchange.
+    Why: small parquet inputs (every testdata table, the benchmark
+    inputs) arrive as ONE split, so without an exchange the
+    tokenize/shingle/hash work after the scan runs on one task.
 
-    The decision starts no Spark job. A shuffled, broadcast, subquery or
-    streaming input is always spread: its partition count is only known
-    by running its stages (AQE coalesces them), so it is never read.
+    The exchange is unconditional. An explicit ``repartition(n)`` is an
+    exchange AQE never removes, so input that is already spread pays one
+    shuffle of its rows here; skipping it is left until a benchmark
+    workload reads multi-split input and shows the gain. The input's
+    split count is no safe signal to skip on: it counts byte-range file
+    splits, not splits that hold rows (a parquet row group is read only
+    by the split holding its midpoint, so one large single-row-group file
+    plans many splits of which one carries every row), and a shuffled
+    input's count is only known by running its stages.
     """
-    n = df.sparkSession.sparkContext.defaultParallelism
-    if not df.isStreaming:
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        if not _WIDE.search(plan) and df.rdd.getNumPartitions() >= n:
-            return df
-    return df.repartition(n)
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def gated_broadcast(

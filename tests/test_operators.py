@@ -1433,53 +1433,32 @@ def test_spread_single_split_scan_gets_one_round_robin(spark, tmp_path):
     assert f"RoundRobinPartitioning({n})" in plan
 
 
-def test_spread_leaves_split_narrow_input_alone(spark, tmp_path):
-    """A narrow frame that already has defaultParallelism partitions —
-    a multi-file scan, a union, a range — comes back unchanged, with
-    no exchange."""
+def test_spread_large_single_row_group_file_gets_round_robin(spark, tmp_path):
+    """One single-row-group parquet file of 4 * defaultParallelism MB
+    plans many byte-range splits, but only the split holding the row
+    group's midpoint reads rows: the scan is spread all the same."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from kgflow.operators.util import spread
 
     n = spark.sparkContext.defaultParallelism
-    path = str(tmp_path / "many")
-    spark.range(0, 400).repartition(n).write.parquet(path)
+    rows = 4 * n * 16  # 64 KB of random bytes per row: 4 * n MB
+    table = pa.table({"b": [os.urandom(65_536) for _ in range(rows)]})
+    path = str(tmp_path / "one_group.parquet")
+    pq.write_table(table, path, row_group_size=rows, use_dictionary=False)
+    assert pq.ParquetFile(path).num_row_groups == 1
+    assert os.path.getsize(path) >= 4 * n * 2**20
+
     scan = spark.read.parquet(path)
-    assert scan.rdd.getNumPartitions() >= n
-    for df in (
-        scan,
-        scan.filter("id % 2 = 0").select("id"),
-        spark.read.parquet(path).unionByName(spark.range(0, 5)),
-        spark.range(0, 100, 1, n),
-    ):
-        out = spread(df)
-        assert out is df
-        assert "Exchange" not in _spread_plan(out)
-
-
-def test_spread_decision_starts_no_job(spark, tmp_path):
-    """The decision reads the input's plan, never its data: a shuffled
-    (groupBy) frame is spread as before without running its stages,
-    and no input starts a Spark job inside ``spread``."""
-    from kgflow.operators.util import spread
-
-    sc = spark.sparkContext
-    path = str(tmp_path / "one")
-    spark.range(0, 40).coalesce(1).write.parquet(path)
-    scan = spark.read.parquet(path)
-    grouped = scan.groupBy((F.col("id") % 3).alias("k")).count()
-    group = "spread-decision"
-    sc.setJobGroup(group, "spread decision probe")
-    try:
-        outs = [
-            spread(grouped),
-            spread(scan),
-            spread(scan.unionByName(scan)),
-            spread(spark.createDataFrame([(i,) for i in range(20)], "x int")),
-        ]
-        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc._jsc.clearJobGroup()
-    assert jobs == []
-    assert _spread_plan(outs[0]).count("RoundRobinPartitioning") == 1
+    assert scan.rdd.getNumPartitions() >= n  # splits, not row-bearing ones
+    sizes = scan.rdd.mapPartitions(lambda it: [sum(1 for _ in it)]).collect()
+    assert sorted(sizes)[-2:] == [0, rows]
+    plan = _spread_plan(spread(scan))
+    assert plan.count("RoundRobinPartitioning") == 1
+    assert f"RoundRobinPartitioning({n})" in plan
 
 
 def test_no_inline_default_parallelism_repartition():

@@ -258,19 +258,3 @@ def test_quality_curriculum_sample_no_global_sort(spark, entrymod):
     plan = _plan(entrymod.queries()["quality_curriculum_sample"](spark, SF))
     assert "Window" not in plan
     assert "CartesianProduct" not in plan
-
-
-def test_spread_queries_skip_round_robin_on_split_input(spark, entrymod, tmp_path):
-    """On documents already read as >= defaultParallelism splits the
-    scan-spread adds no exchange: quality_gate and repetition_stats
-    plan zero RoundRobinPartitioning (the single-split guards above
-    keep today's one)."""
-    src = spark.read.parquet(f"{SF}/documents.parquet")
-    n = spark.sparkContext.defaultParallelism
-    src.repartition(max(n, 8)).write.parquet(str(tmp_path / "documents.parquet"))
-    split = spark.read.parquet(str(tmp_path / "documents.parquet"))
-    assert split.rdd.getNumPartitions() >= n
-    for name in ("quality_gate", "repetition_stats"):
-        df = entrymod.queries()[name](spark, str(tmp_path))
-        assert _plan(df).count("RoundRobinPartitioning") == 0, name
-        assert df.count() > 0
