@@ -25,6 +25,10 @@ would use, how many buckets the cap drops, how many band rows those
 buckets held, and how many documents lose EVERY band (and with it all
 candidate generation) — the number that measures recall loss.
 
+Those reports and :func:`dedup_delta`'s store side size a bucket with
+one window over the bucket columns, the oracle SQL's ``COUNT(*) OVER
+(PARTITION BY band_id, key)``: no hot-key join, broadcast or checkpoint.
+
 md5 is used as the hash family so a DuckDB oracle reproduces every
 value bit-for-bit.
 The same duplicate-group resolution rule as the KG side applies:
@@ -34,20 +38,16 @@ min(doc_id) is the canonical representative (C3, SURVEY.md §2.8).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions import text as tx
 from .util import gated_broadcast, spread
 
-# Per-task MinHash md5 memo bound (entries): one entry holds the K hex
-# digests of one shingle, ~850 bytes at K=8, so the memo stays under
-# ~56 MB per task; past the bound it is cleared and refills.
+# Per-task md5 memo bound (entries), MinHash and SimHash: a MinHash entry
+# holds the K hex digests of one shingle, ~850 bytes at K=8, so a memo
+# stays under ~56 MB per task; past the bound it is cleared and refills.
 _MD5_MEMO_ENTRIES = 65_536
-
-# Hot-bucket key sets (``_drop_hot_buckets``, ``_cap_stats``) are
-# broadcast only up to this many keys; above it AQE picks the join from
-# runtime sizes. Their size grows with the data (band rows / max_bucket).
-_HOT_BROADCAST_ROWS = 100_000
 
 
 def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -184,36 +184,6 @@ def _bands_from_sigs(
             )
         ).alias("band"),
     ).select(id_col, "band.band_id", "band.band_key")
-
-
-def _drop_hot_buckets(
-    bands: DataFrame, bucket_cols: list[str], max_bucket: int
-) -> DataFrame:
-    """Anti-join away over-limit buckets — the store side of
-    :func:`dedup_delta`, whose band rows are joined against another
-    frame instead of paired among themselves (:func:`_bucket_pairs`
-    caps those inside the bucket). Over-limit bucket keys are usually
-    few (they're the skew!) — aggregate to per-bucket counts, keep the
-    heavy ones, and anti-join them away, broadcast while the key set is
-    under ``_HOT_BROADCAST_ROWS`` (``gated_broadcast``: it can hold up
-    to band rows / ``max_bucket`` keys; the gate caches ``hot``, so its
-    bounded count and the join share one run of the aggregate). Unlike
-    count-over-window this adds no sort, and the map-side partial count
-    collapses hot buckets before the shuffle. The bands frame feeds the
-    hot-key aggregate AND the join probe — lazy localCheckpoint
-    materializes the signatures once instead of recomputing them per
-    consumer (exchange reuse only saves the shuffle, not the
-    post-shuffle hash projection)."""
-    bands = bands.localCheckpoint(eager=False)
-    hot = (
-        bands.groupBy(*bucket_cols)
-        .agg(F.count(F.lit(1)).alias("_bn"))
-        .filter(F.col("_bn") > max_bucket)
-        .select(*bucket_cols)
-    )
-    return bands.join(
-        gated_broadcast(hot, _HOT_BROADCAST_ROWS), bucket_cols, "left_anti"
-    )
 
 
 def _pair_blocks(n: int, max_pairs: int):
@@ -412,36 +382,41 @@ def _cap_stats(
     while it streams the bucket (:func:`_bucket_pairs`): more than
     ``max_bucket`` rows, counted as ``groupBy().count()`` counts them.
 
-    Scale shape: one per-bucket aggregate, one per-doc aggregate, and
-    two single-row reductions joined on a literal key — no corpus-sized
-    collect. The hot-key side is broadcast only under
-    ``_HOT_BROADCAST_ROWS`` keys (``gated_broadcast``)."""
-    bands = bands.localCheckpoint(eager=False)
-    counts = bands.groupBy(*bucket_cols).agg(F.count(F.lit(1)).alias("_bn"))
-    bucket_stats = counts.agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.sum((F.col("_bn") > max_bucket).cast("long")).alias("n_capped_buckets"),
-        F.sum(F.when(F.col("_bn") > max_bucket, F.col("_bn")).otherwise(F.lit(0)))
-        .cast("long")
-        .alias("n_rows_dropped"),
-    ).withColumn("_k", F.lit(1))
-    hot = counts.filter(F.col("_bn") > max_bucket).select(*bucket_cols).withColumn(
-        "_hot", F.lit(1)
-    )
+    Scale shape: one window over the bucket columns gives each band row
+    its bucket's size ``_bn`` (the oracle's ``COUNT(*) OVER (PARTITION
+    BY band_id, key)``) and flags one row per bucket, so the bucket
+    tallies ride the per-doc aggregate and one global aggregate
+    finishes. No join, broadcast or checkpoint; a hot bucket sits in
+    the window's spillable buffer."""
+    # one ordering for both frames keeps them in one Window operator
+    w = Window.partitionBy(*bucket_cols).orderBy(id_col)
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    hot = F.col("_bn") > max_bucket
+    first_hot = F.col("_first") & hot
     per_doc = (
-        bands.join(gated_broadcast(hot, _HOT_BROADCAST_ROWS), bucket_cols, "left")
+        bands.select(
+            id_col,
+            F.count(F.lit(1)).over(whole).alias("_bn"),
+            (F.row_number().over(w) == 1).alias("_first"),
+        )
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("_nb"),
-            F.sum(F.coalesce("_hot", F.lit(0))).alias("_nh"),
+            F.sum(hot.cast("long")).alias("_nh"),
+            F.sum(F.col("_first").cast("long")).alias("_b"),
+            F.sum(first_hot.cast("long")).alias("_cb"),
+            F.sum(F.when(first_hot, F.col("_bn")).otherwise(F.lit(0))).alias("_rd"),
         )
     )
-    doc_stats = per_doc.agg(
+    return per_doc.agg(
+        # a COUNT, as the oracle's: 0 on empty bands, where SUMs are null
+        F.coalesce(F.sum("_b"), F.lit(0)).cast("long").alias("n_buckets"),
+        F.sum("_cb").cast("long").alias("n_capped_buckets"),
+        F.sum("_rd").cast("long").alias("n_rows_dropped"),
         F.sum((F.col("_nb") == F.col("_nh")).cast("long")).alias(
             "n_docs_fully_excluded"
-        )
-    ).withColumn("_k", F.lit(1))
-    return bucket_stats.join(doc_stats, "_k").drop("_k")
+        ),
+    )
 
 
 def minhash_cap_stats(
@@ -455,7 +430,7 @@ def minhash_cap_stats(
 ) -> DataFrame:
     """Hot-bucket drop report for ``minhash_lsh_pairs`` at the same
     parameters — run it beside the pairing call to see what the cap
-    costs (see ``_cap_stats``)."""
+    costs (see ``_cap_stats``: one window, the oracle's ``COUNT(*) OVER``)."""
     bands = _minhash_bands(docs, id_col, text_col, num_hashes, band_size, shingle_n)
     return _cap_stats(bands, ["band_id", "band_key"], id_col, max_bucket)
 
@@ -533,8 +508,9 @@ def _simhash_map(docs: DataFrame, id_col: str, text_col: str, bits: int) -> Data
     Why Python: the JVM version evaluated ``bits``·|tokens| interpreted
     higher-order-function lambdas per document (~23 s for 50k docs at
     64 bits, single scan task); here each distinct token costs one dict
-    hit (md5 masks are cached per worker — Zipf vocabularies hit the
-    cache almost always) and each document one small vectorized
+    hit (md5 masks are cached per task, cleared at ``_MD5_MEMO_ENTRIES``
+    as :func:`_minhash_signer` bounds its memo) and each document one
+    small vectorized
     reduction (guide §4.2: batch native code beats row-at-a-time JVM
     expressions). The input is spread (``util.spread``) before the
     map; everything after it is narrow with zero row amplification.
@@ -544,6 +520,7 @@ def _simhash_map(docs: DataFrame, id_col: str, text_col: str, bits: int) -> Data
 
     id_t = docs.schema[id_col].dataType.simpleString()
     nbits = int(bits)
+    cap = _MD5_MEMO_ENTRIES
 
     def run(batches):
         import hashlib
@@ -554,6 +531,8 @@ def _simhash_map(docs: DataFrame, id_col: str, text_col: str, bits: int) -> Data
         def mask(tok: str):
             b = cache.get(tok)
             if b is None:
+                if len(cache) >= cap:
+                    cache.clear()
                 d = hashlib.md5(tok.encode("utf-8")).digest()
                 byts = np.frombuffer(d, dtype=np.uint8)
                 nib = np.empty(32, dtype=np.uint8)
@@ -710,7 +689,8 @@ def simhash_cap_stats(
     max_bucket: int = 500,
 ) -> DataFrame:
     """Hot-bucket drop report for ``simhash_near_pairs`` at the same
-    parameters (see ``_cap_stats``). At corpus scale this is the
+    parameters (see ``_cap_stats``: one window, the oracle's ``COUNT(*)
+    OVER``). At corpus scale this is the
     saturation alarm for the 16-bit tier: when n_docs_fully_excluded
     approaches the corpus size, the signature space is saturated — use
     ``bits=64``."""
@@ -1142,7 +1122,8 @@ def dedup_delta(
       broadcast).
     * **near** — exact-tier survivors band-join the store's signature
       bands (same banding as the batch LSH; hot STORE buckets dropped
-      at ``max_bucket``, the usual recall/blow-up trade), then
+      when a window's ``count(*) over (partition by band_id, band_key)``
+      exceeds ``max_bucket``, the oracle's ``QUALIFY``), then
       near-dup is decided by SIGNATURE AGREEMENT: ≥
       ``min_matching_hashes`` of ``num_hashes`` minhash components
       equal. The store keeps no text, so the shingle-set verify of
@@ -1182,10 +1163,12 @@ def dedup_delta(
     store_sigs = store.filter(F.col("sig_0").isNotNull()).select(
         F.col(id_col).alias(old), *[f"sig_{i}" for i in range(num_hashes)]
     )
-    store_bands = _drop_hot_buckets(
-        _bands_from_sigs(store_sigs, old, num_hashes, band_size),
-        ["band_id", "band_key"],
-        max_bucket,
+    bucket = Window.partitionBy("band_id", "band_key")
+    store_bands = (
+        _bands_from_sigs(store_sigs, old, num_hashes, band_size)
+        .withColumn("_bn", F.count(F.lit(1)).over(bucket))
+        .filter(F.col("_bn") <= max_bucket)
+        .drop("_bn")
     )
     new_bands = _bands_from_sigs(new_sigs, id_col, num_hashes, band_size)
     cand = (

@@ -77,11 +77,6 @@ def read_table_props(spark: SparkSession, table: str) -> dict:
         return {}
 
 
-def set_table_props(spark: SparkSession, table: str, props: dict) -> None:
-    kv = ", ".join(f"'{k}' = '{v}'" for k, v in props.items())
-    spark.sql(f"ALTER TABLE {table} SET TBLPROPERTIES ({kv})")
-
-
 #: Iceberg copies every Spark session conf with this prefix into the
 #: snapshot summary of the commit it participates in (SparkWrite /
 #: row-level writes read them via SparkUtil.extraSnapshotMetadata /

@@ -195,11 +195,6 @@ def parse_ntriples(lines: DataFrame, col: str = "value") -> DataFrame:
     ).filter(F.col("obj") != "")
 
 
-def load_ntriples(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed N-Triples file scan (text lines → parsed triples)."""
-    return parse_ntriples(spark.read.text(path), "value")
-
-
 _BIB_FIELDS = [
     "pmid",
     "title",

@@ -1,5 +1,6 @@
 """Unit tests for extraction, dedup, vector, sessionize operators."""
 
+import contextlib
 import math
 
 from pyspark.sql import functions as F
@@ -885,13 +886,16 @@ def test_cap_stats_match_manual(spark):
     """The hot-bucket drop reports must agree with a manual recount of
     the same banding, and n_docs_fully_excluded must equal the number
     of docs the capped PAIRING actually silences (zero surviving
-    bands)."""
+    bands). Null doc ids count as one doc, as ``GROUP BY`` counts them,
+    and 10,000 docs of one text fill one 10,000-row bucket per band."""
     from collections import Counter
 
     rows = [
         (i, " ".join(f"w{(i * 7 + j * (1 + i % 3)) % 23}" for j in range(12)))
         for i in range(40)
     ]
+    rows += [(None, rows[0][1]), (None, "w1 w2 w3 w4 w5 w6 w7")]
+    rows += [(1000 + i, "one boilerplate text shared by every row") for i in range(10_000)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     cap = 3
     bands = dedup._simhash_bands(docs, "doc_id", "text", 2, 16).collect()
@@ -1384,6 +1388,20 @@ def test_dedup_delta(spark):
     # the test is only meaningful if the near tier actually fired
     assert got[11][0] == "near", f"agreement {m11}/8 — adjust fixture"
 
+    # the store cap keeps a bucket of exactly max_bucket rows and drops
+    # one of max_bucket + 1 (the oracle's COUNT(*) OVER (...) <= cap)
+    body = "the quick brown fox jumps over the lazy dog by the river bank today"
+    assert sum(a == b for a, b in zip(sigs(body + " zqx"), sigs(body))) >= 6
+    probe = spark.createDataFrame([(60, body + " zqx")], "doc_id long, text string")
+    for copies, want in ((2, ("near", 100)), (3, ("unique", None))):
+        copies_store = dedup.build_dedup_store(
+            spark.createDataFrame(
+                [(100 + i, body) for i in range(copies)], "doc_id long, text string"
+            )
+        )
+        (r,) = dedup.dedup_delta(probe, copies_store, max_bucket=2).collect()
+        assert (r.status, r.dup_of) == want, copies
+
 
 def test_dedup_delta_store_maintenance(spark):
     """The maintained-store loop: after appending batch 1's unique
@@ -1503,13 +1521,13 @@ def _py_minhash(text, k=8, n=3):
 
 
 def test_minhash_memo_bound_keeps_signatures(spark, monkeypatch):
-    """With the per-task md5 memo capped at 2 entries (cleared over and
+    """With the per-task md5 memos capped at 2 entries (cleared over and
     over inside every task), ``minhash_signatures`` and
-    ``build_dedup_store`` still equal the reference signatures: the
-    memo is a pure cache."""
+    ``build_dedup_store`` still equal the reference signatures, and
+    ``simhash16`` / ``simhash64`` their uncapped signatures: the memos
+    are pure caches."""
     from kgflow.functions import text as tx
 
-    monkeypatch.setattr(dedup, "_MD5_MEMO_ENTRIES", 2)
     words = ["aa", "bb", "cc", "dd", "ee", "ff", "gg"]
     rows = [
         (i, " ".join(words[(i + j * (1 + i % 3)) % 7] for j in range(4 + i % 6)))
@@ -1517,6 +1535,16 @@ def test_minhash_memo_bound_keeps_signatures(spark, monkeypatch):
     ] + [(100, "too short"), (101, None), (102, "aa bb cc aa bb cc")]
     docs = spark.createDataFrame(rows, "doc_id long, text string").repartition(2)
     want = {d: _py_minhash(t) for d, t in rows}
+
+    def simhashes():
+        return [
+            sorted(tuple(r) for r in f(docs).collect())
+            for f in (dedup.simhash16, dedup.simhash64)
+        ]
+
+    uncapped = simhashes()
+    monkeypatch.setattr(dedup, "_MD5_MEMO_ENTRIES", 2)
+    assert simhashes() == uncapped
 
     got = {
         r.doc_id: [r[f"sig_{i}"] for i in range(8)]
@@ -1533,40 +1561,107 @@ def test_minhash_memo_bound_keeps_signatures(spark, monkeypatch):
     }
 
 
-def test_hot_bucket_sides_are_size_gated(spark, monkeypatch):
-    """``_cap_stats`` and ``dedup_delta``'s store side broadcast their
-    hot-bucket keys only under ``_HOT_BROADCAST_ROWS``: above it the
-    executed plans hold no BroadcastExchange, and the results do not
-    change."""
+def _hot_bucket_frames(spark):
+    """(docs, new): six copies of one boilerplate text, whose LSH buckets
+    are hot at ``max_bucket=3``, six distinct docs, and a batch holding
+    a near copy, an exact copy, a fresh doc and a near copy of the
+    boilerplate (unique: all its agreeing buckets are hot)."""
     boiler = "subscribe to our newsletter for updates and offers every day"
-    rows = [(i, boiler) for i in range(6)] + [
-        (10 + i, f"doc {i} with its own words number {i} here") for i in range(6)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    new = spark.createDataFrame(
-        [(50, "doc 1 with its own words number 1 here"), (51, boiler)],
+    own = [f"doc {i} with its own words number {i} here and then some more" for i in range(6)]
+    docs = spark.createDataFrame(
+        [(i, boiler) for i in range(6)] + [(10 + i, t) for i, t in enumerate(own)],
         "doc_id long, text string",
     )
+    new = spark.createDataFrame(
+        [
+            (50, own[1] + " zqx"),
+            (51, boiler),
+            (52, "fresh words never seen before anywhere at all"),
+            (53, boiler + " zqx"),
+        ],
+        "doc_id long, text string",
+    )
+    return docs, new
 
-    def run():
-        stats = dedup.minhash_cap_stats(docs, max_bucket=3)
-        delta = dedup.dedup_delta(new, dedup.build_dedup_store(docs), max_bucket=3)
-        return stats, delta
 
+@contextlib.contextmanager
+def _no_auto_broadcast(spark):
+    """``spark.sql.autoBroadcastJoinThreshold`` = -1 inside, restored
+    after: only a hint can broadcast, and AQE picks no broadcast join
+    from runtime sizes."""
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key)
     spark.conf.set(key, "-1")
     try:
-        results = []
-        for gate in (100_000, 0):
-            monkeypatch.setattr(dedup, "_HOT_BROADCAST_ROWS", gate)
-            stats, delta = run()
-            out = (tuple(stats.first()), sorted(tuple(r) for r in delta.collect()))
-            plans = [_spread_plan(stats), _spread_plan(delta)]
-            results.append((out, ["BroadcastExchange" in p for p in plans]))
+        yield
     finally:
         spark.conf.set(key, prev)
-    (under, under_bc), (above, above_bc) = results
-    assert under_bc == [True, True]  # the hint applies under the gate
-    assert above_bc == [False, False]
-    assert under == above and under[0][1] > 0  # a bucket is hot
+
+
+def test_hot_bucket_caps_are_windows(spark, tmp_path):
+    """Both hot-bucket caps are one window over the bucket columns, the
+    oracle's ``COUNT(*) OVER (PARTITION BY band_id, key)``:
+    ``minhash_cap_stats`` plans no join, no broadcast and no checkpoint
+    (an ``ExistingRDD`` scan), and ``dedup_delta`` over a plain store
+    plans no anti join on the band columns and no broadcast."""
+    docs, new = _hot_bucket_frames(spark)
+    path = str(tmp_path / "docs")
+    docs.write.parquet(path)
+    docs = spark.read.parquet(path)  # a file scan: no ExistingRDD input
+    with _no_auto_broadcast(spark):
+        stats = dedup.minhash_cap_stats(docs, max_bucket=3)
+        assert stats.first().n_capped_buckets > 0
+        cap_plan = stats._jdf.queryExecution().executedPlan().toString()
+        delta = dedup.dedup_delta(new, dedup.build_dedup_store(docs), max_bucket=3)
+        assert sorted(tuple(r) for r in delta.collect()) == [
+            (50, "near", 11), (51, "exact", 0), (52, "unique", None), (53, "unique", None),
+        ]
+        delta_plan = delta._jdf.queryExecution().executedPlan().toString()
+    assert "Window" in cap_plan
+    for node in ("Join", "BroadcastExchange", "ExistingRDD"):
+        assert node not in cap_plan, node
+    # the exact tier's anti join sits under the kept survivor-signature
+    # checkpoint, which the plan shows as an ExistingRDD scan
+    anti = [line for line in delta_plan.splitlines() if "LeftAnti" in line]
+    assert not [line for line in anti if "band_key" in line]
+    assert "Window [count(1)" in delta_plan
+    assert "BroadcastExchange" not in delta_plan
+
+
+def test_hot_bucket_cap_job_counts(spark):
+    """Jobs one call of ``minhash_cap_stats`` and of ``dedup_delta``
+    starts on a fixed small frame, broadcasts off (each AQE query stage
+    is one job). The window caps start fewer than the hot-key aggregate,
+    gated broadcast and checkpoint they replace (11 and 26)."""
+    docs, new = _hot_bucket_frames(spark)
+    store = dedup.build_dedup_store(docs)
+    sc = spark.sparkContext
+
+    def jobs(name, build):
+        # the frame is built inside the group: jobs a build starts count,
+        # and a lazy checkpoint's jobs run under the group it was built in
+        group = f"test-hot-bucket-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            build().collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    with _no_auto_broadcast(spark):
+        cap_jobs = jobs("cap", lambda: dedup.minhash_cap_stats(docs, max_bucket=3))
+        delta_jobs = jobs(
+            "delta", lambda: dedup.dedup_delta(new, store, max_bucket=3)
+        )
+    # minhash_cap_stats: the docs' round-robin spread, the MinHash bands'
+    # (band_id, band_key) exchange, the window's per-doc partial
+    # aggregate into the doc_id exchange, the per-doc sums into the
+    # single-partition exchange, and the result stage
+    assert cap_jobs == 5
+    # dedup_delta: 6 jobs compute the kept survivor-signature checkpoint
+    # (the exact tier and the MinHash pass, one job per stage) and 14 run
+    # the outer query: the exact tier for the result, the store bands'
+    # window exchange, the band join, the agreement verify and the two
+    # left joins of the result
+    assert delta_jobs == 20
