@@ -1,5 +1,5 @@
-"""Canonicalization: symmetric pairs, duplicate-group resolution,
-and iterative connected-components entity consolidation.
+"""Canonicalization: duplicate-group resolution and iterative
+connected-components entity consolidation.
 
 The reference consolidates equivalent entities pairwise
 (``cql/remediation/remediate_gene_node.cql:5-52``: copy props, migrate
@@ -7,7 +7,9 @@ edges, delete source) and canonicalizes symmetric edges with the
 non-deterministic internal-id ordering ``id(u1) < id(u2)``
 (``cql/import/uniprot/uniprot_intact.cql:30-39``). Here:
 
-* symmetric pairs use ``least/greatest`` — deterministic, no internal ids;
+* symmetric pairs are ordered where they are built (query
+  ``symmetric_pairs`` keeps ``a < b``; the extraction kernel sorts each
+  CO_OCCURS_WITH pair) — deterministic, no internal ids;
 * duplicate groups resolve by window ``row_number() == 1`` with an
   explicit tie-break (``cql/remediation/remediate_duplicate_pubmed_ids
   .cql:1-13`` kept ``nodes[0]`` — order-dependent; we keep min(key));
@@ -43,19 +45,6 @@ from pyspark.sql.window import Window
 #: AQE and serializes the cache build). The parquet spill IS the fast
 #: form.
 _SPILL_CODEC = "zstd"
-
-
-def canonical_pairs(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
-    """One canonical (least, greatest) row per unordered pair, self-pairs
-    dropped — the deterministic re-expression of ``id(u1) < id(u2)``."""
-    return (
-        df.select(
-            F.least(F.col(col_a), F.col(col_b)).alias("pair_a"),
-            F.greatest(F.col(col_a), F.col(col_b)).alias("pair_b"),
-        )
-        .filter(F.col("pair_a") != F.col("pair_b"))
-        .dropDuplicates(["pair_a", "pair_b"])
-    )
 
 
 def dedup_keep_first(df: DataFrame, keys: list[str], order_by: list) -> DataFrame:

@@ -1,4 +1,4 @@
-"""Explicit skew handling: salted aggregation and salted joins.
+"""Explicit skew handling: salted aggregation.
 
 The synthetic workload is deliberately Zipf-skewed (hot ontology terms,
 long-tail conversation lengths — BASELINE.json north_star: "skew
@@ -9,14 +9,14 @@ salting on hot entities"). Three layers of defense, cheapest first:
    to do.
 2. **AQE skew-join splitting** — on by default in `kgflow.session`.
 3. **explicit salting** (this module) — for non-algebraic aggregates
-   (collect_list/set, exact distinct counts per hot key) and for joins
-   whose build side cannot broadcast: append ``pmod(hash(row), S)`` to
-   the key, aggregate per (key, salt), then reduce the S partials.
+   (collect_list/set, exact distinct counts per hot key): append
+   ``pmod(hash(row), S)`` to the key, aggregate per (key, salt), then
+   reduce the S partials.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -54,19 +54,3 @@ def salted_count_distinct(
     deduped = salted.dropDuplicates([key, "_salt", value])
     return deduped.groupBy(key).agg(F.count(F.lit(1)).alias(f"n_{value}"))
 
-
-def salted_join(
-    fact: DataFrame,
-    hot: DataFrame,
-    key: str,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Equi-join where the right side is small enough to replicate S×
-    but too big (or disabled) to broadcast: fact rows get a content
-    salt; the right side is exploded across all salts, so each hot key
-    spreads over S shuffle partitions."""
-    f = with_salt(fact, n_salts)
-    h = hot.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)).cast("array<int>"))
-    )
-    return f.join(h, [key, "_salt"]).drop("_salt")

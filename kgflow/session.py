@@ -12,6 +12,8 @@ Design notes (100 TB target, tested on local[*]):
 * ``spark.sql.shuffle.partitions`` defaults to a small multiple of cores
   locally; on a real cluster the caller passes ``shuffle_partitions``
   sized to ~128 MB of shuffle data per partition.
+* No scan-split size is set: Spark's own rule already aims each scan at
+  one split per core, and a smaller cap only adds tasks past the cores.
 """
 
 from __future__ import annotations
@@ -51,22 +53,9 @@ def get_spark(
         except ValueError:
             shuffle_partitions = 32
 
-    # Scan-split sizing (guide §6): the sandbox testdata is a handful
-    # of single-file parquet tables (one 131 MB lineitem, the rest
-    # ≤16 MB), so the 128 MB default packs every scan into 1-2 tasks
-    # and leaves a 32-core box idle through every scan stage. 16 MB
-    # splits let the row-group midpoint assignment spread multi-row-
-    # group files (lineitem: 6) and stop the 4 MB open-cost packing
-    # from fusing the 32 transcript bucket files into 2 splits. On a
-    # real deployment with 100 MB-1 GB files, RAISE this back via
-    # KGFLOW_MAX_PARTITION_BYTES (512m-1g per guide §6) — fewer, larger
-    # map tasks feeding each shuffle.
-    max_split = os.environ.get("KGFLOW_MAX_PARTITION_BYTES", "16m")
-
     b = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.files.maxPartitionBytes", max_split)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -238,14 +238,6 @@ def test_update_components_bulk_additions_gated(spark):
     assert {tuple(r) for r in over.collect()} == want
 
 
-def test_canonical_pairs(spark):
-    df = spark.createDataFrame(
-        [("b", "a"), ("a", "b"), ("a", "a"), ("c", "b")], "x string, y string"
-    )
-    got = {tuple(r) for r in canon.canonical_pairs(df, "x", "y").collect()}
-    assert got == {("a", "b"), ("b", "c")}
-
-
 def test_dedup_keep_first(spark):
     df = spark.createDataFrame(
         [("k1", 3, "x"), ("k1", 1, "y"), ("k2", 5, "z")],

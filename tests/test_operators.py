@@ -1479,6 +1479,24 @@ def test_spread_large_single_row_group_file_gets_round_robin(spark, tmp_path):
     assert f"RoundRobinPartitioning({n})" in plan
 
 
+def test_many_small_bucket_files_plan_at_most_one_split_per_core(spark, tmp_path):
+    """A ``bucket=``-partitioned dataset of 8 * defaultParallelism tiny
+    files is packed by Spark's own split rule into at most one split
+    per core: the session sets no smaller split size that would add
+    tasks past the core count."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = spark.sparkContext.defaultParallelism
+    files = 8 * n
+    table = pa.table({"bucket": list(range(files)), "v": list(range(files))})
+    path = str(tmp_path / "buckets")
+    pq.write_to_dataset(table, path, partition_cols=["bucket"])
+    scan = spark.read.parquet(path)
+    assert len(scan.inputFiles()) == files
+    assert scan.rdd.getNumPartitions() <= n
+
+
 def test_no_inline_default_parallelism_repartition():
     """The scan-spread rule lives in ``util.spread`` alone: no other
     ``repartition(...)`` call in ``kgflow/`` or ``__spark_entry__.py``

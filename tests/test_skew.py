@@ -37,22 +37,6 @@ def test_salted_count_distinct_matches_plain(spark):
     assert salted["hot"] == 57
 
 
-def test_salted_join_matches_plain(spark):
-    fact = _hot_df(spark)
-    dim = spark.createDataFrame(
-        [("hot", "HOT"), ("k1", "K1"), ("k5", "K5")], "key string, label string"
-    )
-    plain = sorted(
-        (r.key, r.value, r.label) for r in fact.join(dim, "key").collect()
-    )
-    salted = sorted(
-        (r.key, r.value, r.label)
-        for r in skew.salted_join(fact, dim, "key", n_salts=8).collect()
-    )
-    assert salted == plain  # multiset equality, duplicates preserved
-    assert len(salted) == 902
-
-
 def test_salt_is_deterministic(spark):
     df = _hot_df(spark)
     a = {tuple(r) for r in skew.with_salt(df, 8).collect()}
