@@ -13,7 +13,7 @@ as idiomatic Spark DataFrame programs:
 Package layout
 --------------
 ``session``    SparkSession factory (AQE, Arrow, tuned shuffles)
-``schemas``    StructTypes for every table in the pipeline
+``schemas``    StructTypes of the pipeline's input tables
 ``synth``      deterministic distributed synthetic-data generators
 ``sources``    readers/sinks re-expressing the reference's LOAD CSV family
 ``operators``  extraction, linking, canonicalization, dedup, graph, vector

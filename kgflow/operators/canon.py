@@ -46,6 +46,9 @@ from pyspark.sql.window import Window
 #: form.
 _SPILL_CODEC = "zstd"
 
+#: row bound under which a size-gated small side is broadcast
+_BROADCAST_ROWS = 4_000_000
+
 
 def dedup_keep_first(df: DataFrame, keys: list[str], order_by: list) -> DataFrame:
     """Duplicate-group resolution (C3): deterministic keep-one per key."""
@@ -525,7 +528,7 @@ def _components(
                 )
             )
             labels = lab.join(
-                gated_broadcast(cdim, 4_000_000), lab["_ce"] == cdim["_ce2"]
+                gated_broadcast(cdim, _BROADCAST_ROWS), lab["_ce"] == cdim["_ce2"]
             ).select("id", "canonical_id")
         else:
             labels = labels.select("id", "canonical_id")
@@ -540,7 +543,7 @@ def update_components(
     new_edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    broadcast_threshold: int | None = 4_000_000,
+    broadcast_threshold: int | None = _BROADCAST_ROWS,
     **cc_kwargs,
 ) -> DataFrame:
     """Incrementally maintain a ``connected_components`` mapping under
@@ -612,7 +615,6 @@ def retract_components(
     removed_edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    broadcast_threshold: int | None = 4_000_000,
     **cc_kwargs,
 ) -> DataFrame:
     """Incrementally maintain a ``connected_components`` mapping under
@@ -673,11 +675,11 @@ def retract_components(
         .distinct()
     )
     affected = (
-        mapping.join(gated_broadcast(endpoints, broadcast_threshold), "id", "left_semi")
+        mapping.join(gated_broadcast(endpoints, _BROADCAST_ROWS), "id", "left_semi")
         .select("canonical_id")
         .distinct()
     )
-    affected_b = gated_broadcast(affected, broadcast_threshold)
+    affected_b = gated_broadcast(affected, _BROADCAST_ROWS)
     # full membership of the affected components (includes nodes about
     # to become singletons)
     members = mapping.join(affected_b, "canonical_id", "left_semi").select(
@@ -688,7 +690,7 @@ def retract_components(
     # semi-join on `a` slices the corpus-scale edge table
     member_ids = members.select("id").withColumnRenamed("id", "_aid")
     surviving = e.join(
-        gated_broadcast(member_ids, broadcast_threshold),
+        gated_broadcast(member_ids, _BROADCAST_ROWS),
         e["a"] == F.col("_aid"),
         "left_semi",
     ).join(r, ["a", "b"], "left_anti")

@@ -49,6 +49,9 @@ from .util import gated_broadcast, spread
 # stays under ~56 MB per task; past the bound it is cleared and refills.
 _MD5_MEMO_ENTRIES = 65_536
 
+# Row bound under which a size-gated join side is broadcast.
+_BROADCAST_ROWS = 4_000_000
+
 
 def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(fingerprint, canonical_id, n_dups) — one row per distinct text."""
@@ -743,7 +746,6 @@ def dedup_clusters(
     band_size: int = 2,
     shingle_n: int = 3,
     max_bucket: int | None = 500,
-    broadcast_threshold: int | None = 4_000_000,
 ) -> DataFrame:
     """Transitive near-duplicate CLUSTERS with a kept representative —
     the full dedup composition a corpus-curation pipeline actually
@@ -769,8 +771,8 @@ def dedup_clusters(
     assignment joins it against the corpus ids — but on template-heavy
     web corpora the mapping is a large FRACTION of the corpus (every
     doc with a verified near-dup), so the broadcast hint is size-GATED
-    (``broadcast_threshold`` rows, measured on the already-materialized
-    mapping; None = never hint): under the gate it's a map-side join,
+    (``_BROADCAST_ROWS`` rows, measured on the already-materialized
+    mapping): under the gate it's a map-side join,
     above it AQE picks the strategy from runtime sizes — never a forced
     corpus-fraction broadcast.
     """
@@ -799,7 +801,7 @@ def dedup_clusters(
         out = (
             docs.select(id_col)
             .join(
-                gated_broadcast(m, broadcast_threshold),
+                gated_broadcast(m, _BROADCAST_ROWS),
                 F.col(id_col) == F.col("_mid"),
                 "left",
             )

@@ -35,6 +35,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+# Row bound under which the size-gated idf table is broadcast.
+_BROADCAST_ROWS = 2_000_000
+
 
 class TokenAhoCorasick:
     """Token-level Aho–Corasick automaton over lower-cased whitespace
@@ -467,7 +470,6 @@ def tfidf_top_terms(
     k: int = 5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    df_broadcast_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Per-document top-k TF-IDF keywords — the classic salient-term
     extractor (the declarative replacement for the reference's
@@ -503,7 +505,7 @@ def tfidf_top_terms(
         .cast("long")
         .alias("idf6"),
     )
-    scored = tf.join(gated_broadcast(idf, df_broadcast_threshold), "tok").select(
+    scored = tf.join(gated_broadcast(idf, _BROADCAST_ROWS), "tok").select(
         id_col, "tok", "tf", (F.col("tf") * F.col("idf6")).alias("score6")
     )
     w = Window.partitionBy(id_col).orderBy(F.desc("score6"), F.asc("tok"))

@@ -20,6 +20,9 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions import text as tx
 from .util import spread
 
+# Row bound under which a size-gated LM fit table is broadcast.
+_BROADCAST_ROWS = 2_000_000
+
 
 def repetition_stats(
     docs: DataFrame,
@@ -207,7 +210,6 @@ def unigram_logprob_score(
     id_col: str = "doc_id",
     text_col: str = "text",
     floor_lp6: int = -10_000_000,
-    vocab_broadcast_threshold: int = 2_000_000,
     fit_docs: DataFrame | None = None,
 ) -> DataFrame:
     """Statistical-LM quality score, KenLM-lite: fit unigram token
@@ -229,7 +231,7 @@ def unigram_logprob_score(
     Returns (id_col, n_tokens, lm_score). Scale shape: one explode →
     vocab aggregate (vocab-sized result), a 1-row total broadcast, a
     size-gated broadcast join of the log-prob table (shuffle join
-    above ``vocab_broadcast_threshold`` rows), one per-doc aggregate.
+    above ``_BROADCAST_ROWS`` rows), one per-doc aggregate.
     """
     from .util import gated_broadcast
 
@@ -252,7 +254,7 @@ def unigram_logprob_score(
         .cast("long")
         .alias("lp6"),
     )
-    scored = toks.join(gated_broadcast(lp, vocab_broadcast_threshold), "tok", "left")
+    scored = toks.join(gated_broadcast(lp, _BROADCAST_ROWS), "tok", "left")
     return (
         scored.groupBy(id_col)
         .agg(
@@ -303,7 +305,6 @@ def trigram_logprob_score(
     text_col: str = "text",
     backoff_alpha: float = 0.4,
     prune_min_count: int = 2,
-    table_broadcast_threshold: int = 2_000_000,
     fit_docs: DataFrame | None = None,
 ) -> DataFrame:
     """Trigram LM quality score with stupid backoff and a PRUNED
@@ -332,7 +333,7 @@ def trigram_logprob_score(
     Scale shape: three fit aggregates (all map-side partial; the
     trigram one is pruned BEFORE it is joined or gated), then the
     token stream left-joins five dimension tables — each size-gated
-    (broadcast below ``table_broadcast_threshold`` rows, shuffle hash
+    (broadcast below ``_BROADCAST_ROWS`` rows, shuffle hash
     join above; the web-scale trigram table takes the shuffle, and
     pruning is what keeps that shuffle side proportional to the HEAD
     of the distribution) — plus a 1-row total broadcast, and one
@@ -367,7 +368,7 @@ def trigram_logprob_score(
     )
     uni_prev = uni.select(F.col("tok").alias("prev1"), F.col("cu").alias("cu_prev"))
     uni_cur = uni.select(F.col("tok").alias("cur"), F.col("cu").alias("cu_cur"))
-    thr = table_broadcast_threshold
+    thr = _BROADCAST_ROWS
     scored = (
         stream.join(gated_broadcast(tri, thr), ["prev2", "prev1", "cur"], "left")
         .join(gated_broadcast(big, thr), ["prev1", "cur"], "left")
@@ -441,7 +442,6 @@ def bigram_logprob_score(
     id_col: str = "doc_id",
     text_col: str = "text",
     backoff_alpha: float = 0.4,
-    table_broadcast_threshold: int = 2_000_000,
     fit_docs: DataFrame | None = None,
 ) -> DataFrame:
     """Bigram LM quality score with stupid backoff (Brants et al.
@@ -464,7 +464,7 @@ def bigram_logprob_score(
     Scale shape: two fit aggregates (unigram vocab-sized, bigram
     seen-pair-sized), a 1-row total broadcast, then the token stream
     joined to both tables — size-gated broadcasts below
-    ``table_broadcast_threshold`` rows, shuffle hash joins above —
+    ``_BROADCAST_ROWS`` rows, shuffle hash joins above —
     and one per-doc aggregate. The bigram table of a web corpus
     exceeds any broadcast: the gate, not a hint, decides.
     """
@@ -500,9 +500,9 @@ def bigram_logprob_score(
     uni_prev = uni.select(F.col("tok").alias("prev"), F.col("cu").alias("cu_prev"))
     uni_cur = uni.select(F.col("tok").alias("cur"), F.col("cu").alias("cu_cur"))
     scored = (
-        stream.join(gated_broadcast(big, table_broadcast_threshold), ["prev", "cur"], "left")
-        .join(gated_broadcast(uni_prev, table_broadcast_threshold), "prev", "left")
-        .join(gated_broadcast(uni_cur, table_broadcast_threshold), "cur", "left")
+        stream.join(gated_broadcast(big, _BROADCAST_ROWS), ["prev", "cur"], "left")
+        .join(gated_broadcast(uni_prev, _BROADCAST_ROWS), "prev", "left")
+        .join(gated_broadcast(uni_cur, _BROADCAST_ROWS), "cur", "left")
         .crossJoin(F.broadcast(tot))  # 1 row
     )
     # unigram floor for tokens unseen even at unigram level: count 0.5

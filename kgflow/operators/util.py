@@ -27,9 +27,7 @@ def spread(df: DataFrame) -> DataFrame:
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
-def gated_broadcast(
-    df: DataFrame, threshold_rows: int | None, materialize: bool = True
-) -> DataFrame:
+def gated_broadcast(df: DataFrame, threshold_rows: int | None) -> DataFrame:
     """Broadcast-hint ``df`` only when it is MEASURED to be small.
 
     A forced ``F.broadcast`` on a mapping whose size is a function of the
@@ -42,21 +40,20 @@ def gated_broadcast(
     ``threshold_rows=None``) the frame is returned unhinted and AQE picks
     the join strategy from runtime sizes.
 
-    ``materialize`` (default True) persists the frame BEFORE the gating
-    count, so the count job computes the plan once and the downstream
-    join reuses the cached rows instead of recomputing the whole input
-    plan a second time — callers hand this gate unmaterialized aggregate
-    and join plans (LM fit tables, retraction deltas), where an eager
-    ``limit().count()`` on the raw plan would otherwise fire a redundant
-    full pass per call. MEMORY_AND_DISK, so an above-threshold frame
-    degrades to one disk spill rather than an OOM; Spark's context
-    cleaner drops the cache when the frame is garbage-collected.
+    The frame is persisted BEFORE the gating count, so the count job
+    computes the plan once and the downstream join reuses the cached
+    rows instead of recomputing the whole input plan a second time —
+    callers hand this gate unmaterialized aggregate and join plans (LM
+    fit tables, retraction deltas), where an eager ``limit().count()``
+    on the raw plan would otherwise fire a redundant full pass per call.
+    MEMORY_AND_DISK, so an above-threshold frame degrades to one disk
+    spill rather than an OOM; Spark's context cleaner drops the cache
+    when the frame is garbage-collected.
     """
     if threshold_rows is None:
         return df
-    if materialize:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
     n = df.limit(threshold_rows + 1).count()
     return F.broadcast(df) if n <= threshold_rows else df

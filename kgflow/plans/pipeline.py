@@ -43,7 +43,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark import Accumulator
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators import extract, link
@@ -362,14 +362,3 @@ def build_nodes(triples: DataFrame, terms: DataFrame) -> DataFrame:
         (F.col("props").isNotNull() | (F.col("label") != "Term")).alias("resolved"),
     )
 
-
-def run_pipeline(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    terms: DataFrame,
-    isa_edges: DataFrame,
-) -> tuple[DataFrame, DataFrame]:
-    """Returns (triples, nodes)."""
-    triples = build_triples(transcripts, terms, isa_edges)
-    nodes = build_nodes(triples, terms)
-    return triples, nodes

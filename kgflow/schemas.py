@@ -1,9 +1,8 @@
-"""Canonical StructTypes for every table the engine touches.
+"""StructTypes of the pipeline's inputs (transcripts and the lexicon
+dimensions) and the names of the benchmark's testdata tables.
 
 The shapes derive from the reference's data model (SURVEY.md §1) and from
-``BASELINE.json.input_hint`` (transcripts). Keeping hot keys as top-level
-columns (not inside the dynamic ``props`` map) is deliberate: Catalyst
-column pruning and parquet predicate pushdown only work on real columns.
+``BASELINE.json.input_hint`` (transcripts).
 """
 
 from __future__ import annotations
@@ -48,61 +47,7 @@ LEXICON_ISA_EDGE = T.StructType(
     ]
 )
 
-# -- intermediate shapes ----------------------------------------------------
-
-#: one detected lexicon mention inside a turn's text.
-MENTION = T.StructType(
-    [
-        T.StructField("term_id", T.StringType(), False),
-        T.StructField("surface", T.StringType(), False),
-        T.StructField("start", T.IntegerType(), False),
-        T.StructField("end", T.IntegerType(), False),
-    ]
-)
-
-MENTION_ROW = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("role", T.StringType(), True),
-        T.StructField("mentions", T.ArrayType(MENTION), False),
-    ]
-)
-
-# -- outputs ----------------------------------------------------------------
-
-#: the scored comparison set shape: (subj, pred, obj) + provenance props.
-TRIPLE = T.StructType(
-    [
-        T.StructField("subj", T.StringType(), False),
-        T.StructField("pred", T.StringType(), False),
-        T.StructField("obj", T.StringType(), False),
-        T.StructField("props", T.MapType(T.StringType(), T.StringType()), True),
-    ]
-)
-
-NODE = T.StructType(
-    [
-        T.StructField("id", T.StringType(), False),
-        T.StructField("label", T.StringType(), False),
-        T.StructField("props", T.MapType(T.StringType(), T.StringType()), True),
-        T.StructField("resolved", T.BooleanType(), False),
-    ]
-)
-
-#: per-partition lineage ledger for resumable restarts (SURVEY.md §4 item 4).
-LEDGER = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("input_fingerprint", T.StringType(), False),
-        T.StructField("rows_in", T.LongType(), False),
-        T.StructField("mentions_out", T.LongType(), False),
-        T.StructField("triples_out", T.LongType(), False),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("ts", T.TimestampType(), False),
-    ]
-)
+# -- testdata ---------------------------------------------------------------
 
 TESTDATA_TABLES = (
     "region",

@@ -4,7 +4,7 @@ S1  LOAD CSV WITH HEADERS … FIELDTERMINATOR '\\t'  → read_delimited
 S2  headerless positional columns + SKIP n          → read_positional
 S3  apoc.load.csv array-mapped columns              → read_delimited(array_cols=…)
 S5  OBO ontology parse → term + hierarchy frames    → load_obo
-S13 JSON export                                     → write_json
+S6  RDF N-Triples lines → (subj, pred, obj) rows    → parse_ntriples
 
 All readers return plain DataFrames; casts/splits happen via column
 expressions so Catalyst keeps pushdown and pruning.
@@ -159,11 +159,6 @@ def load_obo(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     return terms, edges
 
 
-def write_json(df: DataFrame, path: str) -> None:
-    """S13: graph/JSON export (cancer_pubmed_data_miner.py:547-551)."""
-    df.write.mode("overwrite").json(path)
-
-
 _NT_PATTERN = r'^\s*<([^>]+)>\s+<([^>]+)>\s+(.+?)\s*\.\s*$'
 
 
@@ -194,90 +189,3 @@ def parse_ntriples(lines: DataFrame, col: str = "value") -> DataFrame:
         is_lit.alias("is_literal"),
     ).filter(F.col("obj") != "")
 
-
-_BIB_FIELDS = [
-    "pmid",
-    "title",
-    "author",
-    "year",
-    "journal",
-    "doi",
-    "abstract",
-    "pages",
-    "number",
-    "volume",
-]
-
-
-def _clean_braces(s: str) -> str:
-    return s.replace("{{", "").replace("}}", "").replace("{", "").replace("}", "").strip()
-
-
-def parse_bibtex(text: str) -> pd.DataFrame:
-    """Minimal BibTeX parser (S9) for standard ``@type{ID, k = {v}, …}``
-    entries — the fields and cleanups the reference extracts with
-    bibtexparser (``import_readcube_papers.py:86-145``): brace stripping,
-    ``' and '``-split author list, ``curated`` = entry ID != 'undefined'.
-
-    One row per entry: (entry_type, entry_id, curated, authors,
-    *_BIB_FIELDS minus author). Driver-side by design — curated .bib
-    exports are dimension-scale, like the reference's in-process parse.
-    """
-    import re
-
-    rows: list[dict] = []
-    for m in re.finditer(r"@(\w+)\s*\{", text):
-        etype = m.group(1).lower()
-        # find the balanced closing brace of this entry
-        depth, i = 1, m.end()
-        while i < len(text) and depth:
-            if text[i] == "{":
-                depth += 1
-            elif text[i] == "}":
-                depth -= 1
-            i += 1
-        body = text[m.end() : i - 1]
-        head, _, fields_src = body.partition(",")
-        entry: dict = {"entry_type": etype, "entry_id": head.strip()}
-        for fm in re.finditer(
-            r"(\w[\w-]*)\s*=\s*(\{(?:[^{}]|\{[^{}]*\})*\}|\"[^\"]*\"|[^,\n]+)",
-            fields_src,
-        ):
-            key = fm.group(1).lower()
-            val = fm.group(2).strip()
-            if val[:1] in "{\"":
-                val = val[1:-1]
-            entry[key] = _clean_braces(val)
-        entry["curated"] = entry["entry_id"] != "undefined"
-        entry["authors"] = [
-            _clean_braces(a.strip())
-            for a in entry.get("author", "").split(" and ")
-            if a.strip()
-        ]
-        rows.append(entry)
-    cols = ["entry_type", "entry_id", "curated", "authors"] + [
-        f for f in _BIB_FIELDS if f != "author"
-    ]
-    pdf = pd.DataFrame(rows)
-    for c in cols:
-        if c not in pdf.columns:
-            pdf[c] = "" if c != "authors" else [[] for _ in range(len(pdf))]
-    return pdf[cols].fillna("")
-
-
-def load_bibtex(spark: SparkSession, path: str) -> DataFrame:
-    """S9 scan: .bib file → article DataFrame, filtered the way the
-    reference's importer is (@article entries only, curated, pmid
-    present — ``import_readcube_papers.py:146-186``)."""
-    with open(path, encoding="utf-8") as fh:
-        pdf = parse_bibtex(fh.read())
-    df = spark.createDataFrame(
-        pdf,
-        schema="entry_type string, entry_id string, curated boolean, "
-        "authors array<string>, pmid string, title string, year string, "
-        "journal string, doi string, abstract string, pages string, "
-        "number string, volume string",
-    )
-    return df.filter(
-        (F.col("entry_type") == "article") & F.col("curated") & (F.col("pmid") != "")
-    )

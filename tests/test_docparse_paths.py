@@ -104,43 +104,6 @@ def test_bounded_paths_min_depth(spark):
     assert all(1 <= d <= 3 for d in got.values())
 
 
-def test_bibtex_scan(spark, tmp_path):
-    bib = """
-@article{smith2020,
-  pmid = {12345},
-  title = {{A Great Paper}},
-  author = {Smith, John and Doe, Jane},
-  year = {2020},
-  journal = {Nature Things},
-  doi = {10.1000/xyz},
-  volume = {7}
-}
-@article{undefined,
-  pmid = {99999},
-  title = {Uncurated thing},
-  author = {Nobody},
-  year = {2021}
-}
-@book{abook,
-  title = {Not an article},
-  year = {1999}
-}
-@article{jones2021,
-  title = {No pmid here},
-  author = {Jones, A},
-  year = {2021}
-}
-"""
-    p = tmp_path / "refs.bib"
-    p.write_text(bib)
-    rows = readers.load_bibtex(spark, str(p)).collect()
-    assert len(rows) == 1  # curated @article with pmid only
-    r = rows[0]
-    assert r.pmid == "12345" and r.title == "A Great Paper"
-    assert r.authors == ["Smith, John", "Doe, Jane"]
-    assert (r.year, r.journal, r.volume) == ("2020", "Nature Things", "7")
-
-
 def test_hash_embedding_provenance(spark):
     df = spark.createDataFrame([("hello world",)], "text string")
     out = extract.hash_embedding(

@@ -1521,6 +1521,148 @@ def test_no_inline_default_parallelism_repartition():
     assert hits == []
 
 
+# Top-level kgflow names that no product entry point reaches but that
+# stay, as "<module>.<name>" (module = file stem, the package for an
+# __init__.py), each with the reason it stays. What an entry's body
+# reaches needs no entry of its own (imports.FactSpec, parse_obo, ...).
+_UNREACHED_KEEP = {
+    # streaming/checkpoint surface: fixed product beside queries()
+    "checkpoint.read_ledger": "the JSON ledger read back as a DataFrame",
+    "incremental.incremental_extract": "availableNow incremental triple run",
+    "incremental.read_stream_triples": "reads what incremental_extract wrote",
+    "incremental.streaming_sessions": "streaming twin of sessionize",
+    "stateful.stateful_next_turn": "cross-batch NEXT_TURN state",
+    "stateful.streaming_exact_dedup": "cross-batch exact dedup state",
+    "canon.update_components": "additions half of the retract_components pair",
+    # ingestion API
+    "readers.load_obo": "the README example's lexicon loader",
+    "readers.read_delimited": "COVERAGE S1/S3 header CSV/TSV scan",
+    "readers.read_positional": "COVERAGE S2 headerless positional scan",
+    "imports.import_edge_table": "SURVEY P10 edge-table import, its only implementation",
+    "imports.import_fact_table": "SURVEY P11 fact-table import, its only implementation",
+    # reference implementations that tests compare against
+    "reference_oracle.precision_recall": "triple P/R against the pandas oracle",
+    "dedup.embedding_near_duplicates_exact": "exact twin of the LSH embedding near-dup",
+    "multimodal.synth_pcm_payload": "builds the PCM payloads the decode tests read",
+    # package metadata
+    "kgflow.__version__": "package version",
+}
+
+
+def _kgflow_call_graph(root):
+    """(definitions, edges, root keys) of kgflow's top-level names.
+
+    A definition is a top-level ``def``, ``class`` or assigned name of a
+    ``kgflow/**/*.py`` file, keyed "<module>.<name>" and mapped to its
+    (path, line). ``edges[key]`` holds the definitions its body refers
+    to; the root keys are those the product entry points
+    (``__spark_entry__.py``, ``bench*.py``, ``tools/``, ``perfbench/``)
+    and kgflow's own module-level code refer to. A reference is a bare
+    name, an attribute, an imported name or an identifier-shaped string
+    (``getattr`` and the perfbench tracer name functions by string);
+    docstrings are dropped first, so a name a docstring mentions is no
+    caller. Resolution is by name alone: the scan can miss dead code
+    that shares a name with live code, never flag live code."""
+    import ast
+
+    def parse(path):
+        tree = ast.parse(path.read_text())
+        for node in ast.walk(tree):
+            body = getattr(node, "body", None)
+            if (
+                isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+                and isinstance(body[0], ast.Expr)
+                and isinstance(body[0].value, ast.Constant)
+                and isinstance(body[0].value.value, str)
+            ):
+                node.body = body[1:] or [ast.Pass()]
+        return tree
+
+    def refs(node):
+        out = set()
+        for x in ast.walk(node):
+            if isinstance(x, ast.Name):
+                out.add(x.id)
+            elif isinstance(x, ast.Attribute):
+                out.add(x.attr)
+            elif isinstance(x, ast.alias):
+                out.add(x.name.rsplit(".", 1)[-1])
+            elif isinstance(x, ast.Constant) and isinstance(x.value, str):
+                if x.value.isidentifier():
+                    out.add(x.value)
+        return out
+
+    defs, bodies, by_name, seeds = {}, {}, {}, set()
+    for f in sorted((root / "kgflow").rglob("*.py")):
+        module = f.parent.name if f.stem == "__init__" else f.stem
+        for st in parse(f).body:
+            if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names = [st.name]
+            elif isinstance(st, (ast.Assign, ast.AnnAssign)):
+                targets = st.targets if isinstance(st, ast.Assign) else [st.target]
+                names = [t.id for t in targets if isinstance(t, ast.Name)]
+            elif isinstance(st, (ast.Import, ast.ImportFrom)):
+                continue  # a binding, not a use
+            else:
+                seeds |= refs(st)  # other module-level code runs on import
+                continue
+            for name in names:
+                key = f"{module}.{name}"
+                defs[key] = (f.relative_to(root), st.lineno)
+                bodies[key] = refs(st)
+                by_name.setdefault(name, []).append(key)
+    for f in [
+        root / "__spark_entry__.py",
+        *sorted(root.glob("bench*.py")),
+        *sorted((root / "tools").rglob("*.py")),
+        *sorted((root / "perfbench").rglob("*.py")),
+    ]:
+        seeds |= refs(parse(f))
+
+    def keys(names):
+        return {k for n in names for k in by_name.get(n, ())}
+
+    return defs, {k: keys(b) for k, b in bodies.items()}, keys(seeds)
+
+
+def _reach(edges, start):
+    seen, todo = set(), list(start)
+    while todo:
+        key = todo.pop()
+        if key not in seen:
+            seen.add(key)
+            todo += edges[key]
+    return seen
+
+
+def test_every_public_kgflow_name_is_reached():
+    """Every top-level kgflow definition is reached from a product entry
+    point through the bodies of reached definitions, or from an entry of
+    ``_UNREACHED_KEEP``. Tests are no callers. Each entry must name a
+    definition that nothing else reaches."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    defs, edges, roots = _kgflow_call_graph(root)
+    keep = _UNREACHED_KEEP.keys() & defs.keys()
+    left = sorted(defs[k] + (k,) for k in defs.keys() - _reach(edges, roots | keep))
+    assert not left, (
+        f"{len(left)} top-level kgflow name(s) that no product entry point "
+        "reaches (__spark_entry__.py, bench*.py, tools/, perfbench/). Give "
+        "each a product caller, delete it, or add it to _UNREACHED_KEEP in "
+        "tests/test_operators.py with the reason it stays:\n"
+        + "\n".join(f"  {path}:{line} {key}" for path, line, key in left)
+    )
+    stale = sorted(
+        k
+        for k in _UNREACHED_KEEP
+        if k not in defs or k in _reach(edges, roots | (keep - {k}))
+    )
+    assert not stale, (
+        "_UNREACHED_KEEP entries that name no kgflow definition, or that a "
+        f"product entry point or another entry already reaches; drop them: {stale}"
+    )
+
 def _py_minhash(text, k=8, n=3):
     """Reference MinHash components of one text: md5(i‖shingle) min
     over its distinct word n-grams, None when it cannot shingle."""
@@ -1603,17 +1745,26 @@ def _hot_bucket_frames(spark):
 
 
 @contextlib.contextmanager
+def _session_conf(spark, settings):
+    """``settings`` (conf key → value) set inside, restored after."""
+    prev = {k: spark.conf.get(k, None) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def _no_auto_broadcast(spark):
     """``spark.sql.autoBroadcastJoinThreshold`` = -1 inside, restored
     after: only a hint can broadcast, and AQE picks no broadcast join
     from runtime sizes."""
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
+    return _session_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"})
 
 
 def test_hot_bucket_caps_are_windows(spark, tmp_path):
@@ -1683,3 +1834,53 @@ def test_hot_bucket_cap_job_counts(spark):
     # window exchange, the band join, the agreement verify and the two
     # left joins of the result
     assert delta_jobs == 20
+
+
+def test_hot_bucket_window_spills_one_1e4_row_bucket(spark):
+    """One hot bucket of 10,000 rows (every doc has the same text; one
+    band) under window buffers of 1024 rows: the cap window spills it
+    instead of holding it in memory, and the cap stats are those of a
+    run with the default buffers."""
+    import re
+
+    docs = spark.range(10_000).select(
+        F.col("id").alias("doc_id"),
+        F.lit("the same boilerplate text in every one of the documents").alias("text"),
+    )
+
+    def stats():
+        return dedup.minhash_cap_stats(docs, num_hashes=2, band_size=2).collect()
+
+    want = stats()
+    assert [tuple(r) for r in want] == [(1, 1, 10_000, 10_000)]
+    jsc = spark.sparkContext._jsc.sc()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        jsc.listenerBus().waitUntilEmpty()
+        xs = store.executionsList()
+        return [xs.apply(i).executionId() for i in range(xs.size())]
+
+    before = max(executions(), default=-1)
+    # a window partition of more buffered rows than these spills
+    buffers = {
+        "spark.sql.windowExec.buffer.in.memory.threshold": "1024",
+        "spark.sql.windowExec.buffer.spill.threshold": "1024",
+    }
+    with _session_conf(spark, buffers):
+        assert stats() == want
+    spills = []
+    for eid in (e for e in executions() if e > before):
+        values = store.executionMetrics(eid)
+        nodes = store.planGraph(eid).allNodes()
+        for node in (nodes.apply(i) for i in range(nodes.size())):
+            if node.name() != "Window":
+                continue
+            metrics = node.metrics()
+            for m in (metrics.apply(i) for i in range(metrics.size())):
+                v = values.get(m.accumulatorId())
+                if m.name() == "spill size" and v.isDefined():
+                    # "576.0 MiB", or "total (min, med, max ...)\n<total> (...)"
+                    total = re.findall(r"([\d.,]+) [KMGT]?i?B", v.get())[0]
+                    spills.append(float(total.replace(",", "")))
+    assert spills and max(spills) > 0, spills

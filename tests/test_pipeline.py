@@ -18,8 +18,8 @@ def _persisted(sc) -> set[int]:
 
 def _got_triples(spark, transcripts, lexicon):
     terms, isa = lexicon
-    triples, nodes = pipeline.run_pipeline(spark, transcripts, terms, isa)
-    return triples, nodes
+    triples = pipeline.build_triples(transcripts, terms, isa)
+    return triples, pipeline.build_nodes(triples, terms)
 
 
 def test_triple_pr_vs_reference_oracle(spark, transcripts, lexicon, lexicon_pdf):
