@@ -61,17 +61,10 @@ def _fam_case(which: int):
     return expr
 
 
-def _star_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deduped (fam tinyint, s_key long, o_key long) — the compact-key
-    core of the star KG. Shuffle COMPACT KEYS, build URI strings only
-    after the exchange: the testdata files are single-row-group
-    parquet, so each scan is one task no matter what maxPartitionBytes
-    says — keeping the pre-shuffle side to a tinyint + two longs moves
-    the string concat onto the post-shuffle side (full parallelism) and
-    shrinks the exchange from ~40-byte literal-string rows to 17-byte
-    keys. Dedup on (fam, s_key, o_key) equals dedup on the full
-    (s_pre, s_key, pred, o_pre, o_key) tuple because fam ↔
-    (s_pre, pred, o_pre) is a bijection and the keys are numeric."""
+def _star_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(fam tinyint, s_key long, o_key long), one row per FK reference of
+    the star schema — the six edge families of ``_STAR_FAMS``, in that
+    order, before any dedup."""
     orders = _t(spark, sf_dir, "orders")
     lineitem = _t(spark, sf_dir, "lineitem")
     customer = _t(spark, sf_dir, "customer")
@@ -85,7 +78,7 @@ def _star_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col(o_key).cast("long").alias("o_key"),
         )
 
-    raw = (
+    return (
         fam(orders, 0, "o_custkey", "o_orderkey")
         .unionByName(fam(lineitem, 1, "l_orderkey", "l_partkey"))
         .unionByName(fam(lineitem, 2, "l_orderkey", "l_suppkey"))
@@ -93,7 +86,19 @@ def _star_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(fam(supplier, 4, "s_suppkey", "s_nationkey"))
         .unionByName(fam(nation, 5, "n_nationkey", "n_regionkey"))
     )
-    return raw.dropDuplicates(["fam", "s_key", "o_key"])
+
+
+def _star_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deduped ``_star_raw`` — the compact-key core of the star KG.
+    Shuffle COMPACT KEYS, build URI strings only after the exchange:
+    the testdata files are single-row-group parquet, so each scan is
+    one task no matter what maxPartitionBytes says — keeping the
+    pre-shuffle side to a tinyint + two longs moves the string concat
+    onto the post-shuffle side (full parallelism) and shrinks the
+    exchange from ~40-byte literal-string rows to 17-byte keys. Dedup on (fam, s_key, o_key) equals dedup on the full
+    (s_pre, s_key, pred, o_pre, o_key) tuple because fam ↔
+    (s_pre, pred, o_pre) is a bijection and the keys are numeric."""
+    return _star_raw(spark, sf_dir).dropDuplicates(["fam", "s_key", "o_key"])
 
 
 def star_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -456,12 +461,6 @@ def q_kg_prov_rollup(spark, sf):
     union — the extraction-count lineage the reference keeps only in
     importer logs — rolled up per (pred, family). Exact integers →
     exact cross-engine oracle."""
-    orders = _t(spark, sf, "orders")
-    lineitem = _t(spark, sf, "lineitem")
-    customer = _t(spark, sf, "customer")
-    supplier = _t(spark, sf, "supplier")
-    nation = _t(spark, sf, "nation")
-
     # Compact-key aggregation (same bijection argument as _star_keys):
     # a family id determines (subj prefix, pred, obj prefix), so a
     # given (subj, pred, obj) triple belongs to exactly ONE family —
@@ -469,31 +468,7 @@ def q_kg_prov_rollup(spark, sf):
     # per-triple aggregate can group on (fam tinyint, s_key, o_key)
     # instead of shuffling three URI strings per observation row. The
     # (pred, family) rollup then needs only the per-fam tails.
-    fam_names = [
-        ("PLACED", "orders_fk"),
-        ("CONTAINS", "lineitem_part_fk"),
-        ("SUPPLIED_BY", "lineitem_supp_fk"),
-        ("LOCATED_IN", "customer_fk"),
-        ("LOCATED_IN", "supplier_fk"),
-        ("PART_OF", "nation_fk"),
-    ]
-
-    def fam(df, fid, s_key, o_key):
-        return df.select(
-            F.lit(fid).cast("tinyint").alias("fam"),
-            F.col(s_key).cast("long").alias("s_key"),
-            F.col(o_key).cast("long").alias("o_key"),
-        )
-
-    raw = (
-        fam(orders, 0, "o_custkey", "o_orderkey")
-        .unionByName(fam(lineitem, 1, "l_orderkey", "l_partkey"))
-        .unionByName(fam(lineitem, 2, "l_orderkey", "l_suppkey"))
-        .unionByName(fam(customer, 3, "c_custkey", "c_nationkey"))
-        .unionByName(fam(supplier, 4, "s_suppkey", "s_nationkey"))
-        .unionByName(fam(nation, 5, "n_nationkey", "n_regionkey"))
-    )
-    per_triple = raw.groupBy("fam", "s_key", "o_key").agg(
+    per_triple = _star_raw(spark, sf).groupBy("fam", "s_key", "o_key").agg(
         F.count(F.lit(1)).alias("n_obs")
     )
     per_fam = per_triple.groupBy("fam").agg(
@@ -502,15 +477,17 @@ def q_kg_prov_rollup(spark, sf):
         F.sum(F.when(F.col("n_obs") > 1, 1).otherwise(0)).alias("n_multi"),
     )
 
-    def decode(which: int):
-        expr = F.when(F.col("fam") == 0, F.lit(fam_names[0][which]))
-        for i in range(1, 6):
-            expr = expr.when(F.col("fam") == i, F.lit(fam_names[i][which]))
-        return expr
-
+    # the FK each family is named after, in _STAR_FAMS order
+    names = [
+        "orders_fk", "lineitem_part_fk", "lineitem_supp_fk",
+        "customer_fk", "supplier_fk", "nation_fk",
+    ]
+    family = F.when(F.col("fam") == 0, F.lit(names[0]))
+    for i in range(1, len(names)):
+        family = family.when(F.col("fam") == i, F.lit(names[i]))
     return (
         per_fam.select(
-            decode(0).alias("pred"), decode(1).alias("family"),
+            _fam_case(1).alias("pred"), family.alias("family"),
             "n_triples", "n_obs_total", "n_multi",
         )
         .groupBy("pred", "family")
@@ -1369,15 +1346,15 @@ def q_dynamic_projection(spark, sf):
 
 def q_bracketed_list_parse(spark, sf):
     """P4: bracketed-Python-list parse (import_monarchkg_relationships
-    .py:26-40) — synthesized from testdata columns, split + strip + trim."""
+    .py:26-40) — synthesized from testdata columns and parsed by
+    ``imports.parse_bracketed_list``, the one P4 rule."""
+    from kgflow.operators import imports
+
     d = _t(spark, sf, "documents")
     bracketed = F.concat(
         F.lit("['"), F.col("lang"), F.lit("', '"), F.col("source"), F.lit("']")
     )
-    parsed = F.transform(
-        F.split(F.regexp_replace(bracketed, r"[\[\]']", ""), ","),
-        lambda x: F.trim(x),
-    )
+    parsed = imports.parse_bracketed_list(bracketed)
     return d.select(
         "doc_id",
         parsed.getItem(0).alias("first_item"),

@@ -131,8 +131,6 @@ def connected_components(
     max_iter: int = 25,
     driver_threshold: int = 200_000,
     checkpoint_dir: str | None = None,
-    verbose: bool = False,
-    encode_ids: bool | None = None,
 ) -> DataFrame:
     """(id, canonical_id) for every id reachable through same-as edges.
 
@@ -142,9 +140,7 @@ def connected_components(
     edges AND rewrites the edge set onto the label space (pointer
     doubling), giving O(log d) rounds instead of O(d).
     """
-    comp = _components(
-        edges, src, dst, max_iter, driver_threshold, checkpoint_dir, verbose, encode_ids
-    )
+    comp = _components(edges, src, dst, max_iter, driver_threshold, checkpoint_dir)
     if isinstance(comp, DataFrame):
         return comp
     # preserve the caller's id type — hardcoding string would make
@@ -162,8 +158,6 @@ def _components(
     max_iter: int = 25,
     driver_threshold: int = 200_000,
     checkpoint_dir: str | None = None,
-    verbose: bool = False,
-    encode_ids: bool | None = None,
 ) -> dict | DataFrame:
     """:func:`connected_components`' mapping as it comes out of its
     size gate: a driver dict (id → canonical id, ids on an edge only)
@@ -252,11 +246,8 @@ def _components(
     # an Observation — zero extra jobs — and (b) once the contracted
     # edge set fits the driver threshold, a driver union-find finishes
     # the job in one collect instead of 3-6 more distributed rounds.
-    import time as _time
-
     spill_dir = _resolve_spill_dir(spark, checkpoint_dir)
     spill_seq = [0]
-    t_start = _time.time()
 
     def spill(df: DataFrame, obs: Observation | None = None):
         """Parquet round-trip (truncates lineage + resets stats). If an
@@ -347,12 +338,7 @@ def _components(
         # adds two full rounds. Numeric inputs skip all of this —
         # they're already compact shuffle keys.
         # ------------------------------------------------------------------
-        if encode_ids is None:
-            encode = id_type not in ("bigint", "int", "smallint", "tinyint")
-        else:
-            encode = encode_ids and id_type not in (
-                "bigint", "int", "smallint", "tinyint"
-            )
+        encode = id_type not in ("bigint", "int", "smallint", "tinyint")
         if encode:
             nparts = max(spark.sparkContext.defaultParallelism, 8)
             # spill freezes the range partitioner's sampled bounds — a
@@ -423,7 +409,7 @@ def _components(
         # (the largest frame in the loop) from EVERY round.
         maps: list[DataFrame] = []
 
-        for it in range(max_iter):
+        for _ in range(max_iter):
             # each label-node merges into its smallest neighbor
             dmap, n_merge = spill_count(
                 e2.groupBy("a")
@@ -450,14 +436,6 @@ def _components(
             e2, n_e = spill_count(
                 e2.filter(F.col("a") != F.col("b")).dropDuplicates()
             )
-            if verbose:
-                import sys as _sys
-
-                print(
-                    f"cc round {it + 1}: merges={n_merge} edges_left={n_e} "
-                    f"spills={spill_seq[0]} t={_time.time() - t_start:.1f}s",
-                    file=_sys.stderr,
-                )
             if n_e == 0:
                 break
             if n_e <= driver_threshold:
@@ -471,13 +449,6 @@ def _components(
                         list(cmap.items()), f"_f {loop_id_type}, _t {loop_id_type}"
                     )
                 )
-                if verbose:
-                    import sys as _sys
-
-                    print(
-                        f"cc finisher: {n_e} residual edges resolved driver-side",
-                        file=_sys.stderr,
-                    )
                 break
 
         # Compose the round maps in REVERSE. Chains run strictly forward
@@ -544,7 +515,6 @@ def update_components(
     src: str = "id_a",
     dst: str = "id_b",
     broadcast_threshold: int | None = _BROADCAST_ROWS,
-    **cc_kwargs,
 ) -> DataFrame:
     """Incrementally maintain a ``connected_components`` mapping under
     edge ADDITIONS — the streaming form of entity consolidation (new
@@ -589,7 +559,7 @@ def update_components(
             F.coalesce("_cb", "b").alias("id_b"),
         )
     )
-    delta = connected_components(rewritten, **cc_kwargs)
+    delta = connected_components(rewritten)
     d = gated_broadcast(
         delta.select(F.col("id").alias("_f"), F.col("canonical_id").alias("_t")),
         broadcast_threshold,
@@ -615,7 +585,6 @@ def retract_components(
     removed_edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    **cc_kwargs,
 ) -> DataFrame:
     """Incrementally maintain a ``connected_components`` mapping under
     edge RETRACTIONS — the deletion half of entity consolidation (an
@@ -694,7 +663,7 @@ def retract_components(
         e["a"] == F.col("_aid"),
         "left_semi",
     ).join(r, ["a", "b"], "left_anti")
-    recomputed = connected_components(surviving, src="a", dst="b", **cc_kwargs)
+    recomputed = connected_components(surviving, src="a", dst="b")
     singletons = (
         members.select("id")
         .join(recomputed.select("id"), "id", "left_anti")

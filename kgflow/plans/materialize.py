@@ -8,12 +8,18 @@ sink is an abstract *upsert into a keyed table*:
 * on Iceberg-enabled clusters this is ``MERGE INTO`` (one atomic
   commit, snapshot isolation) — ``upsert(iceberg_table=...)`` detects
   the runtime (``iceberg_available``) and routes there;
-* the portable fallback (used in this sandbox, plain parquet) is
-  union + window-dedup keep-latest, written to a new snapshot directory
-  and atomically pointed to — never read-and-overwrite in place.
+* the portable fallback (plain parquet, no Iceberg runtime) is one
+  ``groupBy(keys)`` aggregate over existing ∪ batch, written to a new
+  snapshot directory and atomically pointed to — never
+  read-and-overwrite in place.
 
-Both paths have the same observable semantics: at most one row per key,
-latest batch wins, re-running the same batch is a no-op.
+Both paths have the same observable semantics — at most one row per
+key, each value column resolved by its merge rule, re-running a
+``latest_wins`` or ``merge_props`` batch a no-op — because both read
+one rule table, ``_merge_rules``: the fallback resolves existing ∪
+batch with its aggregate (``_resolve``); the Iceberg path collapses the
+batch with that same aggregate, then MERGEs with the table's SET list
+(``merge_into_sql``).
 """
 
 from __future__ import annotations
@@ -26,9 +32,11 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 _POINTER = "_LATEST"
+#: The fallback's batch order column: ``upsert`` stamps each call's rows
+#: with a sequence number above every one the snapshot holds.
+_SEQ = "_batch_seq"
 
 
 def _read_pointer(path: str) -> dict | None:
@@ -121,6 +129,107 @@ def snapshot_summary_props(
     return None
 
 
+def _merge_rules(
+    columns: list[str],
+    keys: list[str],
+    mode: str = "latest_wins",
+    merge_cols: list[str] | None = None,
+    exclude_update_cols: list[str] | None = None,
+    add_cols: list[str] | None = None,
+    min_cols: list[str] | None = None,
+) -> dict[str, str]:
+    """The sink's merge policy: one rule per value column of ``columns``
+    (keys and ``_batch_seq`` have none), in column order. ``_resolve``
+    renders it as a DataFrame aggregate and ``merge_into_sql`` as the
+    MERGE SET list, so each rule is stated here once:
+
+    * ``first`` — first writer wins (``exclude_update_cols``; Neo4j
+      ``ON CREATE SET``, e.g. first-seen lineage columns);
+    * ``sum`` — values add (``add_cols``, ``mode="additive"``);
+    * ``min`` — the least value wins (``min_cols``, ``mode="additive"``);
+    * ``merge`` — the sorted-distinct union of comma-splits
+      (``merge_cols``, ``mode="merge_props"``: the order-insensitive
+      ``ON MATCH SET x = x + "," + row.x`` of david_gene_name.cql:40-42);
+    * ``latest`` — the latest batch's value.
+
+    A column named under several rules takes the first in that order.
+    """
+    listed = (
+        ("first", exclude_update_cols),
+        ("sum", add_cols if mode == "additive" else None),
+        ("min", min_cols if mode == "additive" else None),
+        ("merge", merge_cols if mode == "merge_props" else None),
+    )
+    return {
+        c: next((rule for rule, cs in listed if c in (cs or ())), "latest")
+        for c in columns
+        if c not in keys and c != _SEQ
+    }
+
+
+def _resolve(
+    rows: DataFrame,
+    keys: list[str],
+    rules: dict[str, str],
+    mode: str,
+    merge_cols: list[str],
+    order_col: str = _SEQ,
+) -> DataFrame:
+    """``rules`` rendered as ONE ``groupBy(keys)`` aggregate over ``rows``:
+    a row per key, ``order_col`` resolved to its maximum. Order ties
+    break on the value (``struct(order, c)``), never on arrival order.
+
+    Under ``latest_wins`` every ``latest`` column comes from one row:
+    the highest ``order_col``, then the lowest ``xxhash64`` of the value
+    columns — the row ``Window.partitionBy(keys).orderBy(desc(order),
+    hash)`` keeps. Other modes resolve ``latest`` per column. The
+    result keeps ``rows``' column layout, except under ``merge_props``:
+    keys, ``merge_cols``, the other value columns, no order column."""
+    order = F.col(order_col)
+    render = {
+        "first": lambda c: F.min_by(c, F.struct(order, F.col(c))),
+        "sum": F.sum,
+        "min": F.min,
+        "merge": lambda c: F.array_join(
+            F.array_sort(
+                F.filter(
+                    F.array_distinct(
+                        F.flatten(
+                            F.collect_list(F.split(F.coalesce(F.col(c), F.lit("")), ","))
+                        )
+                    ),
+                    lambda x: x != "",
+                )
+            ),
+            ",",
+        ),
+        "latest": lambda c: F.max_by(c, F.struct(order, F.col(c))),
+    }
+    row = [c for c, r in rules.items() if r == "latest"] if mode == "latest_wins" else []
+    aggs = [render[r](c).alias(c) for c, r in rules.items() if c not in row]
+    if row:
+        tiebreak = F.xxhash64(*[F.col(c).cast("string") for c in rules])
+        aggs.append(F.min_by(F.struct(*row), F.struct(-order, tiebreak)).alias("_row"))
+    merged = rows.groupBy(*keys).agg(*aggs, F.max(order).alias(order_col))
+    if mode == "merge_props":
+        return merged.select(*keys, *merge_cols, *(c for c in rules if c not in merge_cols))
+    return merged.select(*(F.col("_row")[c].alias(c) if c in row else c for c in rows.columns))
+
+
+#: Each rule's ON MATCH update as MERGE SET text; ``first`` columns stay
+#: out of the SET list, so the target keeps its value.
+_SET_SQL = {
+    "sum": "t.{c} + s.{c}",
+    "min": "least(t.{c}, s.{c})",
+    "merge": (
+        "array_join(array_sort(filter(array_distinct(concat("
+        "split(coalesce(t.{c}, ''), ','), split(coalesce(s.{c}, ''), ','))), "
+        "x -> x != '')), ',')"
+    ),
+    "latest": "s.{c}",
+}
+
+
 def merge_into_sql(
     table: str,
     src_view: str,
@@ -132,64 +241,23 @@ def merge_into_sql(
     add_cols: list[str] | None = None,
     min_cols: list[str] | None = None,
 ) -> str:
-    """MERGE INTO statement with the same observable semantics as the
-    parquet-snapshot fallback. Pure string builder so the SQL shape is
-    unit-testable without the Iceberg jar.
-
-    * ``latest_wins``: matched rows are overwritten by the batch row
-      (the batch is pre-deduped to one row per key before the MERGE).
-    * ``merge_props``: matched rows comma-merge ``merge_cols`` as
-      sorted-distinct unions of both sides' comma-splits (the
-      order-insensitive ON MATCH aggregate of david_gene_name.cql:40-42)
-      and take the batch value for every other column.
-    * ``additive``: matched rows SUM ``add_cols`` (``t.c = t.c + s.c``
-      — the streaming provenance merge's support counts), take
-      ``least`` for ``min_cols`` (stable dimension facts like
-      ``family``), and the batch value for every other column. This is
-      the O(|batch|) cluster form of the provenance snapshot merge:
-      each micro-batch touches only its own keys instead of rewriting
-      the whole snapshot.
-    * ``exclude_update_cols``: columns omitted from the WHEN MATCHED
-      update list — the target keeps its original value. This is how
-      first-seen lineage columns (``first_seen_run``) survive upserts:
-      they are INSERTed for new keys but never overwritten on match.
-    """
+    """MERGE INTO statement whose WHEN MATCHED SET list is
+    ``_merge_rules``' table rendered through ``_SET_SQL``. ``src_view``
+    must hold one row per key. Pure string builder so the SQL shape is
+    unit-testable without the Iceberg jar."""
     on = " AND ".join(f"t.{k} <=> s.{k}" for k in keys)
-    excl = set(exclude_update_cols or [])
-    value_cols = [c for c in columns if c not in keys and c not in excl]
-    if mode == "merge_props":
-        mc = set(merge_cols or [])
-        sets = []
-        for c in value_cols:
-            if c in mc:
-                sets.append(
-                    f"t.{c} = array_join(array_sort(filter(array_distinct("
-                    f"concat(split(coalesce(t.{c}, ''), ','), "
-                    f"split(coalesce(s.{c}, ''), ','))), x -> x != '')), ',')"
-                )
-            else:
-                sets.append(f"t.{c} = s.{c}")
-    elif mode == "additive":
-        ac = set(add_cols or [])
-        mnc = set(min_cols or [])
-        sets = []
-        for c in value_cols:
-            if c in ac:
-                sets.append(f"t.{c} = t.{c} + s.{c}")
-            elif c in mnc:
-                sets.append(f"t.{c} = least(t.{c}, s.{c})")
-            else:
-                sets.append(f"t.{c} = s.{c}")
-    elif excl:
-        sets = [f"t.{c} = s.{c}" for c in value_cols]
-    else:
-        sets = None
-    if sets is None:
+    rules = _merge_rules(
+        columns, keys, mode, merge_cols, exclude_update_cols, add_cols, min_cols
+    )
+    sets = [
+        f"t.{c} = " + _SET_SQL[r].format(c=c) for c, r in rules.items() if r != "first"
+    ]
+    if all(r == "latest" for r in rules.values()):
         matched = "WHEN MATCHED THEN UPDATE SET * "
     elif sets:
         matched = "WHEN MATCHED THEN UPDATE SET " + ", ".join(sets) + " "
     else:
-        # every value column excluded: omit WHEN MATCHED entirely —
+        # every value column first-writer: omit WHEN MATCHED entirely —
         # SQL MERGE allows an INSERT-only statement, matched rows are
         # left untouched (a self-assignment would pointlessly rewrite
         # rows and some engines reject updating ON-condition columns)
@@ -204,15 +272,11 @@ def _upsert_iceberg(
     df: DataFrame,
     table: str,
     keys: list[str],
-    mode: str,
-    merge_cols: list[str] | None,
-    exclude_update_cols: list[str] | None = None,
-    add_cols: list[str] | None = None,
-    min_cols: list[str] | None = None,
+    policy: dict,
     commit_props: dict | None = None,
 ) -> None:
     """One atomic MERGE INTO commit (snapshot isolation) — the scale
-    sink; the parquet snapshot dir is the sandbox stand-in.
+    sink; the parquet snapshot dir is the portable stand-in.
 
     ``commit_props`` are attached to the MERGE's own snapshot summary
     (via ``SNAPSHOT_PROP_PREFIX`` session confs), so guard metadata and
@@ -222,36 +286,14 @@ def _upsert_iceberg(
     MERGE (instead of CTAS) so even batch 0's guard rides a MERGE
     commit."""
     spark = df.sparkSession
-    # MERGE requires a unique source key set: collapse the batch first.
-    if mode == "additive":
-        # additive collapse: sums add within the batch, mins/firsts
-        # resolve deterministically — so a batch that emits a key twice
-        # contributes the same totals as two separate batches would
-        value_cols = [c for c in df.columns if c not in keys]
-        ac, mnc = set(add_cols or []), set(min_cols or [])
-        aggs = []
-        for c in value_cols:
-            if c in ac:
-                aggs.append(F.sum(c).alias(c))
-            elif c in mnc or c in set(exclude_update_cols or []):
-                aggs.append(F.min(c).alias(c))
-            else:
-                aggs.append(F.max(c).alias(c))
-        batch = df.groupBy(*keys).agg(*aggs).select(*df.columns)
-    else:
-        # deterministic content tiebreak, same rule as the fallback
-        value_cols = [c for c in df.columns if c not in keys]
-        tiebreak = (
-            F.xxhash64(*[F.col(c).cast("string") for c in value_cols])
-            if value_cols
-            else F.lit(0)
-        )
-        w = Window.partitionBy(*keys).orderBy(tiebreak)
-        batch = (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+    # MERGE requires a unique source key set: collapse the batch with
+    # the fallback's aggregate, every row at one order, so a batch that
+    # repeats a key resolves as it does in the fallback
+    rules = _merge_rules(df.columns, keys, **policy)
+    batch = _resolve(
+        df.withColumn(_SEQ, F.lit(0)), keys, rules, policy["mode"],
+        policy["merge_cols"] or [],
+    ).select(*df.columns)
     view = f"_kgflow_merge_src_{os.getpid()}"
     batch.createOrReplaceTempView(view)
     prop_keys = [SNAPSHOT_PROP_PREFIX + k for k in (commit_props or {})]
@@ -276,12 +318,7 @@ def _upsert_iceberg(
                 return
         for k, v in (commit_props or {}).items():
             spark.conf.set(SNAPSHOT_PROP_PREFIX + k, str(v))
-        spark.sql(
-            merge_into_sql(
-                table, view, batch.columns, keys, mode, merge_cols,
-                exclude_update_cols, add_cols, min_cols,
-            )
-        )
+        spark.sql(merge_into_sql(table, view, batch.columns, keys, **policy))
     finally:
         spark.catalog.dropTempView(view)
         for k in prop_keys:
@@ -292,58 +329,48 @@ def upsert(
     df: DataFrame,
     path: str,
     keys: list[str],
-    order_col: str = "_batch_seq",
     mode: str = "latest_wins",
     merge_cols: list[str] | None = None,
     iceberg_table: str | None = None,
     exclude_update_cols: list[str] | None = None,
     add_cols: list[str] | None = None,
     min_cols: list[str] | None = None,
-    meta: dict | None = None,
     commit_props: dict | None = None,
 ) -> None:
-    """MERGE-semantics upsert: one row per key, highest ``order_col`` wins;
-    ties broken deterministically by the remaining columns' hash (no
-    first-writer-wins nondeterminism — SURVEY.md §7.5.2).
+    """MERGE-semantics upsert of ``df`` into the table keyed by ``keys``:
+    one row per key, each value column resolved by ``_merge_rules``.
 
-    ``mode="merge_props"`` reproduces the reference's ON MATCH
-    aggregate-merge (``david_gene_name.cql:40-42``: ``SET g.GENE_NAME =
-    g.GENE_NAME + "," + row.GENE_NAME``): for each column in
-    ``merge_cols`` the surviving value is the comma-join of the sorted
-    distinct values seen across all batches (order-insensitive — the
-    deterministic replacement for the reference's arrival-order concat,
-    and what makes re-running the same batch a no-op); the remaining
-    columns keep latest-batch-wins semantics.
+    * ``mode="latest_wins"``: the latest batch's row wins whole; rows
+      of one batch that share a key break the tie on their content hash
+      (no first-writer-wins nondeterminism — SURVEY.md §7.5.2).
+    * ``mode="merge_props"``: the reference's ON MATCH aggregate-merge
+      (``david_gene_name.cql:40-42``: ``SET g.GENE_NAME = g.GENE_NAME +
+      "," + row.GENE_NAME``): each of ``merge_cols`` keeps the comma-join
+      of the sorted distinct values seen across all batches
+      (order-insensitive, so re-running a batch is a no-op); every other
+      column takes its latest batch's value.
+    * ``mode="additive"``: ``add_cols`` SUM across batches (``n_obs``
+      support counts), ``min_cols`` keep the minimum, other value
+      columns take the latest batch's value.
+    * ``exclude_update_cols`` (any mode): first writer wins (first-seen
+      lineage, e.g. ``build_triples_prov.first_seen_run``).
 
     ``iceberg_table``: when given AND the Iceberg runtime is on the
     classpath, the upsert is one atomic MERGE INTO against that table
-    (no batch-seq bookkeeping needed — commit order is the order) and
-    ``path`` is untouched; otherwise the portable snapshot-dir fallback
-    below runs, so the same call sites work with or without the jar.
-
-    ``exclude_update_cols``: first-writer-wins columns (first-seen
-    lineage, e.g. ``build_triples_prov.first_seen_run``). On the Iceberg
-    path they are omitted from the WHEN MATCHED update list; the
-    fallback resolves them with ``min_by(order_col)`` — earliest batch
-    wins — so both sinks observe the same rule.
-
-    ``mode="additive"``: ``add_cols`` SUM across batches (``n_obs``
-    support counts), ``min_cols`` keep the minimum, other value columns
-    latest-batch-wins. On Iceberg this is an O(|batch|)-touch MERGE;
-    the fallback re-aggregates existing ∪ batch (the snapshot rewrite
-    the Iceberg path exists to avoid).
-
-    ``meta`` rides the fallback's snapshot pointer flip atomically;
-    ``commit_props`` is its Iceberg twin — snapshot summary properties
-    attached to the MERGE's own commit (each path ignores the other's
-    carrier).
+    and ``path`` is untouched; ``commit_props`` are snapshot summary
+    properties attached to that commit. Otherwise the portable fallback
+    runs: one aggregate over the snapshot at ``path`` ∪ ``df``, written
+    as a new snapshot — O(|snapshot|) per call, the rewrite the MERGE
+    exists to avoid. Either way the same call sites work with or
+    without the jar.
     """
     spark = df.sparkSession
+    policy = dict(
+        mode=mode, merge_cols=merge_cols, exclude_update_cols=exclude_update_cols,
+        add_cols=add_cols, min_cols=min_cols,
+    )
     if iceberg_table is not None and iceberg_available(spark):
-        _upsert_iceberg(
-            df, iceberg_table, keys, mode, merge_cols, exclude_update_cols,
-            add_cols, min_cols, commit_props,
-        )
+        _upsert_iceberg(df, iceberg_table, keys, policy, commit_props)
         return
     existing = read_table(spark, path)
     # Monotonic batch sequence: next = max(existing) + 1, so two upserts
@@ -352,140 +379,40 @@ def upsert(
     # write. The max() is a tiny agg over the keyed snapshot this
     # fallback sink rewrites anyway (Iceberg MERGE INTO needs no seq).
     seq = int(time.time() * 1000)
-    if existing is not None and order_col in existing.columns:
-        prev = existing.agg(F.max(order_col)).first()[0]
+    if existing is not None and _SEQ in existing.columns:
+        prev = existing.agg(F.max(_SEQ)).first()[0]
         if prev is not None:
             seq = max(seq, int(prev) + 1)
-    batch = df
-    if order_col not in batch.columns:
-        batch = batch.withColumn(order_col, F.lit(seq))
+    rows = df.withColumn(_SEQ, F.lit(seq))
     if existing is not None:
-        if order_col not in existing.columns:
-            existing = existing.withColumn(order_col, F.lit(0))
-        batch = existing.unionByName(batch, allowMissingColumns=True)
-    excl = [
-        c
-        for c in (exclude_update_cols or [])
-        if c in batch.columns and c not in keys and c != order_col
-    ]
-
-    def _keep_first(merged: DataFrame) -> DataFrame:
-        # first-writer-wins columns: earliest batch's value, deterministic
-        # tiebreak by the value itself; joined back on the same keys the
-        # merge just shuffled on. The join is NULL-SAFE — plain key
-        # equality would silently drop every row with a NULL key value
-        # (in-contract: merge_into_sql uses `t.k <=> s.k` for the same
-        # reason, and the window merge above handles NULL keys fine).
-        firsts = batch.groupBy(*keys).agg(
-            *[
-                F.min_by(F.col(c), F.struct(F.col(order_col), F.col(c))).alias(c)
-                for c in excl
-            ]
-        )
-        cols = merged.columns
-        lhs = merged.drop(*excl)
-        cond = None
-        for k in keys:
-            c = lhs[k].eqNullSafe(firsts[k])
-            cond = c if cond is None else cond & c
-        return (
-            lhs.join(firsts, cond)
-            .drop(*[firsts[k] for k in keys])
-            .select(*cols)
-        )
-
-    if mode == "merge_props":
-        merged = merge_props_resolve(batch, keys, merge_cols or [], order_col)
-        write_snapshot(_keep_first(merged) if excl else merged, path, meta=meta)
-        return
-    if mode == "additive":
-        ac, mnc = set(add_cols or []), set(min_cols or [])
-        value_cols = [c for c in batch.columns if c not in keys and c != order_col]
-        aggs = []
-        for c in value_cols:
-            if c in excl:
-                continue  # resolved by _keep_first below
-            if c in ac:
-                aggs.append(F.sum(c).alias(c))
-            elif c in mnc:
-                aggs.append(F.min(c).alias(c))
-            else:
-                aggs.append(
-                    F.max_by(F.col(c), F.struct(F.col(order_col), F.col(c))).alias(c)
-                )
-        aggs.append(F.max(order_col).alias(order_col))
-        merged = batch.groupBy(*keys).agg(*aggs)
-        if excl:
-            # first-writer-wins columns: earliest batch's value, null-safe
-            # join back on the keys (same contract as _keep_first)
-            firsts = batch.groupBy(*keys).agg(
-                *[
-                    F.min_by(F.col(c), F.struct(F.col(order_col), F.col(c))).alias(c)
-                    for c in excl
-                ]
-            )
-            cond = None
-            for k in keys:
-                c = merged[k].eqNullSafe(firsts[k])
-                cond = c if cond is None else cond & c
-            merged = (
-                merged.join(firsts, cond)
-                .drop(*[firsts[k] for k in keys])
-            )
-        merged = merged.select(*batch.columns)
-        write_snapshot(merged, path, meta=meta)
-        return
-    value_cols = [c for c in batch.columns if c not in keys and c != order_col]
-    content_tiebreak = (
-        F.xxhash64(*[F.col(c).cast("string") for c in value_cols])
-        if value_cols
-        else F.lit(0)  # key-only table: rows are identical beyond the key
-    )
-    w = Window.partitionBy(*keys).orderBy(F.desc(order_col), content_tiebreak)
-    merged = (
-        batch.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    write_snapshot(_keep_first(merged) if excl else merged, path, meta=meta)
+        if _SEQ not in existing.columns:
+            existing = existing.withColumn(_SEQ, F.lit(0))
+        rows = existing.unionByName(rows, allowMissingColumns=True)
+    rules = _merge_rules(rows.columns, keys, **policy)
+    write_snapshot(_resolve(rows, keys, rules, mode, merge_cols or []), path)
 
 
 def merge_props_resolve(
     batch: DataFrame,
     keys: list[str],
     merge_cols: list[str],
-    order_col: str = "_batch_seq",
+    order_col: str = _SEQ,
 ) -> DataFrame:
-    """Pure resolution rule behind ``upsert(mode="merge_props")`` (C1).
-
-    One row per key. ``merge_cols`` values are split on ',', flattened
-    across all rows of the key group, deduped, sorted, re-joined with
-    ',' — the order-insensitive form of Neo4j's ``ON MATCH SET x = x +
-    "," + row.x`` (``david_gene_name.cql:40-42``). Other value columns
-    take the latest batch's value (ties broken by max — deterministic).
+    """Pure resolution rule behind ``upsert(mode="merge_props")`` (C1):
+    ``_merge_rules`` with ``mode="merge_props"`` over ``batch``, whose
+    ``order_col`` orders its rows. One row per key: each of
+    ``merge_cols`` holds the sorted distinct ',' -split values of the
+    key's rows re-joined with ',' — the order-insensitive form of
+    Neo4j's ``ON MATCH SET x = x + "," + row.x``
+    (``david_gene_name.cql:40-42``); other value columns take the
+    highest ``order_col``'s value (ties broken by max — deterministic).
     Exposed separately so the same rule is oracle-checkable without a
     filesystem sink.
     """
-    other = [c for c in batch.columns if c not in keys and c not in merge_cols and c != order_col]
-    aggs = [
-        F.array_join(
-            F.array_sort(
-                F.filter(
-                    F.array_distinct(
-                        F.flatten(
-                            F.collect_list(F.split(F.coalesce(F.col(c), F.lit("")), ","))
-                        )
-                    ),
-                    lambda x: x != "",
-                )
-            ),
-            ",",
-        ).alias(c)
-        for c in merge_cols
-    ]
-    aggs += [F.max_by(F.col(c), F.struct(F.col(order_col), F.col(c))).alias(c) for c in other]
-    out = batch.groupBy(*keys).agg(*aggs)
-    return out.select(*keys, *merge_cols, *other)
+    rules = _merge_rules(
+        [c for c in batch.columns if c != order_col], keys, "merge_props", merge_cols
+    )
+    return _resolve(batch, keys, rules, "merge_props", merge_cols, order_col)
 
 
 def read_pointer_meta(path: str) -> dict | None:
