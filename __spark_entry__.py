@@ -26,10 +26,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from kgflow.functions import text as tx  # noqa: E402
 from kgflow.operators import dedup, sessionize, vector  # noqa: E402
 from kgflow.operators.util import spread  # noqa: E402
+from kgflow.schemas import TESTDATA  # noqa: E402
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return spark.read.schema(TESTDATA[name]).parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 # ---------------------------------------------------------------------------

@@ -253,6 +253,8 @@ def _components(
         """Parquet round-trip (truncates lineage + resets stats). If an
         Observation is attached, its metric is computed by the write job
         and returned alongside — the write already knows its row count.
+        The read-back carries the written frame's schema, so no job
+        infers it from the footers.
         Spills compress with zstd (~3× smaller than the snappy default
         on the long-pair maps this loop writes): the 16-core job is
         bound on spill-disk bandwidth (PERF.md §22's tmpfs A/B), so
@@ -261,7 +263,7 @@ def _components(
         p = f"{spill_dir}/s{spill_seq[0]}"
         spill_seq[0] += 1
         df.write.mode("overwrite").option("compression", _SPILL_CODEC).parquet(p)
-        out = spark.read.parquet(p)
+        out = spark.read.schema(df.schema).parquet(p)
         if obs is None:
             return out
         return out, (obs.get["m"] or 0)
@@ -307,7 +309,7 @@ def _components(
                 "compression", _SPILL_CODEC
             ).parquet(p)
             still = obs.get["m"] or 0
-            full = spark.read.parquet(p)
+            full = spark.read.schema(nxt.schema).parquet(p)
             done_parts.append(full.filter(F.col("_live") == 0).drop("_live"))
             m = full.filter(F.col("_live") == 1).drop("_live")
             if still == 0:

@@ -217,9 +217,10 @@ def _resolve(
 
 
 #: Each rule's ON MATCH update as MERGE SET text; ``first`` columns stay
-#: out of the SET list, so the target keeps its value.
+#: out of the SET list, so the target keeps its value. ``sum`` skips a
+#: NULL side, as the fallback's ``F.sum`` does.
 _SET_SQL = {
-    "sum": "t.{c} + s.{c}",
+    "sum": "coalesce(t.{c} + s.{c}, t.{c}, s.{c})",
     "min": "least(t.{c}, s.{c})",
     "merge": (
         "array_join(array_sort(filter(array_distinct(concat("

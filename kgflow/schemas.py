@@ -1,5 +1,5 @@
 """StructTypes of the pipeline's inputs (transcripts and the lexicon
-dimensions) and the names of the benchmark's testdata tables.
+dimensions) and the schemas of the benchmark's testdata tables.
 
 The shapes derive from the reference's data model (SURVEY.md §1) and from
 ``BASELINE.json.input_hint`` (transcripts).
@@ -49,15 +49,37 @@ LEXICON_ISA_EDGE = T.StructType(
 
 # -- testdata ---------------------------------------------------------------
 
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+#: The benchmark's testdata tables, name → DDL in file column order: the
+#: schema Spark infers from each parquet footer (pyarrow's naive
+#: timestamps come back as timestamp_ntz). Reading with it starts no
+#: schema-inference job.
+TESTDATA = {
+    "region": "r_regionkey int, r_name string",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "customer": (
+        "c_custkey bigint, c_name string, c_nationkey int, c_acctbal double, "
+        "c_mktsegment string"
+    ),
+    "supplier": "s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double",
+    "part": (
+        "p_partkey bigint, p_name string, p_brand string, p_type string, "
+        "p_size int, p_retailprice double"
+    ),
+    "orders": (
+        "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
+        "o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string"
+    ),
+    "lineitem": (
+        "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, l_linenumber int, "
+        "l_quantity double, l_extendedprice double, l_discount double, l_tax double, "
+        "l_returnflag string, l_linestatus string, l_shipdate timestamp_ntz"
+    ),
+    "events": (
+        "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, "
+        "value double, props string"
+    ),
+    "documents": "doc_id bigint, text string, lang string, source string, n_chars bigint",
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+}
+
+TESTDATA_TABLES = tuple(TESTDATA)

@@ -348,8 +348,8 @@ def read_prov_triples(spark: SparkSession, out_dir: str) -> DataFrame | None:
 
 def read_stream_triples(spark: SparkSession, out_dir: str) -> DataFrame:
     return (
-        spark.read.parquet(os.path.join(out_dir, "triples"))
-        .select("subj", "pred", "obj")
+        spark.read.schema("subj string, pred string, obj string")
+        .parquet(os.path.join(out_dir, "triples"))
         .dropDuplicates()
     )
 
@@ -392,4 +392,4 @@ def streaming_sessions(
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(os.path.join(out_dir, "sessions"))
+    return spark.read.schema(agg.schema).parquet(os.path.join(out_dir, "sessions"))

@@ -109,8 +109,10 @@ def stateful_next_turn(
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(os.path.join(out_dir, "next_turn")).dropDuplicates(
-        ["subj", "pred", "obj"]
+    return (
+        spark.read.schema(edges.schema)
+        .parquet(os.path.join(out_dir, "next_turn"))
+        .dropDuplicates(["subj", "pred", "obj"])
     )
 
 
@@ -208,6 +210,8 @@ def streaming_exact_dedup(
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(
-        os.path.join(out_dir, "dedup_verdicts")
-    ).dropDuplicates(["doc_id"])
+    return (
+        spark.read.schema(verdicts.schema)
+        .parquet(os.path.join(out_dir, "dedup_verdicts"))
+        .dropDuplicates(["doc_id"])
+    )

@@ -575,13 +575,37 @@ def test_merge_into_sql_additive(spark):
         exclude_update_cols=["first_seen_run"],
     )
     matched = sql.split("WHEN MATCHED")[1].split("WHEN NOT MATCHED")[0]
-    assert "t.n_obs = t.n_obs + s.n_obs" in matched
-    assert "t.n_convs = t.n_convs + s.n_convs" in matched
+    assert "t.n_obs = coalesce(t.n_obs + s.n_obs, t.n_obs, s.n_obs)" in matched
+    assert "t.n_convs = coalesce(t.n_convs + s.n_convs, t.n_convs, s.n_convs)" in matched
     assert "t.family = least(t.family, s.family)" in matched
     assert "first_seen_run" not in matched
     assert "WHEN NOT MATCHED THEN INSERT *" in sql
     # the generated SET expressions are valid Spark SQL
     assert spark.sql("SELECT 3 + 4 AS a, least('x', 'b') AS f").first()[1] == "b"
+
+
+def test_merge_sum_set_matches_fallback_on_nulls(spark, tmp_path):
+    """The additive MERGE's SET expression for a ``sum`` column, run as
+    Spark SQL, gives what two fallback upserts leave when either value is
+    NULL: the NULL side is skipped, as ``F.sum`` skips it."""
+    sql = mat.merge_into_sql("tbl", "src", ["k", "n"], ["k"], mode="additive", add_cols=["n"])
+    expr = sql.split("UPDATE SET t.n = ")[1].split(" WHEN NOT MATCHED")[0]
+
+    def lit(v):
+        return f"CAST({'NULL' if v is None else v} AS BIGINT)"
+
+    for i, (old, new) in enumerate([(1, None), (None, 2), (None, None)]):
+        got = spark.sql(
+            f"SELECT {expr} AS n FROM (SELECT {lit(old)} AS n) t "
+            f"CROSS JOIN (SELECT {lit(new)} AS n) s"
+        ).first().n
+        path = str(tmp_path / f"p{i}")
+        for v in (old, new):
+            mat.upsert(
+                spark.createDataFrame([("a", v)], "k string, n long"),
+                path, keys=["k"], mode="additive", add_cols=["n"],
+            )
+        assert got == mat.read_table(spark, path).first().n, (old, new)
 
 
 def test_upsert_additive_fallback(spark, tmp_path):

@@ -804,7 +804,9 @@ def test_aho_match_set_all_occurrences():
 def test_contamination_probe_ac_matches_literal_token_form(spark, tmp_path):
     """The AC probe query equals the one-scan token-boundary form (the
     padded-contains expression the oracle uses) on a corpus with nested
-    probes and partial-token near-misses."""
+    probes and partial-token near-misses. The corpus file has three of
+    the declared ``documents`` columns; ``_t`` reads the other two
+    (``lang``, ``n_chars``) as NULL, and the query never touches them."""
     import __spark_entry__ as entry
     from kgflow.functions import text as tx
 
@@ -1519,6 +1521,61 @@ def test_no_inline_default_parallelism_repartition():
             ):
                 hits.append(f"{f.relative_to(root)}:{node.lineno}")
     assert hits == []
+
+
+# Batch reads that infer their schema from the files, as
+# "<file stem>.<enclosing function>", each with the reason it does.
+_INFERRING_READS = {
+    "incremental.incremental_doc_stats": "probes the caller's document drop for its shape",
+    "incremental.streaming_sessions": "probes the caller's event drop for its shape",
+    "checkpoint.read_ledger": "the JSON ledger's keys grow with the ledger version",
+}
+
+
+def test_batch_reads_declare_their_schema():
+    """Every ``.read.parquet(`` / ``.read.json(`` call in ``kgflow/`` and
+    ``__spark_entry__.py`` has ``.schema(`` in its receiver chain: a read
+    without one starts a Spark job to infer the schema from the footers.
+    Only the reads of ``_INFERRING_READS`` infer, and each of its
+    entries still names such a read."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    files = [root / "__spark_entry__.py", *sorted((root / "kgflow").rglob("*.py"))]
+    hits, seen = [], set()
+
+    def chain(node):
+        """Attribute names of a call's receiver chain, innermost last."""
+        names = []
+        while isinstance(node, ast.Call | ast.Attribute):
+            if isinstance(node, ast.Attribute):
+                names.append(node.attr)
+            node = node.func if isinstance(node, ast.Call) else node.value
+        return names
+
+    def visit(node, f, scope):
+        if isinstance(node, ast.FunctionDef):
+            scope = node.name
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("parquet", "json")
+        ):
+            names = chain(node.func.value)
+            if "read" in names and "schema" not in names:
+                key = f"{f.stem}.{scope}"
+                if key in _INFERRING_READS:
+                    seen.add(key)
+                else:
+                    hits.append(f"{f.relative_to(root)}:{node.lineno} {key}")
+        for child in ast.iter_child_nodes(node):
+            visit(child, f, scope)
+
+    for f in files:
+        visit(ast.parse(f.read_text()), f, "<module>")
+    assert hits == []
+    assert seen == set(_INFERRING_READS)
 
 
 # Top-level kgflow names that no product entry point reaches but that
