@@ -716,23 +716,10 @@ def q_multimodal_decode(spark, sf):
 
     import pandas as pd  # noqa: PLC0415
 
-    width = (F.lit(64) + F.col("doc_id") % 192).cast("long")
-    height = (F.lit(64) + (F.col("doc_id") * 7) % 128).cast("long")
-    ihdr = F.concat(
-        F.lpad(F.hex(width), 8, "0"),
-        F.lpad(F.hex(height), 8, "0"),
-        F.lit("0802000000"),  # bit depth 8, color type 2 (RGB), no interlace
-    )
-    crc = F.crc32(F.to_binary(F.concat(F.lit("49484452"), ihdr), F.lit("hex")))
-    png_hex = F.concat(
-        F.lit("89504E470D0A1A0A"),  # PNG signature
-        F.lit("0000000D"),  # IHDR length = 13
-        F.lit("49484452"),  # 'IHDR'
-        ihdr,
-        F.lpad(F.hex(crc), 8, "0"),
-    )
+    from kgflow.operators import multimodal  # noqa: PLC0415
+
     d = _t(spark, sf, "documents").select(
-        "doc_id", F.to_binary(png_hex, F.lit("hex")).alias("payload")
+        "doc_id", multimodal.synth_png_payload("doc_id").alias("payload")
     )
 
     def decode(batches):
@@ -748,9 +735,7 @@ def q_multimodal_decode(spark, sf):
             }
             for did, b in zip(pdf["doc_id"], pdf["payload"]):
                 b = bytes(b)
-                assert b[:8] == b"\x89PNG\r\n\x1a\n", "bad PNG signature"
-                assert b[12:16] == b"IHDR"
-                w, h = struct.unpack(">II", b[16:24])
+                w, h = multimodal.png_size(b)
                 crc_stored = struct.unpack(">I", b[29:33])[0]
                 out["doc_id"].append(did)
                 out["width"].append(w)

@@ -46,9 +46,6 @@ from pyspark.sql.window import Window
 #: form.
 _SPILL_CODEC = "zstd"
 
-#: row bound under which a size-gated small side is broadcast
-_BROADCAST_ROWS = 4_000_000
-
 
 def dedup_keep_first(df: DataFrame, keys: list[str], order_by: list) -> DataFrame:
     """Duplicate-group resolution (C3): deterministic keep-one per key."""
@@ -484,11 +481,11 @@ def _components(
             # — no per-component re-minimum; and since nodes carried
             # orig through the label join, the id side is already
             # decoded. Only the component REPRESENTATIVES need a lookup
-            # (≤ components, usually tiny → size-gated broadcast; the
-            # gate also avoids the skewed shuffle a giant component's
-            # repeated canonical key would create in a plain join).
-            from .util import gated_broadcast
-
+            # (≤ components, usually tiny). cdim is read back from its
+            # spill, so the planner sizes it from the spill's bytes and
+            # broadcasts it under the byte threshold; above it, AQE's
+            # skew-join split handles a giant component's repeated
+            # canonical key.
             lab = spill(
                 labels.select(
                     F.col("orig").alias("id"), F.col("canonical_id").alias("_ce")
@@ -500,9 +497,9 @@ def _components(
                     F.col("enc").alias("_ce2"), F.col("orig").alias("canonical_id")
                 )
             )
-            labels = lab.join(
-                gated_broadcast(cdim, _BROADCAST_ROWS), lab["_ce"] == cdim["_ce2"]
-            ).select("id", "canonical_id")
+            labels = lab.join(cdim, lab["_ce"] == cdim["_ce2"]).select(
+                "id", "canonical_id"
+            )
         else:
             labels = labels.select("id", "canonical_id")
         out = labels.localCheckpoint(eager=True)
@@ -516,7 +513,6 @@ def update_components(
     new_edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    broadcast_threshold: int | None = _BROADCAST_ROWS,
 ) -> DataFrame:
     """Incrementally maintain a ``connected_components`` mapping under
     edge ADDITIONS — the streaming form of entity consolidation (new
@@ -539,17 +535,12 @@ def update_components(
     the rewritten new-edge graph. The delta covers only ids touched by
     new edges — but the new-edge BATCH itself is unbounded (a bulk
     ontology refresh or a backfill replay delivers a corpus-fraction
-    edge set), so the delta broadcast is size-GATED like every other
-    small side in this family (``broadcast_threshold`` rows, default
-    4M; ``None`` leaves the strategy to AQE), not forced.
+    edge set), so no join here carries a broadcast hint: AQE picks
+    each strategy from measured bytes.
     """
-    from .util import gated_broadcast
-
     # NOTE join sides: the new-edge set is usually the small side, the
-    # mapping is corpus-scale — never broadcast the mapping (AQE picks
-    # the strategy; on a real deployment the mapping table is bucketed
-    # by id so these are co-located joins). Only the DELTA mapping
-    # below is a broadcast CANDIDATE, and only when measured small.
+    # mapping is corpus-scale (on a real deployment the mapping table is
+    # bucketed by id so these are co-located joins).
     e = new_edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     m_a = mapping.select(F.col("id").alias("_ia"), F.col("canonical_id").alias("_ca"))
     m_b = mapping.select(F.col("id").alias("_ib"), F.col("canonical_id").alias("_cb"))
@@ -562,10 +553,7 @@ def update_components(
         )
     )
     delta = connected_components(rewritten)
-    d = gated_broadcast(
-        delta.select(F.col("id").alias("_f"), F.col("canonical_id").alias("_t")),
-        broadcast_threshold,
-    )
+    d = delta.select(F.col("id").alias("_f"), F.col("canonical_id").alias("_t"))
     # old rows: follow the delta one hop (old canonicals are delta
     # DOMAIN members when touched; delta values are final roots)
     updated_old = (
@@ -618,16 +606,17 @@ def retract_components(
     result equals from-scratch CC on ``(edges - removed) + added``
     (re-adding a just-removed pair included).
 
-    Scale shape: the corpus-scale frames (``mapping``, ``edges``) are
-    touched by ONE semi/anti-join each against the affected-component
-    set, which is sized by the retraction batch, not the corpus — the
-    small sides are size-gated broadcasts (``gated_broadcast``), so a
-    pathological batch touching half the graph degrades to AQE-chosen
-    shuffle joins instead of a driver OOM. The CC re-run sees only the
-    affected subgraph. On a real deployment mapping and edges are
-    bucketed by id/canonical, making the big-side joins co-located.
+    Scale shape: the affected-component set is sized by the retraction
+    batch, not the corpus. ``mapping`` meets it in ONE left join that
+    flags each row, and the members and the untouched rows are two
+    filters of that result; ``edges`` meets the members in one
+    semi-join. No join carries a broadcast hint: AQE picks each
+    strategy from measured bytes, so a pathological batch touching
+    half the graph takes shuffle joins instead of a driver OOM. The CC
+    re-run sees only the affected subgraph. On a real deployment
+    mapping and edges are bucketed by id/canonical, making the
+    big-side joins co-located.
     """
-    from .util import gated_broadcast
 
     def norm(df: DataFrame) -> DataFrame:
         return df.select(
@@ -646,33 +635,30 @@ def retract_components(
         .distinct()
     )
     affected = (
-        mapping.join(gated_broadcast(endpoints, _BROADCAST_ROWS), "id", "left_semi")
-        .select("canonical_id")
+        mapping.join(endpoints, "id", "left_semi")
+        .select(F.col("canonical_id").alias("_hit"))
         .distinct()
     )
-    affected_b = gated_broadcast(affected, _BROADCAST_ROWS)
-    # full membership of the affected components (includes nodes about
-    # to become singletons)
-    members = mapping.join(affected_b, "canonical_id", "left_semi").select(
-        "id", "canonical_id"
-    )
+    # one left join flags every mapping row; the affected components'
+    # full membership (nodes about to become singletons included) and
+    # the untouched rows are filters of that one result
+    flagged = mapping.join(
+        affected, F.col("canonical_id") == F.col("_hit"), "left"
+    ).select("id", "canonical_id", F.col("_hit").isNotNull().alias("_hit"))
+    members = flagged.filter("_hit").select("id", "canonical_id")
+    untouched = flagged.filter(~F.col("_hit")).select("id", "canonical_id")
     # an edge lies inside an affected component iff either endpoint
     # does (both always do — edges never cross components), so one
     # semi-join on `a` slices the corpus-scale edge table
-    member_ids = members.select("id").withColumnRenamed("id", "_aid")
-    surviving = e.join(
-        gated_broadcast(member_ids, _BROADCAST_ROWS),
-        e["a"] == F.col("_aid"),
-        "left_semi",
-    ).join(r, ["a", "b"], "left_anti")
+    member_ids = members.select(F.col("id").alias("_aid"))
+    surviving = e.join(member_ids, e["a"] == F.col("_aid"), "left_semi").join(
+        r, ["a", "b"], "left_anti"
+    )
     recomputed = connected_components(surviving, src="a", dst="b")
     singletons = (
         members.select("id")
         .join(recomputed.select("id"), "id", "left_anti")
         .select("id", F.col("id").alias("canonical_id"))
-    )
-    untouched = mapping.join(affected_b, "canonical_id", "left_anti").select(
-        "id", "canonical_id"
     )
     return untouched.unionByName(recomputed).unionByName(singletons)
 

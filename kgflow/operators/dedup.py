@@ -42,15 +42,12 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions import text as tx
-from .util import gated_broadcast, spread
+from .util import spread
 
 # Per-task md5 memo bound (entries), MinHash and SimHash: a MinHash entry
 # holds the K hex digests of one shingle, ~850 bytes at K=8, so a memo
 # stays under ~56 MB per task; past the bound it is cleared and refills.
 _MD5_MEMO_ENTRIES = 65_536
-
-# Row bound under which a size-gated join side is broadcast.
-_BROADCAST_ROWS = 4_000_000
 
 
 def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -768,13 +765,11 @@ def dedup_clusters(
     mapping is a driver dict and ``link.canonicalize`` rewrites the
     corpus ids through it in one narrow stage — no join, no gate. Above
     the threshold the mapping is a distributed frame, and the final
-    assignment joins it against the corpus ids — but on template-heavy
-    web corpora the mapping is a large FRACTION of the corpus (every
-    doc with a verified near-dup), so the broadcast hint is size-GATED
-    (``_BROADCAST_ROWS`` rows, measured on the already-materialized
-    mapping): under the gate it's a map-side join,
-    above it AQE picks the strategy from runtime sizes — never a forced
-    corpus-fraction broadcast.
+    assignment joins it against the corpus ids. On template-heavy web
+    corpora the mapping is a large FRACTION of the corpus (every doc
+    with a verified near-dup), so the join carries no hint: AQE picks
+    the strategy from measured bytes (a broadcast under the threshold,
+    a shuffle above) — never a forced corpus-fraction broadcast.
     """
     from .canon import _components
     from .link import canonicalize
@@ -800,11 +795,7 @@ def dedup_clusters(
         )
         out = (
             docs.select(id_col)
-            .join(
-                gated_broadcast(m, _BROADCAST_ROWS),
-                F.col(id_col) == F.col("_mid"),
-                "left",
-            )
+            .join(m, F.col(id_col) == F.col("_mid"), "left")
             .select(
                 F.col(id_col),
                 F.coalesce("_rep", F.col(id_col)).alias("cluster_rep"),

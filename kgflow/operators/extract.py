@@ -35,9 +35,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-# Row bound under which the size-gated idf table is broadcast.
-_BROADCAST_ROWS = 2_000_000
-
 
 class TokenAhoCorasick:
     """Token-level Aho–Corasick automaton over lower-cased whitespace
@@ -485,11 +482,12 @@ def tfidf_top_terms(
 
     Scale shape: one (doc, term) count aggregate (map-side partial),
     the document-frequency table derived from it by a second vocab-
-    sized aggregate, a 1-row corpus count broadcast, a size-gated join
-    of the df table back onto the (doc, term) counts, then the top-k
-    window — rank ≤ k is a WindowGroupLimit, so each partition keeps
-    at most k rows per document before the window shuffle."""
-    from .util import gated_broadcast, spread
+    sized aggregate, a 1-row corpus count broadcast, one join of the
+    df table back onto the (doc, term) counts (AQE picks the strategy
+    from measured bytes), then the top-k window — rank ≤ k is a
+    WindowGroupLimit, so each partition keeps at most k rows per
+    document before the window shuffle."""
+    from .util import spread
     from ..functions import text as tx
 
     # spread before the tokenize/explode
@@ -505,7 +503,7 @@ def tfidf_top_terms(
         .cast("long")
         .alias("idf6"),
     )
-    scored = tf.join(gated_broadcast(idf, _BROADCAST_ROWS), "tok").select(
+    scored = tf.join(idf, "tok").select(
         id_col, "tok", "tf", (F.col("tf") * F.col("idf6")).alias("score6")
     )
     w = Window.partitionBy(id_col).orderBy(F.desc("score6"), F.asc("tok"))

@@ -53,6 +53,15 @@ def synth_png_payload(doc_id: Column | str) -> Column:
     return F.to_binary(png_hex, F.lit("hex"))
 
 
+def png_size(b: bytes) -> tuple[int, int]:
+    """(width, height) from a payload that starts with the PNG signature
+    and a complete IHDR chunk (33 bytes with its CRC); ``ValueError``
+    for anything else. The one header rule of every PNG decode here."""
+    if len(b) < 33 or b[:8] != PNG_SIG or b[12:16] != b"IHDR":
+        raise ValueError("payload is not a PNG IHDR header")
+    return struct.unpack(">II", b[16:24])
+
+
 def _stub_pixels(w: int, h: int) -> list[int]:
     """Deterministic 8×8 luminance grid from the parsed header — the
     stand-in for a real decode+resize (see module docstring). A coarse
@@ -91,10 +100,7 @@ def image_average_hash(
         for pdf in batches:
             ids, ws, hs = [], [], []
             for did, b in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(b)
-                if b[:8] != PNG_SIG or b[12:16] != b"IHDR":
-                    raise ValueError("payload is not a PNG IHDR header")
-                w, h = struct.unpack(">II", b[16:24])
+                w, h = png_size(bytes(b))
                 ids.append(did)
                 ws.append(w)
                 hs.append(h)
@@ -164,10 +170,7 @@ def image_resize(
         for pdf in batches:
             ids, ws, hs, nws, nhs, thumbs = [], [], [], [], [], []
             for did, b in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(b)
-                if b[:8] != PNG_SIG or b[12:16] != b"IHDR":
-                    raise ValueError("payload is not a PNG IHDR header")
-                w, h = struct.unpack(">II", b[16:24])
+                w, h = png_size(bytes(b))
                 nw, nh = fit(w, h)
                 px = _stub_pixels(w, h)
                 # nearest-neighbor over the 8x8 decoded grid, row-major

@@ -20,9 +20,6 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions import text as tx
 from .util import spread
 
-# Row bound under which a size-gated LM fit table is broadcast.
-_BROADCAST_ROWS = 2_000_000
-
 
 def repetition_stats(
     docs: DataFrame,
@@ -229,12 +226,10 @@ def unigram_logprob_score(
     tokens unseen at fit time take ``floor_lp6``.
 
     Returns (id_col, n_tokens, lm_score). Scale shape: one explode →
-    vocab aggregate (vocab-sized result), a 1-row total broadcast, a
-    size-gated broadcast join of the log-prob table (shuffle join
-    above ``_BROADCAST_ROWS`` rows), one per-doc aggregate.
+    vocab aggregate (vocab-sized result), a 1-row total broadcast, one
+    join of the log-prob table (AQE broadcasts it under the byte
+    threshold and shuffles it above), one per-doc aggregate.
     """
-    from .util import gated_broadcast
-
     toks = spread(docs.select(F.col(id_col), F.col(text_col))).select(
         F.col(id_col), F.explode(tx.tokens(text_col)).alias("tok")
     )
@@ -254,7 +249,7 @@ def unigram_logprob_score(
         .cast("long")
         .alias("lp6"),
     )
-    scored = toks.join(gated_broadcast(lp, _BROADCAST_ROWS), "tok", "left")
+    scored = toks.join(lp, "tok", "left")
     return (
         scored.groupBy(id_col)
         .agg(
@@ -331,15 +326,13 @@ def trigram_logprob_score(
     branch live), else on ``docs``.
 
     Scale shape: three fit aggregates (all map-side partial; the
-    trigram one is pruned BEFORE it is joined or gated), then the
-    token stream left-joins five dimension tables — each size-gated
-    (broadcast below ``_BROADCAST_ROWS`` rows, shuffle hash
-    join above; the web-scale trigram table takes the shuffle, and
-    pruning is what keeps that shuffle side proportional to the HEAD
-    of the distribution) — plus a 1-row total broadcast, and one
-    per-doc aggregate."""
-    from .util import gated_broadcast
-
+    trigram one is pruned BEFORE it is joined), then the token stream
+    left-joins five dimension tables — AQE picks each strategy from
+    measured bytes (broadcast under the threshold, shuffle above; the
+    web-scale trigram table takes the shuffle, and pruning is what
+    keeps that shuffle side proportional to the HEAD of the
+    distribution) — plus a 1-row total broadcast, and one per-doc
+    aggregate."""
     fit = _context_stream(
         fit_docs if fit_docs is not None else docs, text_col
     )
@@ -368,13 +361,12 @@ def trigram_logprob_score(
     )
     uni_prev = uni.select(F.col("tok").alias("prev1"), F.col("cu").alias("cu_prev"))
     uni_cur = uni.select(F.col("tok").alias("cur"), F.col("cu").alias("cu_cur"))
-    thr = _BROADCAST_ROWS
     scored = (
-        stream.join(gated_broadcast(tri, thr), ["prev2", "prev1", "cur"], "left")
-        .join(gated_broadcast(big, thr), ["prev1", "cur"], "left")
-        .join(gated_broadcast(big_ctx, thr), ["prev2", "prev1"], "left")
-        .join(gated_broadcast(uni_prev, thr), "prev1", "left")
-        .join(gated_broadcast(uni_cur, thr), "cur", "left")
+        stream.join(tri, ["prev2", "prev1", "cur"], "left")
+        .join(big, ["prev1", "cur"], "left")
+        .join(big_ctx, ["prev2", "prev1"], "left")
+        .join(uni_prev, "prev1", "left")
+        .join(uni_cur, "cur", "left")
         .crossJoin(F.broadcast(tot))  # 1 row
     )
     a = float(backoff_alpha)
@@ -463,13 +455,10 @@ def bigram_logprob_score(
 
     Scale shape: two fit aggregates (unigram vocab-sized, bigram
     seen-pair-sized), a 1-row total broadcast, then the token stream
-    joined to both tables — size-gated broadcasts below
-    ``_BROADCAST_ROWS`` rows, shuffle hash joins above —
-    and one per-doc aggregate. The bigram table of a web corpus
-    exceeds any broadcast: the gate, not a hint, decides.
+    joined to both tables, and one per-doc aggregate. The bigram table
+    of a web corpus exceeds any broadcast, so no join is hinted: AQE
+    broadcasts a table under the byte threshold and shuffles it above.
     """
-    from .util import gated_broadcast
-
     def pair_stream(d: DataFrame, with_id: bool) -> DataFrame:
         t = tx.tokens(text_col)
         prevs = F.concat(
@@ -500,9 +489,9 @@ def bigram_logprob_score(
     uni_prev = uni.select(F.col("tok").alias("prev"), F.col("cu").alias("cu_prev"))
     uni_cur = uni.select(F.col("tok").alias("cur"), F.col("cu").alias("cu_cur"))
     scored = (
-        stream.join(gated_broadcast(big, _BROADCAST_ROWS), ["prev", "cur"], "left")
-        .join(gated_broadcast(uni_prev, _BROADCAST_ROWS), "prev", "left")
-        .join(gated_broadcast(uni_cur, _BROADCAST_ROWS), "cur", "left")
+        stream.join(big, ["prev", "cur"], "left")
+        .join(uni_prev, "prev", "left")
+        .join(uni_cur, "cur", "left")
         .crossJoin(F.broadcast(tot))  # 1 row
     )
     # unigram floor for tokens unseen even at unigram level: count 0.5

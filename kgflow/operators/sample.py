@@ -217,8 +217,10 @@ def source_mix_sample(
     cluster sizes.
 
     Scale shape: the plan aggregate plus one broadcast join of the
-    per-source rate table (bounded by the number of sources — a
-    curated enum, not a corpus fraction) and a narrow filter. Without
+    per-source rate table and a narrow filter. The table is filtered to
+    ``weights``' keys (a source outside them has threshold 0, so none
+    of its rows survive), so the caller's dict bounds the broadcast,
+    not the corpus. Without
     ``stats`` the corpus is scanned twice (measure, then filter);
     passing the maintained per-document stats table (``stats``,
     ``stats_tokens_col`` — e.g. ``streaming.read_doc_stats``'s output,
@@ -230,7 +232,6 @@ def source_mix_sample(
     whenever the stats table is current.
     """
     from ..functions import text as tx
-    from .util import gated_broadcast
 
     plan = source_mix_plan(
         docs if stats is None else stats,
@@ -239,7 +240,7 @@ def source_mix_sample(
         strat_col,
         text_col,
         n_tokens_col if stats is None else stats_tokens_col,
-    ).select(
+    ).filter(F.col(strat_col).isin(sorted(weights))).select(
         strat_col,
         # un-rounded threshold: recompute from the exact rate
         F.floor(
@@ -258,7 +259,7 @@ def source_mix_sample(
     )
     return (
         docs.withColumn("n_tokens", tok.cast("long"))
-        .join(gated_broadcast(plan, 100_000), strat_col)
+        .join(F.broadcast(plan), strat_col)
         .filter(_hash32(id_col, salt) < F.col("_thr"))
         .drop("_thr")
     )

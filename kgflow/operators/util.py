@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -26,34 +25,3 @@ def spread(df: DataFrame) -> DataFrame:
     """
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
-
-def gated_broadcast(df: DataFrame, threshold_rows: int | None) -> DataFrame:
-    """Broadcast-hint ``df`` only when it is MEASURED to be small.
-
-    A forced ``F.broadcast`` on a mapping whose size is a function of the
-    data (e.g. a dedup cluster mapping — one row per document with a
-    verified near-dup, 30-50%% of a template-heavy corpus) is a
-    deterministic driver/executor OOM at scale: Spark's broadcast limit
-    is 8 GB and the driver must hold the build side. This gate counts at
-    most ``threshold_rows + 1`` rows (a bounded ``limit().count()``) and
-    applies the hint only under the threshold; above it (or with
-    ``threshold_rows=None``) the frame is returned unhinted and AQE picks
-    the join strategy from runtime sizes.
-
-    The frame is persisted BEFORE the gating count, so the count job
-    computes the plan once and the downstream join reuses the cached
-    rows instead of recomputing the whole input plan a second time —
-    callers hand this gate unmaterialized aggregate and join plans (LM
-    fit tables, retraction deltas), where an eager ``limit().count()``
-    on the raw plan would otherwise fire a redundant full pass per call.
-    MEMORY_AND_DISK, so an above-threshold frame degrades to one disk
-    spill rather than an OOM; Spark's context cleaner drops the cache
-    when the frame is garbage-collected.
-    """
-    if threshold_rows is None:
-        return df
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    n = df.limit(threshold_rows + 1).count()
-    return F.broadcast(df) if n <= threshold_rows else df

@@ -307,11 +307,11 @@ def kmeans_centroids(
     return centroids
 
 
-def assign_clusters(
-    corpus: DataFrame, centroids: list[list[float]], vec_col: str = "embedding"
-) -> DataFrame:
-    """Adds ``cluster`` = argmin squared distance to the centroid list
-    (broadcast as literals; ties break to the lower cluster id)."""
+def _centroid_dists(centroids: list[list[float]], vec_col: str) -> list[Column]:
+    """One ``(d, c)`` struct per centroid: ``d`` is the squared distance
+    from ``vec_col`` to centroid ``c`` (the centroid inlined as
+    literals). Ordering the structs orders by distance, ties to the
+    lower cluster id."""
     dists = []
     for ci, c in enumerate(centroids):
         arr = F.array(*[F.lit(float(x)) for x in c])
@@ -321,7 +321,15 @@ def assign_clusters(
             lambda acc, t: acc + t,
         )
         dists.append(F.struct(d.alias("d"), F.lit(ci).alias("c")))
-    best = F.array_min(F.array(*dists))
+    return dists
+
+
+def assign_clusters(
+    corpus: DataFrame, centroids: list[list[float]], vec_col: str = "embedding"
+) -> DataFrame:
+    """Adds ``cluster`` = argmin squared distance to the centroid list
+    (broadcast as literals; ties break to the lower cluster id)."""
+    best = F.array_min(F.array(*_centroid_dists(centroids, vec_col)))
     return corpus.withColumn("cluster", best["c"])
 
 
@@ -347,16 +355,9 @@ def ivf_topk(
     )
     # queries: nprobe nearest centroids each (tiny driver-side math is
     # avoided — same argmin construction, exploded to nprobe rows)
-    dists = []
-    for ci, c in enumerate(centroids):
-        arr = F.array(*[F.lit(float(x)) for x in c])
-        d = F.aggregate(
-            F.zip_with(F.col(vec_col), arr, lambda x, y: (x.cast("double") - y) ** 2),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        )
-        dists.append(F.struct(d.alias("d"), F.lit(ci).alias("c")))
-    probes = F.slice(F.array_sort(F.array(*dists)), 1, nprobe)
+    probes = F.slice(
+        F.array_sort(F.array(*_centroid_dists(centroids, vec_col))), 1, nprobe
+    )
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         F.col(vec_col).alias("_qv"),

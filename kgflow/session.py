@@ -6,6 +6,14 @@ Design notes (100 TB target, tested on local[*]):
   for the hot-entity joins (reference analogue: the super-node ontology
   terms that the Cypher scripts serialized MERGEs around,
   ``cql/import/import_ppi.cql:23`` ``parallel: false``).
+* AQE picks every join's broadcast, from measured bytes, under the
+  64 MB ``spark.sql.autoBroadcastJoinThreshold`` set below. No operator
+  counts or caches a join side to decide it. The only explicit
+  ``F.broadcast`` hints left are on 1-row totals and on tables whose
+  size the caller or the cluster bounds, not the data: the
+  ``weights``-keyed rate table of ``source_mix_sample``, the query sets
+  of the vector probes, the dimension of ``link.prefix_match_join``
+  and the per-partition offsets of CC's id encoding.
 * Arrow on — every Python hop (mention extraction, hash embedding) moves
   columnar batches, mirroring the reference's batched encode
   (``neo4j_pubmed_batch_embeddings_processor.py:382-452``).

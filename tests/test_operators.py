@@ -391,8 +391,9 @@ def test_dedup_clusters_small_graph_caches_nothing(spark):
 
 def test_dedup_clusters_distributed_mapping_joins(spark, monkeypatch):
     """Above the CC driver threshold the mapping is a distributed frame
-    and the assignment is the size-gated broadcast join: it assigns the
-    same clusters as the driver-map path."""
+    and the assignment is a join whose strategy AQE picks from bytes
+    (a broadcast at this size): it assigns the same clusters as the
+    driver-map path."""
     from kgflow.operators import canon
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"

@@ -10,11 +10,11 @@ SF = "/root/testdata/sf0.001"
 
 def _plan(df) -> str:
     """Executed-plan string with InMemoryRelation cached-plan subtrees
-    removed. A persisted frame (e.g. gated_broadcast's materialization)
-    renders its cached plan inline TWICE (the serialized cached plan and
-    the original plan that built it), double-counting join/exchange nodes
-    that at runtime execute once behind an InMemoryTableScan — the guards
-    here are about the live plan, not the cache-population plan."""
+    removed. A persisted frame renders its cached plan inline TWICE
+    (the serialized cached plan and the original plan that built it),
+    double-counting join/exchange nodes that at runtime execute once
+    behind an InMemoryTableScan — the guards here are about the live
+    plan, not the cache-population plan."""
     plan = df._jdf.queryExecution().executedPlan().toString()
     out, skip_depth = [], None
     for line in plan.splitlines():
@@ -159,8 +159,8 @@ def test_repetition_stats_no_window_two_shuffles(spark, entrymod):
 
 def test_lm_quality_score_join_strategies(spark, entrymod):
     """The only nested-loop is the deliberate 1-row total broadcast;
-    the vocab log-prob join must be a (gated) broadcast hash join at
-    this scale, and nothing may sort-merge or go cartesian."""
+    the vocab log-prob join must be a broadcast hash join at this
+    scale (AQE's byte threshold, no hint), and nothing may sort-merge or go cartesian."""
     plan = _plan(entrymod.queries()["lm_quality_score"](spark, SF))
     assert plan.count("BroadcastNestedLoopJoin") <= 1
     assert "CartesianProduct" not in plan
@@ -193,8 +193,8 @@ def test_data_prep_pipeline_dedup_plan(spark, entrymod):
 
 
 def test_bigram_lm_score_join_strategies(spark, entrymod):
-    """The bigram/unigram fit tables must hash-broadcast under the
-    gate at this scale; the only nested-loop is the deliberate 1-row
+    """The bigram/unigram fit tables must hash-broadcast under AQE's
+    byte threshold at this scale; the only nested-loop is the deliberate 1-row
     total broadcast."""
     plan = _plan(entrymod.queries()["bigram_lm_score"](spark, SF))
     assert plan.count("BroadcastNestedLoopJoin") <= 1
@@ -205,10 +205,10 @@ def test_bigram_lm_score_join_strategies(spark, entrymod):
 
 def test_trigram_lm_score_join_strategies(spark, entrymod):
     """The pruned-trigram/bigram/unigram fit tables must hash-broadcast
-    under the gate at this scale; the only nested-loop is the
-    deliberate 1-row total broadcast. (Above the gate the trigram
-    table — the web-scale one — falls back to a shuffle hash join;
-    that path is exercised by the operator's gated_broadcast tests.)"""
+    under AQE's byte threshold at this scale; the only nested-loop is
+    the deliberate 1-row total broadcast. (Above the threshold the
+    trigram table — the web-scale one — takes a shuffle join; no hint
+    forces a broadcast.)"""
     plan = _plan(entrymod.queries()["trigram_lm_score"](spark, SF))
     assert plan.count("BroadcastNestedLoopJoin") <= 1
     assert "CartesianProduct" not in plan
@@ -225,9 +225,10 @@ def test_trigram_prune_stats_two_aggregates(spark, entrymod):
 
 
 def test_tfidf_topk_plan(spark, entrymod):
-    """TF-IDF: the df table broadcasts under the gate, the rank<=k
-    filter compiles to a WindowGroupLimit (partitions keep at most k
-    rows per doc before the window shuffle), and nothing sort-merges."""
+    """TF-IDF: the df table broadcasts under AQE's byte threshold, the
+    rank<=k filter compiles to a WindowGroupLimit (partitions keep at
+    most k rows per doc before the window shuffle), and nothing
+    sort-merges."""
     plan = _plan(entrymod.queries()["tfidf_top_terms"](spark, SF))
     assert "WindowGroupLimit" in plan
     assert "SortMergeJoin" not in plan
@@ -258,3 +259,29 @@ def test_quality_curriculum_sample_no_global_sort(spark, entrymod):
     plan = _plan(entrymod.queries()["quality_curriculum_sample"](spark, SF))
     assert "Window" not in plan
     assert "CartesianProduct" not in plan
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "tfidf_top_terms",
+        "lm_quality_score",
+        "bigram_lm_score",
+        "trigram_lm_score",
+        "source_mix",
+        "data_prep_pipeline",
+    ],
+)
+def test_join_queries_build_without_jobs(spark, entrymod, name):
+    """Building these queries starts no Spark job and persists nothing:
+    no join side is counted or cached to choose its strategy while the
+    frame is built. AQE picks each join strategy from measured bytes
+    when the query runs."""
+    from perfbench.trace import StatusReader
+
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+    status = StatusReader(spark)
+    entrymod.queries()[name](spark, SF)
+    assert status.read()[0] == 0
+    assert set(sc._jsc.getPersistentRDDs().keySet()) <= before

@@ -457,14 +457,20 @@ def test_source_mix_from_doc_stats(spark, tmp_path):
     from_stats = {r.doc_id for r in from_stats_df.collect()}
     assert from_stats == from_text and from_stats
     # the measure side must come from the STATS table, leaving the
-    # corpus scanned exactly once (the filter pass). The measured rates
-    # sit behind gated_broadcast's cache (InMemoryTableScan), so the
-    # LIVE plan's only file inputs are the corpus files — once.
-    fresh = sample.source_mix_sample(docs, stats=stats, **kw)
-    files = fresh.inputFiles()
-    assert files and all("mix_docs_in" in f for f in files)
-    plan = fresh._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan  # the stats-measured rate table
+    # corpus scanned exactly once (the filter pass): one FileScan node
+    # over the corpus files in the final executed plan (paths printed
+    # whole, not abbreviated)
+    key = "spark.sql.maxMetadataStringLength"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "10000")
+    try:
+        fresh = sample.source_mix_sample(docs, stats=stats, **kw)
+        fresh.collect()
+        plan = fresh._jdf.queryExecution().executedPlan().executedPlan().toString()
+    finally:
+        spark.conf.set(key, prev)
+    scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
+    assert len([ln for ln in scans if "mix_docs_in" in ln]) == 1, plan
 
 
 def test_streaming_exact_dedup_across_drops(spark, tmp_path):
