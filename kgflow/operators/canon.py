@@ -46,6 +46,10 @@ from pyspark.sql.window import Window
 #: form.
 _SPILL_CODEC = "zstd"
 
+#: Edge sets up to this many rows are resolved by a driver union-find
+#: (``_components``' size gate and the distributed loop's finisher).
+_DRIVER_EDGES = 200_000
+
 
 def dedup_keep_first(df: DataFrame, keys: list[str], order_by: list) -> DataFrame:
     """Duplicate-group resolution (C3): deterministic keep-one per key."""
@@ -126,7 +130,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 25,
-    driver_threshold: int = 200_000,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(id, canonical_id) for every id reachable through same-as edges.
@@ -137,7 +140,7 @@ def connected_components(
     edges AND rewrites the edge set onto the label space (pointer
     doubling), giving O(log d) rounds instead of O(d).
     """
-    comp = _components(edges, src, dst, max_iter, driver_threshold, checkpoint_dir)
+    comp = _components(edges, src, dst, max_iter, checkpoint_dir)
     if isinstance(comp, DataFrame):
         return comp
     # preserve the caller's id type — hardcoding string would make
@@ -153,12 +156,11 @@ def _components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 25,
-    driver_threshold: int = 200_000,
     checkpoint_dir: str | None = None,
 ) -> dict | DataFrame:
     """:func:`connected_components`' mapping as it comes out of its
     size gate: a driver dict (id → canonical id, ids on an edge only)
-    when the edge set fits ``driver_threshold``, else the distributed
+    when the edge set fits ``_DRIVER_EDGES``, else the distributed
     (id, canonical_id) frame. Callers that rewrite a column through the
     mapping take the dict as it is (``link.canonicalize``) instead of
     joining a frame built from it."""
@@ -184,8 +186,8 @@ def _components(
     # shuffle to one task), where ``collect`` would scan partitions in
     # growing rounds of jobs. The edge set is read once here, so it is
     # not cached: a frame under the threshold persists nothing.
-    rows = e.limit(driver_threshold + 1).toArrow()
-    if rows.num_rows <= driver_threshold:
+    rows = e.limit(_DRIVER_EDGES + 1).toArrow()
+    if rows.num_rows <= _DRIVER_EDGES:
         return _union_find_map(zip(rows["a"].to_pylist(), rows["b"].to_pylist()))
     # lazy-materialize ONCE above the threshold: the gate's count, the
     # dedup collect, and (on the distributed path) the initial labels
@@ -207,12 +209,12 @@ def _components(
     # whether the DISTINCT edge set fits the driver after all; far above
     # the band the dedup count would be a corpus-scale shuffle spent on
     # a gate that is almost surely over anyway, so it is skipped.
-    n_edges = e.limit(16 * driver_threshold + 1).count()
-    if n_edges <= 16 * driver_threshold:
+    n_edges = e.limit(16 * _DRIVER_EDGES + 1).count()
+    if n_edges <= 16 * _DRIVER_EDGES:
         # materialized once: the gating count and the collect below
         # would otherwise run the dedup shuffle twice (ADVICE r6)
         e_dist = e.dropDuplicates().localCheckpoint(eager=False)
-        if e_dist.limit(driver_threshold + 1).count() <= driver_threshold:
+        if e_dist.limit(_DRIVER_EDGES + 1).count() <= _DRIVER_EDGES:
             return _union_find_map(e_dist.collect())
 
     # ------------------------------------------------------------------
@@ -437,7 +439,7 @@ def _components(
             )
             if n_e == 0:
                 break
-            if n_e <= driver_threshold:
+            if n_e <= _DRIVER_EDGES:
                 # hybrid finisher: the residual label graph fits on the
                 # driver — one collect + union-find replaces the last few
                 # rounds of fixed job latency; its map is just another

@@ -25,12 +25,14 @@ ledger:
   new input yields no triples) and reads ``triples_out`` from the
   parquet footers of the rest;
 * a completed bucket writes one ledger row (a JSON line under
-  ``_ledger/``) with lineage counts (rows_in, triples_out), the
-  fingerprint and the bucket's text quality (``bucket_quality``'s
-  values). The quality comes out of the write job itself: each pending
-  turn's quality values ride beside its text into the extraction
-  kernel, which sums them per bucket in its task and hands the sums to
-  the driver in one accumulator — no second scan, no aggregate job;
+  ``_ledger/``; each run's file is written whole and renamed into
+  place, so a crash leaves no partial line) with lineage counts
+  (rows_in, triples_out), the fingerprint and the bucket's text
+  quality (``bucket_quality``'s values). The quality comes out of the
+  write job itself: each pending turn's quality values ride beside its
+  text into the extraction kernel, which sums them per bucket in its
+  task and hands the sums to the driver in one accumulator — no second
+  scan, no aggregate job;
 * on restart the ledger is read and planned on the driver: a bucket
   whose latest ledger row is ``done`` with a matching fingerprint is
   skipped.
@@ -221,11 +223,17 @@ def _ledger_path(out_dir: str) -> str:
     return os.path.join(out_dir, "_ledger")
 
 
-def read_ledger(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    p = _ledger_path(out_dir)
-    if not os.path.exists(p):
-        return None
-    return spark.read.json(p)
+def _write_ledger(out_dir: str, name: str, rows: list[dict]) -> None:
+    """Write ``rows`` as the JSON-lines ledger file ``name``: into
+    ``.<name>.tmp`` first, then renamed into place, so a process that
+    dies mid-write leaves no partial line in a file ``ledger_rows``
+    reads (it skips dot-named files)."""
+    d = _ledger_path(out_dir)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".{name}.tmp")
+    with open(tmp, "w") as fh:
+        fh.write("".join(json.dumps(r) + "\n" for r in rows))
+    os.replace(tmp, os.path.join(d, name))
 
 
 def ledger_rows(out_dir: str) -> list[dict]:
@@ -237,7 +245,7 @@ def ledger_rows(out_dir: str) -> list[dict]:
         return []
     rows = []
     for f in sorted(os.listdir(p)):
-        if not f.startswith((".", "_")):  # the files spark.read.json skips
+        if not f.startswith((".", "_")):  # temp and checksum files
             with open(os.path.join(p, f)) as fh:
                 rows.extend(json.loads(line) for line in fh if line.strip())
     return rows
@@ -258,8 +266,8 @@ def pending_buckets(
     still holds a different run's output. Latest is taken over ALL
     statuses by (ts, run_id) descending (a 'pruned' tombstone must
     shadow the 'done' row underneath it), THEN filtered to done rows of
-    the same lexicon version. A row without ``lex_fingerprint`` (a
-    pre-versioning ledger: no proof the lexicon matched) never skips.
+    the same lexicon version. A row without ``lex_fingerprint`` (no
+    proof the lexicon matched) never skips.
     """
     latest: dict[int, dict] = {}
     for r in ledger:
@@ -312,31 +320,11 @@ def run_resumable(
     ledger = ledger_rows(out_dir)
     if buckets is None:
         counted = [r for r in ledger if r.get("buckets") is not None]
-        recorded = int(max(counted, key=_recency)["buckets"]) if counted else None
-        if recorded is None and ledger:
-            # a ledger exists but records no bucket count (written by a
-            # pre-recording version): the auto count chosen now may
-            # differ from the one the on-disk layout was built under, in
-            # which case every fingerprint mismatches and the whole
-            # corpus re-runs. Say so — a silent full re-run reads as a
-            # resume bug, not a versioning consequence.
-            import sys
-            import warnings
-
-            auto = auto_bucket_count(transcripts)
-            msg = (
-                f"run_resumable(buckets=None): the ledger at {out_dir} "
-                "records no bucket count (pre-versioning ledger); using "
-                f"auto_bucket_count={auto}. If the existing layout was "
-                "built under a different count, no fingerprint will match "
-                "and ALL buckets will re-run. Pass buckets=<original "
-                "count> explicitly to resume the old layout."
-            )
-            warnings.warn(msg, stacklevel=2)
-            print(f"WARNING: {msg}", file=sys.stderr)
-            buckets = auto
-        else:
-            buckets = recorded if recorded is not None else auto_bucket_count(transcripts)
+        buckets = (
+            int(max(counted, key=_recency)["buckets"])
+            if counted
+            else auto_bucket_count(transcripts)
+        )
     tr = with_bucket(transcripts, buckets)
     # the one scan of the input: every later use (pending, prune set,
     # ledger lineage) reads this driver-side map. terms/isa_edges are
@@ -371,28 +359,25 @@ def run_resumable(
             # 'done' row stays latest, and a byte-identical reappearance
             # of its input would be skipped while the partition dir no
             # longer exists (silently serving zero triples).
-            os.makedirs(_ledger_path(out_dir), exist_ok=True)
             t_now = time.time()
-            with open(
-                os.path.join(_ledger_path(out_dir), f"{run_id}-prune.json"), "w"
-            ) as fh:
-                for bv in pruned:
-                    fh.write(
-                        json.dumps(
-                            {
-                                "run_id": run_id,
-                                "partition_id": int(bv),
-                                "input_fingerprint": "",
-                                "lex_fingerprint": lex_fp,
-                                "rows_in": 0,
-                                "triples_out": 0,
-                                "buckets": int(buckets),
-                                "status": "pruned",
-                                "ts": t_now,
-                            }
-                        )
-                        + "\n"
-                    )
+            _write_ledger(
+                out_dir,
+                f"{run_id}-prune.json",
+                [
+                    {
+                        "run_id": run_id,
+                        "partition_id": int(bv),
+                        "input_fingerprint": "",
+                        "lex_fingerprint": lex_fp,
+                        "rows_in": 0,
+                        "triples_out": 0,
+                        "buckets": int(buckets),
+                        "status": "pruned",
+                        "ts": t_now,
+                    }
+                    for bv in pruned
+                ],
+            )
     if fail_after_buckets is not None:
         pending_list = pending_list[:fail_after_buckets]
     if not pending_list:
@@ -459,7 +444,6 @@ def run_resumable(
 
     sums = tally.value
     quality = {b: _ledger_quality(*v[:5]) for b, v in sums.items()}
-    os.makedirs(_ledger_path(out_dir), exist_ok=True)
     rows = []
     now = time.time()
     for b in pending_list:
@@ -486,10 +470,7 @@ def run_resumable(
                 "ts": now,
             }
         )
-    fname = os.path.join(_ledger_path(out_dir), f"{run_id}.json")
-    with open(fname, "w") as fh:
-        for r in rows:
-            fh.write(json.dumps(r) + "\n")
+    _write_ledger(out_dir, f"{run_id}.json", rows)
 
     report = ResumeReport(
         run_id,

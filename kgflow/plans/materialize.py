@@ -49,15 +49,12 @@ def _read_pointer(path: str) -> dict | None:
 
 def read_table(spark: SparkSession, path: str) -> DataFrame | None:
     """The latest snapshot, read with the schema ``write_snapshot``
-    recorded in the pointer — no job infers it from the parquet footers.
-    A pointer written without one falls back to inference."""
+    recorded in the pointer — no job infers it from the parquet footers."""
     ptr = _read_pointer(path)
     if ptr is None:
         return None
-    reader = spark.read
-    if "schema" in ptr:
-        reader = reader.schema(T.StructType.fromJson(json.loads(ptr["schema"])))
-    return reader.parquet(os.path.join(path, ptr["snapshot"]))
+    schema = T.StructType.fromJson(json.loads(ptr["schema"]))
+    return spark.read.schema(schema).parquet(os.path.join(path, ptr["snapshot"]))
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -70,19 +67,6 @@ def iceberg_available(spark: SparkSession) -> bool:
         return True
     except Exception:
         return False
-
-
-def read_table_props(spark: SparkSession, table: str) -> dict:
-    """TBLPROPERTIES of ``table`` as a dict ({} if the table does not
-    exist) — carrier for the streaming replay guard on the Iceberg
-    path (the fallback's pointer-meta analogue)."""
-    try:
-        return {
-            r["key"]: r["value"]
-            for r in spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-        }
-    except Exception:
-        return {}
 
 
 #: Iceberg copies every Spark session conf with this prefix into the
@@ -98,8 +82,8 @@ def snapshot_summary_props(
 ) -> dict | None:
     """The requested ``keys`` from the summary map of the most recent
     Iceberg snapshot that carries ALL of them (None when no snapshot
-    does, or the table/metadata table is unreadable). This is the
-    commit-ATOMIC twin of ``read_table_props``: a property attached via
+    does, or the table/metadata table is unreadable) — the Iceberg twin
+    of ``read_pointer_meta``. A property attached via
     ``SNAPSHOT_PROP_PREFIX`` session confs exists exactly iff the commit
     it rode on exists — there is no window where the data landed but the
     guard did not."""
@@ -122,11 +106,7 @@ def snapshot_summary_props(
         )
     except Exception:
         return None
-    for r in rows:
-        summary = r["summary"] or {}
-        if all(k in summary for k in keys):
-            return {k: summary[k] for k in keys}
-    return None
+    return {k: rows[0]["summary"][k] for k in keys} if rows else None
 
 
 def _merge_rules(

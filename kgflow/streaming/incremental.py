@@ -9,6 +9,12 @@ compatible Spark expression is a file-source stream with
 same batch DAG in ``foreachBatch``, and stops. Continuous ingestion is
 then a config change, not a rewrite.
 
+``incremental_extract`` appends each batch's triples (deduped on read);
+``incremental_extract_prov`` merges each batch's provenance counts into
+a keyed snapshot behind a replay guard that commits with the rows;
+``incremental_doc_stats`` upserts per-document stats latest-wins, which
+replays safely without a guard.
+
 Also provides gap-session aggregation with ``session_window`` — the
 stateful-streaming twin of ``operators.sessionize``.
 """
@@ -90,9 +96,7 @@ def incremental_extract_prov(
     out_dir: str,
     terms: DataFrame,
     isa_edges: DataFrame,
-    run_prefix: str = "stream",
     iceberg_table: str | None = None,
-    allow_unguarded: bool = False,
 ) -> int:
     """Incremental extraction that maintains a PROVENANCE-keyed triple
     snapshot instead of an append log: per micro-batch, the batch's
@@ -102,9 +106,9 @@ def incremental_extract_prov(
     conversation-complete drop contract: each conv_id lands wholly in
     one drop, so no supporting conversation is double-counted),
     ``family`` is stable (min), and ``first_seen_run`` keeps the
-    earliest batch's run id (zero-padded batch ids make lexicographic
-    min = earliest). The result equals ``build_triples_prov`` over every
-    drop merged so far.
+    earliest batch's run id, ``stream-<batch id>`` (zero-padded batch
+    ids make lexicographic min = earliest). The result equals
+    ``build_triples_prov`` over every drop merged so far.
 
     Ontology rows are static dimension facts that every batch re-emits:
     only the first batch counts them. They are dropped from a later
@@ -122,46 +126,39 @@ def incremental_extract_prov(
       contract only has to hold per DROP, which the producer satisfies
       by construction (all files present at drain time form one batch).
     * REPLAY GUARD — ``foreachBatch`` is at-least-once: a crash between
-      the snapshot write and the stream-checkpoint commit replays the
+      the snapshot commit and the stream-checkpoint commit replays the
       batch on restart, which would double the counts silently. The
-      (stream query id, max merged batch id) pair rides the snapshot
-      pointer flip atomically (``write_snapshot(meta=...)``), and
-      ``handle`` skips a batch only when BOTH match — batch ids alone
-      are meaningless across streams: a deleted/reset checkpoint
-      restarts numbering at 0, and silently skipping (or worse,
-      additively re-merging) everything would corrupt the counts either
-      way, so a stream-id mismatch against an existing snapshot raises
-      with instructions instead. (The Iceberg form of the same guard is
-      a MERGE conditioned on commit-property stream+batch ids.)
+      (stream query id, max merged batch id) pair commits atomically
+      with the merged rows, and ``handle`` skips a batch only when BOTH
+      match — batch ids alone are meaningless across streams: a
+      deleted/reset checkpoint restarts numbering at 0, and silently
+      skipping (or worse, additively re-merging) everything would
+      corrupt the counts either way, so a stream-id mismatch against an
+      existing snapshot raises with instructions instead. A snapshot
+      that exists but records no guard is refused the same way: merging
+      into it additively could double-count with no error.
 
-    The merge is committed per batch through ``materialize``:
+    Each batch runs one sequence on either sink: read the guard, check
+    it, build the batch's rows, commit. Only the commit differs:
 
-    * **Iceberg runtime present and ``iceberg_table`` given** — one
+    * **Iceberg runtime present and ``iceberg_table`` given** — the
+      guard is the newest snapshot summary that carries it
+      (``materialize.snapshot_summary_props``), and the commit is one
       additive ``MERGE INTO`` (``upsert(mode="additive")``): matched
-      triple keys get ``n_obs = t.n_obs + s.n_obs`` etc., ``family``
-      via ``least``, ``first_seen_run`` excluded from the update list
-      (first writer wins). Per-drain cost is **O(|batch|)** touched
-      rows — the whole point: the parquet fallback below re-aggregates
-      existing ∪ batch, i.e. O(|snapshot|) per drain, which at 10⁹
-      accumulated triples pays a full-table shuffle+rewrite for every
-      small drop. The replay guard rides the MERGE's own SNAPSHOT
-      SUMMARY (``snapshot-property.*`` session confs → Iceberg commit
-      metadata), so guard and data commit atomically — the exact
-      commit-atomicity the fallback's pointer flip provides. Tables
-      written by the pre-atomic version (guard in TBLPROPERTIES via a
-      separate follow-up commit) are still read via the legacy
-      fallback.
-    * **fallback** — the keyed parquet snapshot with the guard riding
-      the atomic pointer flip. The existing snapshot's rows and the
-      batch's provenance rows go through ONE (subj, pred, obj)
-      aggregate (``pipeline._sum_prov``), so the write shuffles twice:
-      the batch's turns, and that aggregate.
-
-    A snapshot that EXISTS but carries no stream_id meta (written by a
-    pre-guard version, or checkpoint metadata unreadable) is refused:
-    merging additively without replay protection can silently
-    double-count. Pass ``allow_unguarded=True`` to accept that risk
-    explicitly (a loud warning is still printed).
+      triple keys add ``n_obs`` and ``n_convs``, take ``family`` via
+      ``least``, ``first_seen_run`` excluded from the update list
+      (first writer wins). The guard rides the MERGE's own snapshot
+      summary (``commit_props``). Per-drain cost is **O(|batch|)**
+      touched rows — the whole point: the parquet fallback below
+      re-aggregates existing ∪ batch, i.e. O(|snapshot|) per drain,
+      which at 10⁹ accumulated triples pays a full-table
+      shuffle+rewrite for every small drop.
+    * **fallback** — the keyed parquet snapshot: the guard is the
+      pointer meta (``materialize.read_pointer_meta``) and rides the
+      atomic pointer flip (``write_snapshot(meta=...)``). The existing
+      snapshot's rows and the batch's provenance rows go through ONE
+      (subj, pred, obj) aggregate (``pipeline._sum_prov``), so the
+      write shuffles twice: the batch's turns, and that aggregate.
 
     Returns micro-batches processed.
     """
@@ -174,30 +171,36 @@ def incremental_extract_prov(
     stream = spark.readStream.schema(schemas.TRANSCRIPT).parquet(input_dir)
     batches = {"n": 0}
     use_iceberg = iceberg_table is not None and mat.iceberg_available(spark)
+    where = iceberg_table if use_iceberg else snap_path
+    GUARD_KEYS = ["kgflow.stream_id", "kgflow.merged_batch_id"]
 
-    def _check_guard(
-        meta: dict | None, stream_id: str | None, batch_id: int, where: str
-    ) -> bool:
+    def _guard_meta() -> dict | None:
+        """The snapshot's guard as ``{"stream_id", "merged_batch_id"}``:
+        None when there is no snapshot yet, ``{"stream_id": None}`` when
+        one exists without a guard."""
+        if not use_iceberg:
+            return mat.read_pointer_meta(snap_path)
+        props = mat.snapshot_summary_props(spark, iceberg_table, GUARD_KEYS)
+        if props is not None:
+            return {
+                "stream_id": props["kgflow.stream_id"],
+                "merged_batch_id": int(props["kgflow.merged_batch_id"]),
+            }
+        return {"stream_id": None} if spark.catalog.tableExists(iceberg_table) else None
+
+    def _check_guard(meta: dict | None, stream_id: str | None, batch_id: int) -> bool:
         """True → skip this batch (already merged). Raises on unsafe
         states; returns False when the merge should proceed."""
         if meta is None:
             return False
         if meta.get("stream_id") is None:
-            msg = (
+            raise RuntimeError(
                 f"incremental_extract_prov: the provenance snapshot at "
-                f"{where} exists but records no stream_id (pre-guard "
-                "version, or checkpoint metadata unreadable) — an "
-                "at-least-once replay would re-merge additively and "
+                f"{where} exists but records no stream_id, so it carries "
+                "no replay guard — an at-least-once replay would re-merge additively and "
                 "double-count n_obs/n_convs with no error. Delete the "
-                "snapshot to rebuild provenance from scratch, or pass "
-                "allow_unguarded=True to merge anyway."
+                "snapshot to rebuild provenance from scratch."
             )
-            if not allow_unguarded:
-                raise RuntimeError(msg)
-            import sys
-
-            print(f"WARNING: {msg} (allow_unguarded=True)", file=sys.stderr)
-            return False
         if meta["stream_id"] != stream_id:
             raise RuntimeError(
                 "incremental_extract_prov: the provenance snapshot at "
@@ -209,38 +212,16 @@ def incremental_extract_prov(
             )
         return batch_id <= int(meta.get("merged_batch_id", -1))
 
-    GUARD_KEYS = ["kgflow.stream_id", "kgflow.merged_batch_id"]
-
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         stream_id = _stream_query_id(ckpt_loc)
+        meta = _guard_meta()
+        if _check_guard(meta, stream_id, batch_id):
+            return  # at-least-once replay of an already-merged batch
+        batches["n"] += 1
+        rows = P._prov_rows(batch_df, isa_edges, lex, f"stream-{batch_id:09d}")
+        if meta is not None:
+            rows = rows.filter(F.col("family") != "ontology")
         if use_iceberg:
-            # The guard lives in the SNAPSHOT SUMMARY of the MERGE commit
-            # itself (commit_props below), so guard and data commit
-            # atomically — no crash window where a batch merged but its
-            # guard record did not (the TBLPROPERTIES read is only a
-            # legacy fallback for tables written by the pre-atomic
-            # version, which recorded the guard in a separate commit).
-            props = mat.snapshot_summary_props(spark, iceberg_table, GUARD_KEYS)
-            if props is None:
-                legacy = mat.read_table_props(spark, iceberg_table)
-                if any(legacy.get(k) is not None for k in GUARD_KEYS):
-                    props = {k: legacy.get(k) for k in GUARD_KEYS}
-            meta = None
-            if props is not None:
-                meta = {
-                    "stream_id": props.get("kgflow.stream_id"),
-                    "merged_batch_id": int(
-                        props.get("kgflow.merged_batch_id") or -1
-                    ),
-                }
-            elif spark.catalog.tableExists(iceberg_table):
-                meta = {"stream_id": None}  # table exists, no guard props
-            if _check_guard(meta, stream_id, batch_id, iceberg_table):
-                return
-            batches["n"] += 1
-            rows = P._prov_rows(batch_df, isa_edges, lex, f"{run_prefix}-{batch_id:09d}")
-            if spark.catalog.tableExists(iceberg_table):
-                rows = rows.filter(F.col("family") != "ontology")
             mat.upsert(
                 P._sum_prov(rows),
                 path=snap_path,  # unused on the Iceberg route
@@ -255,20 +236,14 @@ def incremental_extract_prov(
                     "kgflow.merged_batch_id": batch_id,
                 },
             )
-            return
-        meta = mat.read_pointer_meta(snap_path)
-        if _check_guard(meta, stream_id, batch_id, snap_path):
-            return  # at-least-once replay of an already-merged batch
-        batches["n"] += 1
-        rows = P._prov_rows(batch_df, isa_edges, lex, f"{run_prefix}-{batch_id:09d}")
-        existing = mat.read_table(spark, snap_path)
-        if existing is not None:
-            rows = existing.unionByName(rows.filter(F.col("family") != "ontology"))
-        mat.write_snapshot(
-            P._sum_prov(rows),
-            snap_path,
-            meta={"merged_batch_id": batch_id, "stream_id": stream_id},
-        )
+        else:
+            if meta is not None:
+                rows = mat.read_table(spark, snap_path).unionByName(rows)
+            mat.write_snapshot(
+                P._sum_prov(rows),
+                snap_path,
+                meta={"merged_batch_id": batch_id, "stream_id": stream_id},
+            )
 
     q = (
         stream.writeStream.foreachBatch(handle)

@@ -2,6 +2,7 @@
 duplicate-group resolution. Includes a hypothesis property test."""
 
 import pandas as pd
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -23,30 +24,32 @@ def test_connected_components_chain(spark):
     }
 
 
-def test_connected_components_hub_skew(spark):
+def test_connected_components_hub_skew(spark, monkeypatch):
     """One hub with high degree (skew test) still resolves in few rounds
-    (distributed path forced — driver_threshold=0)."""
+    (distributed path forced — ``_DRIVER_EDGES`` = 0)."""
     rows = [("hub", f"leaf{i:03d}") for i in range(200)] + [
         (f"leaf{i:03d}", f"leaf2_{i:03d}") for i in range(50)
     ]
     edges = spark.createDataFrame(rows, "id_a string, id_b string")
-    cc = canon.connected_components(edges, driver_threshold=0)
+    monkeypatch.setattr(canon, "_DRIVER_EDGES", 0)
+    cc = canon.connected_components(edges)
     n_components = cc.select("canonical_id").distinct().count()
     assert n_components == 1
     assert cc.count() == 251  # hub + 200 leaves + 50 leaf2 nodes
 
 
-def test_connected_components_long_path(spark):
+def test_connected_components_long_path(spark, monkeypatch):
     """Pointer doubling: a 64-node path converges within max_iter=25."""
     rows = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(63)]
     edges = spark.createDataFrame(rows, "id_a string, id_b string")
-    cc = canon.connected_components(edges, max_iter=10, driver_threshold=0)
+    monkeypatch.setattr(canon, "_DRIVER_EDGES", 0)
+    cc = canon.connected_components(edges, max_iter=10)
     assert cc.select("canonical_id").distinct().collect()[0][0] == "n000"
     assert cc.count() == 64
 
 
-def test_connected_components_hybrid_finisher(spark, tmp_path):
-    """Mid-loop driver finisher: initial edges exceed driver_threshold so
+def test_connected_components_hybrid_finisher(spark, tmp_path, monkeypatch):
+    """Mid-loop driver finisher: initial edges exceed ``_DRIVER_EDGES`` so
     the distributed path runs, but the contracted residual fits, so the
     union-find finisher completes the job — output must be identical to
     the pure fast path. Also exercises an explicit checkpoint_dir."""
@@ -54,11 +57,10 @@ def test_connected_components_hybrid_finisher(spark, tmp_path):
         (f"m{i:02d}", f"m{i + 1:02d}") for i in range(9)
     ]
     edges = spark.createDataFrame(rows, "id_a string, id_b string")
+    monkeypatch.setattr(canon, "_DRIVER_EDGES", 8)
     got = {
         (r.id, r.canonical_id)
-        for r in canon.connected_components(
-            edges, driver_threshold=8, checkpoint_dir=str(tmp_path)
-        ).collect()
+        for r in canon.connected_components(edges, checkpoint_dir=str(tmp_path)).collect()
     }
     expected = {(f"n{i:03d}", "n000") for i in range(40)} | {
         (f"m{i:02d}", "m00") for i in range(10)
@@ -78,18 +80,14 @@ def test_resolve_spill_dir_prefers_cluster_visible(spark):
     assert "kgflow_cc_" in p2
 
 
-def test_connected_components_long_ids_distributed(spark):
+def test_connected_components_long_ids_distributed(spark, monkeypatch):
     """Numeric id columns survive the distributed path AND the hybrid
     finisher (id type is preserved through parquet spills and the
     driver union-find's createDataFrame)."""
     rows = [(i, i + 1) for i in range(30)] + [(100, 101), (101, 102)]
     edges = spark.createDataFrame(rows, "id_a long, id_b long")
-    got = {
-        (r.id, r.canonical_id)
-        for r in canon.connected_components(
-            edges, driver_threshold=5
-        ).collect()
-    }
+    monkeypatch.setattr(canon, "_DRIVER_EDGES", 5)
+    got = {(r.id, r.canonical_id) for r in canon.connected_components(edges).collect()}
     want = {(i, 0) for i in range(31)} | {(i, 100) for i in (100, 101, 102)}
     assert got == want
     assert all(isinstance(i, int) for i, _ in got)
@@ -150,7 +148,7 @@ def test_update_components_randomized(spark):
         assert got == want, (edges, cut)
 
 
-def test_cc_duplicated_edges_take_driver_path(spark):
+def test_cc_duplicated_edges_take_driver_path(spark, monkeypatch):
     """A small graph with heavy edge duplication (re-asserted same-as
     links) must still take the driver fast path: the gate counts
     DISTINCT edges when the raw count lands in the bounded band above
@@ -158,12 +156,8 @@ def test_cc_duplicated_edges_take_driver_path(spark):
     return an unmerged mapping, the driver union-find ignores it."""
     rows = [("a", "b"), ("b", "c"), ("x", "y")] * 40  # 120 raw, 3 distinct
     edges = spark.createDataFrame(rows, "id_a string, id_b string")
-    got = {
-        tuple(r)
-        for r in canon.connected_components(
-            edges, driver_threshold=10, max_iter=0
-        ).collect()
-    }
+    monkeypatch.setattr(canon, "_DRIVER_EDGES", 10)
+    got = {tuple(r) for r in canon.connected_components(edges, max_iter=0).collect()}
     assert got == {("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")}
 
 
@@ -278,10 +272,9 @@ def test_cc_matches_union_find(spark, pairs):
     exp_map = {x: min(members) for members in expected.values() for x in members}
 
     edges = spark.createDataFrame(pd.DataFrame(rows, columns=["id_a", "id_b"]))
-    got = {
-        (r.id, r.canonical_id)
-        for r in canon.connected_components(edges, driver_threshold=0).collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(canon, "_DRIVER_EDGES", 0)  # the distributed path
+        got = {(r.id, r.canonical_id) for r in canon.connected_components(edges).collect()}
     assert got == set(exp_map.items())
 
 

@@ -3,6 +3,9 @@
 import json
 import os
 
+import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from kgflow.plans import checkpoint as cp
@@ -78,16 +81,14 @@ def test_auto_buckets_resume_reuses_recorded_count(spark, transcripts, lexicon, 
     # fresh auto run on the small input records its count (clamp floor 8
     # here; the recorded value, not the derivation, is what resume uses)
     cp.run_resumable(spark, transcripts, terms, isa, d, buckets=None)
-    led = cp.read_ledger(spark, d)
-    counts = {r.buckets for r in led.select("buckets").distinct().collect()}
+    counts = {r["buckets"] for r in cp.ledger_rows(d)}
     assert counts == {8}
     # grow the input: new conversations (new buckets' content changes)
     grown = transcripts.unionByName(
         transcripts.withColumn("conv_id", F.concat(F.lit("x-"), "conv_id"))
     )
     rep = cp.run_resumable(spark, transcripts=grown, terms=terms, isa_edges=isa, out_dir=d, buckets=None)
-    led2 = cp.read_ledger(spark, d)
-    counts2 = {r.buckets for r in led2.select("buckets").distinct().collect()}
+    counts2 = {r["buckets"] for r in cp.ledger_rows(d)}
     assert counts2 == {8}  # recorded count reused, not re-derived
     assert rep.skipped_buckets == 0 or rep.processed_buckets > 0
     fresh = {
@@ -100,12 +101,11 @@ def test_ledger_lineage_counts(spark, transcripts, lexicon, tmp_path):
     terms, isa = lexicon
     d = str(tmp_path / "lin")
     cp.run_resumable(spark, transcripts, terms, isa, d, buckets=8)
-    ledger = cp.read_ledger(spark, d)
-    assert ledger is not None
-    rows = ledger.collect()
-    assert all(r.status == "done" for r in rows)
-    assert sum(r.rows_in for r in rows) == transcripts.count()
-    assert all(r.input_fingerprint for r in rows)
+    rows = cp.ledger_rows(d)
+    assert rows
+    assert all(r["status"] == "done" for r in rows)
+    assert sum(r["rows_in"] for r in rows) == transcripts.count()
+    assert all(r["input_fingerprint"] for r in rows)
 
 
 def test_materialize_upsert(spark, tmp_path):
@@ -544,20 +544,20 @@ def test_ledger_quality_lineage(spark, transcripts, lexicon, tmp_path):
     terms, isa = lexicon
     d = str(tmp_path / "qual")
     cp.run_resumable(spark, transcripts, terms, isa, d, buckets=8)
-    led = cp.read_ledger(spark, d).filter(F.col("status") == "done").collect()
+    led = [r for r in cp.ledger_rows(d) if r["status"] == "done"]
     assert led
     for r in led:
-        assert r.avg_tokens is not None and r.avg_tokens > 0
-        assert 0 < r.avg_ttr_q4 <= 10000
-        assert r.empty_turns is not None and r.empty_turns >= 0
+        assert r["avg_tokens"] is not None and r["avg_tokens"] > 0
+        assert 0 < r["avg_ttr_q4"] <= 10000
+        assert r["empty_turns"] is not None and r["empty_turns"] >= 0
     # quality must describe the bucket's input: recompute one bucket
-    b = led[0].partition_id
+    b = led[0]["partition_id"]
     got = (
         cp.bucket_quality(cp.with_bucket(transcripts, 8).filter(F.col("bucket") == b))
         .collect()[0]
     )
     assert (got.avg_tokens, got.avg_ttr_q4, got.empty_turns) == (
-        led[0].avg_tokens, led[0].avg_ttr_q4, led[0].empty_turns,
+        led[0]["avg_tokens"], led[0]["avg_ttr_q4"], led[0]["empty_turns"],
     )
 
 
@@ -606,6 +606,137 @@ def test_merge_sum_set_matches_fallback_on_nulls(spark, tmp_path):
                 path, keys=["k"], mode="additive", add_cols=["n"],
             )
         assert got == mat.read_table(spark, path).first().n, (old, new)
+
+
+def _split_top(text):
+    """``text`` split at the commas outside parentheses and quotes."""
+    parts, cur, depth, quoted = [], "", 0, False
+    for ch in text:
+        if ch == "'":
+            quoted = not quoted
+        elif not quoted and ch in "()":
+            depth += 1 if ch == "(" else -1
+        elif not quoted and depth == 0 and ch == ",":
+            parts.append(cur.strip())
+            cur = ""
+            continue
+        cur += ch
+    return [*parts, cur.strip()]
+
+
+def _merge_as_select(spark, target, merge_sql):
+    """The rows the MERGE statement ``merge_sql`` leaves in ``target``:
+    its SET list spliced into ``SELECT … FROM target t FULL OUTER JOIN
+    <source view> s ON <keys>`` — the SET expression when both sides
+    hold the key, ``t.c`` when only the target does or the column is
+    not updated, ``s.c`` when only the source does (``INSERT *``)."""
+    import re
+
+    m = re.fullmatch(
+        r"MERGE INTO \S+ t USING (\S+) s ON (.+?) "
+        r"(?:WHEN MATCHED THEN UPDATE SET (.+?) )?WHEN NOT MATCHED THEN INSERT \*",
+        merge_sql,
+    )
+    src, on, set_list = m.groups()
+    if set_list == "*":
+        sets = {c: f"s.{c}" for c in target.columns}
+    else:
+        sets = {}
+        for item in _split_top(set_list) if set_list else []:
+            col, expr = item.split(" = ", 1)
+            sets[col.removeprefix("t.")] = expr
+    target.createOrReplaceTempView("_merge_target")
+    cols = ", ".join(
+        f"CASE WHEN t._in AND s._in THEN {sets.get(c, f't.{c}')} "
+        f"WHEN s._in THEN s.{c} ELSE t.{c} END AS {c}"
+        for c in target.columns
+    )
+    try:
+        return spark.sql(
+            f"SELECT {cols} FROM (SELECT *, true AS _in FROM _merge_target) t "
+            f"FULL OUTER JOIN (SELECT *, true AS _in FROM {src}) s ON {on}"
+        ).collect()
+    finally:
+        spark.catalog.dropTempView("_merge_target")
+
+
+def _iceberg_commits(spark, batches, keys, policy):
+    """The table two ``upsert(iceberg_table=...)`` calls leave, run
+    without the jar by intercepting ``spark.sql`` and ``tableExists`` as
+    ``test_iceberg_commit_props_atomic`` does: the first call's CTAS
+    creates the table from its source view, each later call's MERGE
+    text runs through ``_merge_as_select``."""
+    import re
+
+    import pytest
+    from pyspark.sql.catalog import Catalog
+    from pyspark.sql.session import SparkSession
+
+    state = {}
+    real_sql = SparkSession.sql
+
+    def fake_sql(self, q, *a, **kw):
+        if q.startswith("CREATE TABLE"):
+            view = self.table(re.search(r"_kgflow_merge_src_\d+", q).group(0))
+            state["table"] = (view.schema, view.collect())
+            return None
+        if q.startswith("MERGE INTO"):
+            schema, rows = state["table"]
+            state["table"] = (schema, _merge_as_select(self, self.createDataFrame(rows, schema), q))
+            return None
+        return real_sql(self, q, *a, **kw)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(SparkSession, "sql", fake_sql)
+        mp.setattr(mat, "iceberg_available", lambda s: True)
+        mp.setattr(Catalog, "tableExists", lambda self, t: "table" in state)
+        for batch in batches:
+            mat.upsert(batch, "unused", keys, iceberg_table="ice.kg.t", **policy)
+    return state["table"][1]
+
+
+_MERGE_SCHEMA = "k string, f string, n long, names string, seen string"
+_MERGE_POLICIES = {
+    "latest_wins": {},
+    "exclude_update_cols": dict(exclude_update_cols=["seen"]),
+    "additive": dict(
+        mode="additive", add_cols=["n"], min_cols=["f"], exclude_update_cols=["seen"]
+    ),
+    "merge_props": dict(mode="merge_props", merge_cols=["names"]),
+}
+_merge_row = st.tuples(
+    st.sampled_from(["a", "b", None]),
+    st.sampled_from(["x", "y", None]),
+    st.one_of(st.none(), st.integers(-3, 3)),
+    st.sampled_from(["p", "q,p", "", None]),
+    st.sampled_from(["r1", "r2", None]),
+)
+
+
+@pytest.mark.parametrize("policy", sorted(_MERGE_POLICIES))
+@settings(max_examples=12, deadline=None)
+@given(st.lists(_merge_row, max_size=5), st.lists(_merge_row, max_size=5))
+@example([], [])
+@example([("a", "x", 1, "p", "r1")], [])
+@example([], [(None, None, None, None, None), (None, "y", 2, "q,p", "r2")])
+@example(
+    [("a", "y", None, None, "r2"), ("a", "x", 2, "q,p", None)],
+    [("a", None, 3, "", "r1"), ("a", "x", None, "p", None), ("b", "x", 1, "p", "r1")],
+)
+def test_merge_statement_matches_fallback(spark, tmp_path_factory, policy, first, second):
+    """Two commits through the Iceberg route — the CTAS, then the whole
+    MERGE text run as a query — leave the rows two fallback upserts
+    write, in every mode, with repeated keys, NULLs in every column
+    (keys too) and empty batches."""
+    kw = _MERGE_POLICIES[policy]
+    batches = [spark.createDataFrame(rows, _MERGE_SCHEMA) for rows in (first, second)]
+    path = str(tmp_path_factory.mktemp("merge"))
+    for batch in batches:
+        mat.upsert(batch, path, ["k"], **kw)
+    cols = batches[0].columns
+    want = sorted(map(tuple, mat.read_table(spark, path).select(*cols).collect()), key=repr)
+    got = sorted(map(tuple, _iceberg_commits(spark, batches, ["k"], kw)), key=repr)
+    assert got == want
 
 
 def test_upsert_additive_fallback(spark, tmp_path):
@@ -657,40 +788,6 @@ def test_upsert_additive_fallback(spark, tmp_path):
     assert (r.family, r.n_obs, r.n_convs) == ("cooccur", 6, 3)
 
 
-def test_resume_warns_on_ledger_without_bucket_count(
-    spark, transcripts, lexicon, tmp_path, capsys
-):
-    """A pre-versioning ledger (no 'buckets' column) resumed with
-    buckets=None must warn that the auto count may not match the
-    existing layout (silent full re-run otherwise looks like a bug)."""
-    import json
-    import os
-    import warnings
-
-    terms, isa = lexicon
-    d = str(tmp_path / "preledger")
-    cp.run_resumable(spark, transcripts, terms, isa, d, buckets=8)
-    # strip the recorded count, simulating a pre-round-4 ledger
-    ledger_dir = os.path.join(d, "_ledger")
-    for f in os.listdir(ledger_dir):
-        if not f.endswith(".json"):
-            continue
-        p = os.path.join(ledger_dir, f)
-        rows = [json.loads(line) for line in open(p)]
-        for r in rows:
-            r.pop("buckets", None)
-        with open(p, "w") as fh:
-            for r in rows:
-                fh.write(json.dumps(r) + "\n")
-        crc = os.path.join(ledger_dir, f".{f}.crc")
-        if os.path.exists(crc):
-            os.remove(crc)
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        cp.run_resumable(spark, transcripts, terms, isa, d, buckets=None)
-    assert any("records no bucket count" in str(x.message) for x in w)
-
-
 def _write_ledger(out_dir, files):
     import json
     import os
@@ -703,6 +800,17 @@ def _write_ledger(out_dir, files):
                 fh.write(json.dumps(r) + "\n")
 
 
+_LEDGER_COLS = {
+    "run_id": "string",
+    "partition_id": "int",
+    "input_fingerprint": "string",
+    "lex_fingerprint": "string",
+    "rows_in": "long",
+    "status": "string",
+    "ts": "double",
+}
+
+
 def _spark_pending(spark, out_dir, fp_map, lex_fp):
     """The Spark formula the driver-side planning replaced: latest row
     per partition over all statuses, filtered to matching done rows,
@@ -713,10 +821,14 @@ def _spark_pending(spark, out_dir, fp_map, lex_fp):
         [(b, fp, n) for b, (fp, n) in fp_map.items()],
         "bucket int, input_fingerprint string, rows_in long",
     )
-    ledger = cp.read_ledger(spark, out_dir)
-    if ledger is None or "lex_fingerprint" not in ledger.columns:
+    rows = cp.ledger_rows(out_dir)
+    if not rows:
         pending = fps
     else:
+        ledger = spark.createDataFrame(
+            [tuple(r.get(c) for c in _LEDGER_COLS) for r in rows],
+            ", ".join(f"{c} {t}" for c, t in _LEDGER_COLS.items()),
+        )
         done = (
             dedup_keep_first(ledger, ["partition_id"], [F.desc("ts"), F.desc("run_id")])
             .filter(F.col("status") == "done")
@@ -957,6 +1069,60 @@ def test_failed_write_keeps_previous_output(spark, transcripts, lexicon, tmp_pat
     latest = {r["partition_id"]: r for r in cp.ledger_rows(d) if r["run_id"] == rep.run_id}
     fresh = {r["partition_id"]: r for r in cp.ledger_rows(fresh_dir)}
     assert latest[b]["triples_out"] == fresh[b]["triples_out"]
+
+
+def test_ledger_write_crash_resumes(spark, transcripts, lexicon, tmp_path, monkeypatch):
+    """A process that dies halfway through writing a ledger line leaves
+    no file that ``ledger_rows`` reads: the next run re-runs every
+    bucket and equals a fresh run, and the run after it skips them all."""
+    import builtins
+
+    import pytest
+
+    terms, isa = lexicon
+    real_open = builtins.open
+
+    class HalfLine:
+        def __init__(self, fh):
+            self.fh = fh
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.fh.close()
+
+        def write(self, text):
+            self.fh.write(text[: text.index("\n") // 2])
+            self.fh.flush()
+            raise OSError("simulated crash mid-line")
+
+    def crashing_open(path, mode="r", *args, **kwargs):
+        fh = real_open(path, mode, *args, **kwargs)
+        return HalfLine(fh) if "w" in mode else fh
+
+    d = str(tmp_path / "crash")
+    with monkeypatch.context() as m:
+        m.setattr(cp, "open", crashing_open, raising=False)
+        with pytest.raises(OSError, match="simulated crash"):
+            cp.run_resumable(spark, transcripts, terms, isa, d, buckets=8)
+
+    rep = cp.run_resumable(spark, transcripts, terms, isa, d, buckets=8)
+    fresh_dir = str(tmp_path / "fresh")
+    fresh = cp.run_resumable(spark, transcripts, terms, isa, fresh_dir, buckets=8)
+    assert rep.processed_buckets == rep.total_buckets == fresh.processed_buckets
+    assert rep.triples_out == fresh.triples_out
+    assert _triple_set(spark, d) == _triple_set(spark, fresh_dir)
+
+    def lineage(out_dir):
+        return sorted(
+            (r["partition_id"], r["input_fingerprint"], r["rows_in"], r["triples_out"])
+            for r in cp.ledger_rows(out_dir)
+        )
+
+    assert lineage(d) == lineage(fresh_dir)
+    again = cp.run_resumable(spark, transcripts, terms, isa, d, buckets=8)
+    assert again.skipped_buckets == again.total_buckets
 
 
 def test_partial_rerun_job_count(spark, transcripts, lexicon, tmp_path):

@@ -407,10 +407,7 @@ def test_dedup_clusters_distributed_mapping_joins(spark, monkeypatch):
         "doc_id long, text string",
     )
     want = {tuple(r) for r in dedup.dedup_clusters(docs).collect()}
-    components = canon._components
-    monkeypatch.setattr(
-        canon, "_components", lambda edges: components(edges, driver_threshold=0)
-    )
+    monkeypatch.setattr(canon, "_DRIVER_EDGES", 0)
     out = dedup.dedup_clusters(docs)
     assert {tuple(r) for r in out.collect()} == want
     assert want == {(10, 10, True), (11, 10, False), (12, 10, False), (50, 50, True)}
@@ -1529,7 +1526,6 @@ def test_no_inline_default_parallelism_repartition():
 _INFERRING_READS = {
     "incremental.incremental_doc_stats": "probes the caller's document drop for its shape",
     "incremental.streaming_sessions": "probes the caller's event drop for its shape",
-    "checkpoint.read_ledger": "the JSON ledger's keys grow with the ledger version",
 }
 
 
@@ -1585,7 +1581,6 @@ def test_batch_reads_declare_their_schema():
 # reaches needs no entry of its own (imports.FactSpec, parse_obo, ...).
 _UNREACHED_KEEP = {
     # streaming/checkpoint surface: fixed product beside queries()
-    "checkpoint.read_ledger": "the JSON ledger read back as a DataFrame",
     "incremental.incremental_extract": "availableNow incremental triple run",
     "incremental.read_stream_triples": "reads what incremental_extract wrote",
     "incremental.streaming_sessions": "streaming twin of sessionize",

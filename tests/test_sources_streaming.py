@@ -311,10 +311,10 @@ def test_incremental_doc_stats(spark, tmp_path):
 def test_incremental_prov_unguarded_snapshot_refused(
     spark, transcripts, lexicon, tmp_path
 ):
-    """A snapshot that exists but carries no stream_id meta (pre-guard
-    version) must be REFUSED, not merged additively — an at-least-once
-    replay against it would silently double-count. allow_unguarded=True
-    overrides explicitly."""
+    """A snapshot that exists but carries no stream_id meta must be
+    REFUSED, not merged additively — an at-least-once replay against it
+    would silently double-count. The refusal leaves the snapshot as it
+    was."""
     import json
     import os
 
@@ -331,7 +331,7 @@ def test_incremental_prov_unguarded_snapshot_refused(
         (r.subj, r.pred, r.obj): (r.n_obs, r.n_convs)
         for r in incremental.read_prov_triples(spark, out_dir).collect()
     }
-    # simulate the pre-guard snapshot: strip stream_id from the pointer
+    # simulate an unguarded snapshot: strip stream_id from the pointer
     ptr = os.path.join(out_dir, "triples_prov", "_LATEST")
     d = json.load(open(ptr))
     d["meta"].pop("stream_id", None)
@@ -343,16 +343,11 @@ def test_incremental_prov_unguarded_snapshot_refused(
     ).parquet(in_dir)
     with pytest.raises(Exception, match="records no stream_id"):
         incremental.incremental_extract_prov(spark, in_dir, out_dir, terms, isa)
-    # explicit override proceeds (and, with the drop being genuinely
-    # new data, lands the correct totals)
-    incremental.incremental_extract_prov(
-        spark, in_dir, out_dir, terms, isa, allow_unguarded=True
-    )
     after = {
         (r.subj, r.pred, r.obj): (r.n_obs, r.n_convs)
         for r in incremental.read_prov_triples(spark, out_dir).collect()
     }
-    assert set(before) <= set(after) and len(after) >= len(before)
+    assert after == before
 
 
 def test_incremental_prov_iceberg_two_drops(spark, transcripts, lexicon, tmp_path):
@@ -391,6 +386,80 @@ def test_incremental_prov_iceberg_two_drops(spark, transcripts, lexicon, tmp_pat
         for r in P.build_triples_prov(transcripts, terms, isa).collect()
     }
     assert got == oneshot
+
+
+def test_incremental_prov_iceberg_guard(spark, transcripts, lexicon, tmp_path, monkeypatch):
+    """The Iceberg drain runs the parquet drain's guard sequence, checked
+    without the jar by intercepting ``snapshot_summary_props``,
+    ``tableExists`` and ``upsert`` (as ``test_iceberg_commit_props_atomic``
+    intercepts ``spark.sql``): ontology rows reach only the first commit,
+    ``commit_props`` carry the stream id and the batch id, a replayed
+    batch id is skipped, and a stream-id mismatch and an existing table
+    without a guard both raise."""
+    import pytest
+    from pyspark.sql.catalog import Catalog
+
+    from kgflow.plans import materialize as mat
+
+    terms, isa = lexicon
+    in_dir = str(tmp_path / "in")
+    out_dir = str(tmp_path / "out")
+    table = "ice.kg.triples_prov"
+    state = {"exists": False, "props": None}
+    commits = []
+
+    def summary_props(spark_, t, keys):
+        assert t == table and keys == ["kgflow.stream_id", "kgflow.merged_batch_id"]
+        return state["props"]
+
+    def upsert(df, path, keys, iceberg_table=None, commit_props=None, **policy):
+        assert iceberg_table == table and policy["mode"] == "additive"
+        families = {r.family for r in df.select("family").distinct().collect()}
+        commits.append((families, commit_props))
+        state["exists"] = True
+        state["props"] = {k: str(v) for k, v in commit_props.items()}
+
+    monkeypatch.setattr(mat, "iceberg_available", lambda s: True)
+    monkeypatch.setattr(mat, "snapshot_summary_props", summary_props)
+    monkeypatch.setattr(mat, "upsert", upsert)
+    monkeypatch.setattr(Catalog, "tableExists", lambda self, t: state["exists"])
+
+    def drop_and_drain(lo, hi):
+        transcripts.filter(
+            (F.col("conv_id") >= lo) & (F.col("conv_id") < hi)
+        ).write.mode("append").parquet(in_dir)
+        return drain()
+
+    def drain():
+        return incremental.incremental_extract_prov(
+            spark, in_dir, out_dir, terms, isa, iceberg_table=table
+        )
+
+    assert drop_and_drain("conv-000000", "conv-000010") == 1
+    ckpt = tmp_path / "out" / "_stream_prov_checkpoint"
+    stream_id = incremental._stream_query_id(str(ckpt))
+    assert drop_and_drain("conv-000010", "conv-000020") == 1
+    (first, props0), (second, props1) = commits
+    assert "ontology" in first and "ontology" not in second
+    assert props0 == {"kgflow.stream_id": stream_id, "kgflow.merged_batch_id": 0}
+    assert props1 == {"kgflow.stream_id": stream_id, "kgflow.merged_batch_id": 1}
+
+    # replay batch 1: its commit marker is gone, the table's guard is not
+    latest = max((f for f in os.listdir(ckpt / "commits") if f.isdigit()), key=int)
+    os.remove(ckpt / "commits" / latest)
+    crc = ckpt / "commits" / f".{latest}.crc"
+    if crc.exists():
+        os.remove(crc)
+    assert drain() == 0
+    assert len(commits) == 2
+
+    state["props"] = {**state["props"], "kgflow.stream_id": "another-stream"}
+    with pytest.raises(Exception, match="checkpoint was reset"):
+        drop_and_drain("conv-000020", "conv-000030")
+    state["props"] = None  # the table exists, no snapshot carries a guard
+    with pytest.raises(Exception, match="records no stream_id"):
+        drain()
+    assert len(commits) == 2
 
 
 def test_pack_sequences_from_doc_stats(spark, tmp_path):
@@ -518,7 +587,7 @@ def test_read_table_uses_recorded_schema(spark, transcripts, lexicon, tmp_path):
     """``read_table`` reads a snapshot with the schema ``write_snapshot``
     recorded in its pointer: the schema ``spark.read.parquet`` infers,
     for the provenance snapshot and for ``doc_stats``, with no Spark
-    job. A legacy pointer without ``schema`` still reads (by inference)."""
+    job."""
     import json
 
     from kgflow.plans import materialize as mat
@@ -549,14 +618,6 @@ def test_read_table_uses_recorded_schema(spark, transcripts, lexicon, tmp_path):
             sc.setLocalProperty("spark.job.description", None)
         assert got.schema == inferred
         assert sc.statusTracker().getJobIdsForGroup(group) == []
-
-        rows = sorted(map(tuple, got.collect()), key=str)
-        del ptr["schema"]
-        with open(ptr_file, "w") as fh:
-            json.dump(ptr, fh)
-        legacy = mat.read_table(spark, path)
-        assert legacy.schema == inferred
-        assert sorted(map(tuple, legacy.collect()), key=str) == rows
 
 
 def test_incremental_prov_ontology_edge_that_is_also_a_transcript_triple(spark, tmp_path):

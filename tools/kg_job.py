@@ -119,7 +119,7 @@ def main(argv: list[str] | None = None) -> int:
         else:
             triples = P.build_triples(tr, terms, isa)
         triples.write.mode("overwrite").parquet(args.out + "/triples")
-        triples_back = spark.read.parquet(args.out + "/triples")
+        triples_back = spark.read.schema(triples.schema).parquet(args.out + "/triples")
         nodes = P.build_nodes(
             triples_back.select("subj", "pred", "obj"), terms
         )
@@ -128,7 +128,7 @@ def main(argv: list[str] | None = None) -> int:
             "mode": "prov" if args.prov else "oneshot",
             "run_id": run_id,
             "triples_written": triples_back.count(),
-            "nodes_written": spark.read.parquet(args.out + "/nodes").count(),
+            "nodes_written": spark.read.schema(nodes.schema).parquet(args.out + "/nodes").count(),
         }
 
     summary["wall_sec"] = round(time.time() - t0, 2)
