@@ -2443,26 +2443,26 @@ def q_quality_gate(spark, sf):
 
 def q_lm_quality_score(spark, sf):
     """Unigram cross-entropy quality score
-    (quality.unigram_logprob_score): corpus-fit token log-probs,
+    (quality.ngram_logprob_score, n=1): corpus-fit token log-probs,
     per-doc mean via an exact scaled-integer sum (no float summation-
     order drift), the CCNet perplexity-filter signal at n=1."""
     from kgflow.operators import quality
 
-    return quality.unigram_logprob_score(_t(spark, sf, "documents"))
+    return quality.ngram_logprob_score(_t(spark, sf, "documents"), 1)
 
 
 def q_bigram_lm_score(spark, sf):
     """Stupid-backoff bigram LM quality score
-    (quality.bigram_logprob_score): fit on the deterministic 50%
+    (quality.ngram_logprob_score, n=2): fit on the deterministic 50%
     hash sample, score the FULL corpus — every bigram the sample
     missed exercises the backoff branch live. Scaled-integer sums
     keep the mean exact across engines."""
     from kgflow.operators import quality, sample
 
     docs = _t(spark, sf, "documents")
-    return quality.bigram_logprob_score(
-        docs, fit_docs=sample.hash_sample(docs, 0.5)
-    )
+    return quality.ngram_logprob_score(
+        docs, 2, fit_docs=sample.hash_sample(docs, 0.5)
+    ).withColumnRenamed("lm_score", "bigram_lm_score")
 
 
 def q_data_prep_pipeline(spark, sf):
@@ -3007,7 +3007,7 @@ def q_audio_frame_energy(spark, sf):
 
 def q_trigram_lm_score(spark, sf):
     """Stupid-backoff trigram LM with a PRUNED count table
-    (quality.trigram_logprob_score): fit on the deterministic 50%
+    (quality.ngram_logprob_score, n=3): fit on the deterministic 50%
     hash sample with singleton trigrams pruned (min_count=2), score
     the FULL corpus — so the pruned-trigram, seen-bigram, and
     unigram-floor backoff branches all fire live. Pruning is the
@@ -3016,9 +3016,9 @@ def q_trigram_lm_score(spark, sf):
     from kgflow.operators import quality, sample
 
     docs = _t(spark, sf, "documents")
-    return quality.trigram_logprob_score(
-        docs, fit_docs=sample.hash_sample(docs, 0.5), prune_min_count=2
-    )
+    return quality.ngram_logprob_score(
+        docs, 3, fit_docs=sample.hash_sample(docs, 0.5), prune_min_count=2
+    ).withColumnRenamed("lm_score", "trigram_lm_score")
 
 
 def q_trigram_prune_stats(spark, sf):
@@ -3110,7 +3110,7 @@ def q_quality_curriculum_sample(spark, sf):
     # here and REJECTED — Dataset.localCheckpoint's construction cost
     # (toRdd planning/broadcast build) equals the saved recompute at
     # this plan size, and regresses sf0.1
-    scores = quality.unigram_logprob_score(_t(spark, sf, "documents"))
+    scores = quality.ngram_logprob_score(_t(spark, sf, "documents"), 1)
     qs = scores.agg(
         F.round(F.expr("percentile(lm_score, 0.25)"), 6).alias("q1"),
         F.round(F.expr("percentile(lm_score, 0.5)"), 6).alias("q2"),

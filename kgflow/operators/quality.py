@@ -1,4 +1,4 @@
-"""Repetition-based quality metrics for training-data filtering.
+"""Document quality signals for training-data filtering.
 
 Gopher-style repetition signals (Rae et al. 2021, §A1.1): documents
 dominated by a few repeated n-grams or repeated tokens are boilerplate/
@@ -6,11 +6,16 @@ spam and poison language-model training. The reference filters its
 corpus by length caps only (``entrez_gene_embedding.py:10``); these
 metrics are the corpus-hygiene extension a pretraining pipeline needs.
 
-Scale shape: ``repetition_stats`` is two map-side-combining aggregates
-— (doc, ngram) counts, then a per-doc max — so the shuffle carries one
-row per DISTINCT (doc, ngram), never the raw token stream, and no
-window sort is involved. The in-row signals (``dup_token_fraction``)
-ride along for free.
+Scale shape: ``repetition_stats`` is a narrow map after the scan's
+round-robin spread (the per-doc top n-gram is a sorted-array fold
+in-row), and ``quality_gate`` / ``quality_keep`` are in-row
+predicates with no shuffle at all.
+
+``ngram_logprob_score`` is the CCNet-style perplexity signal (Wenzek
+et al. 2020) at any order n: one token-context stream builder, one
+count builder for the fit tables and one stupid-backoff chain serve
+the unigram, bigram and pruned trigram queries;
+``trigram_prune_stats`` reads the same count builder's order-3 table.
 """
 
 from __future__ import annotations
@@ -202,199 +207,138 @@ def quality_keep(rules: dict | None = None, text_col: str = "text"):
     return keep
 
 
-def unigram_logprob_score(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    floor_lp6: int = -10_000_000,
-    fit_docs: DataFrame | None = None,
+#: stupid-backoff weight (Brants et al. 2007): a position that backs
+#: off m orders scores α^m times the lower-order estimate
+_BACKOFF_ALPHA = 0.4
+
+
+def _gram_keys(k: int) -> list[str]:
+    """Columns of a k-gram in the stream: prev{k-1}, …, prev1, cur."""
+    return [f"prev{j}" for j in range(k - 1, 0, -1)] + ["cur"]
+
+
+def _ngram_stream(
+    d: DataFrame, n: int, text_col: str, id_col: str | None
 ) -> DataFrame:
-    """Statistical-LM quality score, KenLM-lite: fit unigram token
-    log10-probabilities on the corpus itself (one map-side-combining
-    aggregate), then score each document by its MEAN token log-prob.
-    Gibberish / out-of-distribution documents score far below the
-    corpus mode — the classic CCNet-style perplexity filter signal
-    (Wenzek et al. 2020) with the n-gram model degenerated to n=1 so
-    the whole fit stays one aggregate.
-
-    Determinism across engines and partitionings: per-token log-probs
-    are scaled to integers (round(lp·10⁶) as ``lp6``) BEFORE the
-    per-doc sum, so the aggregate is an exact integer sum — no
-    floating summation-order drift — and one final division yields
-    the score. The model is fit on ``fit_docs`` when given (score a
-    stream against a reference corpus), else on ``docs`` itself;
-    tokens unseen at fit time take ``floor_lp6``.
-
-    Returns (id_col, n_tokens, lm_score). Scale shape: one explode →
-    vocab aggregate (vocab-sized result), a 1-row total broadcast, one
-    join of the log-prob table (AQE broadcasts it under the byte
-    threshold and shuffles it above), one per-doc aggregate.
-    """
-    toks = spread(docs.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col), F.explode(tx.tokens(text_col)).alias("tok")
-    )
-    fit_toks = (
-        toks
-        if fit_docs is None
-        else spread(fit_docs.select(F.col(text_col))).select(
-            F.explode(tx.tokens(text_col)).alias("tok")
-        )
-    )
-    freq = fit_toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
-    # 1-row total; broadcast so the log-prob table is one narrow pass
-    tot = freq.agg(F.sum("c").cast("double").alias("n"))
-    lp = freq.crossJoin(F.broadcast(tot)).select(
-        "tok",
-        F.round(F.log10(F.col("c") / F.col("n")) * 1_000_000, 0)
-        .cast("long")
-        .alias("lp6"),
-    )
-    scored = toks.join(lp, "tok", "left")
-    return (
-        scored.groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.round(
-                F.sum(F.coalesce("lp6", F.lit(floor_lp6)))
-                / (F.count(F.lit(1)) * 1_000_000.0),
-                4,
-            ).alias("lm_score"),
-        )
-    )
-
-
-def _context_stream(
-    d: DataFrame, text_col: str, id_col: str | None = None
-) -> DataFrame:
-    """Per-token (prev2, prev1, cur) stream, built in-row: tokenize
-    once into a projected array column, then a single indexed
-    ``transform`` reads the two predecessors via 0-based ``F.get``
-    (NULL out-of-bounds — no conditional guards, no per-element
-    re-tokenize), and one explode yields the stream. Zero shuffle;
-    the array never outlives the projection."""
+    """Per-token (id_col?, prev{n-1}, …, prev1, cur) stream, built
+    in-row: spread the raw text (it crosses the exchange once, before
+    the CPU-heavy projection), tokenize once into an array column, then
+    one indexed ``transform`` reads the predecessors by 0-based
+    ``F.get`` (NULL before the document start — no guards, no
+    re-tokenize) and one explode yields the stream."""
     cols = [F.col(id_col)] if id_col else []
-    # spread BEFORE the CPU-heavy tokenize + indexed-transform
-    # projection (raw text crosses an exchange once)
-    base = spread(d.select(*cols, F.col(text_col))).select(*cols, tx.tokens(text_col).alias("_t"))
-    trips = F.transform(
+    base = spread(d.select(*cols, F.col(text_col))).select(
+        *cols, tx.tokens(text_col).alias("_t")
+    )
+    grams = F.transform(
         F.col("_t"),
         lambda x, i: F.struct(
-            F.get(F.col("_t"), i - 2).alias("prev2"),
-            F.get(F.col("_t"), i - 1).alias("prev1"),
+            *[F.get(F.col("_t"), i - j).alias(f"prev{j}") for j in range(n - 1, 0, -1)],
             x.alias("cur"),
         ),
     )
-    return base.select(
-        *([id_col] if id_col else []), F.explode(trips).alias("p")
-    ).select(
-        *([id_col] if id_col else []),
-        F.col("p.prev2").alias("prev2"),
-        F.col("p.prev1").alias("prev1"),
-        F.col("p.cur").alias("cur"),
-    )
+    return base.select(*cols, F.explode(grams).alias("g")).select(*cols, "g.*")
 
 
-def trigram_logprob_score(
+def _ngram_counts(fit: DataFrame, n: int) -> list[DataFrame]:
+    """Fit tables c1 … cn of an order-``n`` stream: table k counts each
+    k-gram (``_gram_keys(k)``) in one map-side-combining aggregate,
+    over the positions that have k-1 predecessors."""
+    tables = []
+    for k in range(1, n + 1):
+        grams = fit if k == 1 else fit.filter(F.col(f"prev{k - 1}").isNotNull())
+        tables.append(
+            grams.groupBy(*_gram_keys(k)).agg(F.count(F.lit(1)).alias(f"c{k}"))
+        )
+    return tables
+
+
+def ngram_logprob_score(
     docs: DataFrame,
+    n: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    backoff_alpha: float = 0.4,
-    prune_min_count: int = 2,
+    prune_min_count: int = 1,
     fit_docs: DataFrame | None = None,
 ) -> DataFrame:
-    """Trigram LM quality score with stupid backoff and a PRUNED
-    trigram table — the KenLM-style shape (Heafield 2011 prunes
-    singleton n-grams for exactly this reason): at web scale the
-    trigram type count grows near-linearly with the corpus while
-    bigram/unigram tables saturate, so the trigram table is the one
-    that can neither broadcast nor fit a reasonable shuffle side.
-    Dropping types with fit count < ``prune_min_count`` removes the
-    long tail (typically most TYPES but a small count MASS — measure
-    with :func:`trigram_prune_stats`); a pruned-away trigram simply
-    takes the backoff path, which is the stupid-backoff contract.
+    """Order-``n`` LM quality score with stupid backoff (Brants et al.
+    2007): fit n-gram counts, then score each document by the MEAN
+    log10 probability of its tokens — the CCNet-style perplexity
+    filter signal (Wenzek et al. 2020). Gibberish and out-of-
+    distribution documents score far below the corpus mode.
 
-    Chain: P(w|p2,p1) = c3(p2,p1,w)/c2(p2,p1) when the pruned table
-    has the trigram; else ``alpha``·c2(p1,w)/c1(p1) when the bigram
-    was seen; else ``alpha``²·c1(w)/N. Positions 1 and 2 score by the
-    unigram / backed-off-bigram models. Unseen-even-at-unigram tokens
-    take count 0.5 (same floor as :func:`bigram_logprob_score`).
+    Chain: a position i (1-based) has k = min(n, i) orders. It scores
+    c_k(gram)/c_{k-1}(context) when the order-k table has its k-gram,
+    else α·c_{k-1}/c_{k-2} one order down, and so on to α^(k-1)·c1/N
+    (α = ``_BACKOFF_ALPHA``, N the fit token count). A token unseen
+    even at unigram level counts 0.5.
 
-    Exactness: per-position log10-probs scale to integers
-    (round(lp·10⁶)) before the per-doc sum — partition-order exact,
-    engine-portable. Fit on ``fit_docs`` when given (fit-on-sample /
-    score-full-corpus is the intended use — it exercises every
-    branch live), else on ``docs``.
+    ``prune_min_count`` > 1 drops the top-order types seen fewer times
+    — the KenLM-style prune (Heafield 2011): at web scale the top-order
+    type count grows near-linearly with the corpus while the lower
+    tables saturate, and the Zipf tail is most of its types but little
+    of its mass (measure with :func:`trigram_prune_stats`). A pruned
+    gram takes the backoff path. The model is fit on ``fit_docs`` when
+    given — fit on a sample, score the full corpus, so every backoff
+    branch fires live — else on ``docs``.
 
-    Scale shape: three fit aggregates (all map-side partial; the
-    trigram one is pruned BEFORE it is joined), then the token stream
-    left-joins five dimension tables — AQE picks each strategy from
-    measured bytes (broadcast under the threshold, shuffle above; the
-    web-scale trigram table takes the shuffle, and pruning is what
-    keeps that shuffle side proportional to the HEAD of the
-    distribution) — plus a 1-row total broadcast, and one per-doc
-    aggregate."""
-    fit = _context_stream(
-        fit_docs if fit_docs is not None else docs, text_col
+    Exactness: per-position log-probs are scaled to integers
+    (round(lp·10⁶)) before the per-doc sum — an exact integer sum,
+    partition-order independent, engine-portable — and one division
+    yields the score.
+
+    Returns (id_col, n_tokens, lm_score). Scale shape: n fit aggregates
+    (map-side partial; the pruned top table is filtered before it is
+    joined), a 1-row total broadcast, the stream left-joined to the n
+    gram tables and the n-1 context tables — no hint: AQE broadcasts a
+    table under the byte threshold and shuffles it above, and pruning
+    keeps the top table's shuffle side proportional to the head of the
+    distribution — then one per-doc aggregate."""
+    stream = _ngram_stream(docs, n, text_col, id_col)
+    fit = (
+        stream.drop(id_col)
+        if fit_docs is None
+        else _ngram_stream(fit_docs, n, text_col, None)
     )
-    uni = fit.groupBy(F.col("cur").alias("tok")).agg(
-        F.count(F.lit(1)).alias("cu")
-    )
-    tot = uni.agg(F.sum("cu").cast("double").alias("n"))
-    big = (
-        fit.filter(F.col("prev1").isNotNull())
-        .groupBy("prev1", "cur")
-        .agg(F.count(F.lit(1)).alias("cb"))
-    )
-    tri = (
-        fit.filter(F.col("prev2").isNotNull())
-        .groupBy("prev2", "prev1", "cur")
-        .agg(F.count(F.lit(1)).alias("ct"))
-    )
+    counts = _ngram_counts(fit, n)
+    tot = counts[0].agg(F.sum("c1").cast("double").alias("n"))
     if prune_min_count > 1:
-        tri = tri.filter(F.col("ct") >= int(prune_min_count))
+        counts[-1] = counts[-1].filter(F.col(f"c{n}") >= int(prune_min_count))
 
-    stream = _context_stream(docs, text_col, id_col=id_col)
-    big_ctx = big.select(
-        F.col("prev1").alias("prev2"),
-        F.col("cur").alias("prev1"),
-        F.col("cb").alias("cb_ctx"),
-    )
-    uni_prev = uni.select(F.col("tok").alias("prev1"), F.col("cu").alias("cu_prev"))
-    uni_cur = uni.select(F.col("tok").alias("cur"), F.col("cu").alias("cu_cur"))
-    scored = (
-        stream.join(tri, ["prev2", "prev1", "cur"], "left")
-        .join(big, ["prev1", "cur"], "left")
-        .join(big_ctx, ["prev2", "prev1"], "left")
-        .join(uni_prev, "prev1", "left")
-        .join(uni_cur, "cur", "left")
-        .crossJoin(F.broadcast(tot))  # 1 row
-    )
-    a = float(backoff_alpha)
-    cu_eff = F.coalesce(F.col("cu_cur").cast("double"), F.lit(0.5))
-    lp = (
-        F.when(F.col("prev1").isNull(), F.log10(cu_eff / F.col("n")))
-        .when(
-            F.col("prev2").isNull(),
-            F.when(
-                F.col("cb").isNotNull(),
-                F.log10(F.col("cb") / F.col("cu_prev").cast("double")),
-            ).otherwise(F.log10(F.lit(a) * cu_eff / F.col("n"))),
-        )
-        .when(
-            F.col("ct").isNotNull(),
-            F.log10(F.col("ct") / F.col("cb_ctx").cast("double")),
-        )
-        .when(
-            F.col("cb").isNotNull(),
-            F.log10(F.lit(a) * F.col("cb") / F.col("cu_prev").cast("double")),
-        )
-        .otherwise(F.log10(F.lit(a) * F.lit(a) * cu_eff / F.col("n")))
-    )
+    scored = stream
+    for k in range(n, 0, -1):
+        scored = scored.join(counts[k - 1], _gram_keys(k), "left")
+        if k > 1:
+            # context count: table k-1 shifted one position back
+            ctx_keys = _gram_keys(k)[:-1]
+            ctx = counts[k - 2].select(
+                *[F.col(c).alias(a) for c, a in zip(_gram_keys(k - 1), ctx_keys)],
+                F.col(f"c{k - 1}").alias(f"ctx{k}"),
+            )
+            scored = scored.join(ctx, ctx_keys, "left")
+    scored = scored.crossJoin(F.broadcast(tot))  # 1 row
+
+    def prob(j: int, m: int):
+        """log10 of the order-j estimate backed off m times (NULL when
+        order j has no count)."""
+        if j == 1:
+            c = F.coalesce(F.col("c1").cast("double"), F.lit(0.5))
+            ctx = F.col("n")
+        else:
+            c, ctx = F.col(f"c{j}"), F.col(f"ctx{j}")
+        return F.log10((F.lit(_BACKOFF_ALPHA ** m) * c) / ctx.cast("double"))
+
+    def backoff(k: int):
+        return F.coalesce(*[prob(j, k - j) for j in range(k, 0, -1)])
+
+    lp = backoff(n)
+    for k in range(n - 1, 0, -1):
+        lp = F.when(F.col(f"prev{k}").isNull(), backoff(k)).otherwise(lp)
     lp6 = F.round(lp * 1_000_000, 0).cast("long")
     return scored.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.round(F.sum(lp6) / (F.count(F.lit(1)) * 1_000_000.0), 4).alias(
-            "trigram_lm_score"
+            "lm_score"
         ),
     )
 
@@ -404,110 +348,21 @@ def trigram_prune_stats(
     text_col: str = "text",
     prune_min_count: int = 2,
 ) -> DataFrame:
-    """Observability for :func:`trigram_logprob_score`'s prune: one
-    row of (kept_types, dropped_types, kept_mass, dropped_mass) over
-    the fit corpus's trigram table at the given threshold — the same
-    no-silent-caps contract as ``lsh_cap_stats``. On a natural
-    corpus expect dropped_types ≫ kept_types (the Zipf tail) while
-    dropped_mass stays a small fraction: that asymmetry is the whole
-    case for pruning, and this query is how you check it holds on
+    """Observability for :func:`ngram_logprob_score`'s prune at n = 3:
+    one row of (kept_types, dropped_types, kept_mass, dropped_mass)
+    over the fit corpus's unpruned trigram table at the given threshold
+    — the same no-silent-caps contract as ``lsh_cap_stats``. On a
+    natural corpus expect dropped_types ≫ kept_types (the Zipf tail)
+    while dropped_mass stays a small fraction: that asymmetry is the
+    whole case for pruning, and this query is how you check it holds on
     YOUR corpus before trusting the pruned scorer. Two map-side-
     combining aggregates; the result is a single row."""
     m = int(prune_min_count)
-    tri = (
-        _context_stream(docs, text_col)
-        .filter(F.col("prev2").isNotNull())
-        .groupBy("prev2", "prev1", "cur")
-        .agg(F.count(F.lit(1)).alias("ct"))
-    )
-    kept = F.col("ct") >= m
+    tri = _ngram_counts(_ngram_stream(docs, 3, text_col, None), 3)[-1]
+    kept = F.col("c3") >= m
     return tri.agg(
         F.sum(F.when(kept, 1).otherwise(0)).cast("long").alias("kept_types"),
         F.sum(F.when(~kept, 1).otherwise(0)).cast("long").alias("dropped_types"),
-        F.sum(F.when(kept, F.col("ct")).otherwise(0)).cast("long").alias("kept_mass"),
-        F.sum(F.when(~kept, F.col("ct")).otherwise(0)).cast("long").alias("dropped_mass"),
-    )
-
-
-def bigram_logprob_score(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    backoff_alpha: float = 0.4,
-    fit_docs: DataFrame | None = None,
-) -> DataFrame:
-    """Bigram LM quality score with stupid backoff (Brants et al.
-    2007): P(w|prev) = c(prev,w)/c(prev) when the bigram was seen at
-    fit time, else ``backoff_alpha``·c(w)/N from the unigram table —
-    the actual shape of a CCNet-style perplexity filter, one n up
-    from ``unigram_logprob_score``. A document's score is the mean
-    log10 probability of its tokens (the first token scored by the
-    unigram model).
-
-    Fit on ``fit_docs`` when given, else on ``docs`` itself. Fitting
-    on a SAMPLE and scoring the full corpus is the intended use: the
-    backoff branch then fires on every bigram the sample missed, and
-    the fit tables stay a bounded fraction of the corpus vocabulary.
-
-    Exactness: per-position log-probs are scaled to integers
-    (round(lp·10⁶)) before the per-doc sum — exact integer
-    aggregation, partition-order independent, engine-portable.
-
-    Scale shape: two fit aggregates (unigram vocab-sized, bigram
-    seen-pair-sized), a 1-row total broadcast, then the token stream
-    joined to both tables, and one per-doc aggregate. The bigram table
-    of a web corpus exceeds any broadcast, so no join is hinted: AQE
-    broadcasts a table under the byte threshold and shuffles it above.
-    """
-    def pair_stream(d: DataFrame, with_id: bool) -> DataFrame:
-        t = tx.tokens(text_col)
-        prevs = F.concat(
-            F.array(F.lit(None).cast("string")),
-            F.slice(t, 1, F.size(t) - 1),
-        )
-        cols = [F.col(id_col)] if with_id else []
-        # spread before the tokenize/zip/explode
-        d = spread(d.select(*cols, F.col(text_col)))
-        return d.select(*cols, F.explode(F.arrays_zip(prevs, t)).alias("p")).select(
-            *([id_col] if with_id else []),
-            F.col("p")["0"].alias("prev"),
-            F.col("p")["1"].alias("cur"),
-        )
-
-    fit = pair_stream(fit_docs if fit_docs is not None else docs, with_id=False)
-    uni = fit.groupBy(F.col("cur").alias("tok")).agg(
-        F.count(F.lit(1)).alias("cu")
-    )
-    tot = uni.agg(F.sum("cu").cast("double").alias("n"))
-    big = (
-        fit.filter(F.col("prev").isNotNull())
-        .groupBy("prev", "cur")
-        .agg(F.count(F.lit(1)).alias("cb"))
-    )
-
-    stream = pair_stream(docs, with_id=True)
-    uni_prev = uni.select(F.col("tok").alias("prev"), F.col("cu").alias("cu_prev"))
-    uni_cur = uni.select(F.col("tok").alias("cur"), F.col("cu").alias("cu_cur"))
-    scored = (
-        stream.join(big, ["prev", "cur"], "left")
-        .join(uni_prev, "prev", "left")
-        .join(uni_cur, "cur", "left")
-        .crossJoin(F.broadcast(tot))  # 1 row
-    )
-    # unigram floor for tokens unseen even at unigram level: count 0.5
-    cu_eff = F.coalesce(F.col("cu_cur").cast("double"), F.lit(0.5))
-    lp = (
-        F.when(F.col("prev").isNull(), F.log10(cu_eff / F.col("n")))
-        .when(
-            F.col("cb").isNotNull(),
-            F.log10(F.col("cb") / F.col("cu_prev").cast("double")),
-        )
-        .otherwise(F.log10(F.lit(float(backoff_alpha)) * cu_eff / F.col("n")))
-    )
-    lp6 = F.round(lp * 1_000_000, 0).cast("long")
-    return scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.round(F.sum(lp6) / (F.count(F.lit(1)) * 1_000_000.0), 4).alias(
-            "bigram_lm_score"
-        ),
+        F.sum(F.when(kept, F.col("c3")).otherwise(0)).cast("long").alias("kept_mass"),
+        F.sum(F.when(~kept, F.col("c3")).otherwise(0)).cast("long").alias("dropped_mass"),
     )

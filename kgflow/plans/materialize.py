@@ -256,16 +256,15 @@ def _upsert_iceberg(
     policy: dict,
     commit_props: dict | None = None,
 ) -> None:
-    """One atomic MERGE INTO commit (snapshot isolation) — the scale
-    sink; the parquet snapshot dir is the portable stand-in.
+    """One atomic commit (snapshot isolation) — the scale sink; the
+    parquet snapshot dir is the portable stand-in. A fresh table is one
+    CTAS of the batch (Iceberg's catalogs stage a CTAS, so the table and
+    its rows land in one commit), an existing one takes one MERGE INTO.
 
-    ``commit_props`` are attached to the MERGE's own snapshot summary
+    ``commit_props`` are attached to that commit's own snapshot summary
     (via ``SNAPSHOT_PROP_PREFIX`` session confs), so guard metadata and
     data commit ATOMICALLY — a crash can never leave merged data without
-    its replay-guard record. When commit_props are given and the table
-    does not exist yet, the first batch is routed through CREATE-empty +
-    MERGE (instead of CTAS) so even batch 0's guard rides a MERGE
-    commit."""
+    its replay-guard record, nor a table without a guard."""
     spark = df.sparkSession
     # MERGE requires a unique source key set: collapse the batch with
     # the fallback's aggregate, every row at one order, so a batch that
@@ -279,27 +278,12 @@ def _upsert_iceberg(
     batch.createOrReplaceTempView(view)
     prop_keys = [SNAPSHOT_PROP_PREFIX + k for k in (commit_props or {})]
     try:
-        if not spark.catalog.tableExists(table):
-            if commit_props:
-                # empty CREATE first, with NO guard confs set: were the
-                # confs live here, Iceberg would stamp the guard into
-                # the empty CTAS snapshot, and a crash between this
-                # CREATE and the MERGE would leave a snapshot claiming
-                # batch 0 merged — silent data loss on restart (ADVICE
-                # r6, high). The guard confs go live only for the MERGE
-                # below, the commit that actually carries the rows.
-                spark.sql(
-                    f"CREATE TABLE {table} USING iceberg "
-                    f"AS SELECT * FROM {view} WHERE 1 = 0"
-                )
-            else:
-                spark.sql(
-                    f"CREATE TABLE {table} USING iceberg AS SELECT * FROM {view}"
-                )
-                return
         for k, v in (commit_props or {}).items():
             spark.conf.set(SNAPSHOT_PROP_PREFIX + k, str(v))
-        spark.sql(merge_into_sql(table, view, batch.columns, keys, **policy))
+        if spark.catalog.tableExists(table):
+            spark.sql(merge_into_sql(table, view, batch.columns, keys, **policy))
+        else:
+            spark.sql(f"CREATE TABLE {table} USING iceberg AS SELECT * FROM {view}")
     finally:
         spark.catalog.dropTempView(view)
         for k in prop_keys:

@@ -24,6 +24,7 @@ from __future__ import annotations
 import json
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -144,10 +145,11 @@ def incremental_extract_prov(
     * **Iceberg runtime present and ``iceberg_table`` given** — the
       guard is the newest snapshot summary that carries it
       (``materialize.snapshot_summary_props``), and the commit is one
-      additive ``MERGE INTO`` (``upsert(mode="additive")``): matched
+      CTAS for the first drop, else one additive ``MERGE INTO``
+      (``upsert(mode="additive")``): matched
       triple keys add ``n_obs`` and ``n_convs``, take ``family`` via
       ``least``, ``first_seen_run`` excluded from the update list
-      (first writer wins). The guard rides the MERGE's own snapshot
+      (first writer wins). The guard rides that commit's own snapshot
       summary (``commit_props``). Per-drain cost is **O(|batch|)**
       touched rows — the whole point: the parquet fallback below
       re-aggregates existing ∪ batch, i.e. O(|snapshot|) per drain,
@@ -276,10 +278,13 @@ def incremental_doc_stats(
 
     try:
         schema = spark.read.parquet(input_dir).schema
-    except Exception:
+    except AnalysisException as e:
         # landing dir not created / no files yet: a maintenance job
-        # finding nothing to maintain is a no-op, not a crash
-        return 0
+        # finding nothing to maintain is a no-op, not a crash. Any
+        # other failure (an unreadable file, say) raises.
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return 0
+        raise
     stream = spark.readStream.schema(schema).parquet(input_dir)
     batches = {"n": 0}
     t = F.coalesce(F.col("text"), F.lit(""))

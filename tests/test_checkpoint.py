@@ -319,11 +319,16 @@ def test_iceberg_switch_falls_back_without_jar(spark, tmp_path):
 
 def test_iceberg_commit_props_atomic(spark, tmp_path, monkeypatch):
     """Replay-guard atomicity on the Iceberg route: commit_props must be
-    live as ``snapshot-property.*`` session confs DURING the MERGE (so
-    Iceberg stamps them into that commit's snapshot summary), unset
-    afterwards, and a fresh table must route through empty-CREATE + MERGE
-    (never CTAS) so batch 0's guard rides the commit that carries its
-    rows. Exercised jar-free by intercepting spark.sql / tableExists."""
+    live as ``snapshot-property.*`` session confs DURING the one statement
+    that commits the rows (so Iceberg stamps them into that commit's
+    snapshot summary) and unset afterwards. A fresh table is ONE CTAS of
+    the batch — no empty CREATE followed by a MERGE, whose crash window
+    would leave a table without a guard — and an existing table takes
+    one MERGE. Exercised jar-free by intercepting spark.sql /
+    tableExists."""
+    import re
+
+    from pyspark.sql.catalog import Catalog
     from pyspark.sql.session import SparkSession
 
     calls = []
@@ -341,37 +346,53 @@ def test_iceberg_commit_props_atomic(spark, tmp_path, monkeypatch):
             return None  # no Iceberg jar — record and skip execution
         return real_sql(self, q, *a, **kw)
 
+    exists = {"ice.kg.prov": False}
     monkeypatch.setattr(SparkSession, "sql", fake_sql)
     monkeypatch.setattr(mat, "iceberg_available", lambda s: True)
-    from pyspark.sql.catalog import Catalog
-
-    monkeypatch.setattr(Catalog, "tableExists", lambda self, t: False)
+    monkeypatch.setattr(Catalog, "tableExists", lambda self, t: exists.get(t, False))
 
     df = spark.createDataFrame([("s", "p", "o", 1)], "subj string, pred string, obj string, n_obs long")
+    props = {"kgflow.stream_id": "q-1", "kgflow.merged_batch_id": 0}
+    ctas = re.compile(r"CREATE TABLE ice\.kg\.prov USING iceberg AS SELECT \* FROM _kgflow_merge_src_\d+")
+
+    def commits():
+        return [c for c in calls if c[0].startswith(("CREATE", "MERGE"))]
+
     mat.upsert(
         df, str(tmp_path / "unused"), ["subj", "pred", "obj"],
         mode="additive", add_cols=["n_obs"],
-        iceberg_table="ice.kg.prov",
-        commit_props={"kgflow.stream_id": "q-1", "kgflow.merged_batch_id": 0},
+        iceberg_table="ice.kg.prov", commit_props=props,
     )
-    stmts = [c[0] for c in calls]
-    assert any("WHERE 1 = 0" in s for s in stmts if s.startswith("CREATE"))
-    merge = [c for c in calls if c[0].startswith("MERGE INTO ice.kg.prov")]
-    assert len(merge) == 1
-    # the guard confs were live during the MERGE call — same commit
-    assert merge[0][1] == "q-1" and merge[0][2] == "0"
+    # a fresh table: exactly one CTAS, with both guard confs live
+    ((q, stream_id, batch_id),) = commits()
+    assert ctas.fullmatch(q)
+    assert (stream_id, batch_id) == ("q-1", "0")
     # and unset once the upsert returned
     assert spark.conf.get("snapshot-property.kgflow.stream_id", None) is None
+    assert spark.conf.get("snapshot-property.kgflow.merged_batch_id", None) is None
 
-    # without commit_props a fresh table takes the one-commit CTAS
+    # an existing table: exactly one MERGE, with both guard confs live
+    calls.clear()
+    exists["ice.kg.prov"] = True
+    mat.upsert(
+        df, str(tmp_path / "unused"), ["subj", "pred", "obj"],
+        mode="additive", add_cols=["n_obs"], iceberg_table="ice.kg.prov",
+        commit_props={**props, "kgflow.merged_batch_id": 1},
+    )
+    ((q, stream_id, batch_id),) = commits()
+    assert q.startswith("MERGE INTO ice.kg.prov ")
+    assert (stream_id, batch_id) == ("q-1", "1")
+    assert spark.conf.get("snapshot-property.kgflow.stream_id", None) is None
+
+    # without commit_props a fresh table takes the same one CTAS, no confs
     calls.clear()
     mat.upsert(
         df, str(tmp_path / "unused2"), ["subj", "pred", "obj"],
         mode="additive", add_cols=["n_obs"], iceberg_table="ice.kg.prov2",
     )
-    stmts = [c[0] for c in calls]
-    assert any(s.startswith("CREATE TABLE ice.kg.prov2") and "WHERE 1 = 0" not in s for s in stmts)
-    assert not any(s.startswith("MERGE") for s in stmts)
+    ((q, stream_id, batch_id),) = commits()
+    assert q.startswith("CREATE TABLE ice.kg.prov2 USING iceberg AS SELECT * FROM ")
+    assert (stream_id, batch_id) == (None, None)
 
 
 def _iceberg_merge_source(spark, monkeypatch, df, keys, **kw):

@@ -3,6 +3,9 @@
 import contextlib
 import math
 
+import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from kgflow.operators import dedup, extract, sessionize, vector
@@ -1084,7 +1087,7 @@ def test_unigram_logprob_score(spark):
     """Hand-computed unigram cross-entropy: corpus a:2 b:2 c:1 (N=5),
     lp6(a)=lp6(b)=-397940, lp6(c)=-698970; exact integer sums make the
     scores partition-order independent. OOV tokens under a separate
-    fit corpus take the floor."""
+    fit corpus count 0.5."""
     from kgflow.operators import quality
 
     docs = spark.createDataFrame(
@@ -1092,17 +1095,15 @@ def test_unigram_logprob_score(spark):
     )
     got = {
         r.doc_id: (r.n_tokens, r.lm_score)
-        for r in quality.unigram_logprob_score(docs).collect()
+        for r in quality.ngram_logprob_score(docs, 1).collect()
     }
     assert got[1] == (3, -0.3979)
     assert got[2] == (2, -0.5485)
-    # fit on docs, score a stream containing an unseen token: floor
+    # fit on docs, score a stream containing an unseen token: 0.5 count
     stream = spark.createDataFrame([(9, "a zzz")], "doc_id long, text string")
-    (row,) = quality.unigram_logprob_score(
-        stream, fit_docs=docs, floor_lp6=-10_000_000
-    ).collect()
-    # (-397940 + -10_000_000) / 2e6 = -5.19897 -> -5.199
-    assert (row.n_tokens, row.lm_score) == (2, -5.199)
+    (row,) = quality.ngram_logprob_score(stream, 1, fit_docs=docs).collect()
+    # (-397940 + round(log10(0.5/5)*1e6) = -1000000) / 2e6 = -0.69897 -> -0.699
+    assert (row.n_tokens, row.lm_score) == (2, -0.699)
 
 
 def test_bigram_logprob_score(spark):
@@ -1116,8 +1117,8 @@ def test_bigram_logprob_score(spark):
         [(1, "a b a b c"), (2, "c a")], "doc_id long, text string"
     )
     got = {
-        r.doc_id: (r.n_tokens, r.bigram_lm_score)
-        for r in quality.bigram_logprob_score(docs).collect()
+        r.doc_id: (r.n_tokens, r.lm_score)
+        for r in quality.ngram_logprob_score(docs, 2).collect()
     }
     # doc1: lp6 = -367977 (uni a) -176091 (a,b) -301030 (b,a)
     #       -176091 (a,b) -301030 (b,c); sum/5e6 -> -0.2644
@@ -1126,9 +1127,9 @@ def test_bigram_logprob_score(spark):
     assert got[2] == (2, -0.4225)
     # backoff branch: fit on docs, score an unseen bigram + OOV token
     stream = spark.createDataFrame([(9, "a zzz")], "doc_id long, text string")
-    (row,) = quality.bigram_logprob_score(stream, fit_docs=docs).collect()
+    (row,) = quality.ngram_logprob_score(stream, 2, fit_docs=docs).collect()
     # -367977 (uni a) + round(log10(0.4*0.5/7)*1e6) = -1544068
-    assert (row.n_tokens, row.bigram_lm_score) == (2, -0.956)
+    assert (row.n_tokens, row.lm_score) == (2, -0.956)
 
 
 def test_multimodal_resize_framesample_audio_match_reference(spark):
@@ -1261,8 +1262,8 @@ def test_trigram_logprob_score(spark):
         [(1, "a b c a b c a b c"), (2, "a b d")], "doc_id long, text string"
     )
     got = {
-        r.doc_id: (r.n_tokens, r.trigram_lm_score)
-        for r in quality.trigram_logprob_score(docs, prune_min_count=2).collect()
+        r.doc_id: (r.n_tokens, r.lm_score)
+        for r in quality.ngram_logprob_score(docs, 3, prune_min_count=2).collect()
     }
     # doc1 lp6: -477121 (uni a), 0 (bigram a,b = 4/4), then trigrams
     # (a,b,c)=3/4 -> -124939, (b,c,a)=2/3 -> -176091, (c,a,b)=2/2 -> 0
@@ -1274,13 +1275,113 @@ def test_trigram_logprob_score(spark):
     # OOV + unseen-bigram floors: fit on docs, score "d a zzz":
     # -1079181 (uni d), -875061 (0.4*4/12), -2176091 (0.16*0.5/12)
     stream = spark.createDataFrame([(9, "d a zzz")], "doc_id long, text string")
-    (row,) = quality.trigram_logprob_score(stream, fit_docs=docs).collect()
-    assert (row.n_tokens, row.trigram_lm_score) == (3, -1.3768)
+    (row,) = quality.ngram_logprob_score(
+        stream, 3, prune_min_count=2, fit_docs=docs
+    ).collect()
+    assert (row.n_tokens, row.lm_score) == (3, -1.3768)
     # prune observability on the same fit corpus
     (st,) = quality.trigram_prune_stats(docs, prune_min_count=2).collect()
     assert (st.kept_types, st.dropped_types, st.kept_mass, st.dropped_mass) == (
         3, 1, 7, 1,
     )
+
+
+def _half_up(x: float, places: str) -> float:
+    """Spark's ``round`` on a double: the shortest decimal form of
+    ``x`` rounded HALF_UP."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal(places), ROUND_HALF_UP))
+
+
+def _ngram_reference(docs, n, prune_min_count=1, fit_docs=None):
+    """Pure-Python stupid-backoff LM score, {doc_id: (n_tokens,
+    lm_score)}: count every k-gram (k <= n) of the fit texts, prune the
+    order-n types seen fewer than ``prune_min_count`` times, then score
+    position i of a document at order k = min(n, i): c_k/c_{k-1}(ctx),
+    else 0.4*c_{k-1}/c_{k-2}(ctx), down to 0.4^(k-1)*c1/N, with a
+    0.5 count for a token the fit never saw. No fit tokens means no
+    model: every position scores NULL."""
+    from collections import Counter
+
+    from kgflow.functions.text import py_tokens
+
+    counts = Counter()
+    for _, text in fit_docs if fit_docs is not None else docs:
+        toks = py_tokens(text) or []
+        for i in range(len(toks)):
+            for k in range(1, min(n, i + 1) + 1):
+                counts[tuple(toks[i - k + 1 : i + 1])] += 1
+    total = sum(c for g, c in counts.items() if len(g) == 1)
+    if prune_min_count > 1:
+        counts = Counter(
+            {g: c for g, c in counts.items() if len(g) < n or c >= prune_min_count}
+        )
+
+    def logprob(toks, i):
+        k = min(n, i + 1)
+        for j in range(k, 0, -1):
+            gram = tuple(toks[i - j + 1 : i + 1])
+            if j == 1:
+                c, ctx = float(counts.get(gram, 0.5)), total
+            elif gram in counts:
+                c, ctx = counts[gram], counts[gram[:-1]]
+            else:
+                continue
+            return None if not ctx else math.log10((0.4 ** (k - j) * c) / ctx)
+
+    got = {}
+    for doc_id, text in docs:
+        toks = py_tokens(text)
+        if not toks:
+            continue
+        lps = [logprob(toks, i) for i in range(len(toks))]
+        lp6 = [int(_half_up(lp * 1_000_000, "1")) for lp in lps if lp is not None]
+        score = (
+            _half_up(sum(lp6) / (len(toks) * 1_000_000.0), "0.0001") if lp6 else None
+        )
+        got[doc_id] = (len(toks), score)
+    return got
+
+
+_lm_text = st.one_of(
+    st.none(),
+    st.sampled_from(["", " "]),
+    st.lists(st.sampled_from(["a", "b", "c", "B"]), min_size=1, max_size=7).map(
+        " ".join
+    ),
+)
+
+
+@pytest.mark.parametrize("n", [1, 2, 3])
+@settings(max_examples=8, deadline=None)
+@given(
+    st.lists(_lm_text, min_size=1, max_size=6),
+    st.one_of(st.none(), st.lists(_lm_text, min_size=1, max_size=6)),
+    st.sampled_from([1, 2]),
+)
+@example([None, "", "a", "a b a b c"], None, 2)
+@example(["b c a", "c"], ["a b a b", None, " "], 1)
+@example(["a b c"], [None], 1)
+def test_ngram_logprob_score_matches_reference(spark, n, texts, fit_texts, prune):
+    """``ngram_logprob_score`` equals the pure-Python stupid-backoff
+    reference at every order, self-fit and on a separate fit corpus,
+    pruned and unpruned, over null, blank and single-token documents."""
+    from kgflow.operators import quality
+
+    docs = list(enumerate(texts))
+    fit = None if fit_texts is None else list(enumerate(fit_texts))
+    schema = "doc_id long, text string"
+    got = {
+        r.doc_id: (r.n_tokens, r.lm_score)
+        for r in quality.ngram_logprob_score(
+            spark.createDataFrame(docs, schema),
+            n,
+            prune_min_count=prune,
+            fit_docs=None if fit is None else spark.createDataFrame(fit, schema),
+        ).collect()
+    }
+    assert got == _ngram_reference(docs, n, prune, fit)
 
 
 def test_tfidf_top_terms(spark):
@@ -1602,6 +1703,24 @@ _UNREACHED_KEEP = {
 }
 
 
+def _parse_without_docstrings(path):
+    """The AST of the file at ``path`` with every module, class and
+    function docstring dropped."""
+    import ast
+
+    tree = ast.parse(path.read_text())
+    for node in ast.walk(tree):
+        body = getattr(node, "body", None)
+        if (
+            isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+            and isinstance(body[0], ast.Expr)
+            and isinstance(body[0].value, ast.Constant)
+            and isinstance(body[0].value.value, str)
+        ):
+            node.body = body[1:] or [ast.Pass()]
+    return tree
+
+
 def _kgflow_call_graph(root):
     """(definitions, edges, root keys) of kgflow's top-level names.
 
@@ -1617,19 +1736,6 @@ def _kgflow_call_graph(root):
     caller. Resolution is by name alone: the scan can miss dead code
     that shares a name with live code, never flag live code."""
     import ast
-
-    def parse(path):
-        tree = ast.parse(path.read_text())
-        for node in ast.walk(tree):
-            body = getattr(node, "body", None)
-            if (
-                isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
-                and isinstance(body[0], ast.Expr)
-                and isinstance(body[0].value, ast.Constant)
-                and isinstance(body[0].value.value, str)
-            ):
-                node.body = body[1:] or [ast.Pass()]
-        return tree
 
     def refs(node):
         out = set()
@@ -1648,7 +1754,7 @@ def _kgflow_call_graph(root):
     defs, bodies, by_name, seeds = {}, {}, {}, set()
     for f in sorted((root / "kgflow").rglob("*.py")):
         module = f.parent.name if f.stem == "__init__" else f.stem
-        for st in parse(f).body:
+        for st in _parse_without_docstrings(f).body:
             if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 names = [st.name]
             elif isinstance(st, (ast.Assign, ast.AnnAssign)):
@@ -1670,7 +1776,7 @@ def _kgflow_call_graph(root):
         *sorted((root / "tools").rglob("*.py")),
         *sorted((root / "perfbench").rglob("*.py")),
     ]:
-        seeds |= refs(parse(f))
+        seeds |= refs(_parse_without_docstrings(f))
 
     def keys(names):
         return {k for n in names for k in by_name.get(n, ())}
@@ -1715,6 +1821,52 @@ def test_every_public_kgflow_name_is_reached():
         "_UNREACHED_KEEP entries that name no kgflow definition, or that a "
         f"product entry point or another entry already reaches; drop them: {stale}"
     )
+
+
+#: exact clones the scan below tolerates, keyed by the sorted
+#: "<module>.<top-level name>" of the definitions holding the copies,
+#: each with the reason both copies stay
+_CLONES_KEEP: dict[tuple[str, ...], str] = {}
+
+
+def test_no_exact_clones_in_kgflow():
+    """No rule is stated twice: no two call, assign, return, if or for
+    nodes of at least 40 AST nodes in ``kgflow/`` or
+    ``__spark_entry__.py`` dump identically (docstrings dropped), unless
+    ``_CLONES_KEEP`` names their holders with a reason. Only exact subtrees
+    match — a copy that differs by one name or filter passes — so this
+    is a floor under the one-rule sweep, not a proof."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    groups = {}
+    for f in [root / "__spark_entry__.py", *sorted((root / "kgflow").rglob("*.py"))]:
+        for top in _parse_without_docstrings(f).body:
+            owner = f"{f.stem}.{getattr(top, 'name', '<module>')}"
+            for node in ast.walk(top):
+                if isinstance(node, (ast.Call, ast.Assign, ast.Return, ast.If, ast.For)):
+                    size = sum(1 for _ in ast.walk(node))
+                    if size >= 40:
+                        loc = (f.relative_to(root), node.lineno, node.end_lineno, owner)
+                        groups.setdefault(ast.dump(node), (size, []))[1].append(loc)
+    # one report per set of holders, showing its largest copied subtree
+    found = {}
+    for _, locs in sorted(groups.values(), key=lambda g: -g[0]):
+        if len(locs) > 1:
+            found.setdefault(tuple(sorted({loc[3] for loc in locs})), locs)
+    new = {k: v for k, v in found.items() if k not in _CLONES_KEEP}
+    assert not new, (
+        "exact copies of one rule; state it once, or add the holders to "
+        "_CLONES_KEEP in tests/test_operators.py with the reason both stay:\n"
+        + "\n".join(
+            "  " + "  ==  ".join(f"{p}:{a}-{b}" for p, a, b, _ in locs)
+            for locs in new.values()
+        )
+    )
+    stale = sorted(set(_CLONES_KEEP) - set(found))
+    assert not stale, f"_CLONES_KEEP entries that no longer name a copy; drop them: {stale}"
+
 
 def _py_minhash(text, k=8, n=3):
     """Reference MinHash components of one text: md5(i‖shingle) min

@@ -308,6 +308,24 @@ def test_incremental_doc_stats(spark, tmp_path):
     assert again == got
 
 
+def test_incremental_doc_stats_input_probe(spark, tmp_path):
+    """A landing dir that does not exist yet, or holds no file yet, is
+    nothing to maintain: the drain returns 0. A dir whose file is not
+    parquet is a fault and raises, rather than reading as an empty
+    drop."""
+    import pytest
+
+    out_dir = str(tmp_path / "out")
+    assert incremental.incremental_doc_stats(spark, str(tmp_path / "missing"), out_dir) == 0
+    (tmp_path / "empty").mkdir()
+    assert incremental.incremental_doc_stats(spark, str(tmp_path / "empty"), out_dir) == 0
+    (tmp_path / "corrupt").mkdir()
+    (tmp_path / "corrupt" / "part-0.parquet").write_text("not parquet")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        incremental.incremental_doc_stats(spark, str(tmp_path / "corrupt"), out_dir)
+    assert incremental.read_doc_stats(spark, out_dir) is None
+
+
 def test_incremental_prov_unguarded_snapshot_refused(
     spark, transcripts, lexicon, tmp_path
 ):
