@@ -603,10 +603,9 @@ def q_minhash_pairs(spark, sf):
 
 
 def q_jaccard_verify(spark, sf):
-    """n-gram Jaccard verify on the LSH candidates (integer inter/union)."""
-    docs = _t(spark, sf, "documents")
-    pairs = dedup.minhash_lsh_pairs(docs)
-    return dedup.jaccard_verify(docs, pairs)
+    """n-gram Jaccard verify on the LSH candidates (integer inter/union),
+    counted inside the LSH buckets."""
+    return dedup.minhash_verified_pairs(_t(spark, sf, "documents"))
 
 
 def q_simhash(spark, sf):

@@ -9,8 +9,13 @@ Four tiers, cheapest first (run in this order at scale):
    corpus scale: 2¹⁶ signature values cannot separate 10⁸⁺ documents —
    every band bucket saturates and the hot-bucket cap would silently
    drop everything; ``simhash64`` is the same arithmetic over 64 bits).
-4. **n-gram Jaccard verify** — exact set overlap, run only on the
-   candidate pairs the cheap tiers emit.
+4. **n-gram Jaccard verify** — exact shingle-set overlap of each
+   MinHash candidate pair, counted inside the LSH bucket that builds
+   the pair (:func:`minhash_verified_pairs`): the MinHash pass emits
+   each doc's sorted int64 shingle hashes, so the verify costs no
+   second shingling pass and no join back to the corpus. A count can
+   be off only if two distinct shingles of one pair's union share a
+   64-bit hash.
 
 Every banded tier (MinHash, SimHash, image pHash) pairs candidates in
 one bucket-local kernel, :func:`_bucket_pairs`: the band rows are
@@ -45,8 +50,9 @@ from ..functions import text as tx
 from .util import spread
 
 # Per-task md5 memo bound (entries), MinHash and SimHash: a MinHash entry
-# holds the K hex digests of one shingle, ~850 bytes at K=8, so a memo
-# stays under ~56 MB per task; past the bound it is cleared and refills.
+# holds the K hex digests of one shingle and its int64 hash, ~900 bytes
+# at K=8, so a memo stays under ~60 MB per task; past the bound it is
+# cleared and refills.
 _MD5_MEMO_ENTRIES = 65_536
 
 
@@ -80,11 +86,30 @@ def minhash_signatures(
     :func:`_minhash_signer`. Docs too short to shingle emit no row
     (parity: ``word_shingles`` → [] → filtered).
     """
+    return _minhash_map(docs, id_col, text_col, num_hashes, shingle_n, False)
+
+
+def _minhash_map(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int,
+    shingle_n: int,
+    hashes: bool,
+) -> DataFrame:
+    """:func:`minhash_signatures`' frame; with ``hashes`` each row also
+    carries ``shingle_hashes``, the doc's sorted distinct int64 shingle
+    hashes (:func:`_minhash_signer`), from the same pass."""
     import pandas as pd
 
     id_t = docs.schema[id_col].dataType.simpleString()
     k = int(num_hashes)
-    sign = _minhash_signer(k, int(shingle_n))
+    sign = _minhash_signer(k, int(shingle_n), hashes)
+    cols = [id_col, *[f"sig_{i}" for i in range(k)]]
+    types = [id_t, *["string"] * k]
+    if hashes:
+        cols.append("shingle_hashes")
+        types.append("array<bigint>")
 
     def run(batches):
         for pdf in batches:
@@ -93,31 +118,32 @@ def minhash_signatures(
                 sig = sign(text)
                 if sig is not None:
                     rows.append((did, *sig))
-            yield pd.DataFrame(
-                rows, columns=[id_col, *[f"sig_{i}" for i in range(k)]]
-            )
+            yield pd.DataFrame(rows, columns=cols)
 
-    schema = ", ".join(
-        [f"{id_col} {id_t}", *[f"sig_{i} string" for i in range(k)]]
-    )
+    schema = ", ".join(f"{c} {t}" for c, t in zip(cols, types))
     return spread(docs.select(id_col, text_col)).mapInPandas(run, schema=schema)
 
 
-def _minhash_signer(k: int, n: int):
+def _minhash_signer(k: int, n: int, hashes: bool = False):
     """``sign(text)`` → the K MinHash components of ``text``'s word
     n-gram set (sig_i = min over shingles of md5(i‖shingle) as lowercase
     hex), or None when the text is null or has fewer than ``n`` tokens.
+    With ``hashes`` the list also ends with the set itself: the sorted
+    distinct int64 shingle hashes, each the first 8 bytes of the
+    shingle's md5("0|"‖shingle) digest, which sig_0 already computes.
+    A Python list, not a numpy array: Spark's pandas-to-Arrow converter
+    turns an array cell into a list of numpy scalars first.
 
     Built on the driver and shipped with the Arrow pass: each task
-    unpickles its own empty memo of per-shingle K-digest tuples, so a
-    boilerplate shingle repeated across thousands of docs is hashed
-    once (the JVM expression form re-hashed it per occurrence — K
-    interpreted md5+concat lambdas each). The memo is a pure cache,
-    bounded at ``_MD5_MEMO_ENTRIES`` (read here, on the driver): once
-    full it is cleared, so unique-shingle-heavy input cannot grow a
-    worker without limit and the signatures never change. hex-string
-    min in Python is byte-lexicographic, identical to the JVM/DuckDB
-    string compare on lowercase hex.
+    unpickles its own empty memo of per-shingle K-digest tuples (plus
+    the shingle hash), so a boilerplate shingle repeated across
+    thousands of docs is hashed once (the JVM expression form re-hashed
+    it per occurrence — K interpreted md5+concat lambdas each). The
+    memo is a pure cache, bounded at ``_MD5_MEMO_ENTRIES`` (read here,
+    on the driver): once full it is cleared, so unique-shingle-heavy
+    input cannot grow a worker without limit and the signatures never
+    change. hex-string min in Python is byte-lexicographic, identical
+    to the JVM/DuckDB string compare on lowercase hex.
     """
     import hashlib
 
@@ -132,10 +158,12 @@ def _minhash_signer(k: int, n: int):
                 memo.clear()
             raw = sh.encode("utf-8")
             d = tuple(hashlib.md5(p + raw).hexdigest() for p in prefixes)
+            h = int(d[0][:16], 16)  # the digest's first 8 bytes, big-endian
+            d += (h - (1 << 64) if h >> 63 else h,)
             memo[sh] = d
         return d
 
-    def sign(text) -> list[str] | None:
+    def sign(text) -> list | None:
         toks = tx.py_tokens(text)
         if toks is None or len(toks) < n:
             return None
@@ -143,7 +171,10 @@ def _minhash_signer(k: int, n: int):
             digests(s)
             for s in {" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)}
         ]
-        return [min(d[i] for d in sigs) for i in range(k)]
+        out: list = [min(d[i] for d in sigs) for i in range(k)]
+        if hashes:
+            out.append(sorted({d[k] for d in sigs}))
+        return out
 
     return sign
 
@@ -155,21 +186,29 @@ def _minhash_bands(
     num_hashes: int,
     band_size: int,
     shingle_n: int,
+    hashes: bool = False,
 ) -> DataFrame:
-    """(id, band_id, band_key) — one row per (doc, LSH band)."""
-    sigs = minhash_signatures(docs, id_col, text_col, num_hashes, shingle_n)
-    return _bands_from_sigs(sigs, id_col, num_hashes, band_size)
+    """(id, band_id, band_key) — one row per (doc, LSH band); with
+    ``hashes`` each row also carries the doc's ``shingle_hashes``."""
+    sigs = _minhash_map(docs, id_col, text_col, num_hashes, shingle_n, hashes)
+    carry = ("shingle_hashes",) if hashes else ()
+    return _bands_from_sigs(sigs, id_col, num_hashes, band_size, carry)
 
 
 def _bands_from_sigs(
-    sigs: DataFrame, id_col: str, num_hashes: int, band_size: int
+    sigs: DataFrame,
+    id_col: str,
+    num_hashes: int,
+    band_size: int,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(id, band_id, band_key) from an existing signature frame — the
-    banding used both when signatures are computed in-flight and when
-    they come from a maintained store (:func:`dedup_delta`)."""
+    """(id, *carry, band_id, band_key) from an existing signature frame —
+    the banding used both when signatures are computed in-flight and
+    when they come from a maintained store (:func:`dedup_delta`)."""
     n_bands = num_hashes // band_size
     return sigs.select(
         F.col(id_col),
+        *carry,
         F.explode(
             F.array(
                 *[
@@ -183,7 +222,7 @@ def _bands_from_sigs(
                 ]
             )
         ).alias("band"),
-    ).select(id_col, "band.band_id", "band.band_key")
+    ).select(id_col, *carry, "band.band_id", "band.band_key")
 
 
 def _pair_blocks(n: int, max_pairs: int):
@@ -213,6 +252,41 @@ def _popcount64(x):
     return np.unpackbits(x.view(np.uint8)).reshape(-1, 64).sum(axis=1)
 
 
+def _set_overlaps(sets):
+    """(sizes, overlap) over one bucket's sets — an object array of
+    sorted distinct int64 arrays: ``overlap(i, j)`` is |sets[i] ∩
+    sets[j]| for each pair of the index arrays ``i``, ``j``.
+
+    Each row's values are coded by their rank in the bucket, so
+    ``row * n_codes + code`` is one ascending int64 key per (row,
+    value). A pair probes the key of every value of its smaller set in
+    the other row and counts the hits: memory is O(bucket values +
+    probes), one ``searchsorted`` per block of pairs."""
+    import numpy as np
+
+    sizes = np.fromiter((len(v) for v in sets), np.int64, len(sets))
+    uniq, codes = np.unique(np.concatenate(list(sets)), return_inverse=True)
+    n_codes = len(uniq)
+    firsts = np.cumsum(sizes) - sizes
+    # the sentinel ends the keys above every probe
+    keys = np.append(
+        np.repeat(np.arange(len(sets)) * n_codes, sizes) + codes,
+        np.iinfo(np.int64).max,
+    )
+
+    def overlap(i, j):
+        small = sizes[i] <= sizes[j]
+        p, q = np.where(small, i, j), np.where(small, j, i)
+        cnt = sizes[p]
+        ends = np.cumsum(cnt)
+        at = np.arange(cnt.sum())
+        probes = np.repeat(q * n_codes, cnt) + codes[at - np.repeat(ends - cnt - firsts[p], cnt)]
+        hits = np.concatenate([[0], np.cumsum(keys[np.searchsorted(keys, probes)] == probes)])
+        return hits[ends] - hits[ends - cnt]
+
+    return sizes, overlap
+
+
 def _bucket_pairs(
     bands: DataFrame,
     id_col: str,
@@ -220,6 +294,7 @@ def _bucket_pairs(
     max_bucket: int | None,
     sig_col: str | None = None,
     max_hamming: int = 0,
+    set_col: str | None = None,
 ) -> DataFrame:
     """(id_a, id_b) — every pair of distinct non-null ids, id_a < id_b,
     that shares a bucket (``bucket_cols``) of ``bands``, once.
@@ -242,6 +317,12 @@ def _bucket_pairs(
       ``hamming <= max_hamming`` are kept — filtered inside the bucket,
       before the dedup exchange (every copy of a pair carries the same
       signatures, so the filter commutes with the dedup).
+    * With ``set_col`` (sorted distinct int64 arrays) each pair also
+      carries ``inter_size`` = |set_a ∩ set_b| and ``union_size`` =
+      |set_a| + |set_b| − inter_size, counted where the pair is built
+      (:func:`_set_overlaps`), a block of at most about 2²⁰ probed
+      values at a time. Every copy of a pair carries the same counts,
+      so the dedup may keep any of them.
     """
     import numpy as np
     import pyarrow as pa
@@ -255,6 +336,10 @@ def _bucket_pairs(
     if sig_col is not None:
         fields.append(T.StructField("hamming", T.IntegerType()))
         value_cols.append(sig_col)
+    if set_col is not None:
+        fields.append(T.StructField("inter_size", T.IntegerType()))
+        fields.append(T.StructField("union_size", T.IntegerType()))
+        value_cols.append(set_col)
     schema = T.StructType(fields)
     arrow_schema = to_arrow_schema(schema)
     n_keys = len(bucket_cols)
@@ -264,7 +349,7 @@ def _bucket_pairs(
 
     class _Bucket:
         """The bucket being streamed: its key, its row count and the
-        non-null (id, sig) values of its rows, dropped once the row
+        non-null (id, sig, set) values of its rows, dropped once the row
         count passes the cap."""
 
         def __init__(self, key, null_key):
@@ -285,7 +370,11 @@ def _bucket_pairs(
         def pairs(vals):
             nonlocal n_out
             ids = vals[0]
-            for i, j in _pair_blocks(len(ids), flush_at):
+            block = flush_at
+            if set_col is not None:
+                sizes, overlap = _set_overlaps(vals[-1])
+                block = max(1, (1 << 20) // max(1, int(sizes.max())))
+            for i, j in _pair_blocks(len(ids), block):
                 a, b = ids[i], ids[j]
                 keep = a != b
                 if sig_col is not None:
@@ -293,10 +382,16 @@ def _bucket_pairs(
                     keep &= h <= max_h
                 a, b = a[keep], b[keep]
                 lt = a < b
-                out[0].append(np.where(lt, a, b))
-                out[1].append(np.where(lt, b, a))
+                cols = [np.where(lt, a, b), np.where(lt, b, a)]
                 if sig_col is not None:
-                    out[2].append(h[keep].astype(np.int32))
+                    cols.append(h[keep].astype(np.int32))
+                if set_col is not None:
+                    i, j = i[keep], j[keep]
+                    inter = overlap(i, j)
+                    cols.append(inter.astype(np.int32))
+                    cols.append((sizes[i] + sizes[j] - inter).astype(np.int32))
+                for o, c in zip(out, cols):
+                    o.append(c)
                 n_out += len(a)
 
         def flush():
@@ -463,36 +558,38 @@ def minhash_lsh_pairs(
     return _bucket_pairs(bands, id_col, ["band_id", "band_key"], max_bucket)
 
 
-def jaccard_verify(
+def minhash_verified_pairs(
     docs: DataFrame,
-    pairs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
+    num_hashes: int = 8,
+    band_size: int = 2,
     shingle_n: int = 3,
+    max_bucket: int | None = 500,
 ) -> DataFrame:
-    """Exact shingle-set overlap for candidate pairs.
+    """The ``minhash_lsh_pairs`` candidates, each with its exact
+    shingle-set overlap: (id_a, id_b, inter_size, union_size).
 
-    Returns integer (inter_size, union_size) — floats would make the
-    cross-engine value comparison fragile; callers derive jaccard =
-    inter/union.
+    Counts are integers — floats would make the cross-engine value
+    comparison fragile; callers derive jaccard = inter/union.
+
+    Scale shape: the MinHash pass that builds each doc's shingle set
+    also emits it as sorted int64 shingle hashes (the integer-set
+    verify of *HERO*, SIGMOD 2024); the band rows carry them through
+    the one bucket exchange, and :func:`_bucket_pairs` counts each
+    pair's overlap where it builds the pair. No second shingling pass,
+    no join back to the corpus, no broadcast.
+
+    A count can be off only if two distinct shingles of one pair's
+    union share a 64-bit hash (the first 8 bytes of md5("0|"‖shingle)):
+    about n²/2⁶⁵ for a union of n shingles. With a repeated id, the
+    counts are those of one pair of its rows that share a bucket.
     """
-    # spread BEFORE the shingle projection: an exchange then carries
-    # raw text (not the ~3× larger shingle arrays) and the CPU-heavy
-    # shingling runs after it (guide §2.3 — shuffle fewer bytes)
-    sh = spread(
-        docs.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_tx"))
-    ).select("_id", tx.word_shingles("_tx", shingle_n).alias("_sh"))
-    a = sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a"))
-    b = sh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b"))
-    return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("sh_a", "sh_b")).alias("inter_size"),
-            F.size(F.array_union("sh_a", "sh_b")).alias("union_size"),
-        )
+    bands = _minhash_bands(
+        docs, id_col, text_col, num_hashes, band_size, shingle_n, hashes=True
+    )
+    return _bucket_pairs(
+        bands, id_col, ["band_id", "band_key"], max_bucket, set_col="shingle_hashes"
     )
 
 
@@ -759,7 +856,9 @@ def dedup_clusters(
     union·pct) — exact, no float threshold drift across engines.
 
     Scale shape: the pair tiers are bucketed/candidate-only (see module
-    docstring); the component step runs on the PAIR graph (smaller than
+    docstring), and each pair's counts come out of its bucket
+    (:func:`minhash_verified_pairs`), so the threshold filters the
+    deduplicated pairs with no join; the component step runs on the PAIR graph (smaller than
     the corpus — only docs with a verified near-dup appear). When the
     pair graph fits ``connected_components``' driver threshold, its
     mapping is a driver dict and ``link.canonicalize`` rewrites the
@@ -774,11 +873,10 @@ def dedup_clusters(
     from .canon import _components
     from .link import canonicalize
 
-    pairs = minhash_lsh_pairs(
-        docs, id_col, text_col, num_hashes, band_size, shingle_n, max_bucket
-    )
     verified = (
-        jaccard_verify(docs, pairs, id_col, text_col, shingle_n)
+        minhash_verified_pairs(
+            docs, id_col, text_col, num_hashes, band_size, shingle_n, max_bucket
+        )
         .filter(F.col("inter_size") * 100 >= F.col("union_size") * min_jaccard_pct)
         .select("id_a", "id_b")
     )
@@ -847,8 +945,7 @@ def embedding_near_duplicates(
     string; no BroadcastNestedLoopJoin / cartesian over the corpus) —
     then the exact cosine verifies each candidate. Approximate by
     construction: pairs in different buckets are never compared
-    (recall rises with fewer planes / multiple tables; see
-    ``embedding_near_duplicates_exact`` for the all-pairs verifier).
+    (recall rises with fewer planes / multiple tables).
 
     Within-bucket scoring runs as ONE Arrow-batched ``applyInPandas``
     per bucket instead of a bucket-key self-join + per-pair interpreted
@@ -962,25 +1059,6 @@ def embedding_near_duplicates(
     return bucketed.groupBy("_bkt").applyInPandas(
         score_bucket, schema=f"id_a {id_t}, id_b {id_t}, cosine double"
     )
-
-
-def embedding_near_duplicates_exact(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-) -> DataFrame:
-    """All-pairs exact variant — O(n²), small inputs / recall
-    measurement only; the production path is the bucketed function."""
-    from . import vector
-
-    a = embeddings.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"))
-    b = embeddings.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))
-    pairs = a.join(b, F.col("id_a") < F.col("id_b"))
-    scored = pairs.select(
-        "id_a", "id_b", F.round(vector.cosine("v_a", "v_b"), 4).alias("cosine")
-    )
-    return scored.filter(F.col("cosine") >= threshold)
 
 
 def paragraph_dedup(

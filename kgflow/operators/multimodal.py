@@ -292,45 +292,17 @@ def video_frame_sample(
     )
 
 
-def synth_pcm_payload(doc_id: Column | str) -> Column:
-    """Deterministic 16-bit little-endian PCM audio as a binary column,
-    built JVM-side: sample i of doc d is
-    ``((d*2654435761 + i*40503) % 65536) - 32768`` — pure integer
-    arithmetic an engine-independent oracle reproduces. Clip length
-    ``512 + d % 256`` samples."""
-    c = F.col(doc_id) if isinstance(doc_id, str) else doc_id
-    n = (F.lit(512) + c % 256).cast("int")
-    def u(i: Column) -> Column:
-        # two's-complement int16 of (raw - 32768): adding 32768 mod 2^16
-        # maps the signed sample onto its unsigned wire representation
-        return F.pmod(c * 2654435761 + i.cast("long") * 40503 + 32768, F.lit(65536))
-
-    return F.to_binary(
-        F.array_join(
-            F.transform(
-                F.sequence(F.lit(0), n - 1),
-                lambda i: F.concat(  # little-endian int16
-                    F.lpad(F.hex(u(i) % 256), 2, "0"),
-                    F.lpad(F.hex(F.floor(u(i) / 256).cast("long")), 2, "0"),
-                ),
-            ),
-            "",
-        ),
-        F.lit("hex"),
-    )
-
-
 def synth_pcm_payload_py(
     docs: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
-    """Arrow-batched twin of :func:`synth_pcm_payload`: the same
-    little-endian int16 PCM bytes (sample i of doc d is
-    ``((d*2654435761 + i*40503 + 32768) % 65536)`` as a uint16 wire
-    value, clip length ``512 + d % 256``), synthesized with one
+    """Deterministic 16-bit little-endian PCM audio per doc (sample i
+    of doc d is ``((d*2654435761 + i*40503 + 32768) % 65536)`` as a
+    uint16 wire value, clip length ``512 + d % 256``), synthesized with one
     vectorized numpy expression per clip instead of a per-sample
     interpreted hex/concat JVM expression (~0.4 ms/clip there — the
     dominant cost of the audio query, guide §4.2). Returns
-    (id_col, payload binary); byte-for-byte equal to the JVM builder.
+    (id_col, payload binary); byte-for-byte equal to the JVM builder
+    the tests keep (``tests/reference.py``).
     """
     import numpy as np
     import pandas as pd

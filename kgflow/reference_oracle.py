@@ -130,12 +130,3 @@ def expected_triples(
         triples.add((s, pred, o))
 
     return triples
-
-
-def precision_recall(
-    got: set[tuple[str, str, str]], expected: set[tuple[str, str, str]]
-) -> tuple[float, float]:
-    if not got or not expected:
-        return (0.0, 0.0)
-    tp = len(got & expected)
-    return tp / len(got), tp / len(expected)

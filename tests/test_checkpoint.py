@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from kgflow.plans import checkpoint as cp
 from kgflow.plans import materialize as mat
+from reference import precision_recall
 
 
 def _triple_set(spark, out_dir):
@@ -1037,7 +1038,7 @@ def test_emptied_isa_clears_ontology_bucket(spark, transcripts, lexicon, lexicon
     assert rep.processed_buckets == rep.total_buckets
     assert not os.path.exists(os.path.join(d, "triples", "bucket=-1"))
     exp = ro.expected_triples(transcripts.toPandas(), terms_pdf, isa_pdf.iloc[:0])
-    assert ro.precision_recall(_triple_set(spark, d), exp) == (1.0, 1.0)
+    assert precision_recall(_triple_set(spark, d), exp) == (1.0, 1.0)
 
 
 def test_failed_write_keeps_previous_output(spark, transcripts, lexicon, tmp_path, monkeypatch):

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from kgflow.operators import dedup, extract, sessionize, vector
 from kgflow.operators.extract import TokenAhoCorasick
 from kgflow.reference_oracle import _scan
+from reference import embedding_near_duplicates_exact, synth_pcm_payload
 
 
 def test_matcher_longest_match_and_negatives():
@@ -70,7 +71,8 @@ def test_minhash_finds_near_duplicates(spark):
     pairs = {(r.id_a, r.id_b) for r in dedup.minhash_lsh_pairs(docs).collect()}
     assert (1, 2) in pairs
     assert (1, 3) not in pairs and (2, 3) not in pairs
-    ver = dedup.jaccard_verify(docs, dedup.minhash_lsh_pairs(docs)).collect()
+    ver = dedup.minhash_verified_pairs(docs).collect()
+    assert {(r.id_a, r.id_b) for r in ver} == pairs
     row = next(r for r in ver if (r.id_a, r.id_b) == (1, 2))
     assert row.inter_size / row.union_size > 0.5
 
@@ -206,7 +208,7 @@ def test_embedding_neardup_bucketed_plan_and_recall(spark):
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
-    exact = dedup.embedding_near_duplicates_exact(emb, threshold=0.999)
+    exact = embedding_near_duplicates_exact(emb, threshold=0.999)
     got = {(r.id_a, r.id_b) for r in approx.collect()}
     want = {(r.id_a, r.id_b) for r in exact.collect()}
     assert want  # the identical-vector pairs exist
@@ -314,6 +316,101 @@ def test_minhash_bucket_kernel_equals_self_join(spark):
     _with_arrow_batches(spark, [spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"), 3], check)
 
 
+def _word_shingle_counts(docs, pairs):
+    """{(id_a, id_b): {(inter_size, union_size), ...}} by the JVM rule:
+    ``size(array_intersect)`` and ``size(array_union)`` of the two docs'
+    ``tx.word_shingles`` arrays, over every pair of rows with those ids."""
+    from kgflow.functions import text as tx
+
+    sh = docs.select(F.col("doc_id").alias("_id"), tx.word_shingles("text", 3).alias("_sh"))
+    a = sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a"))
+    b = sh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b"))
+    ref: dict = {}
+    for r in (
+        pairs.select("id_a", "id_b")
+        .join(a, "id_a")
+        .join(b, "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            F.size(F.array_intersect("sh_a", "sh_b")),
+            F.size(F.array_union("sh_a", "sh_b")),
+        )
+        .collect()
+    ):
+        ref.setdefault((r[0], r[1]), set()).add((r[2], r[3]))
+    return ref
+
+
+def _argmin_shingle_text():
+    """A 12-token text whose sig_0 and sig_1 come from one shingle
+    while sig_2 comes from another, and that shingle's three words:
+    a doc of just those words shares the text's band 0 and no other."""
+    dig = dedup._minhash_signer(8, 3)
+    for seed in range(100):
+        toks = [f"s{seed}w{j}" for j in range(12)]
+        shingles = [" ".join(toks[j : j + 3]) for j in range(10)]
+        sigs = {sh: dig(sh) for sh in shingles}
+        arg = [min(shingles, key=lambda sh: sigs[sh][i]) for i in range(8)]
+        if arg[0] == arg[1] and arg[2] != arg[0]:
+            return " ".join(toks), arg[0]
+    raise AssertionError("no text found")
+
+
+def test_minhash_verified_pairs_match_jvm_shingle_counts(spark):
+    """``minhash_verified_pairs`` emits exactly the ``minhash_lsh_pairs``
+    candidates, each with the JVM rule's counts over
+    ``tx.word_shingles``: tabs, no-break spaces, case and repeated
+    shingles; docs under 3 tokens and null text; duplicate and null
+    ids; buckets straddling Arrow batches of 3 rows; and a pair whose
+    band-0 bucket is over ``max_bucket`` while another band still
+    pairs it."""
+    text, shingle = _argmin_shingle_text()
+    base = "the quick brown fox jumps over the lazy dog again and again today"
+    rows = (
+        [(1, base), (2, base.replace("today", "tomorrow"))]
+        + [(3, "\t" + base.replace(" ", "\t")), (4, "\t" + base + "\t")]
+        + [(5, base.replace(" the ", "\xa0the ")), (6, base.upper())]
+        + [(7, base.title()), (8, "a b c a b c a b c a b c"), (9, "a b c a b c a b")]
+        + [(10, "too short"), (11, ""), (12, None), (None, base), (None, "a b c a b c")]
+        # duplicate ids: 13 once with the base text, once near it
+        + [(13, base), (13, base + " extra words"), (14, base + " extra words")]
+        # 15, 16 share every band; 17-19 share only band 0 with them
+        + [(15, text), (16, text)]
+        + [(17 + i, shingle) for i in range(3)]
+    )
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    cap = 4
+    bands = dedup._minhash_bands(docs, "doc_id", "text", 8, 2, 3).collect()
+    band0 = {r.band_key for r in bands if r.doc_id == 15 and r.band_id == 0}
+    assert sum(r.band_id == 0 and r.band_key in band0 for r in bands) > cap
+
+    def check():
+        for mb in (cap, None):
+            got = dedup.minhash_verified_pairs(docs, max_bucket=mb).collect()
+            pairs = {(r.id_a, r.id_b) for r in got}
+            assert len(pairs) == len(got)
+            assert pairs == {
+                tuple(r) for r in dedup.minhash_lsh_pairs(docs, max_bucket=mb).collect()
+            }
+            assert {(15, 16), (8, 9)} <= pairs
+            # the base text's buckets hold more than ``cap`` docs
+            assert ({(1, 2), (3, 4), (1, 6), (13, 14)} <= pairs) == (mb is None)
+            ref = _word_shingle_counts(docs, spark.createDataFrame(
+                sorted(pairs), "id_a long, id_b long"
+            ))
+            for r in got:
+                counts = ref[(r.id_a, r.id_b)]
+                assert (r.inter_size, r.union_size) in counts, r
+                if 13 not in (r.id_a, r.id_b):
+                    assert len(counts) == 1
+            by_pair = {(r.id_a, r.id_b): (r.inter_size, r.union_size) for r in got}
+            assert by_pair[(15, 16)] == (10, 10)
+            assert by_pair[(8, 9)] == (3, 3)
+
+    _with_arrow_batches(spark, [spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"), 3], check)
+
+
 def test_signature_bucket_kernel_equals_self_join(spark):
     """``signature_near_pairs`` — the kernel with the hamming verify
     inside the bucket — equals the band self-join: cap boundary at
@@ -390,6 +487,42 @@ def test_dedup_clusters_small_graph_caches_nothing(spark):
     assert got == {(10, 10, True), (11, 10, False), (50, 50, True)}
     assert set(sc._jsc.getPersistentRDDs().keySet()) <= before
     assert "InMemoryRelation" not in out._jdf.queryExecution().executedPlan().toString()
+
+
+def test_dedup_clusters_job_count_is_fixed(spark, tmp_path):
+    """``dedup_clusters`` build + collect runs one fixed number of jobs
+    and tasks, in each of two fresh sessions at the default
+    ``autoBroadcastJoinThreshold``: the verified pairs come out of the
+    bucket kernel, so no join leaves AQE a strategy to pick by timing.
+    Their plan has no join and no broadcast, and one round-robin
+    exchange (the docs' spread)."""
+    from perfbench.trace import StatusReader
+
+    path = str(tmp_path / "docs")
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    spark.createDataFrame(
+        [(i, f"{base} w{i % 7}" if i % 3 else f"doc {i} says something else") for i in range(60)],
+        "doc_id long, text string",
+    ).repartition(4).write.parquet(path)
+    counts = []
+    for _ in range(2):
+        s = spark.newSession()
+        assert s.conf.get("spark.sql.autoBroadcastJoinThreshold") == str(64 * 1024 * 1024)
+        status = StatusReader(s)
+        docs = s.read.schema("doc_id long, text string").parquet(path)
+        dedup.dedup_clusters(docs).collect()
+        jobs, stages = status.read()
+        counts.append((jobs, sum(st.numCompleteTasks() for st in stages)))
+        pairs = dedup.minhash_verified_pairs(docs)
+        pairs.collect()
+        plan = pairs._jdf.queryExecution().executedPlan().executedPlan().toString()
+        assert "Join" not in plan and "BroadcastExchange" not in plan
+        assert plan.count("RoundRobinPartitioning") == 1, plan
+    # jobs (tasks): the spread's round-robin map (4, one per file), the
+    # MinHash pass into the bucket exchange (8), the kernel into the
+    # pair dedup exchange (1), the components' bounded collect (1) and
+    # the narrow rewrite of the corpus ids (4)
+    assert counts == [(5, 18)] * 2
 
 
 def test_dedup_clusters_distributed_mapping_joins(spark, monkeypatch):
@@ -476,7 +609,7 @@ def test_embedding_neardup_bucket_over_one_block(spark):
         vector.sign_bucket("embedding", vector.hyperplanes(8, 1, 13)).alias("b")
     ).distinct().count()
     assert buckets == 1 and 420 * 419 // 2 > 1 << 16
-    want = {tuple(r) for r in dedup.embedding_near_duplicates_exact(emb, threshold=0.99).collect()}
+    want = {tuple(r) for r in embedding_near_duplicates_exact(emb, threshold=0.99).collect()}
     assert {tuple(r) for r in got.collect()} == want and want
 
 
@@ -1184,7 +1317,7 @@ def test_multimodal_resize_framesample_audio_match_reference(spark):
             want_v[(i, fi)] = (fi * 1000 // fps, (i * 1000003 + fi) % 2147483647, nf, fps)
     assert got_v == want_v
 
-    au = d.select("doc_id", M.synth_pcm_payload("doc_id").alias("payload"))
+    au = d.select("doc_id", synth_pcm_payload("doc_id").alias("payload"))
     got_a = {
         (r.doc_id, r.frame_idx): (r.sum_sq, r.peak, r.n_samples)
         for r in M.audio_frame_energy(au).collect()
@@ -1694,10 +1827,6 @@ _UNREACHED_KEEP = {
     "readers.read_positional": "COVERAGE S2 headerless positional scan",
     "imports.import_edge_table": "SURVEY P10 edge-table import, its only implementation",
     "imports.import_fact_table": "SURVEY P11 fact-table import, its only implementation",
-    # reference implementations that tests compare against
-    "reference_oracle.precision_recall": "triple P/R against the pandas oracle",
-    "dedup.embedding_near_duplicates_exact": "exact twin of the LSH embedding near-dup",
-    "multimodal.synth_pcm_payload": "builds the PCM payloads the decode tests read",
     # package metadata
     "kgflow.__version__": "package version",
 }

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kgflow import reference_oracle as ro
+from reference import precision_recall
 from kgflow.plans import pipeline
 
 
@@ -27,7 +28,7 @@ def test_triple_pr_vs_reference_oracle(spark, transcripts, lexicon, lexicon_pdf)
     triples, _ = _got_triples(spark, transcripts, lexicon)
     got = {(r.subj, r.pred, r.obj) for r in triples.collect()}
     exp = ro.expected_triples(transcripts.toPandas(), terms_pdf, isa_pdf)
-    p, r = ro.precision_recall(got, exp)
+    p, r = precision_recall(got, exp)
     # both sides deterministic → exact match (target is ≥0.95)
     assert p == 1.0 and r == 1.0, (p, r, len(got), len(exp))
 
@@ -206,7 +207,7 @@ def test_surfaces_with_non_space_whitespace(spark):
     exp = ro.expected_triples(tr_pdf, terms_pdf, isa_pdf)
     assert {("turn:c1:0", "MENTIONS", "T4"), ("turn:c2:0", "MENTIONS", "T3")} <= exp
     got = {(r.subj, r.pred, r.obj) for r in pipeline.build_triples(tr, terms, isa).collect()}
-    assert ro.precision_recall(got, exp) == (1.0, 1.0), got ^ exp
+    assert precision_recall(got, exp) == (1.0, 1.0), got ^ exp
 
 
 def test_ids_and_predicates_with_non_space_edge_whitespace(spark):

@@ -84,8 +84,9 @@ out["pack_shards"] = timed(lambda: packed.agg(
 # targets and the only one a real curation corpus presents at scale.
 # Construction is checkpointed OUTSIDE the timing at a FIXED 64-way
 # layout so both core levels hash identical bytes; the stage measures
-# the chain itself: shingle explode + 8 md5 minhashes, band-key
-# shuffle, in-bucket self-join, pair dedup, shingle-set verify join.
+# the chain itself: shingling + 8 md5 minhashes + int64 shingle hashes,
+# band-key shuffle, in-bucket pairing with the shingle-set verify, pair
+# dedup.
 from kgflow.operators import dedup
 n_docs = tr.count() // 20
 _seed = F.when(
@@ -112,8 +113,7 @@ docs8 = (
     .select("doc_id", F.array_join(_toks, " ").alias("text"))
     .localCheckpoint(eager=True)
 )
-pairs8 = dedup.minhash_lsh_pairs(docs8)
-ver8 = dedup.jaccard_verify(docs8, pairs8)
+ver8 = dedup.minhash_verified_pairs(docs8)
 out["dedup_pairs"] = timed(lambda: ver8.agg(
     F.count(F.lit(1)),
     F.bit_xor(F.xxhash64("id_a", "id_b", "inter_size", "union_size")),
